@@ -54,16 +54,18 @@ def exploded_shingles(
     array form). Stateless row-local ops only — runs unchanged on a
     streaming scan."""
     cols = [F.col(c) if isinstance(c, str) else c for c in (carry or [])]
-    base = df.select(*cols, tokens(text_col).alias("_w")).where(F.size("_w") >= k)
+    base = df.select(*cols, tokens(text_col).alias("_w"))
     names = base.columns[:-1]
-    # the internal aliases must not collide with (or duplicate within) the
-    # carry columns: a carry named "_w"/"_g" would be an ambiguous reference
-    # at runtime, and duplicate carry names would silently mis-slice
-    if len(set(names)) != len(names) or {"_w", "_g"} & set(names):
+    # the internal and output aliases must not collide with (or duplicate
+    # within) the carry columns: a carry named "_w"/"_g" would be an
+    # ambiguous reference at runtime, one named "sh" would duplicate the
+    # output column, and duplicate carry names would silently mis-slice
+    if len(set(names)) != len(names) or {"_w", "_g", "sh"} & set(names):
         raise ValueError(
             f"exploded_shingles: carry columns must be distinct and not "
-            f"named _w/_g, got {names}"
+            f"named _w/_g/sh, got {names}"
         )
+    base = base.where(F.size("_w") >= k)
     return (
         base.select(*names, "_w", F.explode(F.sequence(F.lit(0), F.size("_w") - k)).alias("_g"))
         .select(*names, F.array_join(F.slice("_w", F.col("_g") + 1, k), " ").alias("sh"))

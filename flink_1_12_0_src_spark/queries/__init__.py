@@ -14,8 +14,11 @@ row-count + schema + order-insensitive value hash, so:
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -46,517 +49,80 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), d
     return deco
 
 
-# Queries prior driver gates verified green (CORRECTNESS_r01/r02.json). The
-# gate truncates at 50 entries per round, so registration order is budget
-# order: queries WITHOUT a prior driver-green row run first, and green ones
-# re-verify last — any truncation point maximizes newly-evidenced surface
-# while the round-over-round union stays complete.
-_R01_DRIVER_GREEN = frozenset(
-    {
-        "tpch_q1", "tpch_q2", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6",
-        "tpch_q7", "tpch_q8", "tpch_q9", "tpch_q10", "tpch_q11", "tpch_q12",
-        "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16", "tpch_q17", "tpch_q18",
-        "tpch_q19", "tpch_q20", "tpch_q21", "tpch_q22",
-        "calc_project_filter", "values_inline", "expand_grouping_sets",
-        "expand_cube", "expand_rollup_grouping_id", "correlate_unnest",
-        "join_left_outer", "join_right_outer", "join_full_outer", "join_cross",
-        "join_theta_nonequi", "join_semi_in", "join_anti_not_in",
-        "join_scalar_subquery", "join_broadcast_hint", "interval_join_batch",
-        "agg_function_suite", "agg_min_by_max_by", "agg_listagg_collect",
-        "agg_multiset", "agg_stddev_var", "agg_distinct_multi",
-        "sort_limit_offset", "setop_union_all", "setop_union_distinct",
-        "setop_intersect", "setop_intersect_all", "setop_except",
-    }
-)
+# The driver commits each round's correctness-gate result to the repo root as
+# CORRECTNESS_r<N>.json: {query name: {"hash_match": bool, ...}} for the (at
+# most 50) queries it ran, in load_all() order. The gate order below is
+# derived from those files on every load_all() call, so folding a round
+# means committing its artifact and nothing else.
+ARTIFACT_DIR = Path(__file__).resolve().parents[2]
+
+# Queries that need a first driver row for their CURRENT semantics: new
+# registrations, and greens whose oracle text changed (the ORACLE_SHA record
+# in queries/_last_green.py enforces that listing — see
+# tests/test_gate_order.py). Empty the tuple once their rows land, and
+# restamp ORACLE_SHA in the same edit: `python tools/gen_last_green.py`.
+CURRENT_NEW: tuple[str, ...] = ()
 
 
-# Round-2 driver-green rows (CORRECTNESS_r02.json, hash_match=true).
-_R02_DRIVER_GREEN = frozenset(
-    {
-        "setop_except_all", "join_salted_skew", "join_bucketed_coloc",
-        "agg_two_stage_salted", "agg_single_value", "over_rows_frame",
-        "over_sliding_rows", "over_range_frame", "over_rank_functions",
-        "over_lead_lag", "topn_per_group", "dedup_keep_first",
-        "dedup_keep_last", "window_tumble", "window_hop", "window_session",
-        "window_cumulate", "temporal_sort", "over_time_range_preceding",
-        "window_session_dynamic_gap", "fn_string_suite", "fn_flink_parity",
-        "fn_math_suite", "fn_temporal_suite", "fn_conditional_suite",
-        "fn_regex_like", "fn_json_suite", "fn_collection_suite",
-        "fn_time_misc_suite", "fn_url_map_suite", "asof_join_events",
-        "cep_funnel", "cep_error_burst", "dedup_maxby_keep_last",
-        "async_lookup_enrich", "tableagg_top2_emit", "udtf_lateral_tokens",
-        "cep_view_purchase_no_error", "cep_times_range_burst",
-        "cep_until_errors_before_purchase", "udaf_weighted_avg",
-        "flinksql_tumble", "flinksql_hop", "flinksql_session",
-        "flinkddl_json_source", "flinkddl_partitioned_sink",
-        "flinksql_stream_tumble", "flinkddl_orc_source",
-    }
-)
-
-# Round-3 driver-green rows (CORRECTNESS_r03.json, hash_match=true).
-_R03_DRIVER_GREEN = frozenset(
-    {
-        "cdc_canal_normalize", "cdc_debezium_normalize",
-        "cdc_foreachbatch_upsert", "flinkddl_csv_source",
-        "flinksql_match_recognize", "fn_decimal_suite",
-        "graph_connected_components", "graph_degrees", "graph_hits",
-        "graph_label_propagation", "graph_pagerank", "graph_sssp",
-        "graph_summarization", "graph_triangle_count",
-        "partition_pruned_read", "stream_broadcast_dim_agg",
-        "stream_count_slide", "stream_count_tumble", "stream_cumulate_agg",
-        "stream_dedup_keep_first", "stream_dedup_keep_last",
-        "stream_dedup_ttl", "stream_global_agg", "stream_hop_agg",
-        "stream_interval_join", "stream_interval_join_full",
-        "stream_interval_join_left", "stream_late_dropped_agg",
-        "stream_late_side_output", "stream_lookup_join",
-        "stream_match_recognize", "stream_ooo_count_slide",
-        "stream_ooo_count_tumble", "stream_ooo_over_running_sum",
-        "stream_ooo_over_time_range", "stream_ooo_temporal_join",
-        "stream_ooo_topn", "stream_over_running_sum",
-        "stream_over_time_range", "stream_session_agg",
-        "stream_session_agg_append", "stream_session_dynamic_gap",
-        "stream_side_outputs", "stream_temporal_join", "stream_topn",
-        "stream_tumble_agg", "stream_unbounded_join",
-        "stream_windowed_cogroup",
-    }
-)
-
-# Round-5 driver-green rows (CORRECTNESS_r05.json, hash_match=true).
-_R05_DRIVER_GREEN = frozenset(
-    {
-        "agg_filter_clause", "cdc_maxwell_normalize", "cep_followed_by_any",
-        "dataset_shuffle_shard", "dataset_split_leakage",
-        "dataset_temperature_mix", "dataset_uniform_sample",
-        "datastream_keyby_window_sum", "datastream_maxby_flatmap",
-        "dedup_bloom_membership", "dedup_exact_substring",
-        "dedup_semantic_prune", "flinkddl_alter",
-        "flinkddl_auto_compaction_sink", "flinkddl_compressed_sink",
-        "flinkddl_computed_col", "flinkddl_create_function",
-        "flinkddl_create_table_like", "flinkddl_metadata_columns",
-        "flinkddl_options_hint", "flinkddl_static_partition_insert",
-        "flinksql_match_prev_vshape", "flinksql_match_skip_to_last",
-        "flinksql_system_time_join", "fn_misc_suite", "graph_adamic_adar",
-        "graph_bipartite_projection", "graph_community_detection",
-        "graph_edge_metrics", "graph_triadic_census",
-        "graph_vertex_metrics", "multimodal_audio_energy",
-        "pipeline_training_mix", "stream_clean_corpus",
-        "stream_match_agg_define", "stream_ooo_delta_trigger",
-        "stream_text_quality", "tableapi_over_window",
-        "tableapi_temporal_fn_join", "tableapi_tumble_window",
-        "text_bm25_topk", "text_quality_ensemble",
-        "text_repetition_signals", "text_token_entropy",
-        "text_unigram_logppl",
-    }
-)
-
-# Round-6 driver-green rows (CORRECTNESS_r06.json, hash_match=true) — the
-# whole round-5 backlog plus 5 of the 7 round-6-new queries (the other two:
-# flinkddl_datagen_sequence red on the HUGEINT oracle typing,
-# flinkddl_catalog_registry deferred past the window).
-_R06_DRIVER_GREEN = frozenset(
-    {
-        "cdc_consume_changelog_agg", "dataset_pack_sequences",
-        "dataset_quota_sample", "dataset_split_hash", "dedup_cluster_docs",
-        "dedup_embedding_cosine", "dedup_exact_hash", "dedup_minhash_lsh",
-        "dedup_ngram_jaccard", "dedup_simhash", "doc_chunking",
-        "doc_fingerprint", "embedding_cosine_topk",
-        "embedding_kmeans_assign", "flinkddl_describe",
-        "flinkddl_set_reset", "flinkddl_show_functions",
-        "flinkddl_show_partitions", "flinkddl_stream_computed_watermark",
-        "flinksql_match_agg_define", "graph_clustering_coeff",
-        "graph_jaccard_similarity", "multimodal_features",
-        "multimodal_frame_sample", "pipeline_clean_corpus",
-        "stream_anti_join_not_exists", "stream_delta_trigger",
-        "stream_evictor_count", "stream_evictor_delta",
-        "stream_evictor_time", "stream_full_outer_join_changelog",
-        "stream_iterate_reduce", "stream_outer_join_changelog",
-        "stream_right_outer_join_changelog", "stream_semi_join_exists",
-        "stream_temporal_sort", "tableapi_execute_insert",
-        "tableapi_fluent_agg", "tableapi_setops_projection",
-        "text_language_id", "text_pii_mask", "text_quality_score",
-        "text_tfidf_topk", "text_token_count",
-    }
-)
-
-# Round-7 driver-green rows (CORRECTNESS_r07.json — 50/50 green, the first
-# zero-red round): the 6 oracle-cast-fixed ex-reds (HUGEINT rendering class,
-# permanently guarded by tests/test_oracle_types.py), the deferred
-# flinkddl_catalog_registry, and all 22 round-7-new queries.
-_R07_DRIVER_GREEN = frozenset(
-    {
-        "cdc_retract_stream_output", "cdc_retract_with_delete",
-        "stream_tumble_early_fire", "dataset_dsir_weights",
-        "text_decontaminate", "flinkddl_datagen_sequence",
-        "flinkddl_catalog_registry",
-        "flinkddl_explain_plan", "text_gopher_rules", "dataset_token_budget",
-        "flinkddl_show_tables_views", "flinkddl_show_modules",
-        "embedding_centroid_by_label", "embedding_nearest_centroid",
-        "text_zipf_rank_report", "dataset_source_mix_report",
-        "embedding_cluster_cohesion", "text_vocab_growth",
-        "events_retention_cohorts", "events_value_percentiles",
-        "events_funnel_rates", "events_daily_anomaly", "dataset_epoch_repeat",
-        "embedding_centroid_separation", "events_transition_matrix",
-        "stream_daily_anomaly", "events_session_stats",
-        "dedup_rate_by_source", "dataset_weighted_sample",
-    }
-)
-
-# Round-8 driver-green rows (CORRECTNESS_r08.json — 50/50 green, the second
-# consecutive zero-red round): all 8 round-8-new queries on first
-# presentation plus 42 re-verified greens.
-_R08_DRIVER_GREEN = frozenset(
-    {
-        "agg_distinct_multi", "agg_filter_clause", "agg_function_suite",
-        "agg_listagg_collect", "agg_min_by_max_by", "agg_multiset",
-        "agg_single_value", "agg_stddev_var", "agg_two_stage_salted",
-        "calc_project_filter", "correlate_unnest",
-        "dataset_pack_efficiency", "dedup_cluster_size_histogram",
-        "dedup_keep_first", "dedup_keep_last", "dedup_paragraph_minhash",
-        "expand_cube", "expand_grouping_sets", "expand_rollup_grouping_id",
-        "interval_join_batch", "join_anti_not_in", "join_broadcast_hint",
-        "join_bucketed_coloc", "join_cross", "join_full_outer",
-        "join_left_outer", "join_right_outer", "join_salted_skew",
-        "join_scalar_subquery", "join_semi_in", "join_theta_nonequi",
-        "over_lead_lag", "over_range_frame", "over_rank_functions",
-        "over_rows_frame", "over_sliding_rows", "setop_except",
-        "setop_except_all", "setop_intersect", "setop_intersect_all",
-        "setop_union_all", "setop_union_distinct", "sort_limit_offset",
-        "stream_funnel_rates", "stream_pack_efficiency",
-        "stream_retention_cohorts", "stream_source_mix",
-        "stream_wordcount_zipf", "topn_per_group", "values_inline",
-    }
-)
-
-# Round-9 driver-green rows (CORRECTNESS_r09.json — 50/50 green, the third
-# consecutive zero-red round): all 19 round-9-new queries on first
-# presentation; the other 31 rows were re-verified greens already present
-# in earlier tiers.
-_R09_DRIVER_GREEN = frozenset(
-    {
-        "dataset_pack_boundary_audit", "dedup_incremental_admit",
-        "dedup_keepfirst_admit", "dedup_minhash_calibration",
-        "dedup_simhash_hamming", "embedding_kmeans_fit",
-        "events_inter_arrival", "pipeline_ccnet_buckets",
-        "pipeline_curation_funnel", "pipeline_filter_agreement",
-        "pipeline_refinedweb_clean", "pipeline_refinedweb_corpus",
-        "stream_contamination_matrix", "stream_neardedup_keepfirst",
-        "stream_source_diversity", "text_bigram_logppl",
-        "text_bpe_pair_stats", "text_contamination_matrix",
-        "text_source_diversity",
-    }
-)
-
-# Round-10 driver-green rows (CORRECTNESS_r10.json — 50/50 green, the fourth
-# consecutive zero-red round): all 28 round-10-new queries on first
-# presentation plus 22 re-verified greens.
-_R10_DRIVER_GREEN = frozenset(
-    {
-        "agg_distinct_multi", "agg_function_suite", "agg_listagg_collect",
-        "agg_min_by_max_by", "agg_multiset", "agg_stddev_var",
-        "calc_project_filter", "correlate_unnest",
-        "dataset_curriculum_pack", "dataset_pack_bpe",
-        "dedup_containment_prune", "dedup_family_agreement",
-        "dedup_ngram_containment", "dedup_substring_rewrite",
-        "dedup_url_normalize", "embedding_pca_power", "expand_cube",
-        "expand_grouping_sets", "expand_rollup_grouping_id",
-        "interval_join_batch", "join_anti_not_in", "join_broadcast_hint",
-        "join_cross", "join_full_outer", "join_left_outer",
-        "join_right_outer", "join_scalar_subquery", "join_semi_in",
-        "join_theta_nonequi", "knn_ivf_recall", "knn_lsh_recall",
-        "knn_pq_recall", "pipeline_pretrain_corpus",
-        "pipeline_quality_calibration", "pipeline_quality_eval",
-        "pipeline_quality_fit", "pipeline_quality_roc",
-        "pipeline_refinedweb_substr", "pipeline_refinedweb_url",
-        "stream_bloom_membership", "stream_containment_prune",
-        "stream_incremental_admit", "stream_langid_confusion",
-        "stream_quality_filter", "stream_substring_rewrite",
-        "stream_url_admit", "text_bpe_encode", "text_bpe_fit",
-        "text_langid_confusion", "values_inline",
-    }
-)
-
-# Round-11 driver-green rows (CORRECTNESS_r11.json — 50/50 green, the fifth
-# consecutive zero-red round): all 14 round-11-new queries on first
-# presentation plus 36 re-verified greens.
-_R11_DRIVER_GREEN = frozenset(
-    {
-        "agg_distinct_multi", "agg_filter_clause", "agg_function_suite",
-        "agg_listagg_collect", "agg_min_by_max_by", "agg_multiset",
-        "agg_single_value", "agg_stddev_var", "agg_two_stage_salted",
-        "calc_project_filter", "correlate_unnest", "dataset_doremi_sample",
-        "dataset_doremi_weights", "dataset_mix_compare",
-        "dedup_soft_weights", "dedup_substring_spans",
-        "events_distinct_users_approx", "events_value_percentiles_approx",
-        "expand_cube", "expand_grouping_sets", "expand_rollup_grouping_id",
-        "interval_join_batch", "join_anti_not_in", "join_broadcast_hint",
-        "join_bucketed_coloc", "join_cross", "join_full_outer",
-        "join_left_outer", "join_right_outer", "join_salted_skew",
-        "join_scalar_subquery", "join_semi_in", "join_theta_nonequi",
-        "over_rows_frame", "over_sliding_rows", "pipeline_corpus_card",
-        "setop_except", "setop_except_all", "setop_intersect",
-        "setop_intersect_all", "setop_union_all", "setop_union_distinct",
-        "sort_limit_offset", "stream_bloom_filter_only",
-        "stream_doremi_weights", "stream_heavy_hitters_cms",
-        "stream_soft_weights", "text_heavy_hitters_cms", "text_slm_select",
-        "values_inline"
-    }
-)
-
-# Round-12 driver-green rows (CORRECTNESS_r12.json — 50/50 green, the sixth
-# consecutive zero-red round): all 7 round-12 first-presentation rows (2 new
-# registrations + 2 new twins + the re-presented coupled-DoReMi quartet) plus
-# 43 re-verified greens drawn from the stalest (r01–r02) cohort by the LRU
-# rotation.
-_R12_DRIVER_GREEN = frozenset(
-    {
-        "asof_join_events", "cep_error_burst", "cep_funnel",
-        "dataset_doremi_sample", "dataset_doremi_weights",
-        "dataset_mix_compare", "dedup_maxby_keep_last",
-        "dedup_soft_weights_cms", "fn_collection_suite",
-        "fn_conditional_suite", "fn_flink_parity", "fn_json_suite",
-        "fn_math_suite", "fn_regex_like", "fn_string_suite",
-        "fn_temporal_suite", "fn_time_misc_suite", "fn_url_map_suite",
-        "over_time_range_preceding", "stream_doremi_weights",
-        "stream_soft_weights_cms", "stream_value_percentiles",
-        "temporal_sort", "tpch_q1", "tpch_q10", "tpch_q11", "tpch_q12",
-        "tpch_q13", "tpch_q14", "tpch_q15", "tpch_q16", "tpch_q17",
-        "tpch_q18", "tpch_q19", "tpch_q2", "tpch_q20", "tpch_q21",
-        "tpch_q22", "tpch_q3", "tpch_q4", "tpch_q5", "tpch_q6", "tpch_q7",
-        "tpch_q8", "tpch_q9", "window_cumulate", "window_hop",
-        "window_session", "window_session_dynamic_gap", "window_tumble"
-    }
-)
-
-# Round-13 driver-green rows (CORRECTNESS_r13.json — 50/50 green, the
-# seventh consecutive zero-red round): all 10 round-13 first-presentation
-# rows (the codec-free multimodal family + twin #21 + the in-env avro pair
-# + the re-presented percentile contract pair) plus 40 re-verified greens
-# drawn from the stalest (r02–r03) cohort by the LRU rotation.
-_R13_DRIVER_GREEN = frozenset(
-    {
-        "async_lookup_enrich", "avro_record_sizes", "cdc_canal_normalize",
-        "cdc_debezium_normalize", "cdc_foreachbatch_upsert",
-        "cep_times_range_burst", "cep_until_errors_before_purchase",
-        "cep_view_purchase_no_error", "events_value_percentiles_approx",
-        "flinkddl_avro_source", "flinkddl_csv_source",
-        "flinkddl_json_source", "flinkddl_orc_source",
-        "flinkddl_partitioned_sink", "flinksql_hop",
-        "flinksql_match_recognize", "flinksql_session",
-        "flinksql_stream_tumble", "flinksql_tumble", "fn_decimal_suite",
-        "graph_connected_components", "graph_degrees", "graph_hits",
-        "graph_label_propagation", "graph_pagerank", "graph_sssp",
-        "graph_summarization", "graph_triangle_count",
-        "multimodal_audio_header", "multimodal_header_parse",
-        "multimodal_media_catalog", "multimodal_resolution_audit",
-        "multimodal_video_header", "partition_pruned_read",
-        "stream_dedup_keep_first", "stream_dedup_keep_last",
-        "stream_global_agg", "stream_hop_agg", "stream_interval_join",
-        "stream_lookup_join", "stream_multimodal_audit",
-        "stream_over_running_sum", "stream_session_agg",
-        "stream_session_agg_append", "stream_topn", "stream_tumble_agg",
-        "stream_value_percentiles", "tableagg_top2_emit",
-        "udaf_weighted_avg", "udtf_lateral_tokens"
-    }
-)
-
-# Round-14 driver-green rows (CORRECTNESS_r14.json — 49/50 hash-green; the
-# 50th row is `knn_ivf_topk`'s deliberate one-time rows-only presentation,
-# err="no_oracle" by design, NOT a red — it returns to the dead-last
-# no-oracle tier below and never spends another window slot).
-_R14_DRIVER_GREEN = frozenset(
-    {
-        "avro_nullable_roundtrip", "cep_followed_by_any",
-        "datastream_keyby_window_sum", "datastream_maxby_flatmap",
-        "dedup_semantic_prune", "flinkddl_alter",
-        "flinkddl_auto_compaction_sink", "flinkddl_compressed_sink",
-        "flinkddl_computed_col", "flinkddl_create_function",
-        "flinkddl_create_table_like", "flinkddl_metadata_columns",
-        "flinkddl_options_hint", "flinkddl_static_partition_insert",
-        "flinksql_match_prev_vshape", "flinksql_match_skip_to_last",
-        "flinksql_system_time_join", "fn_misc_suite",
-        "multimodal_header_parse", "multimodal_media_catalog",
-        "multimodal_resolution_audit", "stream_broadcast_dim_agg",
-        "stream_count_slide", "stream_count_tumble", "stream_cumulate_agg",
-        "stream_dedup_ttl", "stream_interval_join_full",
-        "stream_interval_join_left", "stream_late_dropped_agg",
-        "stream_late_side_output", "stream_match_recognize",
-        "stream_multimodal_audit", "stream_ooo_count_slide",
-        "stream_ooo_count_tumble", "stream_ooo_over_running_sum",
-        "stream_ooo_over_time_range", "stream_ooo_temporal_join",
-        "stream_ooo_topn", "stream_over_time_range",
-        "stream_session_dynamic_gap", "stream_side_outputs",
-        "stream_temporal_join", "stream_unbounded_join",
-        "stream_windowed_cogroup", "tableapi_over_window",
-        "tableapi_temporal_fn_join", "tableapi_tumble_window",
-        "text_bm25_topk", "text_repetition_signals"
-    }
-)
-
-_DRIVER_GREEN = (
-    _R01_DRIVER_GREEN | _R02_DRIVER_GREEN | _R03_DRIVER_GREEN
-    | _R05_DRIVER_GREEN | _R06_DRIVER_GREEN | _R07_DRIVER_GREEN
-    | _R08_DRIVER_GREEN | _R09_DRIVER_GREEN | _R10_DRIVER_GREEN
-    | _R11_DRIVER_GREEN | _R12_DRIVER_GREEN | _R13_DRIVER_GREEN
-    | _R14_DRIVER_GREEN
-)
-
-# Round-10 had zero driver-red rows (fourth zero-red round in a row), so
-# there was nothing to re-verify at the front in round 11.
-_R11_FIXED_FIRST: tuple[str, ...] = ()
-
-# Queries first registered in round 11 — first possible driver row.
-_R11_NEW = (
-    "dataset_doremi_weights",
-    "dedup_substring_spans",
-    "events_value_percentiles_approx",
-    "pipeline_corpus_card",
-    "stream_bloom_filter_only",
-    "dataset_doremi_sample",
-    "stream_doremi_weights",
-    "dedup_soft_weights",
-    "text_heavy_hitters_cms",
-    "stream_heavy_hitters_cms",
-    "text_slm_select",
-    "stream_soft_weights",
-    "events_distinct_users_approx",
-    "dataset_mix_compare",
-)
-
-# Round-11 had zero driver-red rows (fifth zero-red round in a row), so
-# there is nothing to re-verify at the front this round.
-_R12_FIXED_FIRST: tuple[str, ...] = ()
-
-# Queries needing a first driver row for their CURRENT semantics: the two
-# round-12-new registrations, plus the DoReMi family re-presented because
-# the round-12 coupling (mixture-dependent proxy loss, verdict task #4)
-# changed their VALUES — their r11 green evidenced the static-scorer
-# outputs, not these.
-_R12_NEW: tuple[str, ...] = (
-    "dedup_soft_weights_cms",
-    "stream_value_percentiles",
-    "stream_soft_weights_cms",
-    "dataset_doremi_weights",
-    "dataset_doremi_sample",
-    "dataset_mix_compare",
-    "stream_doremi_weights",
-)
-
-# Round-12 had zero driver-red rows (sixth zero-red round in a row), so
-# there is nothing to re-verify at the front this round.
-_R13_FIXED_FIRST: tuple[str, ...] = ()
-
-# Queries needing a first driver row for their CURRENT semantics: the FIVE
-# round-13-new registrations (the codec-free multimodal family — image
-# header parse, resolution audit + its streaming twin, WAV audio header,
-# MP4 video header), plus the quantile-contract pair re-presented because
-# the r12 ADVICE fixes changed their oracle (within_tol NULL for
-# no-non-NULL-values groups — the latent row-count red closed on both
-# halves; the shared PCT_APPROX_ORACLE text changed, which the new
-# ORACLE_SHA gate test enforces ending up here).
-_R13_NEW: tuple[str, ...] = (
-    "multimodal_header_parse",
-    "multimodal_resolution_audit",
-    "stream_multimodal_audit",
-    "multimodal_audio_header",
-    "multimodal_video_header",
-    "multimodal_media_catalog",
-    "flinkddl_avro_source",
-    "avro_record_sizes",
-    "events_value_percentiles_approx",
-    "stream_value_percentiles",
-)
-
-# Round-13 had zero driver-red rows (seventh zero-red round in a row), so
-# there is nothing to re-verify at the front this round.
-_R14_FIXED_FIRST: tuple[str, ...] = ()
-
-# Queries needing a first driver row for their CURRENT semantics this
-# round (populated as round-14 work lands): the JPEG extension re-presents
-# the multimodal image family (oracle text changes — the ORACLE_SHA gate
-# enforces the listing), the nullable-union avro round-trip is brand new,
-# and `knn_ivf_topk` gets its first (rows-only) presentation — the one
-# registered name never driver-checked (verdict r13 task #8).
-_R14_NEW: tuple[str, ...] = (
-    "multimodal_header_parse",
-    "multimodal_resolution_audit",
-    "stream_multimodal_audit",
-    "multimodal_media_catalog",
-    "avro_nullable_roundtrip",
-    # one-time rows-only presentation (r13 verdict task #8): the only
-    # registered name never driver-checked; its hash-verifiable
-    # `knn_ivf_recall` companion is r10-green
-    "knn_ivf_topk",
-)
-
-# Round-14 had zero genuinely-red rows (the one non-green row was
-# `knn_ivf_topk`'s designed rows-only presentation, now folded back to the
-# dead-last tier), so there is nothing to re-verify at the front, and an
-# optimization round registers no new queries.
-_R15_FIXED_FIRST: tuple[str, ...] = ()
-_R15_NEW: tuple[str, ...] = ()
-
-# Round-agnostic aliases for the current round's tiers: tests and tools
-# import these instead of the round-numbered literals, so the per-round
-# rename (fold greens, start a fresh _NEW tuple) no longer requires editing
-# any test. Update ONLY the two assignments below at each round rollover.
-CURRENT_FIXED_FIRST: tuple[str, ...] = _R15_FIXED_FIRST
-CURRENT_NEW: tuple[str, ...] = _R15_NEW
-
-# The registry's only rows-only entries: the ANN top-k trio, whose real
-# verification is the recall gates in tests/test_pipeline.py. They can never
-# produce a hash-green driver row, so they must never outrank an oracle-able
-# query in the gate window (r05 burned 2 slots on guaranteed `no_oracle`
-# rows) — dead last, permanently.
-_NO_ORACLE_LAST = ("knn_lsh_topk", "knn_ivf_topk", "knn_pq_topk")
+def driver_rows(root: Path = ARTIFACT_DIR) -> tuple[dict[str, int], dict[str, bool]]:
+    """Per query in the CORRECTNESS_r*.json history under ``root``: the last
+    round the driver hashed it green, and whether its latest row is green."""
+    rounds = sorted(
+        (int(m.group(1)), path)
+        for path in root.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name))
+    )
+    last_green: dict[str, int] = {}
+    latest_green: dict[str, bool] = {}
+    for rnd, path in rounds:
+        for name, row in json.loads(path.read_text()).items():
+            latest_green[name] = bool(row.get("hash_match"))
+            if latest_green[name]:
+                last_green[name] = rnd
+    return last_green, latest_green
 
 
-def _gate_rank(name: str) -> tuple[int, int]:
-    """Gate-budget rank: lower runs earlier in the driver's 50-slot window.
+def gate_tiers(registry: dict[str, Query], root: Path = ARTIFACT_DIR) -> list[list[str]]:
+    """Split ``registry`` into the driver's gate-budget tiers; earlier tiers
+    run earlier in the 50-slot window, each in registration order unless
+    noted:
 
-    (0,i) = prior-round driver-red rows, fixed — re-verify first (EMPTY this
-        round: CORRECTNESS_r11 was 50/50 green, the fifth zero-red round);
-    (1,i) = any oracle-able query somehow never driver-tested (none known —
-        the round-over-round union is 333/333 — but the tier catches any
-        registration added outside CURRENT_NEW by mistake);
-    (2,i) = this round's new queries (first possible driver row);
-    (3,r) = already driver-green (333 rows) — re-verify with the remaining
-        slots in LRU order: r = the last round the driver hashed this query
-        green (queries/_last_green.py, regenerated per round by
-        tools/gen_last_green.py), ascending, so the STALEST evidence
-        refreshes first. Before round 12 this tier ran in registration
-        order, which re-checked the same ~22 early-registered relational
-        rows in both r10 and r11 while 105 queries (CEP, CDC, flinkddl_*,
-        graph) sat last driver-verified in rounds 1-3 — 8+ rounds stale at
-        the rendered-hash layer where every historical red lived;
-    (4,i) = the no-oracle ANN trio — can only ever produce `no_oracle`
-        rows, so they must never consume an evidence slot.
-
-    Tiers 0+1+2 = len(CURRENT_NEW), far inside the 50-slot window: every new
-    query gets a driver row this round while the remaining slots re-verify
-    the stalest greens, keeping the oracle-able union complete AND rotating
-    its evidence freshness.
+    0. oracle-able queries whose latest driver row is not hash-green — the
+       fix re-verifies first;
+    1. oracle-able queries with no driver row yet (a registration made
+       outside CURRENT_NEW by mistake still gets a slot);
+    2. CURRENT_NEW, in tuple order. An explicit listing outranks tier 4:
+       that is the only way a rows-only query spends a slot (a deliberate
+       one-time presentation);
+    3. driver-green queries, least recently verified first (last-green round
+       ascending), so the slots left after the front tiers refresh the
+       stalest evidence instead of re-checking the same early-registered
+       rows every round;
+    4. rows-only queries (``oracle is None``): they can only produce
+       `no_oracle` rows, so they never consume an evidence slot.
     """
-    if name in CURRENT_FIXED_FIRST:
-        return (0, CURRENT_FIXED_FIRST.index(name))
-    if name in CURRENT_NEW:
-        # an EXPLICIT CURRENT_NEW listing outranks the dead-last rule: the
-        # only way a no-oracle row ever spends a window slot is a deliberate
-        # one-time presentation (round-14: `knn_ivf_topk`, the one
-        # registered name with no driver row in any round's artifact —
-        # r13 verdict task #8), after which it returns to tier 4.
-        return (2, CURRENT_NEW.index(name))
-    if name in _NO_ORACLE_LAST:
-        return (4, _NO_ORACLE_LAST.index(name))
-    if name in _DRIVER_GREEN:
-        from flink_1_12_0_src_spark.queries._last_green import LAST_GREEN
-
-        return (3, LAST_GREEN.get(name, 0))
-    return (1, 99)
+    last_green, latest_green = driver_rows(root)
+    tiers: list[list[str]] = [[] for _ in range(5)]
+    for name, q in registry.items():
+        if q.oracle is not None and latest_green.get(name) is False:
+            tier = 0
+        elif name in CURRENT_NEW:
+            tier = 2
+        elif q.oracle is None:
+            tier = 4
+        elif name not in latest_green:
+            tier = 1
+        else:
+            tier = 3
+        tiers[tier].append(name)
+    tiers[2].sort(key=CURRENT_NEW.index)
+    tiers[3].sort(key=last_green.__getitem__)
+    return tiers
 
 
 def load_all() -> dict[str, Query]:
     """Import every query module (side effect: fills REGISTRY) and return it
-    in gate-budget order (see :func:`_gate_rank`)."""
+    in gate-budget order (see :func:`gate_tiers`)."""
     from flink_1_12_0_src_spark.queries import (  # noqa: F401
         relational,
         window_agg,
@@ -571,6 +137,4 @@ def load_all() -> dict[str, Query]:
         streamingq,
     )
 
-    reg_order = {n: i for i, n in enumerate(REGISTRY)}
-    names = sorted(REGISTRY, key=lambda n: (_gate_rank(n), reg_order[n]))
-    return {n: REGISTRY[n] for n in names}
+    return {n: REGISTRY[n] for tier in gate_tiers(REGISTRY) for n in tier}

@@ -34,10 +34,17 @@ _SCRATCH_ROOT = os.environ.get(
 # harness's. When the root's free space drops under this floor, fall back to
 # the disk-backed tempfile default for NEW dirs (existing ones are
 # unaffected). Default 4 GiB — orders of magnitude above any verify-scale
-# run (a full drive leaves ~100 MB), small next to the tmpfs.
-_MIN_FREE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SCRATCH_MIN_FREE", str(4 * 1024**3))
-)
+# run (a full drive leaves ~100 MB), small next to the tmpfs. A value that
+# is not a plain byte count (e.g. "4g") falls back to the default instead of
+# failing every import of this module.
+def _min_free_bytes(default: int = 4 * 1024**3) -> int:
+    try:
+        return int(os.environ.get("SPARK_GRAFT_SCRATCH_MIN_FREE", default))
+    except ValueError:
+        return default
+
+
+_MIN_FREE_BYTES = _min_free_bytes()
 
 # Every dir this process allocates, removed at interpreter exit: the
 # returned DataFrames read these dirs LAZILY (a caller may collect long

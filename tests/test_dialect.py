@@ -260,43 +260,36 @@ def test_cep_bind_predicate_rejected_with_any_semantics():
 
 def test_gate_window_composition():
     """The driver verifies only the first 50 load_all() entries per round.
-    Standing policy: fixed ex-reds lead (empty on zero-red rounds), then the
+    Standing policy: ex-reds lead (empty on zero-red rounds), then the
     current round's new queries — no prior-green query occupies a slot while
-    anything unevidenced waits — and the no-oracle ANN trio (which can only
-    ever produce `no_oracle` rows) sits dead last, outside any window.
-    Imports the round-agnostic CURRENT_* aliases so the per-round tier
-    rename never requires editing this test."""
-    from flink_1_12_0_src_spark.queries import (
-        _DRIVER_GREEN,
-        _NO_ORACLE_LAST,
-        CURRENT_FIXED_FIRST,
-        CURRENT_NEW,
-        load_all,
-    )
+    anything unevidenced waits — and the rows-only ANN trio (which can only
+    ever produce `no_oracle` rows) sits dead last, outside any window. The
+    tiers are derived from the CORRECTNESS_r*.json artifacts, so a round
+    rollover never requires editing this test."""
+    from flink_1_12_0_src_spark.queries import gate_tiers, load_all
 
-    names = list(load_all())
-    front = list(CURRENT_FIXED_FIRST) + list(CURRENT_NEW)
+    registry = load_all()
+    names = list(registry)
+    tiers = gate_tiers(registry)
+    front = tiers[0] + tiers[1] + tiers[2]
     assert names[: len(front)] == front
-    # everything after the front tier and before the ANN trio is driver-green
-    # already — round 9 has zero unevidenced oracle-able queries waiting
-    unevidenced = [
-        n for n in names
-        if n not in _DRIVER_GREEN and n not in _NO_ORACLE_LAST and n not in front
-    ]
-    assert unevidenced == [], unevidenced
+    # every oracle-able query has a driver row already — nothing unevidenced
+    # waits outside CURRENT_NEW
+    assert tiers[1] == [], tiers[1]
     # the whole front tier fits the 50-slot window with room to spare, so
     # the remaining slots re-verify greens and nothing defers this round
     assert len(front) <= 50
-    assert set(names[len(front):50]) <= set(_DRIVER_GREEN)
-    # dead-last no-oracle tier — minus any member given a deliberate
-    # one-time presentation slot via an explicit CURRENT_NEW listing
-    # (round 14: knn_ivf_topk, r13 verdict task #8). At most one member may
-    # hold a front slot at a time (presentations are one-time, deliberate,
-    # and individually documented), and the guard on the slice keeps
-    # names[-0:] (the whole list) out of the assertion if ever all three
-    # were presented at once.
-    assert len([n for n in _NO_ORACLE_LAST if n in front]) <= 1
-    tail = [n for n in _NO_ORACLE_LAST if n not in front]
+    assert set(names[len(front):50]) <= set(tiers[3])
+    # dead-last rows-only tier — minus any member given a deliberate
+    # one-time presentation slot via an explicit CURRENT_NEW listing. At most
+    # one member may hold a front slot at a time (presentations are
+    # one-time, deliberate, and individually documented), and the guard on
+    # the slice keeps names[-0:] (the whole list) out of the assertion if
+    # ever all three were presented at once.
+    rows_only = [n for n, q in registry.items() if q.oracle is None]
+    assert len(rows_only) == 3
+    assert len([n for n in rows_only if n in front]) <= 1
+    tail = [n for n in rows_only if n not in front]
     if tail:
         assert names[-len(tail):] == tail
 

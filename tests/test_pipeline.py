@@ -421,6 +421,25 @@ def test_cosine_topk_np_equals_expression_path(spark, sf_dir):
     b = sorted(tuple(r) for r in cosine_topk_np(emb, q, k=5).collect())
     assert a == b
 
+
+def test_exploded_shingles_rejects_colliding_carry_names(spark):
+    """Carry columns may not reuse the internal aliases (_w, _g), the output
+    alias (sh), or each other's names."""
+    from flink_1_12_0_src_spark.pipeline.text import exploded_shingles
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id bigint, text string")
+    for carry in (
+        [F.col("doc_id").alias("_w")],
+        [F.col("doc_id").alias("_g")],
+        [F.col("doc_id").alias("sh")],
+        ["doc_id", F.col("text").alias("doc_id")],
+    ):
+        with pytest.raises(ValueError, match="carry columns"):
+            exploded_shingles(docs, "text", 2, carry=carry)
+    ok = exploded_shingles(docs, "text", 2, carry=["doc_id"])
+    assert [tuple(r) for r in ok.collect()] == [(1, "a b"), (1, "b c"), (1, "c d")]
+
+
 def test_ngram_hot_shingle_cap_bounds_intersect_join(spark):
     """Stop-shingle skew guard: 80 docs in one block all share the bigram
     "of the" — 80·79/2 = 3160 intersect-join rows from that one shingle

@@ -1,18 +1,29 @@
 """Streaming scratch-dir lifecycle: tmpfs free-space bound and
-end-of-process cleanup (streaming/run.py scratch_dir)."""
+end-of-process cleanup (streaming/run.py scratch_dir).
+
+Each test removes only the dirs it allocated: the global cleanup would also
+delete dirs that DataFrames built earlier in the session still read lazily.
+"""
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from flink_1_12_0_src_spark.streaming import run as srun
 
 
-def test_scratch_dir_registers_for_cleanup():
+def _release(d: str) -> None:
+    shutil.rmtree(d)
+    srun._ALLOCATED.remove(d)
+
+
+def test_scratch_dir_registers_for_cleanup(monkeypatch):
+    monkeypatch.setattr(srun, "_ALLOCATED", [])  # cleanup sees only this test's dir
     d = srun.scratch_dir(prefix="scratch_test_")
     assert os.path.isdir(d)
-    assert d in srun._ALLOCATED
+    assert srun._ALLOCATED == [d]
     srun._cleanup_scratch()
     assert not os.path.exists(d)
     assert srun._ALLOCATED == []
@@ -30,7 +41,7 @@ def test_scratch_dir_falls_back_to_disk_when_tmpfs_low(monkeypatch):
         assert d.startswith(tempfile.gettempdir())
         assert os.path.isdir(d)
     finally:
-        srun._cleanup_scratch()
+        _release(d)
     assert not os.path.exists(d)
 
 
@@ -44,4 +55,15 @@ def test_scratch_dir_uses_tmpfs_when_space_available():
     try:
         assert d.startswith(srun._SCRATCH_ROOT + os.sep)
     finally:
-        srun._cleanup_scratch()
+        _release(d)
+
+
+def test_min_free_bound_falls_back_on_malformed_env(monkeypatch):
+    """A size with a unit suffix is not a byte count: the bound falls back to
+    the 4 GiB default instead of raising at import."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_MIN_FREE", "4g")
+    assert srun._min_free_bytes() == 4 * 1024**3
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_MIN_FREE", "1048576")
+    assert srun._min_free_bytes() == 1048576
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_MIN_FREE")
+    assert srun._min_free_bytes() == 4 * 1024**3

@@ -1,69 +1,39 @@
 #!/usr/bin/env python
-"""Regenerate flink_1_12_0_src_spark/queries/_last_green.py from the
-CORRECTNESS_r*.json history.
+"""Restamp ORACLE_SHA in flink_1_12_0_src_spark/queries/_last_green.py.
 
-The driver's correctness gate truncates at ~50 rows per round, so the slots
-left after this round's new queries re-verify prior greens. Re-verifying in
-REGISTRATION order (the pre-round-12 behavior) made the same early-registered
-relational rows burn slots round after round while 105 queries sat last
-driver-verified in rounds 1-3 — 8+ rounds stale at the rendered-hash layer
-where every historical red (the r06 HUGEINT class) actually lived. Ordering
-tier 3 by last-green round ASCENDING spends the slots on the stalest
-evidence first (LRU rotation — round-11 verdict task #2).
+ORACLE_SHA records the (whitespace-normalized) md5 of the registered oracle
+SQL of every query with a driver-green row — i.e. the semantics that green
+evidence verified. tests/test_gate_order.py compares it against the live
+registry: an oracle whose text changes without the query being listed in
+CURRENT_NEW fails there, so stale-semantics evidence is never treated as
+fresh.
 
-Run after each round's gate fold:
+The gate order itself needs no tool: load_all() derives it from the
+CORRECTNESS_r*.json artifacts on disk, so folding a round is committing its
+artifact. Run this only when emptying CURRENT_NEW after the listed queries'
+rows have landed green, and commit the regenerated module with that edit:
 
     python tools/gen_last_green.py
-
-and commit the regenerated module. tests/test_gate_order.py pins that the
-embedded map matches the artifacts on disk and that load_all() emits tier 3
-staleness-sorted.
 """
 
 from __future__ import annotations
 
-import glob
 import hashlib
-import json
 import os
-import re
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = os.path.join(ROOT, "flink_1_12_0_src_spark", "queries", "_last_green.py")
 
-HEADER = '''"""Last driver-green round per query, derived from CORRECTNESS_r*.json.
+HEADER = '''"""Oracle-text md5 of every driver-green query at its last stamp.
 
-GENERATED by tools/gen_last_green.py — do not edit by hand; regenerate after
-each round's gate fold. Used by queries.__init__._gate_rank to order the
-re-verification tier by evidence staleness (oldest driver-green first), so
-the driver's ~50-slot gate window rotates through the whole green union
-instead of re-checking the same early-registered rows every round.
-
-ORACLE_SHA records the (whitespace-normalized) md5 of each green query's
-registered oracle SQL *at regen time* — i.e. the semantics its LAST_GREEN
-evidence actually verified. tests/test_gate_order.py compares it against the
-live registry: an oracle whose text changes mid-round without the query being
-re-presented in CURRENT_NEW fails there, so stale-semantics evidence can
-never be treated as fresh silently (the DoReMi-re-presentation rule, made
-mechanical).
+GENERATED by tools/gen_last_green.py — do not edit by hand. Restamp when
+emptying queries.CURRENT_NEW; tests/test_gate_order.py fails on any green
+query whose oracle text changed since without a CURRENT_NEW listing.
 """
 
-LAST_GREEN: dict[str, int] = {
+ORACLE_SHA: dict[str, str | None] = {
 '''
-
-
-def build_map(root: str = ROOT) -> dict[str, int]:
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        for name, row in json.load(open(path)).items():
-            if row.get("hash_match"):
-                last[name] = max(last.get(name, 0), rnd)
-    return last
 
 
 def oracle_sha(text: str | None) -> str | None:
@@ -74,36 +44,22 @@ def oracle_sha(text: str | None) -> str | None:
     return hashlib.md5(" ".join(text.split()).encode()).hexdigest()
 
 
-def build_oracle_shas(last: dict[str, int]) -> dict[str, str | None]:
+def main() -> None:
     sys.path.insert(0, ROOT)
-    from flink_1_12_0_src_spark.queries import load_all
+    from flink_1_12_0_src_spark.queries import driver_rows, load_all
 
     registry = load_all()
-    return {
-        name: oracle_sha(registry[name].oracle)
-        for name in sorted(last)
-        if name in registry
-    }
-
-
-def main() -> None:
-    last = build_map()
-    shas = build_oracle_shas(last)
+    last_green, _ = driver_rows()
+    names = sorted(n for n in last_green if n in registry)
     lines = [HEADER]
-    for name in sorted(last):
-        lines.append(f'    "{name}": {last[name]},\n')
-    lines.append("}\n")
-    lines.append("\nORACLE_SHA: dict[str, str | None] = {\n")
-    for name in sorted(shas):
-        val = shas[name]
+    for name in names:
+        val = oracle_sha(registry[name].oracle)
         rendered = f'"{val}"' if val is not None else "None"
         lines.append(f'    "{name}": {rendered},\n')
     lines.append("}\n")
     with open(OUT, "w") as f:
         f.writelines(lines)
-    print(f"wrote {OUT}: {len(last)} queries, rounds {min(last.values())}..{max(last.values())}")
-    stale = sorted(n for n, r in last.items() if r <= 3)
-    print(f"r<=3-stale cohort: {len(stale)} queries")
+    print(f"wrote {OUT}: {len(names)} queries")
 
 
 if __name__ == "__main__":

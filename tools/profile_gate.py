@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Time every registry query (Spark exec + DuckDB oracle) at sf0.01 in
-registration order — a proxy for the driver's correctness-gate budget."""
+load_all() order — a proxy for the driver's correctness-gate budget. Writes
+per-query timings to tools/profile_gate.json (not committed)."""
 
 from __future__ import annotations
 
@@ -46,7 +47,7 @@ def main() -> None:
         print(f"{time.perf_counter()-t_start:8.1f}  {name:40s} spark={t1-t0:6.2f}s oracle={t_oracle:5.2f}s rows={nrows} {err or ''}", flush=True)
     total = time.perf_counter() - t_start
     print(f"TOTAL {total:.1f}s over {len(out)} queries")
-    Path("/root/repo/tools/profile_gate.json").write_text(json.dumps({"total_s": total, "queries": out}, indent=1))
+    Path(__file__).with_suffix(".json").write_text(json.dumps({"total_s": total, "queries": out}, indent=1))
 
 
 if __name__ == "__main__":

@@ -1584,19 +1584,20 @@ ORDER BY user_id, epoch, kind, l_id, r_id
     "epoch label is the data-borne stage — delivery-order invariant. State: "
     "both sides hash-bucketed parquet, delta-touched buckets only for the "
     "incremental joined leg; pad emission finalized at stream close "
-    "(streaming/run.py run_incremental_left_join_changelog). Closes "
+    "(streaming/run.py run_incremental_outer_join_changelog, how=left). Closes "
     "the §2.3 'retraction-emitting variants' gap.",
 )
 def stream_outer_join_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_1_12_0_src_spark.streaming.run import run_incremental_left_join_changelog
+    from flink_1_12_0_src_spark.streaming.run import run_incremental_outer_join_changelog
     from flink_1_12_0_src_spark.streaming.source import events_stream_mod
 
     s = events_stream_mod(spark, sf_dir, with_stage=True).filter(
         F.col("event_type").isin("purchase", "error")
     )
-    out = run_incremental_left_join_changelog(
+    out = run_incremental_outer_join_changelog(
         s, side_col="event_type", left_tag="purchase",
         join_keys=["user_id"], left_id="event_id", right_id="event_id",
+        how="left",
     )
     return out.select(
         "user_id", F.col("epoch").cast("int").alias("epoch"), "kind", "l_id", "r_id"

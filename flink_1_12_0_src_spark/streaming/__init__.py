@@ -6,8 +6,13 @@ micro-batching. This package provides:
 - ``source``: replay a driver table as a multi-micro-batch file stream
   (the reference's ITCase pattern — same rows as the batch fixture so
   streaming results compare against the batch/DuckDB oracle, SURVEY §5.2/FIXTURES §2);
-- ``run``: drive a streaming query to completion synchronously
-  (Trigger.AvailableNow + memory sink) and hand back a batch DataFrame;
+- ``run``: drive a streaming query to completion synchronously and hand
+  back a batch DataFrame. Every runner here and in ``upsert`` shares one
+  run policy: Trigger.AvailableNow under a fresh scratch checkpoint, a
+  bounded wait, the query always stopped, and TimeoutError on overrun
+  (partial state never returns as a result). The incremental joins and
+  ``upsert`` keep keyed state in one bucketed side-store layout
+  (``_b=<k>`` parquet dirs, read only for the buckets a delta touches);
 - ``stateful``: the custom stateful operators Spark lacks as primitives —
   streaming Top-N, keep-last dedup, streaming OVER — via update-mode
   aggregation or applyInPandasWithState (Flink KeyedProcessFunction analog).

@@ -7,12 +7,17 @@ records + watermarks and assert the emitted output
 from __future__ import annotations
 
 import atexit
+import glob
 import os
 import shutil
 import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import DataStreamWriter
+
+# Bound on one replay's wall time (seconds), shared by every runner.
+_TIMEOUT_S = 300
 
 # RAM-backed scratch root for the EPHEMERAL per-run streaming artifacts
 # (checkpoint/commit logs, feedback + side-output directories): every
@@ -85,18 +90,117 @@ def scratch_dir(prefix: str) -> str:
     return d
 
 
+def _drive(writer: DataStreamWriter) -> None:
+    """The run policy of every micro-batch runner: drain the input with
+    Trigger.AvailableNow under a fresh scratch checkpoint, always stop the
+    query, and raise TimeoutError past ``_TIMEOUT_S`` — partial state would
+    yield a wrong-but-plausible result."""
+    q = (
+        writer.option("checkpointLocation", scratch_dir(prefix="ckpt_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        done = q.awaitTermination(_TIMEOUT_S)
+    finally:
+        if q.isActive:
+            q.stop()
+    if not done:
+        raise TimeoutError(f"streaming replay exceeded {_TIMEOUT_S}s")
+
+
+# Bucketed side store: keyed state as parquet under ``root/_b=<k>``, with
+# ``_b = pmod(hash(keys), n_buckets)`` — the file-level analog of Flink's
+# keyed state. Per micro-batch, history is read only for the buckets the
+# delta touches.
+
+
 def _touched_buckets(delta: DataFrame) -> list[int]:
     """Bucket ids a micro-batch delta touches — a bounded (<= n_buckets)
-    driver-side id list used to prune which accumulated bucket FILES the
-    incremental joins re-read; never row data."""
+    driver-side id list used to prune which accumulated bucket FILES are
+    re-read; never row data."""
     return [r["_b"] for r in delta.select("_b").distinct().collect()]
 
 
-def run_to_batch(
-    stream_df: DataFrame,
-    output_mode: str = "complete",
-    timeout_sec: int = 300,
-) -> DataFrame:
+def _files_by_bucket(root: str) -> dict[int, list[str]]:
+    """Snapshot of a side store's data files, per bucket id."""
+    out: dict[int, list[str]] = {}
+    for f in glob.glob(os.path.join(root, "_b=*", "*.parquet")):
+        b = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+        out.setdefault(b, []).append(f)
+    return out
+
+
+def _read_store(spark: SparkSession, root: str) -> DataFrame | None:
+    """Everything a store under ``root`` holds (bucketed or flat), without
+    the path-encoded ``_b``; None while it holds no data file."""
+    if next(glob.iglob(os.path.join(root, "**", "*.parquet"), recursive=True), None) is None:
+        return None
+    return spark.read.parquet(root).drop("_b")
+
+
+def _delta_join_batch(
+    side_col: str,
+    left_tag: str,
+    join_keys: list[str],
+    left: list[Column],
+    right: list[Column],
+    n_buckets: int,
+    l_dir: str,
+    r_dir: str,
+    out_dir: str,
+    stats: dict,
+    project=lambda joined: joined,
+):
+    """foreachBatch body of the incremental stream-stream joins. The batch
+    is ONE tagged union stream (rows with ``side_col == left_tag`` are the
+    left input); its deltas ΔL, ΔR (``join_keys`` plus the ``left`` /
+    ``right`` projections) are appended to the bucketed side stores
+    ``l_dir`` / ``r_dir``, and ``project(ΔL⋈R ∪ L⋈ΔR ∪ ΔL⋈ΔR)`` is appended
+    to ``out_dir`` — each joined pair exactly once for append-only inputs.
+    L and R are the stores as they were BEFORE this batch, read only for
+    the buckets the opposite delta touches. ``stats`` accumulates
+    {"files_read", "files_total"} so tests can assert the pruning."""
+    stats.setdefault("files_read", 0)
+    stats.setdefault("files_total", 0)
+
+    def bucketed(df: DataFrame, cols: list[Column]) -> DataFrame:
+        return df.select(*join_keys, *cols).withColumn(
+            "_b", F.pmod(F.hash(*join_keys), F.lit(n_buckets))
+        )
+
+    def history(files: dict[int, list[str]], touched: list[int], like: DataFrame) -> DataFrame | None:
+        sel = [f for b in touched for f in files.get(b, [])]
+        stats["files_read"] += len(sel)
+        # data files carry only (keys, cols); _b is path-encoded
+        return like.sparkSession.read.schema(like.schema).parquet(*sel) if sel else None
+
+    def fb(bdf: DataFrame, _eid: int) -> None:
+        bdf = bdf.persist()
+        dl = bucketed(bdf.filter(F.col(side_col) == left_tag), left).persist()
+        dr = bucketed(bdf.filter(F.col(side_col) != left_tag), right).persist()
+        # snapshot the accumulated sides BEFORE appending this batch's deltas
+        l_files, r_files = _files_by_bucket(l_dir), _files_by_bucket(r_dir)
+        stats["files_total"] += sum(map(len, l_files.values())) + sum(map(len, r_files.values()))
+        dl.write.partitionBy("_b").mode("append").parquet(l_dir)
+        dr.write.partitionBy("_b").mode("append").parquet(r_dir)
+        dlp, drp = dl.drop("_b"), dr.drop("_b")
+        l_prev = history(l_files, _touched_buckets(dr), dlp)
+        r_prev = history(r_files, _touched_buckets(dl), drp)
+        joined = dlp.join(drp, join_keys)
+        if r_prev is not None:
+            joined = joined.unionByName(dlp.join(r_prev, join_keys))
+        if l_prev is not None:
+            joined = joined.unionByName(l_prev.join(drp, join_keys))
+        project(joined).write.mode("append").parquet(out_dir)
+        dl.unpersist()
+        dr.unpersist()
+        bdf.unpersist()
+
+    return fb
+
+
+def run_to_batch(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
     """Run the streaming plan with Trigger.AvailableNow into a memory sink,
     wait for completion, return the sink contents.
 
@@ -104,31 +208,20 @@ def run_to_batch(
       micro-batch boundaries);
     - append mode → everything emitted (deterministic for eager operators
       like inner stream-stream joins).
+
+    The sink's temp view is dropped once the result is bound, so repeated
+    runs leave nothing behind in the session catalog.
     """
     spark: SparkSession = stream_df.sparkSession
     name = f"out_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        done = q.awaitTermination(timeout_sec)
+        _drive(stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode))
+        return spark.table(name)
     finally:
-        if q.isActive:
-            q.stop()
-    if not done:
-        # partial state would yield a wrong-but-plausible result; fail loud
-        raise TimeoutError(f"streaming replay exceeded {timeout_sec}s")
-    return spark.table(name)
+        spark.catalog.dropTempView(name)
 
 
-def run_split_late(
-    stream_df: DataFrame, time_col: str, timeout_sec: int = 300
-) -> DataFrame:
+def run_split_late(stream_df: DataFrame, time_col: str) -> tuple[DataFrame, DataFrame]:
     """Late-data side channel (the SURVEY §2.8 mapping for Flink's
     ``sideOutputLateData`` / OutputTag): per micro-batch, rows whose event
     time is behind the running watermark (previous batches' max event time,
@@ -148,8 +241,6 @@ def run_split_late(
     per-batch max-timestamp scalar it needs to advance the watermark.
     """
     spark: SparkSession = stream_df.sparkSession
-    from pyspark.sql import functions as F
-
     side_dir = scratch_dir(prefix="late_side_")
     ontime_dir = scratch_dir(prefix="late_ontime_")
     state: dict = {"wm": None}
@@ -164,20 +255,7 @@ def run_split_late(
         if mx is not None and (wm is None or mx > wm):
             state["wm"] = mx
 
-    q = (
-        stream_df.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        done = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not done:
-        # partial state would yield a wrong-but-plausible result; fail loud
-        raise TimeoutError(f"streaming replay exceeded {timeout_sec}s")
+    _drive(stream_df.writeStream.foreachBatch(fb))
     schema = stream_df.schema
     return (
         spark.read.schema(schema).parquet(side_dir),
@@ -185,11 +263,7 @@ def run_split_late(
     )
 
 
-def run_stream_iterate(
-    seed_df: DataFrame,
-    split_fn,
-    timeout_sec: int = 600,
-) -> DataFrame:
+def run_stream_iterate(seed_df: DataFrame, split_fn) -> DataFrame:
     """Streaming ITERATION with a feedback edge — DataStream.iterate
     (flink-streaming-java/.../datastream/DataStream.java:537 /
     IterativeStream: part of the stream is fed back to the operator's own
@@ -211,8 +285,6 @@ def run_stream_iterate(
     driver. Empty feedback is not written — an empty append would be
     rediscovered as a new file and spin the loop forever.
     """
-    import os
-
     spark: SparkSession = seed_df.sparkSession
     loop_dir = scratch_dir(prefix="iter_loop_")
     out_dir = scratch_dir(prefix="iter_out_")
@@ -227,6 +299,8 @@ def run_stream_iterate(
             feed.write.mode("append").parquet(loop_dir)
         bdf.unpersist()
 
+    # Not _drive: AvailableNow processes only the files present at start,
+    # so it would never see the feedback files written during the run.
     q = (
         spark.readStream.schema(schema)
         .parquet(loop_dir)
@@ -248,7 +322,6 @@ def run_early_fire_trace(
     time_col: str = "ts",
     window_us: int = 86_400_000_000,
     stage_col: str = "stage",
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Early-fire EMISSION TRACE of an update-mode tumbling-window count
     (Flink WindowEmitStrategy early-fire — WindowEmitStrategy.scala:32,
@@ -269,7 +342,6 @@ def run_early_fire_trace(
     interleaves slices. ``tests/test_emission_order.py`` pins equivalence to
     Spark's raw update-mode memory-sink trace under in-order delivery.
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
     spark: SparkSession = stream_df.sparkSession
@@ -286,20 +358,7 @@ def run_early_fire_trace(
             .parquet(root)
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_ef_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        done = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not done:
-        # partial state would yield a wrong-but-plausible result; fail loud
-        raise TimeoutError(f"streaming replay exceeded {timeout_sec}s")
+    _drive(stream_df.writeStream.foreachBatch(fb))
     deltas = (
         spark.read.parquet(root)
         .groupBy("window_day", stage_col)
@@ -317,7 +376,6 @@ def run_incremental_join(
     join_keys: list[str],
     left_cols: dict[str, str],
     right_cols: dict[str, str],
-    timeout_sec: int = 300,
     n_buckets: int = 16,
     io_stats: dict | None = None,
 ) -> DataFrame:
@@ -349,108 +407,16 @@ def run_incremental_join(
     ``io_stats``, when provided, accumulates {"files_read", "files_total"}
     so tests can assert the pruning actually happened.
     """
-    spark: SparkSession = stream_df.sparkSession
-    from pyspark.sql import functions as F
-
-    import glob as globmod
-    import os
-
-    l_dir = scratch_dir(prefix="ij_left_")
-    r_dir = scratch_dir(prefix="ij_right_")
     out_dir = scratch_dir(prefix="ij_out_")
-    stats = io_stats if io_stats is not None else {}
-    stats.setdefault("files_read", 0)
-    stats.setdefault("files_total", 0)
-
-    def side(df: DataFrame, cols: dict[str, str]) -> DataFrame:
-        return df.select(
-            *join_keys, *[F.col(c).alias(a) for c, a in cols.items()]
-        ).withColumn("_b", F.pmod(F.hash(*join_keys), F.lit(n_buckets)))
-
-    def bucket_files(root: str) -> dict[int, list[str]]:
-        out: dict[int, list[str]] = {}
-        for f in globmod.glob(os.path.join(root, "_b=*", "*.parquet")):
-            b = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
-            out.setdefault(b, []).append(f)
-        return out
-
-    def prev_for(by_bucket: dict[int, list[str]], touched: list[int], schema) -> DataFrame | None:
-        files = [f for b in touched for f in by_bucket.get(b, [])]
-        stats["files_read"] += len(files)
-        if not files:
-            return None
-        # data files carry only (keys, cols); _b is path-encoded and not needed
-        return spark.read.schema(schema).parquet(*files)
-
-    def fb(bdf: DataFrame, _epoch: int) -> None:
-        bdf = bdf.persist()
-        dl = side(bdf.filter(F.col(side_col) == left_tag), left_cols).persist()
-        dr = side(bdf.filter(F.col(side_col) != left_tag), right_cols).persist()
-        # snapshot the accumulated sides BEFORE appending this batch's deltas
-        l_prev_files = bucket_files(l_dir)
-        r_prev_files = bucket_files(r_dir)
-        stats["files_total"] += sum(len(v) for v in l_prev_files.values()) + sum(
-            len(v) for v in r_prev_files.values()
-        )
-        dl.write.partitionBy("_b").mode("append").parquet(l_dir)
-        dr.write.partitionBy("_b").mode("append").parquet(r_dir)
-        # buckets each delta touches — a <=n_buckets-element id list, not rows
-        dl_buckets = _touched_buckets(dl)
-        dr_buckets = _touched_buckets(dr)
-        data_schema = dl.drop("_b").schema
-        dlp, drp = dl.drop("_b"), dr.drop("_b")
-        r_schema = dr.drop("_b").schema
-        l_prev = prev_for(l_prev_files, dr_buckets, data_schema)
-        r_prev = prev_for(r_prev_files, dl_buckets, r_schema)
-        parts = [dlp.join(drp, join_keys)]
-        if r_prev is not None:
-            parts.append(dlp.join(r_prev, join_keys))
-        if l_prev is not None:
-            parts.append(l_prev.join(drp, join_keys))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        out.write.mode("append").parquet(out_dir)
-        dl.unpersist()
-        dr.unpersist()
-        bdf.unpersist()
-
-    q = (
-        stream_df.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    fb = _delta_join_batch(
+        side_col, left_tag, join_keys,
+        [F.col(c).alias(a) for c, a in left_cols.items()],
+        [F.col(c).alias(a) for c, a in right_cols.items()],
+        n_buckets, scratch_dir(prefix="ij_left_"), scratch_dir(prefix="ij_right_"), out_dir,
+        io_stats if io_stats is not None else {},
     )
-    try:
-        done = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not done:
-        # partial state would yield a wrong-but-plausible result; fail loud
-        raise TimeoutError(f"streaming replay exceeded {timeout_sec}s")
-    return spark.read.parquet(out_dir)
-
-
-def run_incremental_left_join_changelog(
-    stream_df: DataFrame,
-    side_col: str,
-    left_tag: str,
-    join_keys: list[str],
-    left_id: str,
-    right_id: str,
-    stage_col: str = "stage",
-    timeout_sec: int = 300,
-    n_buckets: int = 16,
-) -> DataFrame:
-    """LEFT OUTER specialization of
-    :func:`run_incremental_outer_join_changelog` (kept as the named entry
-    point the left-join query and its docs cite)."""
-    return run_incremental_outer_join_changelog(
-        stream_df, side_col, left_tag, join_keys, left_id, right_id,
-        how="left", stage_col=stage_col, timeout_sec=timeout_sec,
-        n_buckets=n_buckets,
-    )
+    _drive(stream_df.writeStream.foreachBatch(fb))
+    return stream_df.sparkSession.read.parquet(out_dir)
 
 
 def run_incremental_outer_join_changelog(
@@ -462,7 +428,6 @@ def run_incremental_outer_join_changelog(
     right_id: str,
     how: str = "left",
     stage_col: str = "stage",
-    timeout_sec: int = 300,
     n_buckets: int = 16,
 ) -> DataFrame:
     """Unbounded OUTER stream-stream join with RETRACTION emission — the
@@ -500,11 +465,6 @@ def run_incremental_outer_join_changelog(
     NULL on padded rows. Append-only inputs ⇒ kinds are +I/-D only (no
     -U/+U), matching Flink's changelog inference for this plan.
     """
-    import glob as globmod
-    import os
-
-    from pyspark.sql import functions as F
-
     if how not in ("left", "right", "full"):
         raise ValueError(f"how must be left/right/full: {how}")
     spark: SparkSession = stream_df.sparkSession
@@ -512,81 +472,27 @@ def run_incremental_outer_join_changelog(
     r_dir = scratch_dir(prefix="oj_right_")
     out_dir = scratch_dir(prefix="oj_out_")
 
-    def bucketed(df: DataFrame, id_col: str, alias: str, e_alias: str) -> DataFrame:
-        return df.select(
-            *join_keys,
-            F.col(id_col).alias(alias),
-            F.col(stage_col).cast("int").alias(e_alias),
-        ).withColumn("_b", F.pmod(F.hash(*join_keys), F.lit(n_buckets)).cast("int"))
+    def stamped(id_col: str, alias: str, e_alias: str) -> list[Column]:
+        return [F.col(id_col).alias(alias), F.col(stage_col).cast("int").alias(e_alias)]
 
-    def bucket_files(root: str) -> dict[int, list[str]]:
-        out: dict[int, list[str]] = {}
-        for f in globmod.glob(os.path.join(root, "_b=*", "*.parquet")):
-            b = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
-            out.setdefault(b, []).append(f)
-        return out
-
-    def read_buckets(files: dict[int, list[str]], buckets, schema) -> DataFrame | None:
-        sel = [f for b in buckets for f in files.get(b, [])]
-        if not sel:
-            return None
-        return spark.read.schema(schema).parquet(*sel)
-
-    def fb(bdf: DataFrame, _eid: int) -> None:
-        bdf = bdf.persist()
-        dl = bucketed(bdf.filter(F.col(side_col) == left_tag), left_id, "l_id", "_e_l").persist()
-        dr = bucketed(bdf.filter(F.col(side_col) != left_tag), right_id, "r_id", "_e_r").persist()
-        l_files, r_files = bucket_files(l_dir), bucket_files(r_dir)
-        dl.write.partitionBy("_b").mode("append").parquet(l_dir)
-        dr.write.partitionBy("_b").mode("append").parquet(r_dir)
-        dl_b = _touched_buckets(dl)
-        dr_b = _touched_buckets(dr)
-        dlp, drp = dl.drop("_b"), dr.drop("_b")
-        l_schema, r_schema = dlp.schema, drp.schema
-        l_prev = read_buckets(l_files, dr_b, l_schema)
-        r_prev = read_buckets(r_files, dl_b, r_schema)
-        # joined inserts: each pair exactly once, at the later DATA epoch
-        parts = [dlp.join(drp, join_keys)]
-        if r_prev is not None:
-            parts.append(dlp.join(r_prev, join_keys))
-        if l_prev is not None:
-            parts.append(l_prev.join(drp, join_keys))
-        joined = parts[0]
-        for p in parts[1:]:
-            joined = joined.unionByName(p)
-        out = joined.select(
+    # joined inserts: each pair exactly once, at the later DATA epoch
+    def inserts(joined: DataFrame) -> DataFrame:
+        return joined.select(
             *join_keys,
             F.greatest("_e_l", "_e_r").alias("epoch"),
             F.lit("+I").alias("kind"),
             F.col("l_id").cast("long").alias("l_id"),
             F.col("r_id").cast("long").alias("r_id"),
         )
-        out.write.mode("append").parquet(out_dir)
-        dl.unpersist()
-        dr.unpersist()
-        bdf.unpersist()
 
-    q = (
-        stream_df.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_oj_"))
-        .trigger(availableNow=True)
-        .start()
+    fb = _delta_join_batch(
+        side_col, left_tag, join_keys,
+        stamped(left_id, "l_id", "_e_l"), stamped(right_id, "r_id", "_e_r"),
+        n_buckets, l_dir, r_dir, out_dir, {}, project=inserts,
     )
-    try:
-        done = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not done:
-        # partial state would yield a wrong-but-plausible result; fail loud
-        raise TimeoutError(f"streaming replay exceeded {timeout_sec}s")
+    _drive(stream_df.writeStream.foreachBatch(fb))
 
     # pad legs, finalized from the accumulated bucketed sides
-    def side_all(root: str) -> DataFrame | None:
-        if not globmod.glob(os.path.join(root, "_b=*", "*.parquet")):
-            return None
-        return spark.read.parquet(root).drop("_b")
-
     def pad_legs(pres: DataFrame, opp: DataFrame | None, id_col: str, e_col: str, opp_e: str):
         other = "r_id" if id_col == "l_id" else "l_id"
 
@@ -610,7 +516,7 @@ def run_incremental_outer_join_changelog(
         return ins.unionByName(dels)
 
     out = spark.read.parquet(out_dir)
-    l_all, r_all = side_all(l_dir), side_all(r_dir)
+    l_all, r_all = _read_store(spark, l_dir), _read_store(spark, r_dir)
     if how in ("left", "full") and l_all is not None:
         out = out.unionByName(pad_legs(l_all, r_all, "l_id", "_e_l", "_e_r"))
     if how in ("right", "full") and r_all is not None:
@@ -626,7 +532,6 @@ def run_incremental_semi_anti_join(
     left_id: str,
     how: str = "semi",
     stage_col: str = "stage",
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Unbounded streaming SEMI / ANTI join with changelog emission — the
     streaming face of IN / EXISTS / NOT EXISTS (reference:
@@ -669,10 +574,6 @@ def run_incremental_semi_anti_join(
     Emits (*join_keys, epoch INT, kind STRING, l_id LONG). Append-only
     inputs ⇒ kinds are +I/-D only, matching Flink's changelog inference.
     """
-    import glob as globmod
-    import os
-
-    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     if how not in ("semi", "anti"):
@@ -702,20 +603,7 @@ def run_incremental_semi_anti_join(
         )
         bdf.unpersist()
 
-    q = (
-        stream_df.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_saj_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        done = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not done:
-        # partial state would yield a wrong-but-plausible result; fail loud
-        raise TimeoutError(f"streaming replay exceeded {timeout_sec}s")
+    _drive(stream_df.writeStream.foreachBatch(fb))
 
     key_fields = [f for f in stream_df.schema.fields if f.name in join_keys]
     out_schema = T.StructType(
@@ -727,12 +615,7 @@ def run_incremental_semi_anti_join(
         ]
     )
 
-    def read_or_none(root: str) -> DataFrame | None:
-        if not globmod.glob(os.path.join(root, "*.parquet")):
-            return None
-        return spark.read.parquet(root)
-
-    l_all, r_all = read_or_none(l_dir), read_or_none(r_dir)
+    l_all, r_all = _read_store(spark, l_dir), _read_store(spark, r_dir)
     first = (
         r_all.groupBy(*join_keys).agg(F.min("_e_r_min").alias("_first"))
         if r_all is not None

@@ -22,6 +22,7 @@ scratch instead of leaving a permanently scrambled cache.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -47,6 +48,25 @@ _MARKER = "_STAGED"
 def _split_dir(sf_dir: str, n_files: int) -> str:
     tag = sf_dir.strip("/").replace("/", "_")
     return os.path.join(_CACHE_ROOT, f"{tag}_events_{n_files}")
+
+
+def _stage_scrambled(base_dir: str, order: tuple) -> str:
+    """Copy of the staged ``part-*`` files of ``base_dir`` whose mtimes
+    deliver file ``order[0]`` first, then ``order[1]``, ... (once per
+    order; the copy's path names the order). Returns the copy's path."""
+    assert sorted(order) == list(range(len(order)))
+    path = base_dir + "_scram_" + "".join(str(i) for i in order)
+    marker = os.path.join(path, _MARKER)
+    if not os.path.exists(marker):
+        os.makedirs(path, exist_ok=True)
+        parts = sorted(f for f in os.listdir(base_dir) if f.startswith("part-"))
+        for f in parts:
+            shutil.copy2(os.path.join(base_dir, f), os.path.join(path, f))
+        base = os.path.getmtime(os.path.join(path, parts[-1]))
+        for rank, idx in enumerate(order):
+            os.utime(os.path.join(path, parts[idx]), (base + rank, base + rank))
+        open(marker, "w").close()
+    return path
 
 
 def events_stream(
@@ -90,22 +110,9 @@ def events_stream_scrambled(
     late-stage-qualification path, where a stage-(N-1) slice arrives AFTER
     the stage-N slice it retroactively qualifies (the default order ships
     the chronologically LAST slice first)."""
-    assert len(order) == n_files and sorted(order) == list(range(n_files))
-    import shutil
-
+    assert len(order) == n_files
     events_stream(spark, sf_dir, n_files)  # ensure the base staging exists
-    base_dir = _split_dir(sf_dir, n_files)
-    path = base_dir + "_scram_" + "".join(str(i) for i in order)
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
-        parts = sorted(f for f in os.listdir(base_dir) if f.startswith("part-"))
-        for f in parts:
-            shutil.copy2(os.path.join(base_dir, f), os.path.join(path, f))
-        base = os.path.getmtime(os.path.join(path, parts[-1]))
-        for rank, idx in enumerate(order):
-            os.utime(os.path.join(path, parts[idx]), (base + rank, base + rank))
-        open(marker, "w").close()
+    path = _stage_scrambled(_split_dir(sf_dir, n_files), order)
     schema = spark.read.parquet(path).schema
     return (
         spark.readStream.schema(schema)
@@ -299,23 +306,10 @@ def documents_stream_scrambled(
     out-of-order fixture for the dedup twins: their bucket-state snapshots
     (occupancy count + MIN id) are pure functions of the corpus, so ANY
     delivery permutation must yield the identical admission set."""
-    assert len(order) == n_files and sorted(order) == list(range(n_files))
-    import shutil
-
+    assert len(order) == n_files
     documents_stream(spark, sf_dir, n_files)  # ensure the base staging exists
     tag = sf_dir.strip("/").replace("/", "_")
-    base_dir = os.path.join(_CACHE_ROOT, f"{tag}_documents_{n_files}")
-    path = base_dir + "_scram_" + "".join(str(i) for i in order)
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
-        parts = sorted(f for f in os.listdir(base_dir) if f.startswith("part-"))
-        for f in parts:
-            shutil.copy2(os.path.join(base_dir, f), os.path.join(path, f))
-        base = os.path.getmtime(os.path.join(path, parts[-1]))
-        for rank, idx in enumerate(order):
-            os.utime(os.path.join(path, parts[idx]), (base + rank, base + rank))
-        open(marker, "w").close()
+    path = _stage_scrambled(os.path.join(_CACHE_ROOT, f"{tag}_documents_{n_files}"), order)
     schema = spark.read.parquet(path).schema
     return (
         spark.readStream.schema(schema)

@@ -33,6 +33,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from flink_1_12_0_src_spark.streaming.run import _drive, _touched_buckets, scratch_dir
+
 
 class UpsertSink:
     """foreachBatch target maintaining bucketed current state under
@@ -59,12 +61,12 @@ class UpsertSink:
         self.stats.setdefault("files_read", 0)
         self.stats.setdefault("files_total", 0)
 
-    def _bucket_files(self) -> dict[int, list[str]]:
+    def _pointed_files(self) -> dict[int, list[str]]:
         return {
             b: globmod.glob(os.path.join(p, "*.parquet")) for b, p in self.ptr.items()
         }
 
-    def _read_buckets(self, spark: SparkSession, files: dict[int, list[str]], buckets) -> DataFrame:
+    def _read_pointed(self, spark: SparkSession, files: dict[int, list[str]], buckets) -> DataFrame:
         parts = [
             spark.read.schema(self.data_schema).parquet(*files[b]).withColumn("_b", F.lit(b))
             for b in buckets
@@ -102,9 +104,8 @@ class UpsertSink:
         last = last.persist()
         if self.data_schema is None:
             self.data_schema = last.drop("_b").schema
-        # bucket ids the delta touches — a <=n_buckets id list, never row data
-        touched = sorted(r["_b"] for r in last.select("_b").distinct().collect())
-        files = self._bucket_files()
+        touched = sorted(_touched_buckets(last))
+        files = self._pointed_files()
         self.stats["files_total"] += sum(len(v) for v in files.values())
         self.stats["files_read"] += sum(len(files.get(b, [])) for b in touched)
         # 2. MERGE within touched buckets only, by VERSION: stored row vs
@@ -113,7 +114,7 @@ class UpsertSink:
         #    invariant; tombstones compete like any other row
         from pyspark.sql.window import Window
 
-        cur = self._read_buckets(spark, files, touched)
+        cur = self._read_pointed(spark, files, touched)
         unioned = cur.withColumn("_pri", F.lit(0)).unionByName(
             last.withColumn("_pri", F.lit(1))
         )
@@ -141,7 +142,7 @@ class UpsertSink:
                 "so the maintained table has no schema — nothing to snapshot"
             )
         return (
-            self._read_buckets(spark, self._bucket_files(), sorted(self.ptr))
+            self._read_pointed(spark, self._pointed_files(), sorted(self.ptr))
             .filter(F.col("_tomb") == 0)
             .drop("_b", "_tomb")
         )
@@ -153,25 +154,14 @@ def run_changelog_upsert(
     key_cols: list[str],
     version_col: str,
     rowkind_col: str = "rowkind",
-    timeout_sec: int = 300,
     n_buckets: int = 16,
     io_stats: dict | None = None,
 ) -> DataFrame:
     """Drive a changelog stream through the foreachBatch MERGE to completion
     and return the final maintained-table snapshot. ``io_stats`` accumulates
     {files_read, files_total} so tests can assert bucket-pruned rewrites."""
-    from flink_1_12_0_src_spark.streaming.run import scratch_dir
-
     sink = UpsertSink(base_dir, key_cols, version_col, rowkind_col, n_buckets, io_stats)
-    q = (
-        stream_df.writeStream.foreachBatch(sink.process_batch)
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_upsert_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise TimeoutError(f"streaming replay exceeded {timeout_sec}s")
+    _drive(stream_df.writeStream.foreachBatch(sink.process_batch))
     return sink.snapshot(stream_df.sparkSession)
 
 
@@ -179,7 +169,6 @@ def run_changelog_count(
     stream_df,
     key: str,
     stage_col: str = "stage",
-    timeout_sec: int = 300,
     having_below: int | None = None,
 ):
     """Retraction-stream OUTPUT — Flink Table.toRetractStream / the changelog
@@ -209,12 +198,7 @@ def run_changelog_count(
 
     Returns (key, epoch, kind, cnt) — epoch is the data-borne stage index.
     """
-    import os
-
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
-
-    from flink_1_12_0_src_spark.streaming.run import scratch_dir
 
     spark = stream_df.sparkSession
     root = scratch_dir(prefix="chlog_")
@@ -234,20 +218,7 @@ def run_changelog_count(
         state["snap"] = nxt
         state["ver"] += 1
 
-    q = (
-        stream_df.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        done = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not done:
-        # partial state would yield a wrong-but-plausible result; fail loud
-        raise TimeoutError(f"streaming replay exceeded {timeout_sec}s")
+    _drive(stream_df.writeStream.foreachBatch(fb))
     if state["snap"] is None:
         empty = spark.createDataFrame(
             [], f"`{key}` string, epoch int, kind string, cnt bigint"
@@ -289,7 +260,6 @@ def run_changelog_sum_agg(
     group_col: str,
     amount_col: str,
     rowkind_col: str = "rowkind",
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Retraction-stream CONSUMPTION into a downstream aggregate — the
     retract() path of Flink's GroupAggFunction (GroupAggFunction.java:141-209
@@ -312,8 +282,6 @@ def run_changelog_sum_agg(
 
     Returns the final (group, cnt, total) snapshot with total as DOUBLE.
     """
-    from flink_1_12_0_src_spark.streaming.run import scratch_dir
-
     spark = stream_df.sparkSession
     sign = F.when(F.col(rowkind_col).isin("+I", "+U"), F.lit(1)).otherwise(F.lit(-1))
     state = {"snap": None}
@@ -355,20 +323,7 @@ def run_changelog_sum_agg(
         merged.write.mode("overwrite").parquet(nxt)
         state["snap"] = nxt
 
-    q = (
-        stream_df.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", scratch_dir(prefix="ckpt_agg_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        done = q.awaitTermination(timeout_sec)
-    finally:
-        if q.isActive:
-            q.stop()
-    if not done:
-        # partial state would yield a wrong-but-plausible result; fail loud
-        raise TimeoutError(f"streaming replay exceeded {timeout_sec}s")
+    _drive(stream_df.writeStream.foreachBatch(fb))
     if state["snap"] is None:
         raise RuntimeError(
             "run_changelog_sum_agg: every micro-batch was empty — no "

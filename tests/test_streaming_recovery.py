@@ -8,6 +8,8 @@
 - RocksDB state backend: the same query runs with
   RocksDBStateStoreProvider (the reference's RocksDBKeyedStateBackend
   .java:108 analog) — config, not code, as SURVEY §2.8 maps it.
+- run policy: a replay that overruns its bound raises and leaves no query
+  running, and ``run_to_batch`` leaves no sink view in the catalog.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ from __future__ import annotations
 import tempfile
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_1_12_0_src_spark.streaming.source import events_stream
@@ -85,6 +88,36 @@ def test_rocksdb_state_backend(spark, sf_dir):
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
             spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+
+
+def test_run_to_batch_leaves_no_sink_view(spark, sf_dir):
+    """The memory sink registers an ``out_*`` temp view; run_to_batch drops
+    it once the result is bound, and the bound result still reads."""
+    from flink_1_12_0_src_spark.streaming.run import run_to_batch
+
+    before = {t.name for t in spark.catalog.listTables()}
+    out = run_to_batch(_agg(events_stream(spark, sf_dir)))
+    new = {t.name for t in spark.catalog.listTables()} - before
+    assert not [n for n in new if n.startswith("out_")], new
+    assert {r.event_type: r.cnt for r in out.collect()} == _expected(spark, sf_dir)
+
+
+@pytest.mark.parametrize("runner", ["run_to_batch", "run_changelog_count"])
+def test_replay_overrun_raises_and_stops(spark, sf_dir, monkeypatch, runner):
+    """Past the run bound, a runner raises TimeoutError (partial state would
+    be a plausible wrong result) and leaves no streaming query active —
+    for the memory sink and for foreachBatch state alike."""
+    from flink_1_12_0_src_spark.streaming import run as srun
+    from flink_1_12_0_src_spark.streaming.source import events_stream_weeks
+    from flink_1_12_0_src_spark.streaming.upsert import run_changelog_count
+
+    monkeypatch.setattr(srun, "_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError):
+        if runner == "run_to_batch":
+            srun.run_to_batch(_agg(events_stream(spark, sf_dir)))
+        else:
+            run_changelog_count(events_stream_weeks(spark, sf_dir, with_stage=True), "user_id")
+    assert spark.streams.active == []
 
 
 def test_incremental_join_bucket_pruning(spark, tmp_path):

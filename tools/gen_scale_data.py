@@ -38,7 +38,7 @@ SPANS = {
     "doc_id": 10_000_000,
     "vec_id": 10_000_000,
     "event_id": 100_000_000,
-    "user_id": 10_000_000,
+    "user_id": 1_000_000,  # = c_custkey's span: events.user_id references customers
     "l_orderkey": 10_000_000,
     "o_orderkey": 10_000_000,
     "o_custkey": 1_000_000,

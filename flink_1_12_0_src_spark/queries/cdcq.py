@@ -153,13 +153,12 @@ def cdc_canal_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(streaming/upsert.py). Final snapshot ≡ the oracle's closed-form state.",
 )
 def cdc_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import tempfile
 
-    cache = os.path.join(tempfile.gettempdir(), "flink_1_12_0_src_spark_files")
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = os.path.join(cache, f"{tag}_cdc_upsert_stream")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    from flink_1_12_0_src_spark.streaming.source import replay
+    from flink_1_12_0_src_spark.streaming.upsert import run_changelog_upsert
+
+    def slices() -> list[DataFrame]:
         o = _orders_payload(spark, sf_dir)
         ins = o.select(*_PAYLOAD_COLS).withColumns(
             {"rowkind": F.lit("+I"), "version": F.lit(0).cast("bigint")}
@@ -172,30 +171,10 @@ def cdc_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         dele = o.filter(F.col("o_orderkey") % 7 == 0).withColumns(
             {"rowkind": F.lit("-D"), "version": F.lit(2).cast("bigint")}
         )
-        os.makedirs(path, exist_ok=True)
-        for i, phase in enumerate((ins, upd, dele)):
-            phase.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, f"phase{i}"))
-        # one file per phase at the top level, mtime-ordered for the stream
-        import glob
-        import shutil
+        return [phase.coalesce(1) for phase in (ins, upd, dele)]
 
-        for i in range(3):
-            src = glob.glob(os.path.join(path, f"phase{i}", "part-*.parquet"))[0]
-            shutil.copy(src, os.path.join(path, f"{i:05d}.parquet"))
-            shutil.rmtree(os.path.join(path, f"phase{i}"))
-        base = os.path.getmtime(os.path.join(path, "00002.parquet"))
-        for i in range(3):
-            os.utime(os.path.join(path, f"{i:05d}.parquet"), (base + i, base + i))
-        open(os.path.join(path, "_SUCCESS"), "w").close()
-
-    from flink_1_12_0_src_spark.streaming.upsert import run_changelog_upsert
-
-    schema = spark.read.parquet(os.path.join(path, "00000.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
+    tag = sf_dir.strip("/").replace("/", "_")
+    stream = replay(spark, f"{tag}_cdc_upsert_stream", slices)
     snap = run_changelog_upsert(
         stream,
         base_dir=tempfile.mkdtemp(prefix="upsert_tbl_"),
@@ -336,71 +315,48 @@ ORDER BY o_orderstatus
     "Final state ≡ one-shot aggregate over the post-changelog image.",
 )
 def cdc_consume_changelog_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from flink_1_12_0_src_spark.queries._util import dec
+    from flink_1_12_0_src_spark.streaming.source import replay
     from flink_1_12_0_src_spark.streaming.upsert import run_changelog_sum_agg
 
-    cache = os.path.join(tempfile.gettempdir(), "flink_1_12_0_src_spark_files")
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = os.path.join(cache, f"{tag}_cdc_retract_changelog")
-    o = _orders_payload(spark, sf_dir).select(
-        "o_orderkey", "o_orderstatus", dec("o_totalprice").alias("amount")
-    )
     amt_new = (dec("o_totalprice") + 1).cast("decimal(12,2)")
-    phases = [
-        o.withColumn("rowkind", F.lit("+I")),
-        _orders_payload(spark, sf_dir)
-        .filter(F.col("o_orderkey") % 5 == 0)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.explode(
-                F.array(
-                    F.struct(dec("o_totalprice").alias("amount"), F.lit("-U").alias("rowkind")),
-                    F.struct(amt_new.alias("amount"), F.lit("+U").alias("rowkind")),
-                )
-            ).alias("e"),
+
+    def slices() -> list[DataFrame]:
+        o = _orders_payload(spark, sf_dir).select(
+            "o_orderkey", "o_orderstatus", dec("o_totalprice").alias("amount")
         )
-        .select("o_orderkey", "o_orderstatus", "e.amount", "e.rowkind"),
-        _orders_payload(spark, sf_dir)
-        .filter(F.col("o_orderkey") % 7 == 0)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.when(F.col("o_orderkey") % 5 == 0, amt_new)
-            .otherwise(dec("o_totalprice"))
-            .alias("amount"),
-            F.lit("-D").alias("rowkind"),
-        ),
-    ]
-    stream = _stage_ordered_file_stream(spark, phases, path)
+        phases = [
+            o.withColumn("rowkind", F.lit("+I")),
+            _orders_payload(spark, sf_dir)
+            .filter(F.col("o_orderkey") % 5 == 0)
+            .select(
+                "o_orderkey",
+                "o_orderstatus",
+                F.explode(
+                    F.array(
+                        F.struct(dec("o_totalprice").alias("amount"), F.lit("-U").alias("rowkind")),
+                        F.struct(amt_new.alias("amount"), F.lit("+U").alias("rowkind")),
+                    )
+                ).alias("e"),
+            )
+            .select("o_orderkey", "o_orderstatus", "e.amount", "e.rowkind"),
+            _orders_payload(spark, sf_dir)
+            .filter(F.col("o_orderkey") % 7 == 0)
+            .select(
+                "o_orderkey",
+                "o_orderstatus",
+                F.when(F.col("o_orderkey") % 5 == 0, amt_new)
+                .otherwise(dec("o_totalprice"))
+                .alias("amount"),
+                F.lit("-D").alias("rowkind"),
+            ),
+        ]
+        return [ph.coalesce(1) for ph in phases]
+
+    tag = sf_dir.strip("/").replace("/", "_")
+    stream = replay(spark, f"{tag}_cdc_retract_changelog", slices)
     snap = run_changelog_sum_agg(stream, "o_orderstatus", "amount")
     return snap.orderBy("o_orderstatus")
-
-
-def _stage_ordered_file_stream(spark: SparkSession, phases: list[DataFrame], path: str) -> DataFrame:
-    """Write each phase as one parquet file with increasing mtimes and return
-    a one-file-per-trigger readStream over them (micro-batch k ≡ phase k)."""
-    import glob
-    import os
-    import shutil
-
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        os.makedirs(path, exist_ok=True)
-        for i, ph in enumerate(phases):
-            ph.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, f"phase{i}"))
-        for i in range(len(phases)):
-            src = glob.glob(os.path.join(path, f"phase{i}", "part-*.parquet"))[0]
-            shutil.copy(src, os.path.join(path, f"{i:05d}.parquet"))
-            shutil.rmtree(os.path.join(path, f"phase{i}"))
-        base = os.path.getmtime(os.path.join(path, f"{len(phases) - 1:05d}.parquet"))
-        for i in range(len(phases)):
-            os.utime(os.path.join(path, f"{i:05d}.parquet"), (base + i, base + i))
-        open(os.path.join(path, "_SUCCESS"), "w").close()
-    schema = spark.read.parquet(os.path.join(path, "00000.parquet")).schema
-    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(path)
 
 
 @register(

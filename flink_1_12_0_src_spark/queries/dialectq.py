@@ -270,11 +270,10 @@ FROM events GROUP BY 1
     "withWatermark, the group window becomes a streaming window aggregate.",
 )
 def flinksql_stream_tumble(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_1_12_0_src_spark.streaming import events_stream, run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import _split_dir
+    from flink_1_12_0_src_spark.streaming import run_to_batch
+    from flink_1_12_0_src_spark.streaming.source import events_dir
 
-    events_stream(spark, sf_dir)  # ensure the split files exist
-    path = _split_dir(sf_dir, 4)
+    path = events_dir(spark, sf_dir)
     env = TableEnvironment(spark)
     env.execute_sql(f"""
         CREATE TABLE events_wm (

@@ -5,7 +5,9 @@ Pattern (the reference's ITCase strategy, SURVEY §5.2): the events table is
 replayed as a 4-micro-batch file stream in event-time order
 (``streaming.source.events_stream``), the streaming plan runs to completion
 with Trigger.AvailableNow into a memory sink, and the final result must equal
-the batch answer — which DuckDB computes independently.
+the batch answer — which DuckDB computes independently. A ``run_to_batch``
+snapshot is safe to self-join, so report tails read it directly; the
+out-of-order twins pass ``order=`` to their source to scramble delivery.
 
 Mode discipline:
 - complete mode → final-state snapshot (unbounded aggs, session windows,
@@ -55,6 +57,11 @@ from flink_1_12_0_src_spark.streaming.stateful import (
 )
 
 _SQL_TOTAL = "CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE)"
+
+# The late-data replay: calendar weeks delivered week1, week3, week2, week4,
+# so every week2 row arrives behind the running watermark (see
+# events_stream_weeks).
+_LATE_ORDER = ("1", "3", "2", "4")
 
 
 @register(
@@ -889,9 +896,9 @@ ORDER BY event_id
 )
 def stream_late_side_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_1_12_0_src_spark.streaming.run import run_split_late
-    from flink_1_12_0_src_spark.streaming.source import events_stream_late
+    from flink_1_12_0_src_spark.streaming.source import events_stream_weeks
 
-    s = events_stream_late(spark, sf_dir)
+    s = events_stream_weeks(spark, sf_dir, order=_LATE_ORDER)
     late, _ontime = run_split_late(s, "ts")
     return late.select(
         "user_id", "event_id", "ts", "event_type", F.col("value").cast("double").alias("value")
@@ -920,9 +927,9 @@ ORDER BY window_start
 )
 def stream_late_dropped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_1_12_0_src_spark.streaming.run import run_split_late
-    from flink_1_12_0_src_spark.streaming.source import events_stream_late
+    from flink_1_12_0_src_spark.streaming.source import events_stream_weeks
 
-    s = events_stream_late(spark, sf_dir)
+    s = events_stream_weeks(spark, sf_dir, order=_LATE_ORDER)
     _late, ontime = run_split_late(s, "ts")
     final_wm = ontime.agg(F.max("ts")).collect()[0][0]
     agg = ontime.groupBy(F.window("ts", "1 day")).agg(F.count("*").alias("cnt"))
@@ -1230,10 +1237,12 @@ _OOO_WHERE = f"date_trunc('millisecond', ts) <= {_OOO_CUT}"
 
 
 def _ooo_stream(spark: SparkSession, sf_dir: str, cols: list[str]) -> DataFrame:
-    from flink_1_12_0_src_spark.streaming.source import events_stream_late
+    from flink_1_12_0_src_spark.streaming.source import events_stream_weeks
 
     return (
-        events_stream_late(spark, sf_dir).select(*cols).withWatermark("ts", "15 days")
+        events_stream_weeks(spark, sf_dir, order=_LATE_ORDER)
+        .select(*cols)
+        .withWatermark("ts", "15 days")
     )
 
 
@@ -1343,7 +1352,7 @@ def stream_ooo_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_1_12_0_src_spark.streaming.stateful import streaming_temporal_join
 
     s = (
-        events_stream_late_tagged(spark, sf_dir)
+        _ooo_tagged_stream(spark, sf_dir)
         .withWatermark("ts", "15 days")
     )
     return run_to_batch(
@@ -1354,11 +1363,11 @@ def stream_ooo_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_stream_late_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_1_12_0_src_spark.streaming.source import events_stream_late
+def _ooo_tagged_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from flink_1_12_0_src_spark.streaming.source import events_stream_weeks
 
     return (
-        events_stream_late(spark, sf_dir)
+        events_stream_weeks(spark, sf_dir, order=_LATE_ORDER)
         .filter(F.col("event_type").isin("purchase", "click"))
         .select(
             "user_id",
@@ -2114,10 +2123,7 @@ def stream_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chars").alias("total_chars"),
         F.sum(F.size(tokens("text")).cast("bigint")).alias("total_tokens"),
     )
-    # localCheckpoint: the share rollup cross-joins the snapshot with its
-    # own one-row total, and Spark cannot deduplicate conflicting attribute
-    # references through a memory-sink view (same as the other twins)
-    snap = run_to_batch(g, "complete").localCheckpoint(eager=True)
+    snap = run_to_batch(g, "complete")
     return source_mix_from_lang_groups(snap).orderBy("source")
 
 
@@ -2141,10 +2147,7 @@ def stream_source_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = documents_stream(spark, sf_dir, n_files=4, max_files_per_trigger=4)
     g = s.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("c"))
-    # localCheckpoint: the report windows over the snapshot, and Spark
-    # cannot deduplicate conflicting attribute references through a
-    # memory-sink view (same as the other twins)
-    snap = run_to_batch(g, "complete").localCheckpoint(eager=True)
+    snap = run_to_batch(g, "complete")
     return source_diversity_from_counts(snap, "lang").orderBy("lang")
 
 
@@ -2179,9 +2182,7 @@ def stream_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = bloom_state_rows(s, "text", 4, 2).groupBy("i", "v").agg(
         F.count(F.lit(1)).alias("n")
     )
-    # localCheckpoint: the probe tail reads the snapshot once per slice
-    # (same memory-sink-view limitation as the other twins)
-    snap = run_to_batch(g, "complete").select("i", "v").localCheckpoint(eager=True)
+    snap = run_to_batch(g, "complete").select("i", "v")
     probes = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 1)
     return bloom_membership_from_state(snap, probes, "doc_id", "text", 4, 2).orderBy(
         "doc_id"
@@ -2225,10 +2226,7 @@ def stream_doremi_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = doremi_state_rows(s, "text", "source").groupBy(
         "kind", "domain", "k1", "k2"
     ).agg(F.count(F.lit(1)).alias("n"))
-    # localCheckpoint: the training tail reads the snapshot once per
-    # statistic relation (same memory-sink-view limitation as the other
-    # twins)
-    snap = run_to_batch(g, "complete").localCheckpoint(eager=True)
+    snap = run_to_batch(g, "complete")
     dterm, dbg, nd = doremi_counts_from_state(snap)
     return doremi_weights_from_counts(
         dterm, dbg, nd, rounds=DOREMI_ROUNDS, eta=DOREMI_ETA, smoothing=DOREMI_SMOOTH
@@ -2267,13 +2265,9 @@ def stream_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "sh")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # localCheckpoint: the reweighting tail reads the snapshot for the
-    # frequency rollup, the scoring join and the corpus mean (same
-    # memory-sink-view limitation as the other twins)
     snap = (
         run_to_batch(g, "complete")
         .select("doc_id", "sh", F.col("n").cast("decimal(15,0)").alias("n"))
-        .localCheckpoint(eager=True)
     )
     return soft_dedup_weights_from_grams(snap, "doc_id").orderBy("doc_id")
 
@@ -2315,10 +2309,7 @@ def stream_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = cms_state_rows(s, "text", CMS_K, CMS_SLICES, CMS_HEX).groupBy("i", "v").agg(
         F.count(F.lit(1)).alias("n")
     )
-    # localCheckpoint: the contract tail reads the snapshot for both the
-    # probe join and the total (same memory-sink-view limitation as the
-    # other twins)
-    snap = run_to_batch(g, "complete").localCheckpoint(eager=True)
+    snap = run_to_batch(g, "complete")
     grams = table(spark, sf_dir, "documents").select(
         F.explode(shingles("text", CMS_K)).alias("sh")
     )
@@ -2360,9 +2351,7 @@ def stream_bloom_filter_only(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("i", "v")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # localCheckpoint: the report crosses the snapshot with its own product
-    # aggregate (same memory-sink-view limitation as the other twins)
-    snap = run_to_batch(g, "complete").select("i", "v").localCheckpoint(eager=True)
+    snap = run_to_batch(g, "complete").select("i", "v")
     return bloom_filter_report(snap, 4, 2).orderBy("slice")
 
 
@@ -2403,13 +2392,7 @@ def stream_containment_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "blk", "sh")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # localCheckpoint: the prune tail self-joins the snapshot (same
-    # memory-sink-view limitation as the other twins)
-    snap = (
-        run_to_batch(g, "complete")
-        .select("doc_id", "blk", "sh")
-        .localCheckpoint(eager=True)
-    )
+    snap = run_to_batch(g, "complete").select("doc_id", "blk", "sh")
     return containment_prune_from_grams(
         snap,
         table(spark, sf_dir, "documents"),
@@ -2456,13 +2439,7 @@ def stream_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = documents_stream(spark, sf_dir, n_files=4, max_files_per_trigger=4)
     occ = window_occurrences(s, "doc_id", "text", SPAN_WINDOW)
     g = occ.groupBy("doc_id", "pos", "gh").agg(F.count(F.lit(1)).alias("n"))
-    # localCheckpoint: the rewrite tail joins/aggregates over the snapshot
-    # several times (same memory-sink-view limitation as the other twins)
-    snap = (
-        run_to_batch(g, "complete")
-        .select("doc_id", "pos", "gh")
-        .localCheckpoint(eager=True)
-    )
+    snap = run_to_batch(g, "complete").select("doc_id", "pos", "gh")
     docs = table(spark, sf_dir, "documents")
     base = docs.select("doc_id", tokens("text").alias("w")).select(
         "doc_id", "w", F.size("w").alias("n_tokens")
@@ -2500,9 +2477,7 @@ def stream_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = pred.groupBy("lang", "predicted_lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     )
-    # localCheckpoint: the report windows over the snapshot (same
-    # memory-sink-view limitation as the other twins)
-    snap = run_to_batch(g, "complete").localCheckpoint(eager=True)
+    snap = run_to_batch(g, "complete")
     return snap.select(
         "lang",
         "predicted_lang",
@@ -2541,15 +2516,7 @@ def stream_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.to_date(F.date_trunc("week", "ts")).alias("wk")
     )
     act = s.groupBy("user_id", "wk").agg(F.count(F.lit(1)).alias("n"))
-    # localCheckpoint: the cohort report self-joins the snapshot (activity ⋈
-    # first-week agg), and Spark cannot deduplicate conflicting attribute
-    # references through a memory-sink view (INTERNAL_ERROR); checkpointing
-    # the state-sized snapshot (|users| x |weeks|) makes it a fresh relation
-    snap = (
-        run_to_batch(act, "complete")
-        .select("user_id", "wk")
-        .localCheckpoint(eager=True)
-    )
+    snap = run_to_batch(act, "complete").select("user_id", "wk")
     return retention_from_activity(snap).orderBy("cohort_week", "week_offset")
 
 
@@ -2580,15 +2547,7 @@ def stream_funnel_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     triples = s.groupBy("user_id", "event_type", "ts").agg(
         F.count(F.lit(1)).alias("n")
     )
-    # localCheckpoint: the staged-MIN report self-joins the snapshot per
-    # stage, and Spark cannot deduplicate conflicting attribute references
-    # through a memory-sink view (INTERNAL_ERROR); the checkpoint holds the
-    # state-sized distinct triple set, nothing corpus-shaped beyond it
-    snap = (
-        run_to_batch(triples, "complete")
-        .select("user_id", "event_type", "ts")
-        .localCheckpoint(eager=True)
-    )
+    snap = run_to_batch(triples, "complete").select("user_id", "event_type", "ts")
     return funnel_conversion(snap).orderBy("stage_idx")
 
 
@@ -2638,11 +2597,7 @@ def stream_neardedup_keepfirst(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = b.groupBy("band", "bk").agg(
         F.count(F.lit(1)).alias("sz"), F.min("doc_id").alias("keep_did")
     )
-    # localCheckpoint: the admission report joins batch-derived bands against
-    # this snapshot twice removed from the memory-sink view (same conflicting-
-    # attribute-reference hazard as the other twins); the checkpoint holds the
-    # bucket-state table, nothing larger
-    snap = run_to_batch(stats, "complete").localCheckpoint(eager=True)
+    snap = run_to_batch(stats, "complete")
     docs = table(spark, sf_dir, "documents")
     return neardedup_keep_first(
         docs,
@@ -2706,8 +2661,8 @@ def stream_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_train_s = contam_train_of(documents_stream(spark, sf_dir, n_files=4, max_files_per_trigger=4)).agg(
         F.count(F.lit(1)).alias("_n_train")
     )
-    hits_snap = run_to_batch(hit_set, "complete").localCheckpoint(eager=True)
-    n_train_row = run_to_batch(n_train_s, "complete").localCheckpoint(eager=True)
+    hits_snap = run_to_batch(hit_set, "complete")
+    n_train_row = run_to_batch(n_train_s, "complete")
     hits = hits_snap.groupBy("benchmark").agg(
         F.countDistinct("doc_id").alias("n_contaminated")
     )
@@ -2785,10 +2740,7 @@ def stream_incremental_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     b_stats = b.groupBy("band", "bk").agg(
         F.count(F.lit(1)).alias("sz_b"), F.min("doc_id").alias("keep_bid")
     )
-    # localCheckpoint: the admission report joins batch-derived bands against
-    # this snapshot (same conflicting-attribute hazard as the other twins);
-    # the checkpoint holds the batch bucket state, nothing larger
-    snap = run_to_batch(b_stats, "complete").localCheckpoint(eager=True)
+    snap = run_to_batch(b_stats, "complete")
     combined = snap.join(corpus_stats, ["band", "bk"], "left").select(
         "band",
         "bk",
@@ -2847,10 +2799,7 @@ def stream_url_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("host", "norm_url", "url")
         .agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("mid"))
     )
-    # localCheckpoint: the report aggregates the snapshot twice removed from
-    # the memory-sink view (same conflicting-attribute hazard as the other
-    # twins); the checkpoint holds the per-raw-URL state, nothing larger
-    snap = run_to_batch(triples, "complete").localCheckpoint(eager=True)
+    snap = run_to_batch(triples, "complete")
     per_url = snap.groupBy("host", "norm_url").agg(
         F.min("mid").alias("keep_id"),
         F.sum("n").alias("n_docs"),
@@ -2906,7 +2855,7 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         s_labeled, w, "doc_id", "text", QF_NB, keep=["label"]
     )
     cells = scored.groupBy("predicted", "label").agg(F.count(F.lit(1)).alias("c"))
-    snap = run_to_batch(cells, "complete").localCheckpoint(eager=True)
+    snap = run_to_batch(cells, "complete")
     tp = F.sum(F.when(F.col("predicted") & F.col("label"), F.col("c")).otherwise(0))
     fp = F.sum(F.when(F.col("predicted") & ~F.col("label"), F.col("c")).otherwise(0))
     fn = F.sum(F.when(~F.col("predicted") & F.col("label"), F.col("c")).otherwise(0))
@@ -2956,10 +2905,7 @@ def stream_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = percentile_state_rows(s).groupBy("event_type", "cv").agg(
         F.count(F.lit(1)).alias("n")
     )
-    # localCheckpoint: the contract tail reads the snapshot for the exact
-    # percentiles, the cumulative walk and the answer join (same
-    # memory-sink-view limitation as the other twins)
-    snap = run_to_batch(g, "complete").localCheckpoint(eager=True)
+    snap = run_to_batch(g, "complete")
     probes = table(spark, sf_dir, "events")
     return value_percentiles_from_hist(snap, probes).orderBy("event_type", "q")
 
@@ -3000,10 +2946,7 @@ def stream_soft_weights_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = cms_state_rows(s, "text", SOFT_K, CMS_SLICES, CMS_HEX).groupBy("i", "v").agg(
         F.count(F.lit(1)).alias("n")
     )
-    # localCheckpoint: the pricing tail reads the snapshot for the probe
-    # join and the total (same memory-sink-view limitation as the other
-    # twins)
-    snap = run_to_batch(g, "complete").localCheckpoint(eager=True)
+    snap = run_to_batch(g, "complete")
     docs = table(spark, sf_dir, "documents")
     return soft_dedup_cms_weights(
         soft_gram_counts(docs, "doc_id", "text", SOFT_K),

@@ -47,7 +47,6 @@ def get_spark(
         .config("spark.sql.cbo.joinReorder.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
         # events.parquet stores TIMESTAMP(NANOS); Spark reads it as raw INT64 and
         # catalog.table() converts to micros (DuckDB truncates NS → µs identically).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -5,9 +5,12 @@ micro-batching. This package provides:
 
 - ``source``: replay a driver table as a multi-micro-batch file stream
   (the reference's ITCase pattern — same rows as the batch fixture so
-  streaming results compare against the batch/DuckDB oracle, SURVEY §5.2/FIXTURES §2);
+  streaming results compare against the batch/DuckDB oracle, SURVEY §5.2/FIXTURES §2).
+  Every replay is a list of slices staged by one protocol (``replay``), one
+  file per slice, and takes ``order=`` to scramble the delivery order;
 - ``run``: drive a streaming query to completion synchronously and hand
-  back a batch DataFrame. Every runner here and in ``upsert`` shares one
+  back a batch DataFrame (``run_to_batch`` results are safe to self-join,
+  no checkpoint needed). Every runner here and in ``upsert`` shares one
   run policy: Trigger.AvailableNow under a fresh scratch checkpoint, a
   bounded wait, the query always stopped, and TimeoutError on overrun
   (partial state never returns as a result). The incremental joins and

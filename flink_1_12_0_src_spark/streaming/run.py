@@ -211,12 +211,19 @@ def run_to_batch(stream_df: DataFrame, output_mode: str = "complete") -> DataFra
 
     The sink's temp view is dropped once the result is bound, so repeated
     runs leave nothing behind in the session catalog.
+
+    The result is safe to self-join. The sink's readback is a MemoryPlan
+    leaf, which Spark cannot re-instance when the same relation appears on
+    both sides of a join (UNRESOLVED_COLUMN / conflicting attributes); the
+    aliasing projection on top of it gives the analyzer fresh attribute ids
+    to de-duplicate instead.
     """
     spark: SparkSession = stream_df.sparkSession
     name = f"out_{uuid.uuid4().hex[:12]}"
     try:
         _drive(stream_df.writeStream.format("memory").queryName(name).outputMode(output_mode))
-        return spark.table(name)
+        out = spark.table(name)
+        return out.toDF(*out.columns)
     finally:
         spark.catalog.dropTempView(name)
 

@@ -1,18 +1,22 @@
-"""Streaming source: replay the events table as a chronological file stream.
+"""Streaming source: replay a driver table as a chronological file stream.
 
 Flink equivalent: FileSource with continuous monitoring
 (flink-connectors/flink-connector-files/.../FileSource.java) feeding event-time
-operators. Here the driver's events.parquet is split once per (sf_dir,
-n_files) into range-partitioned files; readStream + maxFilesPerTrigger=1
-yields one micro-batch per time slice, in order (FileStreamSource processes
-by modification time then path; ranges are written in ascending part order).
+operators. Every replay here is a list of SLICES staged once as one parquet
+file each; readStream + maxFilesPerTrigger=1 yields one micro-batch per
+slice, in DELIVERY order (FileStreamSource processes by modification time
+then path, and :func:`replay` sets the mtimes). A replay states only its
+slices and, optionally, ``order``: a permutation of the slice indices that
+delivers slice ``order[0]`` first, then ``order[1]``, ... — the
+out-of-order-delivery fixture the watermark and invariance tests rely on.
 
 Delivery-order robustness: mtime ordering is best-effort — filesystem or
 listing variance in a foreign environment can reorder micro-batches (the
-round-3 driver red on the emission-trace queries). Every slice therefore also
-carries a literal ``stage`` column (its chronological slice index) so
-order-sensitive operators can derive their epoch from the DATA instead of
-the trigger index; see ``run_changelog_count`` and the changelog joins.
+round-3 driver red on the emission-trace queries). The week and residue
+replays therefore also carry a literal ``stage`` column (the slice's
+chronological index) so order-sensitive operators can derive their epoch
+from the DATA instead of the trigger index; see ``run_changelog_count`` and
+the changelog joins.
 
 Staging is crash-safe: the ``_STAGED`` marker is written only after the
 mtime ordering is applied, so an interrupted staging run is re-done from
@@ -24,72 +28,70 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import time
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from flink_1_12_0_src_spark.catalog import table
 
-# v5: staged-cache format version — bumping forces re-staging so files always
+# v6: staged-cache format version — bumping forces re-staging so files always
 # carry the current format (v4 added the per-slice ``stage`` column and the
-# write-marker-last crash-safety protocol; v5 switches the week staging to
+# write-marker-last crash-safety protocol; v5 switched the week staging to
 # calendar-free epoch-day filters, so caches staged under a non-UTC session
-# TZ — where string-literal timestamp casts shift the week boundaries — are
-# invalidated). Stale caches written under different parquet-timestamp
-# configs would otherwise surface TIMESTAMP_NTZ columns that withWatermark
-# rejects, or lack the stage column.
-_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "flink_1_12_0_src_spark_streams_v5")
+# TZ are invalidated; v6 stages every replay as one flat directory of
+# ``part-<slice>.parquet`` files). Stale caches written under different
+# parquet-timestamp configs would otherwise surface TIMESTAMP_NTZ columns
+# that withWatermark rejects, or lack the stage column.
+_CACHE_ROOT = os.path.join(tempfile.gettempdir(), "flink_1_12_0_src_spark_streams_v6")
 
-# Our own completion marker, written AFTER mtime ordering (Spark's _SUCCESS
-# lands before it, mid-staging). Underscore prefix keeps it out of file
-# listings.
+# Our own completion marker, written AFTER mtime ordering. Underscore prefix
+# keeps it out of file listings.
 _MARKER = "_STAGED"
 
 
-def _split_dir(sf_dir: str, n_files: int) -> str:
-    tag = sf_dir.strip("/").replace("/", "_")
-    return os.path.join(_CACHE_ROOT, f"{tag}_events_{n_files}")
+def _tag(sf_dir: str) -> str:
+    return sf_dir.strip("/").replace("/", "_")
 
 
-def _stage_scrambled(base_dir: str, order: tuple) -> str:
-    """Copy of the staged ``part-*`` files of ``base_dir`` whose mtimes
-    deliver file ``order[0]`` first, then ``order[1]``, ... (once per
-    order; the copy's path names the order). Returns the copy's path."""
-    assert sorted(order) == list(range(len(order)))
-    path = base_dir + "_scram_" + "".join(str(i) for i in order)
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
-        os.makedirs(path, exist_ok=True)
-        parts = sorted(f for f in os.listdir(base_dir) if f.startswith("part-"))
-        for f in parts:
-            shutil.copy2(os.path.join(base_dir, f), os.path.join(path, f))
-        base = os.path.getmtime(os.path.join(path, parts[-1]))
-        for rank, idx in enumerate(order):
-            os.utime(os.path.join(path, parts[idx]), (base + rank, base + rank))
-        open(marker, "w").close()
+def _stage(key: str, slices: Callable[[], list[DataFrame]], order: Sequence[int] | None) -> str:
+    """The one staging protocol; returns the staged directory.
+
+    ``slices()`` builds DataFrames whose partitions, in list then partition
+    order, are the slices; each slice lands as one ``part-<i>.parquet``
+    file. ``key`` names the directory: relative under the staged-cache
+    root, absolute as is; a non-identity ``order`` gets its own directory.
+    A directory without the marker is re-staged from scratch."""
+    path = os.path.join(_CACHE_ROOT, key)
+    if order is not None and list(order) != sorted(order):
+        path += "_o" + "-".join(str(i) for i in order)
+    if os.path.exists(os.path.join(path, _MARKER)):
+        return path
+    shutil.rmtree(path, ignore_errors=True)
+    outs = []
+    for k, df in enumerate(slices()):
+        outs.append(os.path.join(path, f"_w{k}"))
+        df.write.parquet(outs[-1])
+    files = [
+        os.path.join(o, f) for o in outs for f in sorted(os.listdir(o)) if f.startswith("part-")
+    ]
+    if order is None:
+        order = range(len(files))
+    elif sorted(order) != list(range(len(files))):
+        raise ValueError(f"order {tuple(order)} is not a permutation of {len(files)} slices")
+    parts = [os.path.join(path, f"part-{i:05d}.parquet") for i in range(len(files))]
+    for f, p in zip(files, parts):
+        os.replace(f, p)
+    for o in outs:
+        shutil.rmtree(o)
+    base = time.time()
+    for rank, i in enumerate(order):
+        os.utime(parts[i], (base + rank, base + rank))
+    open(os.path.join(path, _MARKER), "w").close()
     return path
 
 
-def events_stream(
-    spark: SparkSession, sf_dir: str, n_files: int = 4, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """Return a streaming DataFrame replaying events in ~n_files micro-batches."""
-    path = _split_dir(sf_dir, n_files)
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
-        ev = table(spark, sf_dir, "events")
-        (
-            ev.repartitionByRange(n_files, "ts")
-            .sortWithinPartitions("ts", "event_id")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        # FileStreamSource orders new files by modification time; make that
-        # order the ts-range order explicitly (part-00000 = lowest range).
-        parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
-        base = os.path.getmtime(os.path.join(path, parts[-1]))
-        for i, f in enumerate(parts):
-            os.utime(os.path.join(path, f), (base + i, base + i))
-        open(marker, "w").close()
+def _read(spark: SparkSession, path: str, max_files_per_trigger: int) -> DataFrame:
     schema = spark.read.parquet(path).schema
     return (
         spark.readStream.schema(schema)
@@ -98,70 +100,59 @@ def events_stream(
     )
 
 
-def events_stream_scrambled(
-    spark: SparkSession, sf_dir: str, n_files: int = 4, order: tuple = (3, 1, 0, 2)
+def replay(
+    spark: SparkSession,
+    key: str,
+    slices: Callable[[], list[DataFrame]],
+    order: Sequence[int] | None = None,
+    max_files_per_trigger: int = 1,
 ) -> DataFrame:
-    """The SAME ts-range slices as :func:`events_stream`, delivered in a
-    SCRAMBLED trigger order: slice ``order[0]`` arrives first, then
-    ``order[1]``, ... (mtime permutation; FileStreamSource processes by
-    mtime then path). The out-of-order-delivery fixture for the analytics
-    twins: their snapshots are pure functions of the data, so ANY delivery
-    permutation must yield the identical report — including the funnel's
-    late-stage-qualification path, where a stage-(N-1) slice arrives AFTER
-    the stage-N slice it retroactively qualifies (the default order ships
-    the chronologically LAST slice first)."""
-    assert len(order) == n_files
-    events_stream(spark, sf_dir, n_files)  # ensure the base staging exists
-    path = _stage_scrambled(_split_dir(sf_dir, n_files), order)
-    schema = spark.read.parquet(path).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+    """A file stream over ``slices`` staged under ``key`` (see
+    :func:`_stage`), delivered in ``order`` (default: slice order)."""
+    return _read(spark, _stage(key, slices, order), max_files_per_trigger)
+
+
+def events_dir(
+    spark: SparkSession, sf_dir: str, n_files: int = 4, order: Sequence[int] | None = None
+) -> str:
+    """Stage (once) the ``n_files`` ts-range slices of the events table that
+    :func:`events_stream` replays, and return their directory — for readers
+    that take a path, such as a filesystem-connector DDL table."""
+    return _stage(
+        f"{_tag(sf_dir)}_events_{n_files}",
+        lambda: [
+            table(spark, sf_dir, "events")
+            .repartitionByRange(n_files, "ts")
+            .sortWithinPartitions("ts", "event_id")
+        ],
+        order,
     )
 
 
-def events_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replay with REAL late data: calendar-week slices delivered out of
-    order — week1, week3, week2, week4 (of the 2024-01 events range). After
-    the week3 batch the watermark (0s delay = running max event time) sits at
-    max(week3), so every week2 row arrives late — the fixture for the
-    allowed-lateness / side-output mapping (WindowedStream.sideOutputLateData,
-    …/datastream/WindowedStream.java:128).
+def events_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    n_files: int = 4,
+    max_files_per_trigger: int = 1,
+    order: Sequence[int] | None = None,
+) -> DataFrame:
+    """Replay events in ~n_files micro-batches of ascending ts ranges.
 
-    Fixed date boundaries (not quantiles) keep the late set SQL-expressible:
-    late rows == rows with ts in [Jan 8, Jan 15).
-    """
-    path = os.path.join(_CACHE_ROOT, f"{sf_dir.strip('/').replace('/', '_')}_events_late")
-    marker = os.path.join(path, _MARKER)
-    weeks = [
-        ("1", "2024-01-01", "2024-01-08"),
-        ("3", "2024-01-15", "2024-01-22"),
-        ("2", "2024-01-08", "2024-01-15"),
-        ("4", "2024-01-22", "2024-02-01"),
-    ]
-    if not os.path.exists(marker):
-        ev = table(spark, sf_dir, "events")
-        os.makedirs(path, exist_ok=True)
-        for w, lo, hi in weeks:
-            (
-                ev.filter((ev.ts >= lo) & (ev.ts < hi))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(path, f"week{w}"))
-            )
-        base = os.path.getmtime(os.path.join(path, "week1"))
-        for i, (w, _, _) in enumerate(weeks):
-            d = os.path.join(path, f"week{w}")
-            for f in os.listdir(d):
-                os.utime(os.path.join(d, f), (base + i, base + i))
-        open(marker, "w").close()
-    schema = spark.read.parquet(os.path.join(path, "week1")).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path + "/week*")
-    )
+    ``order`` scrambles the delivery (mtime permutation): the
+    out-of-order-delivery fixture for the analytics twins, whose snapshots
+    are pure functions of the data, so ANY delivery permutation must yield
+    the identical report — including the funnel's late-stage-qualification
+    path, where a stage-(N-1) slice arrives AFTER the stage-N slice it
+    retroactively qualifies."""
+    return _read(spark, events_dir(spark, sf_dir, n_files, order), max_files_per_trigger)
+
+
+# Calendar weeks of the 2024-01 events range as UTC epoch DAYS (2024-01-01 =
+# day 19723). Integer arithmetic on unix_micros is calendar- and
+# session-TZ-free, unlike string-literal timestamp casts, which a non-UTC
+# session TZ shifts by hours while keeping per-week row counts plausible
+# (the r03/r05 driver-red signature on the emission-trace queries).
+_WEEK_DAYS = ((19723, 19730), (19730, 19737), (19737, 19744), (19744, 19754))
 
 
 def events_stream_weeks(
@@ -175,51 +166,32 @@ def events_stream_weeks(
     per-batch contents SQL-expressible — the fixture for changelog-emission
     oracles (batch k ≡ week order[k]).
 
+    ``order=("1", "3", "2", "4")`` is the REAL late-data replay: after the
+    week3 batch the watermark (0s delay = running max event time) sits at
+    max(week3), so every week2 row (ts in [Jan 8, Jan 15)) arrives late —
+    the fixture for the allowed-lateness / side-output mapping
+    (WindowedStream.sideOutputLateData, …/datastream/WindowedStream.java:128).
+
     Each staged row carries ``stage`` = its chronological week index (week1=0
     … week4=3) so emission oracles can label refinements with the data-borne
     epoch rather than the (delivery-order-fragile) trigger index;
     ``with_stage=False`` drops the column for consumers that don't need it.
     """
-    # Week boundaries as UTC epoch DAYS (2024-01-01 = day 19723). Integer
-    # arithmetic on unix_micros is calendar- and session-TZ-free, unlike the
-    # previous string-literal timestamp casts, which a non-UTC session TZ
-    # shifted by hours while keeping per-week row counts plausible (the
-    # r03/r05 driver-red signature on the emission-trace queries).
-    bounds = {
-        "1": (19723, 19730),
-        "2": (19730, 19737),
-        "3": (19737, 19744),
-        "4": (19744, 19754),
-    }
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = os.path.join(_CACHE_ROOT, f"{tag}_events_weeks_{'_'.join(order)}")
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
+
+    def slices() -> list[DataFrame]:
         ev = table(spark, sf_dir, "events").withColumn(
             "_day", F.expr("unix_micros(ts) DIV 86400000000")
         )
-        os.makedirs(path, exist_ok=True)
-        for w in order:
-            lo, hi = bounds[w]
-            (
-                ev.filter((F.col("_day") >= lo) & (F.col("_day") < hi))
-                .drop("_day")
-                .withColumn("stage", F.lit(int(w) - 1).cast("int"))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(path, f"week{w}"))
-            )
-        base = os.path.getmtime(os.path.join(path, f"week{order[0]}"))
-        for i, w in enumerate(order):
-            d = os.path.join(path, f"week{w}")
-            for f in os.listdir(d):
-                os.utime(os.path.join(d, f), (base + i, base + i))
-        open(marker, "w").close()
-    schema = spark.read.parquet(os.path.join(path, f"week{order[0]}")).schema
-    out = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path + "/week*")
+        return [
+            ev.filter((F.col("_day") >= lo) & (F.col("_day") < hi))
+            .drop("_day")
+            .withColumn("stage", F.lit(w).cast("int"))
+            .coalesce(1)
+            for w, (lo, hi) in enumerate(_WEEK_DAYS)
+        ]
+
+    out = replay(
+        spark, f"{_tag(sf_dir)}_events_weeks", slices, tuple(int(w) - 1 for w in order)
     )
     return out if with_stage else out.drop("stage")
 
@@ -244,75 +216,36 @@ def events_stream_mod(
     the residue classes (default ascending) — stage stays the residue, so
     tests can scramble delivery and assert emission invariance.
     """
-    order = tuple(range(parts)) if order is None else order
-    tag = sf_dir.strip("/").replace("/", "_")
-    otag = "" if order == tuple(range(parts)) else "_o" + "".join(str(r) for r in order)
-    path = os.path.join(_CACHE_ROOT, f"{tag}_events_mod{parts}{otag}")
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
+
+    def slices() -> list[DataFrame]:
         ev = table(spark, sf_dir, "events")
-        os.makedirs(path, exist_ok=True)
-        for r in range(parts):
-            (
-                ev.filter(ev.event_id % parts == r)
-                .withColumn("stage", F.lit(r).cast("int"))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(path, f"mod{r}"))
-            )
-        base = os.path.getmtime(os.path.join(path, "mod0"))
-        for i, r in enumerate(order):
-            d = os.path.join(path, f"mod{r}")
-            for f in os.listdir(d):
-                os.utime(os.path.join(d, f), (base + i, base + i))
-        open(marker, "w").close()
-    schema = spark.read.parquet(os.path.join(path, "mod0")).schema
-    out = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path + "/mod*")
-    )
+        return [
+            ev.filter(ev.event_id % parts == r)
+            .withColumn("stage", F.lit(r).cast("int"))
+            .coalesce(1)
+            for r in range(parts)
+        ]
+
+    out = replay(spark, f"{_tag(sf_dir)}_events_mod{parts}", slices, order)
     return out if with_stage else out.drop("stage")
 
 
 def documents_stream(
-    spark: SparkSession, sf_dir: str, n_files: int = 4, max_files_per_trigger: int = 1
+    spark: SparkSession,
+    sf_dir: str,
+    n_files: int = 4,
+    max_files_per_trigger: int = 1,
+    order: Sequence[int] | None = None,
 ) -> DataFrame:
     """Streaming replay of the documents table in ~n_files micro-batches —
-    the text-pipeline-on-a-stream source (stateless per-row transforms need
-    no delivery ordering, so no mtime protocol: any file order yields the
-    same append-mode result set)."""
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = os.path.join(_CACHE_ROOT, f"{tag}_documents_{n_files}")
-    marker = os.path.join(path, _MARKER)
-    if not os.path.exists(marker):
-        table(spark, sf_dir, "documents").repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(path)
-        open(marker, "w").close()
-    schema = spark.read.parquet(path).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-
-
-def documents_stream_scrambled(
-    spark: SparkSession, sf_dir: str, n_files: int = 4, order: tuple = (3, 1, 0, 2)
-) -> DataFrame:
-    """The SAME document files as :func:`documents_stream`, delivered in a
-    SCRAMBLED trigger order (mtime permutation, one file per trigger) — the
-    out-of-order fixture for the dedup twins: their bucket-state snapshots
-    (occupancy count + MIN id) are pure functions of the corpus, so ANY
-    delivery permutation must yield the identical admission set."""
-    assert len(order) == n_files
-    documents_stream(spark, sf_dir, n_files)  # ensure the base staging exists
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = _stage_scrambled(os.path.join(_CACHE_ROOT, f"{tag}_documents_{n_files}"), order)
-    schema = spark.read.parquet(path).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
+    the text-pipeline-on-a-stream source. ``order`` scrambles the delivery:
+    the out-of-order fixture for the dedup twins, whose bucket-state
+    snapshots (occupancy count + MIN id) are pure functions of the corpus,
+    so ANY delivery permutation must yield the identical admission set."""
+    return replay(
+        spark,
+        f"{_tag(sf_dir)}_documents_{n_files}",
+        lambda: [table(spark, sf_dir, "documents").repartition(n_files)],
+        order,
+        max_files_per_trigger,
     )

@@ -85,9 +85,9 @@ def test_twin_snapshot_is_delivery_order_invariant(spark):
 
     from flink_1_12_0_src_spark.operators.analytics import funnel_conversion
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import events_stream_scrambled
+    from flink_1_12_0_src_spark.streaming.source import events_stream
 
-    s = events_stream_scrambled(spark, SF, 4, order=(3, 1, 0, 2))
+    s = events_stream(spark, SF, 4, order=(3, 1, 0, 2))
     triples = (
         s.select("user_id", "event_type", "ts")
         .groupBy("user_id", "event_type", "ts")
@@ -153,10 +153,7 @@ def test_incremental_admit_state_is_boundary_and_order_invariant(spark):
         MH_SHINGLE_K,
     )
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import (
-        documents_stream,
-        documents_stream_scrambled,
-    )
+    from flink_1_12_0_src_spark.streaming.source import documents_stream
 
     is_batch = ~(
         F.substring(
@@ -179,7 +176,7 @@ def test_incremental_admit_state_is_boundary_and_order_invariant(spark):
 
     one = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=4))
     four = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=1))
-    scrambled = snapshot(documents_stream_scrambled(spark, SF, 4, order=(2, 0, 3, 1)))
+    scrambled = snapshot(documents_stream(spark, SF, 4, order=(2, 0, 3, 1)))
     assert one == four == scrambled
 
 
@@ -194,10 +191,7 @@ def test_langid_confusion_state_is_boundary_and_order_invariant(spark):
 
     from flink_1_12_0_src_spark.pipeline.text import language_id
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import (
-        documents_stream,
-        documents_stream_scrambled,
-    )
+    from flink_1_12_0_src_spark.streaming.source import documents_stream
 
     def snapshot(src):
         pred = language_id(src.select("lang", "text"), "lang", "text")
@@ -208,7 +202,7 @@ def test_langid_confusion_state_is_boundary_and_order_invariant(spark):
 
     one = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=4))
     four = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=1))
-    scrambled = snapshot(documents_stream_scrambled(spark, SF, 4, order=(1, 3, 0, 2)))
+    scrambled = snapshot(documents_stream(spark, SF, 4, order=(1, 3, 0, 2)))
     assert one == four == scrambled
 
 
@@ -223,10 +217,7 @@ def test_substring_occurrence_state_is_boundary_and_order_invariant(spark):
     from flink_1_12_0_src_spark.pipeline.dedup import window_occurrences
     from flink_1_12_0_src_spark.queries.pipelineq import SPAN_WINDOW
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import (
-        documents_stream,
-        documents_stream_scrambled,
-    )
+    from flink_1_12_0_src_spark.streaming.source import documents_stream
 
     def snapshot(src):
         occ = window_occurrences(src, "doc_id", "text", SPAN_WINDOW)
@@ -235,7 +226,7 @@ def test_substring_occurrence_state_is_boundary_and_order_invariant(spark):
 
     one = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=4))
     four = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=1))
-    scrambled = snapshot(documents_stream_scrambled(spark, SF, 4, order=(3, 0, 2, 1)))
+    scrambled = snapshot(documents_stream(spark, SF, 4, order=(3, 0, 2, 1)))
     assert one == four == scrambled
 
 
@@ -250,10 +241,7 @@ def test_url_admit_state_is_boundary_and_order_invariant(spark):
     from flink_1_12_0_src_spark.pipeline.dedup import url_normalize
     from flink_1_12_0_src_spark.queries.pipelineq import _synth_url_col
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import (
-        documents_stream,
-        documents_stream_scrambled,
-    )
+    from flink_1_12_0_src_spark.streaming.source import documents_stream
 
     def snapshot(src):
         s = src.select("doc_id", _synth_url_col().alias("url"))
@@ -269,7 +257,7 @@ def test_url_admit_state_is_boundary_and_order_invariant(spark):
 
     one = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=4))
     four = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=1))
-    scrambled = snapshot(documents_stream_scrambled(spark, SF, 4, order=(2, 3, 0, 1)))
+    scrambled = snapshot(documents_stream(spark, SF, 4, order=(2, 3, 0, 1)))
     assert one == four == scrambled
 
 
@@ -293,10 +281,7 @@ def test_quality_filter_state_is_boundary_and_order_invariant(spark):
         QF_ROUNDS,
     )
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import (
-        documents_stream,
-        documents_stream_scrambled,
-    )
+    from flink_1_12_0_src_spark.streaming.source import documents_stream
 
     docs = table(spark, SF, "documents")
     labeled = quality_score(docs, "doc_id", "text", keep=["text"]).select(
@@ -315,7 +300,7 @@ def test_quality_filter_state_is_boundary_and_order_invariant(spark):
         return _rows(run_to_batch(g, "complete"))
 
     one = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=4))
-    scrambled = snapshot(documents_stream_scrambled(spark, SF, 4, order=(1, 0, 3, 2)))
+    scrambled = snapshot(documents_stream(spark, SF, 4, order=(1, 0, 3, 2)))
     assert one == scrambled
 
 
@@ -331,10 +316,7 @@ def test_containment_gram_state_is_boundary_and_order_invariant(spark):
     from flink_1_12_0_src_spark.pipeline.dedup import gram_rows
     from flink_1_12_0_src_spark.queries.pipelineq import NJ_SHINGLE_K
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import (
-        documents_stream,
-        documents_stream_scrambled,
-    )
+    from flink_1_12_0_src_spark.streaming.source import documents_stream
 
     def snapshot(src):
         g = (
@@ -346,7 +328,7 @@ def test_containment_gram_state_is_boundary_and_order_invariant(spark):
 
     one = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=4))
     four = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=1))
-    scrambled = snapshot(documents_stream_scrambled(spark, SF, 4, order=(0, 3, 1, 2)))
+    scrambled = snapshot(documents_stream(spark, SF, 4, order=(0, 3, 1, 2)))
     assert one == four == scrambled
 
 
@@ -360,10 +342,7 @@ def test_bloom_state_is_boundary_and_order_invariant(spark):
 
     from flink_1_12_0_src_spark.pipeline.dedup import bloom_state_rows
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import (
-        documents_stream,
-        documents_stream_scrambled,
-    )
+    from flink_1_12_0_src_spark.streaming.source import documents_stream
 
     def snapshot(src):
         g = (
@@ -375,7 +354,7 @@ def test_bloom_state_is_boundary_and_order_invariant(spark):
 
     one = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=4))
     four = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=1))
-    scrambled = snapshot(documents_stream_scrambled(spark, SF, 4, order=(3, 2, 1, 0)))
+    scrambled = snapshot(documents_stream(spark, SF, 4, order=(3, 2, 1, 0)))
     assert one == four == scrambled
 
 
@@ -434,10 +413,7 @@ def test_doremi_state_is_boundary_and_order_invariant(spark):
 
     from flink_1_12_0_src_spark.pipeline.sampling import doremi_state_rows
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import (
-        documents_stream,
-        documents_stream_scrambled,
-    )
+    from flink_1_12_0_src_spark.streaming.source import documents_stream
 
     def snapshot(src):
         g = doremi_state_rows(src, "text", "source").groupBy(
@@ -447,7 +423,7 @@ def test_doremi_state_is_boundary_and_order_invariant(spark):
 
     one = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=4))
     four = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=1))
-    scrambled = snapshot(documents_stream_scrambled(spark, SF, 4, order=(3, 2, 1, 0)))
+    scrambled = snapshot(documents_stream(spark, SF, 4, order=(3, 2, 1, 0)))
     assert one == four == scrambled
 
 
@@ -461,10 +437,7 @@ def test_percentile_hist_state_is_boundary_and_order_invariant(spark):
 
     from flink_1_12_0_src_spark.operators.analytics import percentile_state_rows
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import (
-        events_stream,
-        events_stream_scrambled,
-    )
+    from flink_1_12_0_src_spark.streaming.source import events_stream
 
     def snapshot(src):
         g = percentile_state_rows(src).groupBy("event_type", "cv").agg(
@@ -474,7 +447,7 @@ def test_percentile_hist_state_is_boundary_and_order_invariant(spark):
 
     one = snapshot(events_stream(spark, SF, n_files=4, max_files_per_trigger=4))
     four = snapshot(events_stream(spark, SF, n_files=4, max_files_per_trigger=1))
-    scrambled = snapshot(events_stream_scrambled(spark, SF, 4, order=(3, 2, 1, 0)))
+    scrambled = snapshot(events_stream(spark, SF, 4, order=(3, 2, 1, 0)))
     assert one == four == scrambled
 
 
@@ -508,10 +481,7 @@ def test_multimodal_audit_state_is_boundary_and_order_invariant(spark):
         synth_image_blobs,
     )
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import (
-        documents_stream,
-        documents_stream_scrambled,
-    )
+    from flink_1_12_0_src_spark.streaming.source import documents_stream
 
     def snapshot(src):
         g = resolution_audit_state(
@@ -521,7 +491,7 @@ def test_multimodal_audit_state_is_boundary_and_order_invariant(spark):
 
     one = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=4))
     four = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=1))
-    scrambled = snapshot(documents_stream_scrambled(spark, SF, 4, order=(3, 2, 1, 0)))
+    scrambled = snapshot(documents_stream(spark, SF, 4, order=(3, 2, 1, 0)))
     assert one == four == scrambled
 
 
@@ -576,10 +546,7 @@ def test_cms_state_is_boundary_and_order_invariant(spark):
 
     from flink_1_12_0_src_spark.pipeline.dedup import cms_state_rows
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import (
-        documents_stream,
-        documents_stream_scrambled,
-    )
+    from flink_1_12_0_src_spark.streaming.source import documents_stream
 
     def snapshot(src):
         g = cms_state_rows(src, "text", 3, 4, 2).groupBy("i", "v").agg(
@@ -589,7 +556,7 @@ def test_cms_state_is_boundary_and_order_invariant(spark):
 
     one = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=4))
     four = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=1))
-    scrambled = snapshot(documents_stream_scrambled(spark, SF, 4, order=(3, 2, 1, 0)))
+    scrambled = snapshot(documents_stream(spark, SF, 4, order=(3, 2, 1, 0)))
     assert one == four == scrambled
 
 
@@ -602,10 +569,7 @@ def test_soft_weights_state_is_boundary_and_order_invariant(spark):
 
     from flink_1_12_0_src_spark.pipeline.text import shingles
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
-    from flink_1_12_0_src_spark.streaming.source import (
-        documents_stream,
-        documents_stream_scrambled,
-    )
+    from flink_1_12_0_src_spark.streaming.source import documents_stream
 
     def snapshot(src):
         g = (
@@ -617,5 +581,5 @@ def test_soft_weights_state_is_boundary_and_order_invariant(spark):
 
     one = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=4))
     four = snapshot(documents_stream(spark, SF, n_files=4, max_files_per_trigger=1))
-    scrambled = snapshot(documents_stream_scrambled(spark, SF, 4, order=(3, 2, 1, 0)))
+    scrambled = snapshot(documents_stream(spark, SF, 4, order=(3, 2, 1, 0)))
     assert one == four == scrambled

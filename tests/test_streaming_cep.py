@@ -13,8 +13,6 @@ The scenario forces every interesting state transition:
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 import pytest
 
@@ -23,34 +21,27 @@ from pyspark.sql import functions as F
 from flink_1_12_0_src_spark.operators.cep import Pattern
 from flink_1_12_0_src_spark.streaming.cep import streaming_match_recognize
 from flink_1_12_0_src_spark.streaming.run import run_to_batch
+from flink_1_12_0_src_spark.streaming.source import replay
 
 T0 = pd.Timestamp("2024-01-01 00:00:00")
 
 
 def _mk_events(spark, tmp_path, batches):
-    """Write one parquet file per batch; mtimes force replay order."""
-    path = os.path.join(str(tmp_path), "cep_stream")
-    os.makedirs(path, exist_ok=True)
+    """One staged replay slice per batch, delivered in batch order."""
     schema = "user_id bigint, ts timestamp, event_id bigint, event_type string"
-    files = []
-    for i, rows in enumerate(batches):
-        pdf = spark.createDataFrame(
-            [
-                (u, (T0 + pd.Timedelta(minutes=m)).to_pydatetime(), eid, et)
-                for u, m, eid, et in rows
-            ],
-            schema,
-        )
-        f = os.path.join(path, f"batch-{i}.parquet")
-        pdf.coalesce(1).write.mode("overwrite").parquet(f)
-        files.append(f)
-    base = os.path.getmtime(files[-1])
-    for i, f in enumerate(files):
-        os.utime(f, (base + i, base + i))
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path + "/*")
+    return replay(
+        spark,
+        str(tmp_path / "cep_stream"),
+        lambda: [
+            spark.createDataFrame(
+                [
+                    (u, (T0 + pd.Timedelta(minutes=m)).to_pydatetime(), eid, et)
+                    for u, m, eid, et in rows
+                ],
+                schema,
+            ).coalesce(1)
+            for rows in batches
+        ],
     )
 
 
@@ -128,40 +119,29 @@ def test_cep_state_survives_drain_then_refill(spark, tmp_path):
     """Same drain-then-refill hazard as _wm_buffered (typed state restore):
     a key whose CEP buffer fully drains (all rows consumed by matches) and
     later receives new events must keep exact int64 event times."""
-    import os
-
     import pyspark.sql.functions as F
 
     from flink_1_12_0_src_spark.operators import Pattern
     from flink_1_12_0_src_spark.streaming.cep import streaming_match_recognize
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
 
-    src = str(tmp_path / "cepdrain")
-    os.makedirs(src)
     batches = [
         [(1, 0, "2024-01-01 10:00:00", "a"), (1, 1, "2024-01-01 10:00:10", "b")],
         [(2, 2, "2024-01-01 11:00:00", "x")],  # advances wm; key 1 drains fully
         [(1, 3, "2024-01-01 12:00:00", "a"), (1, 4, "2024-01-01 12:00:05", "b")],
         [(2, 5, "2024-01-01 13:00:00", "x")],  # advances wm; finalize batch 2
     ]
-    for i, rows in enumerate(batches):
-        df = (
+    stream = replay(
+        spark,
+        str(tmp_path / "cepdrain"),
+        lambda: [
             spark.createDataFrame(rows, "k int, i long, ts_s string, typ string")
             .withColumn("ts", F.col("ts_s").cast("timestamp"))
             .select("k", "i", "ts", "typ")
-        )
-        d = f"{src}/b{i}"
-        df.coalesce(1).write.parquet(d)
-        base = os.path.getmtime(d)
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (base + i, base + i))
-    schema = spark.read.parquet(f"{src}/b0").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*")
-        .withWatermark("ts", "0 seconds")
-    )
+            .coalesce(1)
+            for rows in batches
+        ],
+    ).withWatermark("ts", "0 seconds")
     pat = (
         Pattern.begin("a").where(lambda p: p["typ"] == "a")
         .next("b").where(lambda p: p["typ"] == "b")

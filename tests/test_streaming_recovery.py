@@ -20,7 +20,19 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from flink_1_12_0_src_spark.streaming.source import events_stream
+from flink_1_12_0_src_spark.streaming.source import events_stream, replay
+
+
+def _replay_rows(spark, path, batches, ddl):
+    """A file stream delivering one slice per row batch, in batch order; a
+    ``ts_s`` string column arrives cast to a ``ts`` timestamp."""
+
+    def one(rows):
+        df = spark.createDataFrame(rows, ddl)
+        cols = [F.col(c).cast("timestamp").alias("ts") if c == "ts_s" else c for c in df.columns]
+        return df.select(*cols).coalesce(1)
+
+    return replay(spark, str(path), lambda: [one(rows) for rows in batches])
 
 
 def _agg(stream):
@@ -102,6 +114,57 @@ def test_run_to_batch_leaves_no_sink_view(spark, sf_dir):
     assert {r.event_type: r.cnt for r in out.collect()} == _expected(spark, sf_dir)
 
 
+def test_run_to_batch_result_self_joins(spark, sf_dir):
+    """A run_to_batch snapshot aliased a/b self-joins on its key and gives
+    the same rows as that self-join over the batch relation (a bare
+    memory-sink readback fails to resolve ``a.<col>`` here)."""
+    from flink_1_12_0_src_spark.catalog import table
+    from flink_1_12_0_src_spark.streaming.run import run_to_batch
+
+    def self_join(df):
+        j = df.alias("a").join(df.alias("b"), F.col("a.event_type") == F.col("b.event_type"))
+        return sorted(tuple(r) for r in j.select("a.event_type", "a.cnt", "b.cnt").collect())
+
+    snap = run_to_batch(_agg(events_stream(spark, sf_dir)), "complete")
+    assert self_join(snap) == self_join(_agg(table(spark, sf_dir, "events")))
+
+
+def test_replay_delivers_order_and_restages_unmarked_dir(spark, tmp_path):
+    """The stager delivers slice ``order[k]`` as micro-batch k; a staged dir
+    is reused while its ``_STAGED`` marker exists, and re-staged from
+    scratch once the marker is gone (an interrupted staging run)."""
+    import glob
+    import os
+    import shutil
+
+    from flink_1_12_0_src_spark.streaming import run as srun
+
+    order = (2, 0, 3, 1)
+
+    def delivered(first_stage):
+        def slices():
+            return [spark.range(2).select(F.lit(first_stage + i).alias("stage")).coalesce(1)
+                    for i in range(4)]
+
+        seen = []
+        stream = replay(spark, str(tmp_path / "r"), slices, order)
+        srun._drive(stream.writeStream.foreachBatch(
+            lambda b, _e: seen.append(sorted({r.stage for r in b.collect()}))
+        ))
+        return seen
+
+    assert delivered(0) == [[2], [0], [3], [1]]
+    [staged] = glob.glob(str(tmp_path / "r*"))
+    assert os.path.exists(os.path.join(staged, "_STAGED"))
+    assert delivered(10) == [[2], [0], [3], [1]]  # marker present: not re-staged
+
+    os.remove(os.path.join(staged, "_STAGED"))
+    stray = os.path.join(staged, "part-99999.parquet")
+    shutil.copy(os.path.join(staged, "part-00000.parquet"), stray)
+    assert delivered(10) == [[12], [10], [13], [11]]
+    assert not os.path.exists(stray)
+
+
 @pytest.mark.parametrize("runner", ["run_to_batch", "run_changelog_count"])
 def test_replay_overrun_raises_and_stops(spark, sf_dir, monkeypatch, runner):
     """Past the run bound, a runner raises TimeoutError (partial state would
@@ -126,28 +189,14 @@ def test_incremental_join_bucket_pruning(spark, tmp_path):
     touches (StreamingJoinOperator keyed-state point-lookup analog). A
     single-key delta must therefore scan a strict subset of the history
     files, and the emitted pairs must still equal the batch join."""
-    import os
-
     from flink_1_12_0_src_spark.streaming.run import run_incremental_join
 
-    src = str(tmp_path / "src")
-    os.makedirs(src)
     batches = [
         [(k, "L", float(k)) for k in range(8)] + [(k, "R", k * 10.0) for k in range(8)],
         [(1, "L", 100.0)],  # touches exactly one bucket
         [(2, "R", 200.0)],  # touches exactly one bucket
     ]
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "k int, side string, val double")
-        d = f"{src}/b{i}"
-        df.coalesce(1).write.parquet(d)
-        base = os.path.getmtime(d)
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (base + i, base + i))
-    schema = spark.read.parquet(f"{src}/b0").schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src + "/b*")
-    )
+    stream = _replay_rows(spark, tmp_path / "src", batches, "k int, side string, val double")
     stats: dict = {}
     out = run_incremental_join(
         stream,
@@ -177,27 +226,15 @@ def test_upsert_sink_bucket_pruning(spark, tmp_path):
     write amplification O(touched buckets) per trigger, not O(table). A
     single-key update batch must scan a strict subset of the table files,
     and the final snapshot must equal the closed-form merge."""
-    import os
-
     from flink_1_12_0_src_spark.streaming.upsert import run_changelog_upsert
 
-    src = str(tmp_path / "chlog")
-    os.makedirs(src)
     batches = [
         [(k, float(k), "+I", 0) for k in range(64)],  # seed: all buckets
         [(3, 300.0, "+U", 1)],                        # touches one bucket
         [(5, 0.0, "-D", 2)],                          # touches one bucket
     ]
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "k int, val double, rowkind string, version int")
-        d = f"{src}/b{i}"
-        df.coalesce(1).write.parquet(d)
-        base = os.path.getmtime(d)
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (base + i, base + i))
-    schema = spark.read.parquet(f"{src}/b0").schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src + "/b*")
+    stream = _replay_rows(
+        spark, tmp_path / "chlog", batches, "k int, val double, rowkind string, version int"
     )
     stats: dict = {}
     snap = run_changelog_upsert(
@@ -230,28 +267,12 @@ def test_idle_source_watermark_divergence(spark, tmp_path):
     producing. Under append mode the 10:00 window (containing B's only row)
     must still finalize — i.e. the watermark advanced past B's last event on
     A's data alone."""
-    import os
-
-    src = str(tmp_path / "twosrc")
-    os.makedirs(src)
     batches = [
         [("A", "2024-01-01 10:00:30", 1.0), ("B", "2024-01-01 10:00:40", 2.0)],
         [("A", "2024-01-01 11:00:00", 3.0)],  # B idle; A advances event time
     ]
-    for i, rows in enumerate(batches):
-        df = (
-            spark.createDataFrame(rows, "src string, ts_s string, val double")
-            .withColumn("ts", F.col("ts_s").cast("timestamp"))
-            .drop("ts_s")
-        )
-        d = f"{src}/b{i}"
-        df.coalesce(1).write.parquet(d)
-        base = os.path.getmtime(d)
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (base + i, base + i))
-    schema = spark.read.parquet(f"{src}/b0").schema
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src + "/b*")
+    stream = _replay_rows(
+        spark, tmp_path / "twosrc", batches, "src string, ts_s string, val double"
     )
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
 
@@ -381,13 +402,9 @@ def test_wm_buffer_survives_drain_then_refill(spark, tmp_path):
     restored columns to float64 and the concat upcast the int64 nanosecond
     buffer to float64 — which the LongType state array nulled on write,
     crashing the next batch with 'int() argument ... NoneType'."""
-    import os
-
     from flink_1_12_0_src_spark.streaming.run import run_to_batch
     from flink_1_12_0_src_spark.streaming.stateful import streaming_temporal_join
 
-    src = str(tmp_path / "drainrefill")
-    os.makedirs(src)
     batches = [
         # batch 0: key 1 dim+fact (buffered; wm still behind)
         [(1, "2024-01-01 10:00:00", "D", 1.0), (1, "2024-01-01 10:01:00", "F", 5.0)],
@@ -399,24 +416,10 @@ def test_wm_buffer_survives_drain_then_refill(spark, tmp_path):
         # batch 3: advance wm so batch 2 finalizes
         [(2, "2024-01-01 13:00:00", "F", 8.0)],
     ]
-    for i, rows in enumerate(batches):
-        df = (
-            spark.createDataFrame(rows, "user_id int, ts_s string, side string, value double")
-            .withColumn("ts", F.col("ts_s").cast("timestamp"))
-            .select("user_id", "ts", "side", "value")
-        )
-        d = f"{src}/b{i}"
-        df.coalesce(1).write.parquet(d)
-        base = os.path.getmtime(d)
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (base + i, base + i))
-    schema = spark.read.parquet(f"{src}/b0").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*")
-        .withWatermark("ts", "0 seconds")
-    )
+    stream = _replay_rows(
+        spark, tmp_path / "drainrefill", batches,
+        "user_id int, ts_s string, side string, value double",
+    ).withWatermark("ts", "0 seconds")
     out = run_to_batch(
         streaming_temporal_join(stream, key="user_id", time_col="ts", side_col="side", value_col="value"),
         "append",
@@ -434,31 +437,17 @@ def test_semi_anti_join_state_shape(spark, tmp_path):
     MAP-SIDE to one (key, min stage) row per batch, with no history reads
     during the stream — and the close-time emission must equal the
     closed-form first-match semantics."""
-    import os
-
     from flink_1_12_0_src_spark.streaming.run import run_incremental_semi_anti_join
 
-    src = str(tmp_path / "src")
-    os.makedirs(src)
     batches = [
         [(k, k, "L", 0) for k in range(8)],          # all left, stage 0
         [(1, 100, "R", 1)],                          # one matching right key
         [(2, 200, "R", 2)],                          # another
     ]
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "k int, eid bigint, side string, stage int")
-        d = f"{src}/b{i}"
-        df.coalesce(1).write.parquet(d)
-        base = os.path.getmtime(d)
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (base + i, base + i))
-    schema = spark.read.parquet(f"{src}/b0").schema
 
     def stream():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src + "/b*")
+        return _replay_rows(
+            spark, tmp_path / "src", batches, "k int, eid bigint, side string, stage int"
         )
 
     semi = run_incremental_semi_anti_join(

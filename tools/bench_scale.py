@@ -6,8 +6,9 @@ of the <=1.0 the sf0.1 bench is stuck at (fixed-overhead-dominated there).
 
 This does NOT touch bench.py or its driver contract — separate artifact
 (plans/r15/BENCH_scale_r15.json by default), separate query subset, run by
-hand. Each core count runs in a FRESH subprocess (new JVM) with the bench's
-own timing protocol (warmups, median of runs, caches cleared).
+hand. Each core count runs in a FRESH subprocess (new JVM): one
+``bench.py --retime`` pass, so the timing protocol (warmups, median of runs,
+caches cleared) is the bench's own.
 
 Usage:
   python tools/gen_scale_data.py --reps 10 --out /root/scale_data/sf1
@@ -25,7 +26,6 @@ import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
 
 # the heaviest bench queries: corpus/dedup/pipeline flagships + the iterative
 # graph/classifier trainers + one join-heavy TPC-H representative
@@ -45,46 +45,23 @@ SCALE_QUERIES = [
 
 
 def _child(data_dir: str, cpus: int, runs: int, warmups: int) -> dict:
-    """One fresh-JVM timing pass over SCALE_QUERIES at `cpus` cores."""
-    code = f"""
-import json, sys, time
-sys.path.insert(0, {str(REPO)!r})
-from flink_1_12_0_src_spark.queries import load_all
-from flink_1_12_0_src_spark.session import get_spark
-reg = load_all()
-spark = get_spark(app_name='bench-scale', cpus={cpus}, shuffle_partitions={cpus})
-
-def reset():
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
-
-out = {{}}
-for name in {SCALE_QUERIES!r}:
-    q = reg[name]
-    for _ in range({warmups}):
-        reset(); q.spark(spark, {data_dir!r}).count()
-    samples = []
-    for _ in range({runs}):
-        reset()
-        t0 = time.perf_counter()
-        n = q.spark(spark, {data_dir!r}).count()
-        samples.append(time.perf_counter() - t0)
-    samples.sort()
-    out[name] = {{"median": round(samples[len(samples)//2], 3),
-                  "spread": [round(samples[0], 3), round(samples[-1], 3)],
-                  "rows": n}}
-    print(f"# c{cpus} {{name}}: {{out[name]}}", file=sys.stderr, flush=True)
-spark.stop()
-print(json.dumps(out))
-"""
+    """One fresh-JVM ``bench.py --retime`` pass over SCALE_QUERIES at `cpus`
+    cores: the bench's own timing protocol, driven by its env."""
+    env = {
+        **os.environ,
+        "SPARK_GRAFT_SF_DIR": data_dir,
+        "SPARK_GRAFT_CPUS": str(cpus),
+        "SPARK_GRAFT_BENCH_RUNS": str(runs),
+        "SPARK_GRAFT_BENCH_WARMUPS": str(warmups),
+    }
     proc = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, timeout=5400
+        [sys.executable, str(REPO / "bench.py"), "--retime", ",".join(SCALE_QUERIES)],
+        capture_output=True, text=True, timeout=5400, env=env,
     )
     sys.stderr.write(proc.stderr)
     if proc.returncode != 0:
         raise RuntimeError(f"child c{cpus} failed: {proc.stderr[-2000:]}")
-    return json.loads(proc.stdout.strip().splitlines()[-1])
+    return json.loads(proc.stdout.strip().splitlines()[-1])["retimed"]
 
 
 def main() -> None:

@@ -632,14 +632,14 @@ def doremi_weights(
     count, both map-side partial, both collapsing to vocab-bounded
     relations BEFORE any weight math; every round then broadcasts the
     K-row iterate onto the (domain, term) relation (K×V rows, NOT the
-    corpus) for the proxy re-score and normalizes with one-row
-    exact-integer aggregates — the corpus never shuffles on rounds.
+    corpus) for the proxy re-score and normalizes with one exact-integer
+    sum over the K-row iterate — the corpus never shuffles on rounds.
     ``materialize`` (default True) localCheckpoints the (domain, term,
-    n, n_tok) relation once (cuts the corpus subtree out of the
-    2-references-per-round lazy chain, which would otherwise re-execute
-    it 2^rounds times), the K-row reference-loss relation once, and the
-    K-row iterate per round; ``materialize=False`` keeps the plan fully
-    lazy for golden pinning.
+    n, n_tok) relation once (every round reads it, so a lazy plan re-runs
+    the corpus scoring pass once per round), the K-row reference-loss
+    relation once, and the K-row iterate per round; ``materialize=False``
+    keeps the plan fully lazy — linear in ``rounds`` — for golden
+    pinning.
 
     Returns (domain, n_docs, proxy_nll, ref_nll, excess_loss, weight).
     Reference scope note: the reference engine has no training operator —
@@ -792,13 +792,20 @@ def doremi_weights_from_counts(
     )
     dtn = dterm.join(ntok, "domain")
     if materialize:
-        # every round reads dtn twice (mixture LM + per-domain loss); an
-        # unpersisted relation would re-execute the corpus-scale tokenize
-        # aggregate feeding dterm once per reference. Stage probe: the
-        # proxy-side corpus scoring pass, for the bench stage ledger.
+        # every round reads dtn; an unpersisted relation would re-execute
+        # the corpus-scale tokenize aggregate feeding dterm once per round.
+        # Stage probe: the proxy-side corpus scoring pass, for the bench
+        # stage ledger.
         with stage("scoring"):
             dtn = dtn.localCheckpoint(eager=True)
     vocab = dtn.groupBy("term").agg(F.sum(F.col("n").cast("bigint")).alias("c"))
+
+    def _mean_nll(nll):
+        # count-weighted mean of a 6-dp DECIMAL NLL: exact sums, one divide
+        return F.sum(F.col("n") * nll).cast("double") / F.sum(
+            F.col("n").cast("bigint")
+        ).cast("double")
+
     # reference loss: add-1-smoothed bigram LM (bigram_logprob's LM), the
     # stronger FIXED model (the paper's reference does not retrain) —
     # counts aggregate before any join (the (domain, bigram) relation is
@@ -822,19 +829,13 @@ def doremi_weights_from_counts(
         .join(uni, "w1")
         .crossJoin(F.broadcast(v))
         .groupBy("domain")
-        .agg(
-            (
-                F.sum(F.col("n") * nll_b).cast("double")
-                / F.sum(F.col("n").cast("bigint")).cast("double")
-            ).alias("lr")
-        )
+        .agg(_mean_nll(nll_b).alias("lr"))
     )
     dom = nd.join(lr_, "domain").select("domain", "n_docs", "lr")
     if materialize:
-        # cut the bigram-LM subtree out of the per-round chain: each round
-        # references the previous iterate twice (normalizer + update), so an
-        # unpersisted domain relation would re-execute the reference pass
-        # 2^rounds times. Stage probe: the reference-side scoring pass.
+        # the initial iterate reads dom twice (its rows and the K count), so
+        # an unpersisted relation would run the bigram-LM reference pass
+        # twice. Stage probe: the reference-side scoring pass.
         with stage("ref_loss"):
             dom = dom.localCheckpoint(eager=True)
 
@@ -853,8 +854,6 @@ def doremi_weights_from_counts(
 
     cur = dom.crossJoin(F.broadcast(kk)).select(
         "domain", "n_docs", "lr", "_k",
-        F.lit(0.0).alias("lp"),
-        F.lit(0.0).alias("excess"),
         _u9(F.lit(1.0) / F.col("_k")).alias("alpha"),
         F.lit(0).cast(dec).alias("acc"),
     )
@@ -866,54 +865,31 @@ def doremi_weights_from_counts(
     nll_m = F.round(
         -F.log(F.col("pm").cast("double") / F.lit(1e15)), 6
     ).cast("decimal(20,6)")
+    excess = _u6(F.greatest(F.lit(0.0), F.col("lp") - F.col("lr")))
+    e = F.round(F.exp(F.lit(eta) * F.col("excess")), 6)
+    numn = F.round(F.col("alpha") * e * F.lit(1e9), 0).cast("bigint")
+    alpha1 = _u6(F.col("numn").cast("double") / F.sum("numn").over(Window.partitionBy()))
     for _ in range(rounds):
-        # proxy re-score under the current mixture: K-row alpha broadcast
-        # onto the (domain, term) relation, one term-keyed aggregate (the
-        # mixture LM), one domain-keyed aggregate (the per-domain loss).
-        # Kept as aggregate-then-join-back, NOT a per-term window sum: the
-        # vocab-sized pm_rel broadcasts back onto the checkpointed dtn, so
-        # the K×V relation is never sorted or re-shuffled — an A/B of the
-        # window form measured 1.5× slower per round (see ref_loss note).
-        pm_rel = (
-            dtn.join(F.broadcast(cur.select("domain", "alpha")), "domain")
-            .groupBy("term")
-            .agg(F.greatest(F.sum(pico), F.lit(1)).alias("pm"))
-        )
-        lpd = (
-            dtn.join(pm_rel.select("term", nll_m.alias("_nll")), "term")
-            .groupBy("domain")
-            .agg(
-                (
-                    F.sum(F.col("n") * F.col("_nll")).cast("double")
-                    / F.sum(F.col("n").cast("bigint")).cast("double")
-                ).alias("_lp")
-            )
-        )
+        # one round reads the previous iterate ONCE, in 4 jobs: the K-row
+        # iterate broadcasts onto the (domain, term) relation, the mixture LM
+        # is a per-term window sum, the per-domain loss aggregate carries the
+        # iterate's columns, and the exact normalizer is a window sum over
+        # the K-row relation coalesced to one partition (no exchange). A
+        # second read of the iterate (say, joining the loss back onto it)
+        # doubles the jobs per round.
         stepped = (
-            cur.drop("lp", "excess")
-            .join(F.broadcast(lpd), "domain")
-            .select(
-                "domain", "n_docs", "lr", "_k", "alpha", "acc",
-                F.col("_lp").alias("lp"),
-                _u6(F.greatest(F.lit(0.0), F.col("_lp") - F.col("lr"))).alias(
-                    "excess"
-                ),
-            )
-            .select(
-                "*", F.round(F.exp(F.lit(eta) * F.col("excess")), 6).alias("e")
-            )
+            dtn.join(F.broadcast(cur), "domain")
+            .withColumn("pm", F.greatest(F.sum(pico).over(Window.partitionBy("term")), F.lit(1)))
+            .groupBy("domain", "n_docs", "lr", "_k", "alpha", "acc")
+            .agg(_mean_nll(nll_m).alias("lp"))
+            .withColumn("excess", excess)
+            .withColumn("numn", numn)
+            .coalesce(1)
         )
-        numn = F.round(F.col("alpha") * F.col("e") * F.lit(1e9), 0).cast("bigint")
-        stepped = stepped.select("*", numn.alias("numn"))
-        z = stepped.agg(F.sum("numn").alias("_z"))
-        alpha1 = _u6(F.col("numn").cast("double") / F.col("_z"))
-        cur = (
-            stepped.crossJoin(F.broadcast(z))
-            .select(
-                "domain", "n_docs", "lr", "_k", "lp", "excess",
-                alpha1.alias("alpha"),
-                (F.col("acc") + alpha1.cast(dec)).cast(dec).alias("acc"),
-            )
+        cur = stepped.select(
+            "domain", "n_docs", "lr", "_k", "lp", "excess",
+            alpha1.alias("alpha"),
+            (F.col("acc") + alpha1.cast(dec)).cast(dec).alias("acc"),
         )
         if materialize:
             # stage probe accumulates across rounds: the per-round proxy

@@ -153,8 +153,7 @@ def cdc_canal_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(streaming/upsert.py). Final snapshot ≡ the oracle's closed-form state.",
 )
 def cdc_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
+    from flink_1_12_0_src_spark.streaming.run import scratch_dir
     from flink_1_12_0_src_spark.streaming.source import replay
     from flink_1_12_0_src_spark.streaming.upsert import run_changelog_upsert
 
@@ -177,7 +176,7 @@ def cdc_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = replay(spark, f"{tag}_cdc_upsert_stream", slices)
     snap = run_changelog_upsert(
         stream,
-        base_dir=tempfile.mkdtemp(prefix="upsert_tbl_"),
+        base_dir=scratch_dir(prefix="upsert_tbl_"),
         key_cols=["o_orderkey"],
         version_col="version",
     )

@@ -25,6 +25,8 @@ scratch instead of leaving a permanently scrambled cache.
 
 from __future__ import annotations
 
+import functools
+import glob
 import os
 import shutil
 import tempfile
@@ -42,7 +44,8 @@ from flink_1_12_0_src_spark.catalog import table
 # TZ are invalidated; v6 stages every replay as one flat directory of
 # ``part-<slice>.parquet`` files). Stale caches written under different
 # parquet-timestamp configs would otherwise surface TIMESTAMP_NTZ columns
-# that withWatermark rejects, or lack the stage column.
+# that withWatermark rejects, or lack the stage column. The first stage in a
+# process removes the older roots (:func:`_prune_stale_caches`).
 _CACHE_ROOT = os.path.join(tempfile.gettempdir(), "flink_1_12_0_src_spark_streams_v6")
 
 # Our own completion marker, written AFTER mtime ordering. Underscore prefix
@@ -54,6 +57,25 @@ def _tag(sf_dir: str) -> str:
     return sf_dir.strip("/").replace("/", "_")
 
 
+@functools.cache
+def _prune_stale_caches() -> None:
+    """Remove, once per process, the staged caches a version bump left
+    behind: every older ``..._streams_v<N>`` root, and the pre-v6 CDC
+    replay dirs under ``flink_1_12_0_src_spark_files`` (queries/dialectq.py
+    owns the rest of that directory)."""
+    parent, name = os.path.split(_CACHE_ROOT)
+    stem, version = name.rsplit("_v", 1)
+    files = os.path.join(parent, "flink_1_12_0_src_spark_files")
+    stale = glob.glob(os.path.join(files, "*_cdc_retract_changelog"))
+    stale += glob.glob(os.path.join(files, "*_cdc_upsert_stream"))
+    for d in glob.glob(os.path.join(parent, f"{stem}_v*")):
+        v = d.rsplit("_v", 1)[1]
+        if v.isdigit() and int(v) < int(version):
+            stale.append(d)
+    for d in stale:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def _stage(key: str, slices: Callable[[], list[DataFrame]], order: Sequence[int] | None) -> str:
     """The one staging protocol; returns the staged directory.
 
@@ -62,6 +84,7 @@ def _stage(key: str, slices: Callable[[], list[DataFrame]], order: Sequence[int]
     file. ``key`` names the directory: relative under the staged-cache
     root, absolute as is; a non-identity ``order`` gets its own directory.
     A directory without the marker is re-staged from scratch."""
+    _prune_stale_caches()
     path = os.path.join(_CACHE_ROOT, key)
     if order is not None and list(order) != sorted(order):
         path += "_o" + "-".join(str(i) for i in order)

@@ -10,7 +10,9 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
+    # local[N] follows SPARK_GRAFT_CPUS (the host); shuffle partitions stay 8,
+    # the count the plan goldens were generated under
+    s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -552,8 +552,10 @@ def golden_plan_providers() -> dict:
         from flink_1_12_0_src_spark.queries.pipelineq import DOREMI_ETA, DOREMI_SMOOTH
 
         # 1 round, materialize=False: pins the two LM scoring passes, the
-        # domains-sized loss join, and the broadcast one-row exact-integer
-        # normalizer; further rounds repeat the identical shape
+        # broadcast K-row iterate, the per-term window mixture sum and the
+        # exchange-free window normalizer over the coalesced K-row relation;
+        # further rounds append the identical shape (the plan is linear in
+        # rounds)
         return doremi_weights(
             table(spark, sf_dir, "documents"), "doc_id", "text", "source",
             rounds=1, eta=DOREMI_ETA, smoothing=DOREMI_SMOOTH,

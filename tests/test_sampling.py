@@ -468,6 +468,27 @@ def test_doremi_rounds_are_coupled(spark):
     assert r2["hard"]["excess_loss"] < r1["hard"]["excess_loss"]
 
 
+def test_doremi_round_job_budget(spark, docs):
+    """One gradient round launches at most 4 Spark jobs: the round reads the
+    previous iterate once (one broadcast), so the per-round barrier is the
+    only extra action. Measured as the job-count difference between 2 and 1
+    rounds, each run under its own job group."""
+    from flink_1_12_0_src_spark.pipeline.sampling import doremi_weights
+
+    sc = spark.sparkContext
+
+    def jobs(rounds):
+        group = f"doremi_round_budget_{rounds}"
+        sc.setJobGroup(group, group)
+        try:
+            doremi_weights(docs, "doc_id", "text", "source", rounds=rounds).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(2) - jobs(1) <= 4
+
+
 def test_doremi_sample_realizes_learned_mixture(spark, docs):
     """The sampler must realize the trainer's mixture: the bottleneck
     domain (largest weight/n_docs) keeps every doc, every other domain's

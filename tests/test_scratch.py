@@ -1,5 +1,6 @@
 """Streaming scratch-dir lifecycle: tmpfs free-space bound and
-end-of-process cleanup (streaming/run.py scratch_dir).
+end-of-process cleanup (streaming/run.py scratch_dir), and the pruning of
+stale staged-cache roots (streaming/source.py).
 
 Each test removes only the dirs it allocated: the global cleanup would also
 delete dirs that DataFrames built earlier in the session still read lazily.
@@ -7,11 +8,12 @@ delete dirs that DataFrames built earlier in the session still read lazily.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
 
-from flink_1_12_0_src_spark.streaming import run as srun
+from flink_1_12_0_src_spark.streaming import run as srun, source
 
 
 def _release(d: str) -> None:
@@ -67,3 +69,41 @@ def test_min_free_bound_falls_back_on_malformed_env(monkeypatch):
     assert srun._min_free_bytes() == 1048576
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH_MIN_FREE")
     assert srun._min_free_bytes() == 4 * 1024**3
+
+
+def test_upsert_query_table_is_cleaned_scratch(spark, sf_dir):
+    """cdc_foreachbatch_upsert's maintained table lives in a scratch dir that
+    is removed at exit, not in an untracked mkdtemp under the temp root."""
+    from flink_1_12_0_src_spark.queries import load_all
+
+    pattern = os.path.join(tempfile.gettempdir(), "upsert_tbl_*")
+    before = set(glob.glob(pattern))
+    load_all()["cdc_foreachbatch_upsert"].spark(spark, sf_dir).collect()
+    tracked = set(srun._ALLOCATED)
+    assert set(glob.glob(pattern)) - before <= tracked
+    assert any(os.path.basename(d).startswith("upsert_tbl_") for d in tracked)
+
+
+def test_stale_cache_roots_are_pruned(tmp_path, monkeypatch):
+    """Older versioned roots and the dead CDC replay dirs go; the current and
+    newer roots, and the rest of the files cache, stay."""
+    monkeypatch.setattr(
+        source, "_CACHE_ROOT", str(tmp_path / "flink_1_12_0_src_spark_streams_v6")
+    )
+    planted = {
+        "flink_1_12_0_src_spark_streams_v4": False,
+        "flink_1_12_0_src_spark_streams_v5": False,
+        "flink_1_12_0_src_spark_streams_v6": True,
+        "flink_1_12_0_src_spark_streams_v10": True,
+        "flink_1_12_0_src_spark_files/sf_cdc_retract_changelog": False,
+        "flink_1_12_0_src_spark_files/sf_cdc_upsert_stream": False,
+        "flink_1_12_0_src_spark_files/sf_events_json": True,
+    }
+    for rel in planted:
+        (tmp_path / rel / "k").mkdir(parents=True)
+    source._prune_stale_caches.cache_clear()
+    try:
+        source._prune_stale_caches()
+    finally:
+        source._prune_stale_caches.cache_clear()
+    assert {rel: (tmp_path / rel).exists() for rel in planted} == planted

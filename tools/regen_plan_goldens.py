@@ -8,8 +8,10 @@ Run after an INTENTIONAL plan change, diff-review the result like any golden:
     python tools/regen_plan_goldens.py            # regenerate + report diff
     python -m pytest tests/test_plan_goldens.py   # verify
 
-Fingerprints are generated under the exact session shape the tests use
-(cpus=8, shuffle_partitions=8, sf0.01) so goldens and assertions agree.
+Fingerprints are generated with the tests' shuffle-partition count (8) at
+sf0.01, so goldens and assertions agree. They record partitioning kinds, not
+counts, so the core count (8 here, SPARK_GRAFT_CPUS in the tests) does not
+enter them.
 """
 
 from __future__ import annotations

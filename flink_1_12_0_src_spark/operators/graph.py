@@ -13,7 +13,7 @@ Scale notes (100 TB):
 - the per-iteration plan is join(edges, labels on src) → groupBy(dst) —
   both hash-partitioned on vertex id; co-partitioning is reused across the
   join and the agg, and the messages aggregate map-side before shuffling;
-- ``localCheckpoint`` truncates lineage each iteration (otherwise the plan
+- an eager ``barrier`` truncates lineage each iteration (otherwise the plan
   doubles per step and the driver, not the data, becomes the bottleneck);
   PageRank reads each iterate once, so it checkpoints only its result;
 - convergence check piggybacks on the same pass (one count per iteration).
@@ -26,6 +26,8 @@ floor division) so every engine computes bit-identical ranks.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from flink_1_12_0_src_spark.pipeline.stageclock import barrier, cached
 
 PR_SCALE = 1_000_000_000_000  # rank fixed-point scale (1.0 == 1e12)
 
@@ -50,29 +52,29 @@ def connected_components(
     # loop-invariant edge side: persist PRE-PARTITIONED on the join key so
     # only the |V|-sized label table shuffles per round (same layout note as
     # pagerank below)
-    ud = _undirected(edges, src, dst).repartition("src").persist()
-    labels = ud.select(F.col("src").alias("v")).distinct().withColumn("label", F.col("v"))
-    for _ in range(max_iter):
-        msgs = (
-            ud.join(labels, ud.src == labels.v)
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(msgs, "v", "left")
-            .select("v", F.least("label", F.coalesce("nbr_min", F.col("label"))).alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "v")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    ud.unpersist()
+    ud = _undirected(edges, src, dst).repartition("src")
+    with cached(ud):
+        labels = ud.select(F.col("src").alias("v")).distinct().withColumn("label", F.col("v"))
+        for _ in range(max_iter):
+            msgs = (
+                ud.join(labels, ud.src == labels.v)
+                .groupBy(F.col("dst").alias("v"))
+                .agg(F.min("label").alias("nbr_min"))
+            )
+            new_labels = barrier(
+                labels.join(msgs, "v", "left").select(
+                    "v", F.least("label", F.coalesce("nbr_min", F.col("label"))).alias("label")
+                )
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "v")
+                .filter(F.col("n.label") != F.col("o.label"))
+                .count()
+            )
+            labels = new_labels
+            if changed == 0:
+                break
     return labels.select("v", F.col("label").alias("component"))
 
 
@@ -86,31 +88,28 @@ def label_propagation(
     and therefore oracle-checkable (Gelly's hash-based tie-break is not).
 
     Per round: one join (edges × labels on src) + count-groupBy + top-1 window
-    — all hash-partitioned on vertex id; localCheckpoint flattens lineage."""
+    — all hash-partitioned on vertex id; a barrier flattens lineage."""
     from pyspark.sql import Window as W
 
-    ud = _undirected(edges, src, dst).repartition("dst").persist()
-    labels = ud.select(F.col("src").alias("v")).distinct().withColumn("label", F.col("v"))
-    for _ in range(iterations):
-        cnt = (
-            ud.join(labels, ud.dst == labels.v)
-            .groupBy(F.col("src").alias("nv"), "label")
-            .agg(F.count("*").alias("c"))
-        )
-        w = W.partitionBy("nv").orderBy(F.desc("c"), F.asc("label"))
-        labels = (
-            cnt.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("nv").alias("v"), "label")
-            .localCheckpoint(eager=True)
-        )
-    ud.unpersist()
+    ud = _undirected(edges, src, dst).repartition("dst")
+    with cached(ud):
+        labels = ud.select(F.col("src").alias("v")).distinct().withColumn("label", F.col("v"))
+        for _ in range(iterations):
+            cnt = (
+                ud.join(labels, ud.dst == labels.v)
+                .groupBy(F.col("src").alias("nv"), "label")
+                .agg(F.count("*").alias("c"))
+            )
+            w = W.partitionBy("nv").orderBy(F.desc("c"), F.asc("label"))
+            labels = barrier(
+                cnt.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") == 1)
+                .select(F.col("nv").alias("v"), "label")
+            )
     return labels
 
 
-def triangle_counts(
-    edges: DataFrame, src: str = "src", dst: str = "dst", materialize: bool = True
-) -> DataFrame:
+def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Per-vertex triangle participation counts (Gelly TriangleEnumerator,
     …/graph/library/TriangleEnumerator.java, + clustering triangle metrics).
 
@@ -118,20 +117,15 @@ def triangle_counts(
     via the two-path + closing-edge join. All three joins hash-partition on a
     vertex id; at scale the standard ordered-degree orientation (direct edges
     low-degree → high-degree) bounds the two-path fan-out — with id-ordering
-    here so the DuckDB oracle can mirror the exact same enumeration.
-
-    ``materialize=True`` persists the canonical edge set for the three plan
-    references, eagerly checkpoints the result, and releases the cache before
-    returning — scoped to this call so a many-query gate run doesn't
-    accumulate cached edge blocks. ``materialize=False`` returns the lazy
-    plan with no persists (plan inspection / composition)."""
+    here so the DuckDB oracle can mirror the exact same enumeration."""
     pe = edges.select(
         F.least(F.col(src), F.col(dst)).alias("p1"),
         F.greatest(F.col(src), F.col(dst)).alias("p2"),
     ).filter(F.col("p1") != F.col("p2")).distinct()
-    if materialize:
-        pe = pe.persist()  # three plan references below; edges ≪ triangle fan-out
-    try:
+    # three plan references below; edges ≪ triangle fan-out. The cache is
+    # scoped to this call so a many-query gate run doesn't accumulate
+    # cached edge blocks.
+    with cached(pe):
         e1, e2, e3 = pe.alias("e1"), pe.alias("e2"), pe.alias("e3")
         tri = (
             e1.join(e2, F.col("e1.p2") == F.col("e2.p1"))
@@ -143,13 +137,7 @@ def triangle_counts(
             .unionAll(tri.select(F.col("b").alias("v")))
             .unionAll(tri.select(F.col("c").alias("v")))
         )
-        out = verts.groupBy("v").agg(F.count("*").alias("n_triangles"))
-        if not materialize:
-            return out
-        return out.localCheckpoint(eager=True)
-    finally:
-        if materialize:
-            pe.unpersist()
+        return barrier(verts.groupBy("v").agg(F.count("*").alias("n_triangles")))
 
 
 def sssp(
@@ -160,22 +148,17 @@ def sssp(
 
     Bellman-Ford over the undirected graph: ``max_hops`` relaxation rounds,
     each one join (frontier × edges) + min-aggregate — the aggregateMessages
-    shape; returns (v, dist) for vertices within max_hops. localCheckpoint
+    shape; returns (v, dist) for vertices within max_hops. A barrier
     truncates lineage per round (driver-side iteration, §2.12 scale notes)."""
     spark = edges.sparkSession
-    ud = _undirected(edges, src, dst).repartition("src").persist()
+    ud = _undirected(edges, src, dst).repartition("src")
     dist = spark.createDataFrame([(source, 0)], "v long, d int")
-    for _ in range(max_hops):
-        msgs = ud.join(dist, ud.src == dist.v).select(
-            F.col("dst").alias("v"), (F.col("d") + 1).alias("d")
-        )
-        dist = (
-            dist.unionAll(msgs)
-            .groupBy("v")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=True)
-        )
-    ud.unpersist()
+    with cached(ud):
+        for _ in range(max_hops):
+            msgs = ud.join(dist, ud.src == dist.v).select(
+                F.col("dst").alias("v"), (F.col("d") + 1).alias("d")
+            )
+            dist = barrier(dist.unionAll(msgs).groupBy("v").agg(F.min("d").alias("d")))
     return dist.select("v", F.col("d").cast("bigint").alias("dist"))
 
 
@@ -185,7 +168,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 5,
     damping_pct: int = 85,
-    materialize: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank over the undirected graph in exact BIGINT
     fixed-point arithmetic (Gelly …/graph/library/PageRank.java semantics;
@@ -205,41 +187,33 @@ def pagerank(
     # standard distributed-PageRank layout; at 100 TB the edge relation is
     # the one you cannot afford to move five times.
     ud_deg = ud.join(deg, "src").select("src", "dst", "outdeg").repartition("src")
-    if materialize:
-        # scoped persist, released below; the lazy (materialize=False) path
-        # must not register a cache entry it can never unpersist
-        ud_deg = ud_deg.persist()
-    ranks = ud_deg.select(F.col("src").alias("v")).distinct().withColumn(
-        "rank", F.lit(PR_SCALE).cast("long")
-    )
     base = (100 - damping_pct) * PR_SCALE // 100
-    for _ in range(iterations):
-        # no join hint: the planner broadcasts the |V|-sized rank table
-        # where it fits and otherwise shuffles only it onto the
-        # pre-partitioned edges (a shuffle_hash hint measured 0.47 s vs
-        # 0.28 s per iteration at bench SF, by overriding the broadcast).
-        contribs = ud_deg.join(ranks, ud_deg.src == ranks.v).select(
-            F.col("dst").alias("v"), F.expr("rank DIV outdeg").alias("c")
+    with cached(ud_deg):
+        ranks = ud_deg.select(F.col("src").alias("v")).distinct().withColumn(
+            "rank", F.lit(PR_SCALE).cast("long")
         )
-        ranks = (
-            contribs.groupBy("v")
-            .agg(F.sum("c").alias("s"))
-            .select(
-                "v",
-                (F.lit(base) + F.expr(f"({damping_pct} * s) DIV 100")).cast("long").alias("rank"),
+        for _ in range(iterations):
+            # no join hint: the planner broadcasts the |V|-sized rank table
+            # where it fits and otherwise shuffles only it onto the
+            # pre-partitioned edges (a shuffle_hash hint measured 0.47 s vs
+            # 0.28 s per iteration at bench SF, by overriding the broadcast).
+            contribs = ud_deg.join(ranks, ud_deg.src == ranks.v).select(
+                F.col("dst").alias("v"), F.expr("rank DIV outdeg").alias("c")
             )
-        )
-    # Lineage grows LINEARLY (each iteration references the prior ranks
-    # once), so the loop needs no mid-loop truncation. Materialize the
-    # FINAL ranks while ud_deg is still cached — the lazy tail would
-    # otherwise re-derive the edge+degree join from parquet at the
-    # caller's first action, after the unpersist below.
-    # ``materialize=False`` returns the fully lazy plan (no checkpoints, no
-    # eager work) for plan inspection — the golden fingerprint tests pin the
-    # iteration topology through it.
-    if materialize:
-        ranks = ranks.localCheckpoint(eager=True)
-        ud_deg.unpersist()
+            ranks = (
+                contribs.groupBy("v")
+                .agg(F.sum("c").alias("s"))
+                .select(
+                    "v",
+                    (F.lit(base) + F.expr(f"({damping_pct} * s) DIV 100")).cast("long").alias("rank"),
+                )
+            )
+        # Lineage grows LINEARLY (each iteration references the prior ranks
+        # once), so the loop needs no mid-loop truncation. Materialize the
+        # FINAL ranks while ud_deg is still cached — the lazy tail would
+        # otherwise re-derive the edge+degree join from parquet at the
+        # caller's first action, after the release.
+        ranks = barrier(ranks)
     return ranks.select("v", F.col("rank").alias("pagerank"))
 
 
@@ -351,7 +325,6 @@ def jaccard_similarity(
     src: str = "src",
     dst: str = "dst",
     min_jaccard: float = 0.0,
-    materialize: bool = True,
     max_neighbor_degree: int | None = 4096,
 ) -> DataFrame:
     """Jaccard vertex similarity (Gelly …/graph/library/similarity/
@@ -381,12 +354,7 @@ def jaccard_similarity(
             .filter(F.col("_nd") <= max_neighbor_degree)
             .drop("_nd")
         )
-    if materialize:
-        # persist is scoped to this call (released in finally after the
-        # eager checkpoint below); materialize=False returns the lazy plan
-        # with no caches for plan inspection / composition
-        ud = ud.persist()
-    try:
+    with cached(ud):
         deg = ud.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("d"))
         a, b = ud.alias("a"), ud.alias("b")
         shared = (
@@ -405,14 +373,9 @@ def jaccard_similarity(
             .select("u", "w", jac.alias("jaccard"))
             .filter(F.col("jaccard") >= min_jaccard)
         )
-        if not materialize:
-            return out
         # materialize before releasing the shared edge cache, so the persist
         # is scoped to this call instead of leaking across a many-query run
-        return out.localCheckpoint(eager=True)
-    finally:
-        if materialize:
-            ud.unpersist()
+        return barrier(out)
 
 
 def adamic_adar(
@@ -494,42 +457,42 @@ def triadic_census(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         )
         .filter(F.col(src) != F.col(dst))
         .distinct()
-        .persist()
     )
-    deg = (
-        _undirected(canon, src, dst)
-        .groupBy(F.col("src").alias("v"))
-        .agg(F.count("*").alias("d"))
-    )
-    nm = deg.agg(
-        F.count("*").alias("n"),
-        F.expr("coalesce(sum(d) div 2, 0)").alias("m"),
-        F.expr("coalesce(sum(d * (d - 1) div 2), 0)").alias("wedges"),
-    )
-    t3 = (
-        # materialize=True: the enumerator's own pe persist must stay — the
-        # three-way join references it three times, and only the SOURCE
-        # derivation is shared with the degree path via `canon`
-        triangle_counts(canon, src, dst)
-        .agg(F.expr("coalesce(sum(n_triangles), 0) div 3").alias("t3"))
-    )
-    out = nm.crossJoin(t3).select(
-        F.col("n").cast("bigint").alias("n_vertices"),
-        F.col("m").alias("n_edges"),
-        (
-            F.expr("n * (n - 1) * (n - 2) div 6")
-            - (F.col("m") * (F.col("n") - 2) - 2 * F.col("wedges") + 3 * F.col("t3"))
-            - (F.col("wedges") - 3 * F.col("t3"))
-            - F.col("t3")
-        ).cast("bigint").alias("t0"),
-        (F.col("m") * (F.col("n") - 2) - 2 * F.col("wedges") + 3 * F.col("t3"))
-        .cast("bigint")
-        .alias("t1"),
-        (F.col("wedges") - 3 * F.col("t3")).cast("bigint").alias("t2"),
-        F.col("t3").alias("t3"),
-    ).localCheckpoint(eager=True)  # 1 row; materialize before the unpersist
-    canon.unpersist()
-    return out
+    with cached(canon):
+        deg = (
+            _undirected(canon, src, dst)
+            .groupBy(F.col("src").alias("v"))
+            .agg(F.count("*").alias("d"))
+        )
+        nm = deg.agg(
+            F.count("*").alias("n"),
+            F.expr("coalesce(sum(d) div 2, 0)").alias("m"),
+            F.expr("coalesce(sum(d * (d - 1) div 2), 0)").alias("wedges"),
+        )
+        t3 = (
+            # the enumerator's own pe cache must stay — the three-way join
+            # references it three times, and only the SOURCE derivation is
+            # shared with the degree path via `canon`
+            triangle_counts(canon, src, dst)
+            .agg(F.expr("coalesce(sum(n_triangles), 0) div 3").alias("t3"))
+        )
+        out = nm.crossJoin(t3).select(
+            F.col("n").cast("bigint").alias("n_vertices"),
+            F.col("m").alias("n_edges"),
+            (
+                F.expr("n * (n - 1) * (n - 2) div 6")
+                - (F.col("m") * (F.col("n") - 2) - 2 * F.col("wedges") + 3 * F.col("t3"))
+                - (F.col("wedges") - 3 * F.col("t3"))
+                - F.col("t3")
+            ).cast("bigint").alias("t0"),
+            (F.col("m") * (F.col("n") - 2) - 2 * F.col("wedges") + 3 * F.col("t3"))
+            .cast("bigint")
+            .alias("t1"),
+            (F.col("wedges") - 3 * F.col("t3")).cast("bigint").alias("t2"),
+            F.col("t3").alias("t3"),
+        )
+        # 1 row; materialize before the release
+        return barrier(out)
 
 
 def vertex_metrics(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -579,11 +542,11 @@ def community_detection(
 
     Scale shape: per superstep one join (messages along edges) + one
     two-level aggregation, the same O(V+E) scatter-gather round Gelly runs;
-    the driver loop truncates lineage with localCheckpoint per iteration like
+    the driver loop truncates lineage with a barrier per iteration like
     the other fixpoints in this module."""
-    ud = _undirected(edges, src, dst).persist()
-    try:
-        state = (
+    ud = _undirected(edges, src, dst)
+    with cached(ud):
+        state = barrier(
             ud.select(F.col("src").alias("v"))
             .distinct()
             .select(
@@ -591,7 +554,6 @@ def community_detection(
                 F.col("v").cast("bigint").alias("label"),
                 F.lit("1.0").cast("decimal(28,9)").alias("score"),
             )
-            .localCheckpoint(eager=True)
         )
         from decimal import Decimal
 
@@ -616,9 +578,8 @@ def community_detection(
                 .filter(F.col("_rn") == 1)
                 .select("v", F.col("label").alias("new_label"), F.col("mx").alias("new_mx"))
             )
-            state = (
-                state.join(pick, "v", "left")
-                .select(
+            state = barrier(
+                state.join(pick, "v", "left").select(
                     "v",
                     F.coalesce("new_label", "label").alias("label"),
                     F.when(F.col("new_label").isNull(), F.col("score"))
@@ -626,11 +587,8 @@ def community_detection(
                     .otherwise((F.col("new_mx") - att).cast("decimal(28,9)"))
                     .alias("score"),
                 )
-                .localCheckpoint(eager=True)
             )
         return state.select("v", "label")
-    finally:
-        ud.unpersist()
 
 
 def edge_metrics(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:

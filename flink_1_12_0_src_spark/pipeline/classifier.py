@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from flink_1_12_0_src_spark.pipeline.stageclock import stage
+from flink_1_12_0_src_spark.pipeline.stageclock import barrier
 from flink_1_12_0_src_spark.pipeline.text import tokens
 
 
@@ -126,7 +126,6 @@ def logreg_fit_exact(
     n_buckets: int = 32,
     rounds: int = 3,
     lr: float = 0.5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Engine-exact logistic-regression TRAINING by full-batch gradient
     descent, ``rounds`` iterations unrolled into ONE lazy plan: features are
@@ -145,18 +144,10 @@ def logreg_fit_exact(
     per-document shuffle, the corpus never shuffles on data size), and the
     gradient is a single (bucket)-keyed aggregate with map-side partials
     whose output is n_buckets + 2 rows. The driver loop only composes the
-    plan — nothing ever round-trips through the driver.
-
-    ``materialize`` (default True) checkpoints two things — exactly what a
-    production run does: the feature relation ONCE before the rounds
-    (repartitioned to the session parallelism; recomputing the interpreted
-    featurization per round otherwise costs rounds× the dominant term, and
-    a single input file would pin it to one task), and the model-sized
-    weight relation per round (without it the lazy chain re-executes every
-    earlier round each time a later round broadcasts it — O(rounds²)
-    gradient jobs). Measured 117 s → ~4 s at bench SF.
-    ``materialize=False`` keeps the plan fully lazy for plan inspection /
-    golden pinning.
+    plan — nothing ever round-trips through the driver. Two eager barriers
+    cut the lineage, exactly what a production run does: the feature
+    relation once before the rounds and the model-sized weight relation per
+    round (measured 117 s → ~4 s at bench SF).
     """
     if rounds < 1:
         raise ValueError("logreg_fit_exact: rounds must be >= 1")
@@ -171,14 +162,14 @@ def logreg_fit_exact(
         df.withColumn("y", F.col(label_col).cast("int")),
         id_col, text_col, n_buckets, carry=("y",),
     )
-    if materialize:
-        # stage probe: the eager checkpoint IS the featurization barrier —
-        # bench.py records it as its own wall-time entry so a future mover
-        # localizes to featurize-vs-GD-rounds without re-profiling
-        with stage("featurize"):
-            feats = feats.repartition(
-                spark.sparkContext.defaultParallelism
-            ).localCheckpoint(eager=True)
+    # the featurization barrier, spread over the session parallelism:
+    # recomputing the interpreted featurization per round otherwise costs
+    # rounds× the dominant term, and a single input file would pin it to one
+    # task. Stage "featurize" is its own wall-time entry in the bench ledger,
+    # so a mover localizes to featurize-vs-GD-rounds without re-profiling.
+    feats = barrier(
+        feats, "featurize", partitions=spark.sparkContext.defaultParallelism
+    )
     # The model lives as ONE row carrying the weight ARRAY (not nb1 (b, w)
     # rows): per round the gradient is then nb1 decimal-sum expressions in a
     # SINGLE global HashAggregate over the feature relation — no posexplode
@@ -213,14 +204,11 @@ def logreg_fit_exact(
             F.expr(f"array({g_sums})").alias("garr"),
             F.count(F.lit(1)).alias("_n"),
         )
-        weights = weights.crossJoin(F.broadcast(g)).selectExpr(upd_sql)
-        if materialize:
-            # pin the ONE-ROW model relation per round: without it the lazy
-            # chain re-executes every earlier round each time a later round
-            # broadcasts it — O(rounds²) gradient jobs (measured 17 s → ~4 s
-            # at bench SF for 8 rounds under the old row-carried shape)
-            with stage("gd_rounds"):
-                weights = weights.localCheckpoint(eager=True)
+        # pin the ONE-ROW model relation per round: without it the lazy
+        # chain re-executes every earlier round each time a later round
+        # broadcasts it — O(rounds²) gradient jobs (measured 17 s → ~4 s at
+        # bench SF for 8 rounds under the old row-carried shape)
+        weights = barrier(weights.crossJoin(F.broadcast(g)).selectExpr(upd_sql), "gd_rounds")
     return weights.select(F.posexplode("warr").alias("b", "w")).select(
         F.col("b").cast("bigint").alias("bucket"), F.col("w").alias("weight")
     )

@@ -23,9 +23,11 @@ required — topology unchanged.
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 from pyspark.sql import Column, DataFrame, functions as F
 
-from flink_1_12_0_src_spark.pipeline.stageclock import stage
+from flink_1_12_0_src_spark.pipeline.stageclock import barrier, cached
 from flink_1_12_0_src_spark.pipeline.text import exploded_shingles, shingles, tokens
 
 HEX_DIGITS = "0123456789abcdef"
@@ -200,7 +202,6 @@ def minhash_lsh_pairs(
     shingle_k: int = 3,
     band_rows: int = 4,
     max_bucket: int | None = 256,
-    materialize: bool = True,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded LSH + estimated Jaccard
@@ -218,23 +219,15 @@ def minhash_lsh_pairs(
     # The signature table fans out to 4 plan references (two band sides, two
     # jaccard sides); persist it so the shingle+hash pipeline runs once. Size is
     # ~#docs × num_hashes × 16 B — negligible next to the corpus at any scale.
-    # ``materialize=False`` returns the lazy plan with no persists (plan
-    # inspection / composition), trading recompute for zero cache residency.
     # ``sigs`` lets a caller that already computed the signature table
     # (:func:`minhash_calibration_report`, from its shared shingle relation)
     # hand it in instead of re-deriving it from the corpus.
     if sigs is None:
         sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
-    if materialize:
-        sigs = sigs.persist()
     bands = _band_keys(sigs, id_col, num_hashes, band_rows)
-
     bands = _cap_hot_buckets(bands, ["band", "bk"], max_bucket)
     # two self-join references below; band table is ~#docs × n_bands tiny rows
-    if materialize:
-        bands = bands.persist()
-
-    try:
+    with cached(sigs), cached(bands):
         a, b = bands.alias("a"), bands.alias("b")
         cand = (
             a.join(
@@ -254,16 +247,10 @@ def minhash_lsh_pairs(
             .join(sb, "id_b")
             .select("id_a", "id_b", F.round(eq / F.lit(float(num_hashes)), 6).alias("est_jaccard"))
         )
-        if not materialize:
-            return out
         # materialize before releasing the signature/band caches, so the
         # persists are scoped to this call instead of leaking across a
         # many-query run
-        return out.localCheckpoint(eager=True)
-    finally:
-        if materialize:
-            bands.unpersist()
-            sigs.unpersist()
+        return barrier(out)
 
 
 def paragraph_dedup_report(
@@ -276,7 +263,6 @@ def paragraph_dedup_report(
     band_rows: int = 4,
     max_bucket: int = 256,
     round_digits: int = 6,
-    materialize: bool = True,
 ) -> DataFrame:
     """Paragraph-granularity near-dedup audit — the RefinedWeb/CCNet
     production shape applied below document level: split every document into
@@ -312,9 +298,7 @@ def paragraph_dedup_report(
     )
     sigs = minhash_signatures(paras, "pkey", "ptext", num_hashes, shingle_k)
     bands = _band_keys(sigs, "pkey", num_hashes, band_rows)
-    if materialize:
-        bands = bands.persist()
-    try:
+    with cached(bands):
         dup_buckets = (
             bands.groupBy("band", "bk")
             .agg(
@@ -348,14 +332,9 @@ def paragraph_dedup_report(
                 ).alias("dup_frac"),
             )
         )
-        if not materialize:
-            return out  # fully lazy plan (inspection / composition)
         # materialize before releasing the band cache (scoped persist, same
         # discipline as minhash_lsh_pairs)
-        return out.localCheckpoint(eager=True)
-    finally:
-        if materialize:
-            bands.unpersist()
+        return barrier(out)
 
 
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -392,7 +371,6 @@ def simhash_hamming_pairs(
     n_bands: int = 4,
     max_hamming: int = 3,
     max_bucket: int | None = 256,
-    materialize: bool = True,
 ) -> DataFrame:
     """SimHash near-dup PAIRS via band-bucketed Hamming search — the Google
     web-crawl dedup recipe (Manku, Jain & Das Sarma, WWW 2007): split each
@@ -423,8 +401,6 @@ def simhash_hamming_pairs(
     if 64 % n_bands:
         raise ValueError("simhash_hamming_pairs: n_bands must divide 64")
     sigs = simhash_signatures(df, id_col, text_col)
-    if materialize:
-        sigs = sigs.persist()
     width = 64 // n_bands
     bands = sigs.select(
         F.col(id_col),
@@ -441,9 +417,7 @@ def simhash_hamming_pairs(
         ).alias("x"),
     ).select(id_col, "x.b", "x.bk")
     bands = _cap_hot_buckets(bands, ["b", "bk"], max_bucket)
-    if materialize:
-        bands = bands.persist()
-    try:
+    with cached(sigs), cached(bands):
         a, b2 = bands.alias("a"), bands.alias("b2")
         cand = (
             a.join(
@@ -477,13 +451,7 @@ def simhash_hamming_pairs(
             .select("id_a", "id_b", ham.cast("bigint").alias("hamming"))
             .filter(F.col("hamming") <= max_hamming)
         )
-        if not materialize:
-            return out
-        return out.localCheckpoint(eager=True)
-    finally:
-        if materialize:
-            bands.unpersist()
-            sigs.unpersist()
+        return barrier(out)
 
 
 def ngram_jaccard_pairs(
@@ -802,7 +770,6 @@ def duplicated_spans(
     text_col: str,
     window: int = 8,
     min_docs: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact-substring duplication signal: per document, how much of it is
     covered by token windows of length ``window`` that also occur in at least
@@ -831,11 +798,8 @@ def duplicated_spans(
     # the (id, n_tokens) stats side is joined back after the aggregations;
     # materialize the tiny projection eagerly so the full tokenize lineage
     # is not re-run for a two-column scan (scoped blocks, no cache pin
-    # leaking across a many-query run). ``materialize=False`` keeps the plan
-    # fully lazy for plan inspection (golden fingerprint tests).
-    base_stats = base.select(id_col, "n_tokens")
-    if materialize:
-        base_stats = base_stats.localCheckpoint(eager=True)
+    # leaking across a many-query run)
+    base_stats = barrier(base.select(id_col, "n_tokens"))
     m = F.col("n_tokens") - F.lit(window - 1)
     # explode the window START first, then hash with ordinary codegen'd
     # expressions (the transform lambda ran interpreted — see
@@ -894,7 +858,6 @@ def exact_substring_rewrite(
     id_col: str,
     text_col: str,
     window: int = 8,
-    materialize: bool = True,
 ) -> DataFrame:
     """ExactSubstr SURVIVOR REWRITE — remove all but one copy of every
     cross-doc duplicated token window (Lee et al. 2022 §4.1 remove the
@@ -919,15 +882,13 @@ def exact_substring_rewrite(
         .select(F.col(id_col), tokens(text_col).alias("w"))
         .select(id_col, "w", F.size("w").alias("n_tokens"))
     )
-    if materialize:
-        # checkpoint the tokenized corpus ITSELF, not just the stats: both
-        # the window-occurrence branch and the token-reassembly branch read
-        # `base`, so an unpersisted subtree would re-execute the tokenize
-        # scan — and any expensive upstream chain (pipeline_refinedweb_substr
-        # feeds the whole 3-level RefinedWeb pipeline in here) — once per
-        # branch. base_stats derives from the checkpointed node for free.
-        with stage("tokenize"):
-            base = base.localCheckpoint(eager=True)
+    # checkpoint the tokenized corpus ITSELF, not just the stats: both the
+    # window-occurrence branch and the token-reassembly branch read `base`,
+    # so an uncached subtree would re-execute the tokenize scan — and any
+    # expensive upstream chain (pipeline_refinedweb_substr feeds the whole
+    # 3-level RefinedWeb pipeline in here) — once per branch. base_stats
+    # derives from the checkpointed node for free.
+    base = barrier(base, "tokenize")
     base_stats = base.select(id_col, "n_tokens")
     # derive occurrences FROM base (not from df) so the corpus is tokenized
     # once, not twice (duplicated_spans' discipline)
@@ -1003,7 +964,6 @@ def substring_span_stats(
     id_col: str,
     text_col: str,
     window: int = 8,
-    materialize: bool = True,
 ) -> DataFrame:
     """MAXIMAL-SPAN ExactSubstr audit — merges the rewrite's removed token
     positions into maximal contiguous spans and reports span-level stats
@@ -1032,12 +992,10 @@ def substring_span_stats(
         .select(F.col(id_col), tokens(text_col).alias("w"))
         .select(id_col, "w", F.size("w").alias("n_tokens"))
     )
-    if materialize:
-        # same two-consumer checkpoint as exact_substring_rewrite, and the
-        # same stage probe so the bench ledger attributes the tokenize
-        # barrier identically for both siblings.
-        with stage("tokenize"):
-            base = base.localCheckpoint(eager=True)
+    # same two-consumer checkpoint as exact_substring_rewrite, and the same
+    # stage name so the bench ledger attributes the tokenize barrier
+    # identically for both siblings
+    base = barrier(base, "tokenize")
     base_stats = base.select(id_col, "n_tokens")
     wins = _occurrences_from_base(base, id_col, window)
     rm = removed_positions(wins, id_col, window)
@@ -1341,9 +1299,7 @@ def _cms_slice_entries(hh, n_slices: int, hex_chars: int):
     )
 
 
-def soft_dedup_weights(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, materialize: bool = True
-) -> DataFrame:
+def soft_dedup_weights(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """SOFT deduplication — reweight instead of remove (He et al. 2024,
     "SoftDedup: an Efficient Data Reweighting Method for Speeding Up
     Language Model Pre-training"): hard dedup discards borderline
@@ -1402,11 +1358,11 @@ def soft_dedup_weights(
     occ = exploded_shingles(df, text_col, k, carry=[id_col]).withColumn(
         "n", F.lit(1).cast("decimal(15,0)")
     )
-    return soft_dedup_weights_from_grams(occ, id_col, materialize, tot=tot)
+    return soft_dedup_weights_from_grams(occ, id_col, tot=tot)
 
 
 def soft_dedup_weights_from_grams(
-    gcount: DataFrame, id_col: str, materialize: bool = True, tot: DataFrame | None = None
+    gcount: DataFrame, id_col: str, tot: DataFrame | None = None
 ) -> DataFrame:
     """The commonness + reweighting TAIL of :func:`soft_dedup_weights`
     over an explicit (id, sh, n) per-document gram-count relation — shared
@@ -1459,11 +1415,10 @@ def soft_dedup_weights_from_grams(
             ).alias("a6"),
         )
     )
-    if materialize:
-        # the per-doc relation feeds both the one-row corpus mean and the
-        # returned projection: without the checkpoint the corpus-scale gram
-        # join + doc aggregate executes once per consumer
-        per = per.localCheckpoint(eager=True)
+    # the per-doc relation feeds both the one-row corpus mean and the
+    # returned projection: without the checkpoint the corpus-scale gram join
+    # + doc aggregate executes once per consumer
+    per = barrier(per)
     m = per.agg(
         (
             F.sum(F.col("a6").cast("decimal(18,6)")).cast("double")
@@ -1486,7 +1441,6 @@ def soft_dedup_cms_weights(
     id_col: str,
     n_slices: int = 4,
     hex_chars: int = 2,
-    materialize: bool = True,
 ) -> DataFrame:
     """CONSTANT-STATE SoftDeDup — the production shape of
     :func:`soft_dedup_weights`: gram commonness estimated from the
@@ -1522,14 +1476,12 @@ def soft_dedup_cms_weights(
     import math
 
     nbits = 16 ** hex_chars
-    if materialize:
-        # gcount feeds FOUR consumers (the exact tail's frequency rollup and
-        # scoring join, the probe vocabulary, the CMS pricing join): without
-        # this checkpoint the corpus-scale gram tokenize+aggregate would
-        # re-execute once per consumer
-        with stage("grams"):
-            gcount = gcount.localCheckpoint(eager=True)
-    exact = soft_dedup_weights_from_grams(gcount, id_col, materialize)
+    # gcount feeds FOUR consumers (the exact tail's frequency rollup and
+    # scoring join, the probe vocabulary, the CMS pricing join): without this
+    # checkpoint the corpus-scale gram tokenize+aggregate would re-execute
+    # once per consumer
+    gcount = barrier(gcount, "grams")
+    exact = soft_dedup_weights_from_grams(gcount, id_col)
     # sketch estimate per DISTINCT gram: min over the slice counters it
     # hashes to (the cms_topk_contract probe shape, vocabulary-sized)
     probes = gcount.select("sh").distinct().select(
@@ -1567,10 +1519,9 @@ def soft_dedup_cms_weights(
             ).alias("a6"),
         )
     )
-    if materialize:
-        # same two-consumer shape as the exact tail: the per-doc relation
-        # feeds the one-row corpus mean and the returned projection
-        per = per.localCheckpoint(eager=True)
+    # same two-consumer shape as the exact tail: the per-doc relation feeds
+    # the one-row corpus mean and the returned projection
+    per = barrier(per)
     m = per.agg(
         (
             F.sum(F.col("a6").cast("decimal(18,6)")).cast("double")
@@ -1857,7 +1808,6 @@ def paragraph_dedup_rewrite(
     shingle_k: int = 3,
     band_rows: int = 4,
     max_bucket: int = 256,
-    materialize: bool = True,
 ) -> DataFrame:
     """Paragraph-granularity near-dedup REWRITE — the other half of the
     RefinedWeb/CCNet recipe: :func:`paragraph_dedup_report` *audits*
@@ -1886,9 +1836,7 @@ def paragraph_dedup_rewrite(
     )
     sigs = minhash_signatures(paras, "pkey", "ptext", num_hashes, shingle_k)
     bands = _band_keys(sigs, "pkey", num_hashes, band_rows)
-    if materialize:
-        bands = bands.persist()
-    try:
+    with cached(bands):
         dup_buckets = (
             bands.groupBy("band", "bk")
             .agg(
@@ -1933,15 +1881,9 @@ def paragraph_dedup_rewrite(
             F.coalesce("n_kept", F.lit(0)).cast("bigint").alias("n_kept"),
             F.coalesce("clean_text", F.lit("")).alias("clean_text"),
         )
-        if not materialize:
-            return out  # fully lazy plan (inspection / composition)
         # materialize before releasing the band cache (scoped persist, same
         # discipline as minhash_lsh_pairs / paragraph_dedup_report)
-        with stage('paragraph_rewrite'):
-            return out.localCheckpoint(eager=True)
-    finally:
-        if materialize:
-            bands.unpersist()
+        return barrier(out, "paragraph_rewrite")
 
 
 def rowlocal_band_keys(
@@ -2006,7 +1948,6 @@ def neardedup_keep_first(
     band_rows: int = 4,
     max_bucket: int = 256,
     stats: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Document-level near-dedup ADMISSION — streaming keep-first semantics
     made order-free: a document is admitted iff it is the MIN doc id in
@@ -2024,7 +1965,8 @@ def neardedup_keep_first(
 
     ``stats`` — a precomputed (band, bk, sz, keep_did) bucket-state table —
     lets the STREAMING twin hand in its continuously-maintained aggregate
-    snapshot; when None it is derived here from the same bands.
+    snapshot; the result is then lazy. When None the stats are derived here
+    from the same bands and the result is checkpointed.
 
     Scale (100 TB): linear banding, ONE (band, bk)-keyed aggregate for the
     bucket state (min + count, map-side partials), one equi join of bands
@@ -2032,14 +1974,11 @@ def neardedup_keep_first(
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
     bands = _band_keys(sigs, id_col, num_hashes, band_rows)
     own_stats = stats is None
-    cache = own_stats and materialize
-    if cache:
-        bands = bands.persist()
-    if own_stats:
-        stats = bands.groupBy("band", "bk").agg(
-            F.count(F.lit(1)).alias("sz"), F.min(id_col).alias("keep_did")
-        )
-    try:
+    with cached(bands) if own_stats else nullcontext():
+        if own_stats:
+            stats = bands.groupBy("band", "bk").agg(
+                F.count(F.lit(1)).alias("sz"), F.min(id_col).alias("keep_did")
+            )
         dup_counts = (
             bands.join(stats.select("band", "bk", "sz", "keep_did"), ["band", "bk"])
             .filter((F.col("sz") <= max_bucket) & (F.col("keep_did") < F.col(id_col)))
@@ -2051,13 +1990,9 @@ def neardedup_keep_first(
             F.coalesce("n_dup_buckets", F.lit(0)).cast("bigint").alias("n_dup_buckets"),
             (F.coalesce("n_dup_buckets", F.lit(0)) == 0).alias("admitted"),
         )
-        if not cache:
-            return out  # lazy (twin-supplied stats, or inspection)
-        with stage('doc_admission'):
-            return out.localCheckpoint(eager=True)
-    finally:
-        if cache:
-            bands.unpersist()
+        if not own_stats:
+            return out  # lazy over the twin-supplied stats
+        return barrier(out, "doc_admission")
 
 
 def neardedup_incremental(
@@ -2070,7 +2005,6 @@ def neardedup_incremental(
     band_rows: int = 4,
     max_bucket: int = 256,
     stats: DataFrame | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Incremental near-dedup ADMISSION of an incoming ``batch`` against an
     existing ``corpus`` snapshot — the production shape of continuous corpus
@@ -2110,7 +2044,6 @@ def neardedup_incremental(
     (``corpus`` is then the only reader of that argument — with ``stats``
     supplied only ``batch`` is re-banded, the production shape)."""
     own_stats = stats is None
-    cache = own_stats and materialize
     if own_stats:
         u = corpus.select(
             F.col(id_col), F.col(text_col), F.lit(1).alias("_corp")
@@ -2127,11 +2060,9 @@ def neardedup_incremental(
             num_hashes,
             band_rows,
         )
-        # the bands feed both the combined bucket stats and the marking join
-        # — persist so the shingle+hash pipeline runs once
-        if cache:
-            bands = bands.persist()
-    try:
+    # the bands feed both the combined bucket stats and the marking join —
+    # persist so the shingle+hash pipeline runs once
+    with cached(bands) if own_stats else nullcontext():
         if own_stats:
             stats = bands.groupBy("band", "bk").agg(
                 F.count(F.lit(1)).alias("sz"),
@@ -2167,13 +2098,9 @@ def neardedup_incremental(
                 (F.coalesce("_ncorp", F.lit(0)) + F.coalesce("_nbatch", F.lit(0))) == 0
             ).alias("admitted"),
         )
-        if not cache:
-            return out  # lazy (twin-supplied stats, or plan inspection)
-        with stage('union_band_admit'):
-            return out.localCheckpoint(eager=True)
-    finally:
-        if cache:
-            bands.unpersist()
+        if not own_stats:
+            return out  # lazy over the twin-supplied stats
+        return barrier(out, "union_band_admit")
 
 
 def minhash_calibration_report(
@@ -2184,7 +2111,6 @@ def minhash_calibration_report(
     shingle_k: int = 3,
     band_rows: int = 4,
     max_bucket: int = 256,
-    materialize: bool = True,
 ) -> DataFrame:
     """MinHash calibration audit — estimated vs TRUE Jaccard for every LSH
     candidate pair: (id_a, id_b, est_jaccard, true_jaccard, abs_err). This is
@@ -2206,10 +2132,8 @@ def minhash_calibration_report(
     signature derivation (MIN over the set == MIN over the multiset), which
     minhash_lsh_pairs consumes via its ``sigs`` hand-in."""
     sh = exploded_shingles(_spread(df), text_col, shingle_k, carry=[id_col]).distinct()
-    if materialize:
-        # three plan references: signature derivation + both pair endpoints
-        sh = sh.persist()
-    try:
+    # three plan references: signature derivation + both pair endpoints
+    with cached(sh):
         pairs = minhash_lsh_pairs(
             df,
             id_col,
@@ -2218,7 +2142,6 @@ def minhash_calibration_report(
             shingle_k,
             band_rows,
             max_bucket,
-            materialize=materialize,
             sigs=_sigs_from_shingles(sh, id_col, num_hashes),
         )
         sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
@@ -2247,12 +2170,7 @@ def minhash_calibration_report(
                 "abs_err", F.round(F.abs(F.col("est_jaccard") - F.col("true_jaccard")), 6)
             )
         )
-        if not materialize:
-            return out
-        return out.localCheckpoint(eager=True)
-    finally:
-        if materialize:
-            sh.unpersist()
+        return barrier(out)
 
 
 def contamination_matrix(

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from flink_1_12_0_src_spark.pipeline.stageclock import stage
+from flink_1_12_0_src_spark.pipeline.stageclock import barrier
 from flink_1_12_0_src_spark.pipeline.text import tokens
 
 # lexicographic thresholds over the first 8 md5 hex chars == numeric
@@ -585,7 +585,6 @@ def doremi_weights(
     rounds: int = 4,
     eta: float = 0.5,
     smoothing: float = 0.02,
-    materialize: bool = True,
 ) -> DataFrame:
     """DoReMi domain-weight training (Xie et al. 2023, "DoReMi: Optimizing
     Data Mixtures Speeds Up Language Model Pretraining", Algorithm 1) —
@@ -634,12 +633,9 @@ def doremi_weights(
     K-row iterate onto the (domain, term) relation (K×V rows, NOT the
     corpus) for the proxy re-score and normalizes with one exact-integer
     sum over the K-row iterate — the corpus never shuffles on rounds.
-    ``materialize`` (default True) localCheckpoints the (domain, term,
-    n, n_tok) relation once (every round reads it, so a lazy plan re-runs
-    the corpus scoring pass once per round), the K-row reference-loss
-    relation once, and the K-row iterate per round; ``materialize=False``
-    keeps the plan fully lazy — linear in ``rounds`` — for golden
-    pinning.
+    Eager barriers checkpoint the (domain, term, n, n_tok) relation once,
+    the K-row reference-loss relation once, and the K-row iterate per
+    round; without them the plan is linear in ``rounds``.
 
     Returns (domain, n_docs, proxy_nll, ref_nll, excess_loss, weight).
     Reference scope note: the reference engine has no training operator —
@@ -676,9 +672,7 @@ def doremi_weights(
     nd = df.groupBy(F.col(domain_col).alias("domain")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     )
-    return doremi_weights_from_counts(
-        dterm, dbg, nd, rounds, eta, smoothing, materialize
-    )
+    return doremi_weights_from_counts(dterm, dbg, nd, rounds, eta, smoothing)
 
 
 def doremi_state_rows(df: DataFrame, text_col: str, domain_col: str) -> DataFrame:
@@ -753,7 +747,6 @@ def doremi_weights_from_counts(
     rounds: int = 4,
     eta: float = 0.5,
     smoothing: float = 0.02,
-    materialize: bool = True,
 ) -> DataFrame:
     """The loss + exponentiated-gradient TAIL of :func:`doremi_weights`
     over explicit sufficient-statistic relations — (domain, term, n),
@@ -790,14 +783,10 @@ def doremi_weights_from_counts(
     ntok = dterm.groupBy("domain").agg(
         F.sum(F.col("n").cast("bigint")).alias("ntok")
     )
-    dtn = dterm.join(ntok, "domain")
-    if materialize:
-        # every round reads dtn; an unpersisted relation would re-execute
-        # the corpus-scale tokenize aggregate feeding dterm once per round.
-        # Stage probe: the proxy-side corpus scoring pass, for the bench
-        # stage ledger.
-        with stage("scoring"):
-            dtn = dtn.localCheckpoint(eager=True)
+    # every round reads dtn; without the barrier it would re-execute the
+    # corpus-scale tokenize aggregate feeding dterm once per round. Stage
+    # "scoring": the proxy-side corpus scoring pass, for the bench ledger.
+    dtn = barrier(dterm.join(ntok, "domain"), "scoring")
     vocab = dtn.groupBy("term").agg(F.sum(F.col("n").cast("bigint")).alias("c"))
 
     def _mean_nll(nll):
@@ -831,13 +820,10 @@ def doremi_weights_from_counts(
         .groupBy("domain")
         .agg(_mean_nll(nll_b).alias("lr"))
     )
-    dom = nd.join(lr_, "domain").select("domain", "n_docs", "lr")
-    if materialize:
-        # the initial iterate reads dom twice (its rows and the K count), so
-        # an unpersisted relation would run the bigram-LM reference pass
-        # twice. Stage probe: the reference-side scoring pass.
-        with stage("ref_loss"):
-            dom = dom.localCheckpoint(eager=True)
+    # the initial iterate reads dom twice (its rows and the K count), so
+    # without the barrier the bigram-LM reference pass would run twice.
+    # Stage "ref_loss": the reference-side scoring pass.
+    dom = barrier(nd.join(lr_, "domain").select("domain", "n_docs", "lr"), "ref_loss")
 
     kk = dom.agg(F.count(F.lit(1)).cast("bigint").alias("_k"))
     dec = "decimal(28,9)"
@@ -886,17 +872,17 @@ def doremi_weights_from_counts(
             .withColumn("numn", numn)
             .coalesce(1)
         )
-        cur = stepped.select(
-            "domain", "n_docs", "lr", "_k", "lp", "excess",
-            alpha1.alias("alpha"),
-            (F.col("acc") + alpha1.cast(dec)).cast(dec).alias("acc"),
+        # stage "gd_rounds" accumulates across rounds: the per-round proxy
+        # re-score + exponentiated-gradient work, vs the one-time
+        # scoring/ref_loss passes above
+        cur = barrier(
+            stepped.select(
+                "domain", "n_docs", "lr", "_k", "lp", "excess",
+                alpha1.alias("alpha"),
+                (F.col("acc") + alpha1.cast(dec)).cast(dec).alias("acc"),
+            ),
+            "gd_rounds",
         )
-        if materialize:
-            # stage probe accumulates across rounds: the per-round proxy
-            # re-score + exponentiated-gradient work, vs the one-time
-            # scoring/ref_loss passes above (the r11 verdict's bench ask)
-            with stage("gd_rounds"):
-                cur = cur.localCheckpoint(eager=True)
     return cur.select(
         "domain",
         "n_docs",
@@ -919,7 +905,6 @@ def doremi_sample(
     eta: float = 0.5,
     smoothing: float = 0.02,
     seed: int = 13,
-    materialize: bool = True,
 ) -> DataFrame:
     """APPLY the trained DoReMi mixture: deterministically downsample each
     domain so the kept corpus realizes :func:`doremi_weights`' target
@@ -945,7 +930,7 @@ def doremi_sample(
     from pyspark.sql.functions import broadcast
 
     w = doremi_weights(
-        df, id_col, text_col, domain_col, rounds, eta, smoothing, materialize
+        df, id_col, text_col, domain_col, rounds, eta, smoothing
     ).select("domain", "n_docs", "weight")
     r = F.col("weight") / F.col("n_docs")
     mx = w.agg(F.max(F.col("weight") / F.col("n_docs")).alias("_mx"))

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from flink_1_12_0_src_spark.pipeline.stageclock import barrier
+
 
 def _as_double(col) -> F.Column:
     # native Cast (codegen), identical float->double widening to the old
@@ -947,7 +949,6 @@ def pca_power_exact(
     dim: int = 64,
     iters: int = 3,
     round_digits: int = 9,
-    materialize: bool = True,
 ) -> DataFrame:
     """ENGINE-EXACT power iteration toward the top principal direction of
     an embedding corpus — ``iters`` unrolled rounds over the (uncentered)
@@ -1019,14 +1020,12 @@ def pca_power_exact(
             .alias("g")
         )
     )
-    if materialize:
-        # pin the dim²-row Gram relation and the dim-row iterate per round
-        # (the logreg_fit_exact / doremi materialize discipline): the loop
-        # references each round's output 2-3 times, so the unmaterialized
-        # lazy chain re-executed the corpus-scale Gram aggregate ~3^iters
-        # times — measured 48 s → ~2 s at the driver's sf0.01.
-        # ``materialize=False`` keeps the plan fully lazy for golden pinning.
-        gram = gram.localCheckpoint(eager=True)
+    # pin the dim²-row Gram relation and the dim-row iterate per round (the
+    # logreg_fit_exact / doremi barrier discipline): the loop references
+    # each round's output 2-3 times, so the lazy chain re-executed the
+    # corpus-scale Gram aggregate ~3^iters times — measured 48 s → ~2 s at
+    # the driver's sf0.01.
+    gram = barrier(gram)
     vcur = spark.range(dim).select(
         F.col("id").cast("int").alias("i"),
         F.lit(round(1.0 / dim**0.5, round_digits)).alias("v"),
@@ -1054,11 +1053,11 @@ def pca_power_exact(
                 / F.lit(scale)
             ).alias("nrm")
         )
-        vcur = w.crossJoin(F.broadcast(nrm)).select(
-            "i", (nano(F.col("w") / F.col("nrm")) / F.lit(scale)).alias("v")
+        vcur = barrier(
+            w.crossJoin(F.broadcast(nrm)).select(
+                "i", (nano(F.col("w") / F.col("nrm")) / F.lit(scale)).alias("v")
+            )
         )
-        if materialize:
-            vcur = vcur.localCheckpoint(eager=True)
     return w.crossJoin(F.broadcast(nrm)).select(
         F.col("i").cast("bigint").alias("pos"),
         (nano(F.col("w") / F.col("nrm")) / F.lit(scale)).alias("loading"),

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from flink_1_12_0_src_spark.pipeline.stageclock import barrier
+
 # BPE-ish pre-tokenizer: letter runs, digit runs, single punctuation marks —
 # the shape of a byte-level BPE's initial split (token *counting*, not a real
 # merges table).
@@ -646,9 +648,7 @@ def token_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def quality_ensemble(
-    df: DataFrame, id_col: str, text_col: str, materialize: bool = True
-) -> DataFrame:
+def quality_ensemble(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Multi-signal quality filter (the FineWeb/Dolma ensemble shape):
     z-standardize four independent quality signals over the corpus —
     heuristic quality score (:func:`quality_score`), duplicate-bigram
@@ -677,14 +677,11 @@ def quality_ensemble(
         .join(token_entropy(df, id_col, text_col).select(id_col, "entropy"), id_col)
         .join(unigram_logprob(df, id_col, text_col).select(id_col, "avg_nll"), id_col)
     )
-    rounded = j.select(id_col, *[F.round(F.col(s), 6).alias(s) for s in sigs])
-    if materialize:
-        # the rounded signal relation feeds BOTH the corpus-stats aggregate
-        # and the final z projection: unmaterialized, the four-signal
-        # pipeline (four corpus passes + three joins) executed twice —
-        # checkpoint it once (5 narrow columns per doc). materialize=False
-        # keeps the lazy plan for golden pinning.
-        rounded = rounded.localCheckpoint(eager=True)
+    # the rounded signal relation feeds BOTH the corpus-stats aggregate and
+    # the final z projection: without the barrier the four-signal pipeline
+    # (four corpus passes + three joins) executed twice — checkpoint it once
+    # (5 narrow columns per doc)
+    rounded = barrier(j.select(id_col, *[F.round(F.col(s), 6).alias(s) for s in sigs]))
     aggs = []
     for s in sigs:
         d = F.col(s).cast("decimal(18,6)")
@@ -964,7 +961,6 @@ def bpe_fit(
     df: DataFrame,
     text_col: str = "text",
     rounds: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """BPE tokenizer TRAINING — the merge LOOP (Sennrich et al. 2016), the
     tokenizer-training analog of the unrolled-rounds technique
@@ -982,15 +978,12 @@ def bpe_fit(
     token-keyed aggregate with map-side partials). Every merge round then
     runs over the vocabulary-sized relation: one (a, b)-keyed pair
     aggregate, one TakeOrderedAndProject(1) head, one broadcast of the
-    1-row winner into the re-tokenize projection. ``materialize``
-    checkpoints the (vocab-sized) symbol table each round — without it the
-    unrolled lineage doubles per round, since each round references the
-    previous symbols twice (pair stats + re-tokenize).
+    1-row winner into the re-tokenize projection.
 
     If fewer than ``rounds`` distinct pairs exist the merge table is
     shorter than ``rounds`` rows (the fold over an empty winner is empty) —
     same convention both engines."""
-    merges, _ = _bpe_train(df, text_col, rounds, materialize)
+    merges, _ = _bpe_train(df, text_col, rounds)
     out = merges[0]
     for m in merges[1:]:
         out = out.unionByName(m)
@@ -998,7 +991,7 @@ def bpe_fit(
 
 
 def _bpe_train(
-    df: DataFrame, text_col: str, rounds: int, materialize: bool
+    df: DataFrame, text_col: str, rounds: int
 ) -> tuple[list[DataFrame], DataFrame]:
     """The shared BPE training loop: returns (one-row merge DataFrames per
     round, the final word-level symbol table (word, cnt, s)). :func:`bpe_fit`
@@ -1007,7 +1000,10 @@ def _bpe_train(
     if rounds < 1:
         raise ValueError("bpe_fit: rounds must be >= 1")
     w = F.explode(F.filter(tokens(text_col), lambda x: x != "")).alias("word")
-    vocab = (
+    # the (vocab-sized) symbol table is checkpointed each round: without it
+    # the unrolled lineage doubles per round, since each round references
+    # the previous symbols twice (pair stats + re-tokenize)
+    vocab = barrier(
         df.select(w)
         .filter(~F.contains(F.col("word"), F.lit(BPE_SEP)))
         .groupBy("word")
@@ -1021,8 +1017,6 @@ def _bpe_train(
             ).alias("s"),
         )
     )
-    if materialize:
-        vocab = vocab.localCheckpoint(eager=True)
     merges = []
     for r in range(1, rounds + 1):
         pairs = (
@@ -1066,8 +1060,8 @@ def _bpe_train(
                 lambda x: x != "",
             ).alias("s"),
         )
-        if materialize and r < rounds:
-            vocab = vocab.localCheckpoint(eager=True)
+        if r < rounds:
+            vocab = barrier(vocab)
     return merges, vocab
 
 
@@ -1076,7 +1070,6 @@ def bpe_encode_report(
     id_col: str = "doc_id",
     text_col: str = "text",
     rounds: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """APPLY the trained tokenizer — the serving half of :func:`bpe_fit`:
     re-train the ``rounds``-merge vocabulary (word → symbol sequence), then
@@ -1091,7 +1084,7 @@ def bpe_encode_report(
     below the corpus — and AQE picks the broadcast side) + one doc-keyed
     aggregate. Words filtered from training (the BPE_SEP guard) are
     excluded from the report symmetrically."""
-    _, vocab = _bpe_train(df, text_col, rounds, materialize)
+    _, vocab = _bpe_train(df, text_col, rounds)
     wl = vocab.select("word", F.size("s").alias("n_tok"))
     dw = df.select(
         F.col(id_col),

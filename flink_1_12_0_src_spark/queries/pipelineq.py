@@ -24,6 +24,7 @@ from flink_1_12_0_src_spark.pipeline import (
     token_stats,
     winnow_fingerprint,
 )
+from flink_1_12_0_src_spark.pipeline.stageclock import barrier, cached
 from flink_1_12_0_src_spark.pipeline.text import BPE_ISH_RE, LANG_MARKERS
 from flink_1_12_0_src_spark.queries import register
 
@@ -544,12 +545,12 @@ def pipeline_refinedweb_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its input three times (signatures, kept paragraphs, paragraph counts)
     # and would re-run the admission semi join for each — the stage barrier
     # a production pipeline realizes by writing the admitted set to storage
-    # between the two passes. The rewrite localCheckpoints its output, so
-    # the cache can be released before returning.
+    # between the two passes. The rewrite checkpoints its output, so the
+    # cache can be released before returning.
     survivors = docs.join(
         adm.filter(F.col("admitted")).select("doc_id"), "doc_id", "left_semi"
-    ).persist()
-    try:
+    )
+    with cached(survivors):
         cleaned = paragraph_dedup_rewrite(
             survivors,
             "doc_id",
@@ -560,8 +561,6 @@ def pipeline_refinedweb_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             band_rows=MH_BAND_ROWS,
             max_bucket=MH_MAX_BUCKET,
         )
-    finally:
-        survivors.unpersist()
     return cleaned.filter(F.col("n_kept") >= RW_MIN_KEPT).orderBy("doc_id")
 
 
@@ -3269,14 +3268,10 @@ FROM dw LEFT JOIN tkept USING (domain) ORDER BY dw.domain
     "is one broadcast-threshold filter + one aggregate.",
 )
 def dataset_mix_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return mix_compare_report(
-        table(spark, sf_dir, "documents"), rounds=DOREMI_ROUNDS, materialize=True
-    )
+    return mix_compare_report(table(spark, sf_dir, "documents"), rounds=DOREMI_ROUNDS)
 
 
-def mix_compare_report(
-    docs: DataFrame, rounds: int = DOREMI_ROUNDS, materialize: bool = True
-) -> DataFrame:
+def mix_compare_report(docs: DataFrame, rounds: int = DOREMI_ROUNDS) -> DataFrame:
     """The dataset_mix_compare plan — ONE builder shared by the registered
     query and its golden-plan provider (tests/plan_fp.py), so the pinned
     plan can never drift from what ships. LEFT join from the trained
@@ -3291,7 +3286,6 @@ def mix_compare_report(
     dw = doremi_weights(
         docs, "doc_id", "text", "source",
         rounds=rounds, eta=DOREMI_ETA, smoothing=DOREMI_SMOOTH,
-        materialize=materialize,
     ).select("domain", "n_docs", F.col("weight").alias("share_doremi"))
     tkept = (
         temperature_sample(docs, "doc_id", "source", seed=MIXCMP_SEED)
@@ -4629,12 +4623,9 @@ def dedup_family_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     return family_agreement_report(spark, table(spark, sf_dir, "documents"))
 
 
-def family_agreement_report(
-    spark: SparkSession, docs: DataFrame, materialize: bool = True
-) -> DataFrame:
+def family_agreement_report(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """dedup_family_agreement's full topology over an explicit docs
-    relation — ``materialize=False`` keeps the three pair pipelines lazy
-    for the golden plan provider (tests/plan_fp.py)."""
+    relation — shared with the golden plan provider (tests/plan_fp.py)."""
     from flink_1_12_0_src_spark.pipeline.dedup import (
         _containment_inter,
         simhash_hamming_pairs,
@@ -4642,11 +4633,10 @@ def family_agreement_report(
 
     mh = minhash_lsh_pairs(
         docs, "doc_id", "text", MH_NUM_HASHES, MH_SHINGLE_K, MH_BAND_ROWS,
-        MH_MAX_BUCKET, materialize=materialize,
+        MH_MAX_BUCKET,
     ).select("id_a", "id_b", F.lit(1).alias("bit"))
     sh = simhash_hamming_pairs(
         docs, "doc_id", "text", SH_BANDS, SH_MAX_HAMMING, MH_MAX_BUCKET,
-        materialize=materialize,
     ).select("id_a", "id_b", F.lit(2).alias("bit"))
     # The ngram-Jaccard and containment detectors share their entire
     # corpus-scale front — the same distinct (id, blk, sh) gram space, df
@@ -4657,12 +4647,10 @@ def family_agreement_report(
     # both bits off it with the detectors' exact predicates: the flagged
     # sets are identical to running the two standalone detectors (the
     # nested oracles pin this), minus one full gram-join execution.
-    pair_stats = _containment_inter(
-        docs, "doc_id", "text", "lang", NJ_SHINGLE_K, NJ_MAX_DF
+    # pair-count-sized relation, two consumers below
+    pair_stats = barrier(
+        _containment_inter(docs, "doc_id", "text", "lang", NJ_SHINGLE_K, NJ_MAX_DF)
     )
-    if materialize:
-        # pair-count-sized relation, two consumers below
-        pair_stats = pair_stats.localCheckpoint(eager=True)
     nj_keep = (
         F.col("i") / (F.col("na") + F.col("nb") - F.col("i")) > NJ_THRESHOLD
     )
@@ -5230,8 +5218,8 @@ def _refinedweb_fin(docs: DataFrame) -> DataFrame:
     # references its input three times
     survivors = ukept.join(
         adm.filter(F.col("admitted")).select("doc_id"), "doc_id", "left_semi"
-    ).persist()
-    try:
+    )
+    with cached(survivors):
         cleaned = paragraph_dedup_rewrite(
             survivors,
             "doc_id",
@@ -5242,8 +5230,6 @@ def _refinedweb_fin(docs: DataFrame) -> DataFrame:
             band_rows=MH_BAND_ROWS,
             max_bucket=MH_MAX_BUCKET,
         )
-    finally:
-        survivors.unpersist()
     return cleaned.filter(F.col("n_kept") >= RW_MIN_KEPT)
 
 

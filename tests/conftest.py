@@ -20,3 +20,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_CORRECT
+
+
+@pytest.fixture
+def sql_cache_size(spark):
+    """Callable: entries in the session's SQL cache manager, one per
+    persisted plan."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return lambda: field.get(cm).size()
+
+
+@pytest.fixture
+def persistent_rdds(spark):
+    """Callable: ids of the RDDs the SparkContext holds persisted
+    (checkpoints and materialized caches). Compare id sets, not counts: the
+    context cleaner drops unreferenced ones at any time."""
+    return lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keySet())

@@ -24,8 +24,11 @@ isFinalPlan markers are all excluded.
 
 from __future__ import annotations
 
+import functools
 import re
 from collections import Counter
+
+from flink_1_12_0_src_spark.pipeline.stageclock import lazy_plans
 
 # tree lines: "+- BroadcastHashJoin Inner BuildRight (13)", ":- Scan parquet  (1)"
 _NODE = re.compile(r"^[\s+:|-]*([A-Za-z][A-Za-z0-9 ]*?)\s*\((\d+)\)\s*$")
@@ -126,6 +129,19 @@ def df_fingerprint(spark, df) -> dict:
     return plan_fingerprint(plan)
 
 
+def _lazy(provider):
+    """``provider`` built under ``lazy_plans()``: the operators' eager
+    barriers and scoped caches stay out of its plan, so the golden pins the
+    real interior instead of a ``Scan ExistingRDD`` stub."""
+
+    @functools.wraps(provider)
+    def build(spark, sf_dir):
+        with lazy_plans():
+            return provider(spark, sf_dir)
+
+    return build
+
+
 def golden_plan_providers() -> dict:
     """(spark, sf_dir) -> DataFrame provider per golden-pinned query:
     every registered query whose plan is lazy and non-degenerate — the
@@ -135,10 +151,11 @@ def golden_plan_providers() -> dict:
     synthetic snapshot relations (212 goldens total).
 
     Most queries fingerprint their registry implementation unchanged (plan
-    construction is lazy). A handful of queries materialize internally
-    (localCheckpoint), so their registry plan degenerates to an ExistingRDD
-    scan; their providers rebuild the identical topology with
-    ``materialize=False`` so the golden pins the real interior plan. The
+    construction is lazy). A handful of queries pass eager barriers
+    (``pipeline/stageclock.py``), so their registry plan degenerates to an
+    ExistingRDD scan; their ``_lazy_*`` providers rebuild the identical
+    topology under ``lazy_plans()`` (the ``_lazy`` decorator) so the golden
+    pins the real interior plan. The
     stream_* queries execute a streaming job and return a sink readback
     whose batch plan carries no optimizer surface — they are excluded here;
     their operator shape is pinned by the streaming tests.
@@ -199,6 +216,7 @@ def golden_plan_providers() -> dict:
         and n not in degenerate
     }
 
+    @_lazy
     def _lazy_minhash(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.dedup import minhash_lsh_pairs
@@ -211,9 +229,9 @@ def golden_plan_providers() -> dict:
             MH_SHINGLE_K,
             MH_BAND_ROWS,
             MH_MAX_BUCKET,
-            materialize=False,
         ).orderBy("id_a", "id_b")
 
+    @_lazy
     def _lazy_spans(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.dedup import duplicated_spans
@@ -223,15 +241,16 @@ def golden_plan_providers() -> dict:
             "doc_id",
             "text",
             window=SPAN_WINDOW,
-            materialize=False,
         ).orderBy("doc_id")
 
+    @_lazy
     def _lazy_pagerank(spark, sf_dir):
         from flink_1_12_0_src_spark.operators.graph import pagerank
         from flink_1_12_0_src_spark.queries.graphq import _edges
 
-        return pagerank(_edges(spark, sf_dir), iterations=5, materialize=False)
+        return pagerank(_edges(spark, sf_dir), iterations=5)
 
+    @_lazy
     def _lazy_paragraph(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.dedup import paragraph_dedup_report
@@ -244,9 +263,9 @@ def golden_plan_providers() -> dict:
             shingle_k=MH_SHINGLE_K,
             band_rows=MH_BAND_ROWS,
             max_bucket=MH_MAX_BUCKET,
-            materialize=False,
         ).orderBy("doc_id")
 
+    @_lazy
     def _lazy_refinedweb(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.dedup import paragraph_dedup_rewrite
@@ -259,9 +278,9 @@ def golden_plan_providers() -> dict:
             shingle_k=MH_SHINGLE_K,
             band_rows=MH_BAND_ROWS,
             max_bucket=MH_MAX_BUCKET,
-            materialize=False,
         ).orderBy("doc_id")
 
+    @_lazy
     def _lazy_keepfirst(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.dedup import neardedup_keep_first
@@ -274,9 +293,9 @@ def golden_plan_providers() -> dict:
             MH_SHINGLE_K,
             MH_BAND_ROWS,
             MH_MAX_BUCKET,
-            materialize=False,
         ).orderBy("doc_id")
 
+    @_lazy
     def _lazy_refinedweb_corpus(spark, sf_dir):
         from pyspark.sql import functions as F
 
@@ -296,7 +315,6 @@ def golden_plan_providers() -> dict:
             MH_SHINGLE_K,
             MH_BAND_ROWS,
             MH_MAX_BUCKET,
-            materialize=False,
         )
         survivors = docs.join(
             adm.filter(F.col("admitted")).select("doc_id"), "doc_id", "left_semi"
@@ -310,10 +328,10 @@ def golden_plan_providers() -> dict:
             shingle_k=MH_SHINGLE_K,
             band_rows=MH_BAND_ROWS,
             max_bucket=MH_MAX_BUCKET,
-            materialize=False,
         )
         return cleaned.filter(F.col("n_kept") >= RW_MIN_KEPT).orderBy("doc_id")
 
+    @_lazy
     def _lazy_url_chain(spark, sf_dir):
         """The pipeline_refinedweb_url chain fully lazy: URL keep-first →
         doc admission → paragraph rewrite → floor, returning the cleaned
@@ -340,7 +358,7 @@ def golden_plan_providers() -> dict:
         ).select("doc_id", "text")
         adm = neardedup_keep_first(
             ukept, "doc_id", "text", MH_NUM_HASHES, MH_SHINGLE_K,
-            MH_BAND_ROWS, MH_MAX_BUCKET, materialize=False,
+            MH_BAND_ROWS, MH_MAX_BUCKET,
         )
         survivors = ukept.join(
             adm.filter(F.col("admitted")).select("doc_id"), "doc_id", "left_semi"
@@ -349,13 +367,14 @@ def golden_plan_providers() -> dict:
             survivors, "doc_id", "text", block=PARA_BLOCK,
             num_hashes=MH_NUM_HASHES, shingle_k=MH_SHINGLE_K,
             band_rows=MH_BAND_ROWS, max_bucket=MH_MAX_BUCKET,
-            materialize=False,
         )
         return cleaned.filter(F.col("n_kept") >= RW_MIN_KEPT)
 
+    @_lazy
     def _lazy_refinedweb_url(spark, sf_dir):
         return _lazy_url_chain(spark, sf_dir).orderBy("doc_id")
 
+    @_lazy
     def _lazy_pretrain_corpus(spark, sf_dir):
         from pyspark.sql import functions as F
 
@@ -393,6 +412,7 @@ def golden_plan_providers() -> dict:
     providers["pipeline_refinedweb_url"] = _lazy_refinedweb_url
     providers["pipeline_pretrain_corpus"] = _lazy_pretrain_corpus
 
+    @_lazy
     def _lazy_incremental(spark, sf_dir):
         from pyspark.sql import functions as F
 
@@ -416,9 +436,9 @@ def golden_plan_providers() -> dict:
             MH_SHINGLE_K,
             MH_BAND_ROWS,
             MH_MAX_BUCKET,
-            materialize=False,
         ).orderBy("doc_id")
 
+    @_lazy
     def _lazy_calibration(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.dedup import minhash_calibration_report
@@ -431,9 +451,9 @@ def golden_plan_providers() -> dict:
             MH_SHINGLE_K,
             MH_BAND_ROWS,
             MH_MAX_BUCKET,
-            materialize=False,
         ).orderBy("id_a", "id_b")
 
+    @_lazy
     def _lazy_simhash_hamming(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.dedup import simhash_hamming_pairs
@@ -446,18 +466,19 @@ def golden_plan_providers() -> dict:
             SH_BANDS,
             SH_MAX_HAMMING,
             MH_MAX_BUCKET,
-            materialize=False,
         ).orderBy("id_a", "id_b")
 
+    @_lazy
     def _lazy_bpe_fit(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.text import bpe_fit
         from flink_1_12_0_src_spark.queries.pipelineq import BPE_ROUNDS
 
         return bpe_fit(
-            table(spark, sf_dir, "documents"), "text", BPE_ROUNDS, materialize=False
+            table(spark, sf_dir, "documents"), "text", BPE_ROUNDS
         ).orderBy("round")
 
+    @_lazy
     def _lazy_bpe_encode(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.text import bpe_encode_report
@@ -468,7 +489,6 @@ def golden_plan_providers() -> dict:
             "doc_id",
             "text",
             BPE_ROUNDS,
-            materialize=False,
         ).orderBy("doc_id")
 
     def _labeled_docs(spark, sf_dir):
@@ -483,19 +503,21 @@ def golden_plan_providers() -> dict:
             "doc_id", "text", (F.col("quality") >= QF_LABEL_THR).alias("label")
         )
 
+    @_lazy
     def _lazy_quality_fit(spark, sf_dir):
         from flink_1_12_0_src_spark.pipeline.classifier import logreg_fit_exact
         from flink_1_12_0_src_spark.queries.pipelineq import QF_LR, QF_NB
 
-        # 1 round, materialize=False: pins the full training-round interior
+        # 1 round, lazy: pins the full training-round interior
         # (featurization shuffle, broadcast weight row, bucket-keyed
         # gradient) without the checkpoint stubs; further rounds repeat the
         # identical shape
         return logreg_fit_exact(
             _labeled_docs(spark, sf_dir), "label", "doc_id", "text",
-            QF_NB, 1, QF_LR, materialize=False,
+            QF_NB, 1, QF_LR,
         ).orderBy("bucket")
 
+    @_lazy
     def _lazy_quality_score(spark, sf_dir):
         from flink_1_12_0_src_spark.pipeline.classifier import logreg_score
         from flink_1_12_0_src_spark.queries.pipelineq import QF_NB
@@ -528,30 +550,34 @@ def golden_plan_providers() -> dict:
             labeled.select("doc_id", "label"), "doc_id"
         )
 
+    @_lazy
     def _lazy_quality_roc(spark, sf_dir):
         from flink_1_12_0_src_spark.queries.pipelineq import roc_from_scored
 
         return roc_from_scored(spark, _standin_scored(spark, sf_dir))
 
+    @_lazy
     def _lazy_quality_calibration(spark, sf_dir):
         from flink_1_12_0_src_spark.queries.pipelineq import calibration_from_scored
 
         return calibration_from_scored(_standin_scored(spark, sf_dir))
 
+    @_lazy
     def _lazy_family_agreement(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.queries.pipelineq import family_agreement_report
 
         return family_agreement_report(
-            spark, table(spark, sf_dir, "documents"), materialize=False
+            spark, table(spark, sf_dir, "documents")
         )
 
+    @_lazy
     def _lazy_doremi(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.sampling import doremi_weights
         from flink_1_12_0_src_spark.queries.pipelineq import DOREMI_ETA, DOREMI_SMOOTH
 
-        # 1 round, materialize=False: pins the two LM scoring passes, the
+        # 1 round, lazy: pins the two LM scoring passes, the
         # broadcast K-row iterate, the per-term window mixture sum and the
         # exchange-free window normalizer over the coalesced K-row relation;
         # further rounds append the identical shape (the plan is linear in
@@ -559,9 +585,9 @@ def golden_plan_providers() -> dict:
         return doremi_weights(
             table(spark, sf_dir, "documents"), "doc_id", "text", "source",
             rounds=1, eta=DOREMI_ETA, smoothing=DOREMI_SMOOTH,
-            materialize=False,
         ).orderBy("domain")
 
+    @_lazy
     def _lazy_doremi_sample(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.sampling import doremi_sample
@@ -571,40 +597,42 @@ def golden_plan_providers() -> dict:
             DOREMI_SMOOTH,
         )
 
-        # 1 round, materialize=False (the _lazy_doremi convention): pins the
+        # 1 round, lazy (the _lazy_doremi convention): pins the
         # broadcast K-row threshold table and the stateless hash filter on
         # top of the trainer's interior
         return doremi_sample(
             table(spark, sf_dir, "documents"), "doc_id", "text", "source",
             rounds=1, eta=DOREMI_ETA, smoothing=DOREMI_SMOOTH,
-            seed=DOREMI_SEED, materialize=False,
+            seed=DOREMI_SEED,
         ).orderBy("doc_id")
 
     providers["pipeline_quality_fit"] = _lazy_quality_fit
     providers["pipeline_quality_eval"] = _lazy_quality_score
+    @_lazy
     def _lazy_mix_compare(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.queries.pipelineq import mix_compare_report
 
-        # 1 round, materialize=False (the _lazy_doremi convention) through
+        # 1 round, lazy (the _lazy_doremi convention) through
         # the SAME builder the registered query ships — no drift channel
         return mix_compare_report(
-            table(spark, sf_dir, "documents"), rounds=1, materialize=False
+            table(spark, sf_dir, "documents"), rounds=1
         )
 
+    @_lazy
     def _lazy_soft_weights(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.dedup import soft_dedup_weights
         from flink_1_12_0_src_spark.queries.pipelineq import SOFT_K
 
-        # materialize=False: pins the gram-count aggregate, the frequency
+        # lazy: pins the gram-count aggregate, the frequency
         # rollup + scoring join, and the one-row corpus-mean broadcast
         # without the checkpoint stub
         return soft_dedup_weights(
             table(spark, sf_dir, "documents"), "doc_id", "text", k=SOFT_K,
-            materialize=False,
         ).orderBy("doc_id")
 
+    @_lazy
     def _lazy_soft_weights_cms(spark, sf_dir):
         from pyspark.sql import functions as F
 
@@ -620,7 +648,7 @@ def golden_plan_providers() -> dict:
             SOFT_K,
         )
 
-        # materialize=False: pins the vocabulary probe join against the
+        # lazy: pins the vocabulary probe join against the
         # broadcast constant-size sketch, both pricing tails, and the
         # per-doc drift join without the checkpoint stubs
         docs = table(spark, sf_dir, "documents")
@@ -631,36 +659,37 @@ def golden_plan_providers() -> dict:
         )
         return soft_dedup_cms_weights(
             soft_gram_counts(docs, "doc_id", "text", SOFT_K),
-            state, "doc_id", CMS_SLICES, CMS_HEX, materialize=False,
+            state, "doc_id", CMS_SLICES, CMS_HEX,
         ).orderBy("doc_id")
 
+    @_lazy
     def _lazy_quality_ensemble(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.text import quality_ensemble
 
-        # materialize=False: pins the four signal pipelines, their three
+        # lazy: pins the four signal pipelines, their three
         # joins and the corpus-stats broadcast — the registered form's
         # eager localCheckpoint would degenerate the golden to a
         # Scan ExistingRDD (and execute corpus-scale jobs at DataFrame
         # construction time in golden regen / explain)
         return quality_ensemble(
             table(spark, sf_dir, "documents"), "doc_id", "text",
-            materialize=False,
         ).orderBy("doc_id")
 
+    @_lazy
     def _lazy_pca_power(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.similarity import pca_power_exact
         from flink_1_12_0_src_spark.queries.pipelineq import PCA_DIM
 
-        # 1 round, materialize=False (the _lazy_quality_fit / _lazy_doremi
+        # 1 round (the _lazy_quality_fit / _lazy_doremi
         # convention): pins the Gram posexplode expansion and one round's
         # normalize joins; further rounds repeat the identical shape, and
         # the full-iteration lazy plan is exactly the 3^iters reference
         # blowup the runtime checkpoints exist to cut (510 scans)
         return pca_power_exact(
             table(spark, sf_dir, "embeddings"), "vec_id", "embedding",
-            PCA_DIM, 1, materialize=False,
+            PCA_DIM, 1,
         ).orderBy("pos")
 
     providers["text_quality_ensemble"] = _lazy_quality_ensemble
@@ -670,6 +699,7 @@ def golden_plan_providers() -> dict:
     providers["dataset_mix_compare"] = _lazy_mix_compare
     providers["dedup_soft_weights"] = _lazy_soft_weights
     providers["dedup_soft_weights_cms"] = _lazy_soft_weights_cms
+    @_lazy
     def _lazy_substring_rewrite(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.dedup import exact_substring_rewrite
@@ -679,9 +709,9 @@ def golden_plan_providers() -> dict:
             "doc_id",
             "text",
             window=SPAN_WINDOW,
-            materialize=False,
         ).orderBy("doc_id")
 
+    @_lazy
     def _lazy_refinedweb_substr(spark, sf_dir):
         from pyspark.sql import functions as F
 
@@ -691,7 +721,7 @@ def golden_plan_providers() -> dict:
         docs = table(spark, sf_dir, "documents")
         fin = _lazy_url_chain(spark, sf_dir).select("doc_id", "clean_text")
         sdoc = exact_substring_rewrite(
-            fin, "doc_id", "clean_text", window=SPAN_WINDOW, materialize=False
+            fin, "doc_id", "clean_text", window=SPAN_WINDOW
         ).select("doc_id", "n_tokens", "n_removed")
         xout = (
             sdoc.join(docs.select("doc_id", "source"), "doc_id")
@@ -735,6 +765,7 @@ def golden_plan_providers() -> dict:
             .orderBy("source")
         )
 
+    @_lazy
     def _lazy_substring_spans(spark, sf_dir):
         from flink_1_12_0_src_spark.catalog import table
         from flink_1_12_0_src_spark.pipeline.dedup import substring_span_stats
@@ -744,7 +775,6 @@ def golden_plan_providers() -> dict:
             "doc_id",
             "text",
             window=SPAN_WINDOW,
-            materialize=False,
         ).orderBy("doc_id")
 
     providers["pipeline_refinedweb_substr"] = _lazy_refinedweb_substr
@@ -889,11 +919,12 @@ def _report_providers() -> dict:
             snap, table(spark, sf_dir, "events")
         ).orderBy("event_type", "q")
 
+    @_lazy
     def _soft_cms_from_state(spark, sf_dir):
         # the sketch-only SoftDeDup twin's pricing tail over a synthetic
         # sketch snapshot: pins the broadcast sketch probe join, both
-        # pricing aggregates and the per-doc drift join (materialize=False
-        # — the lazy mirror convention)
+        # pricing aggregates and the per-doc drift join (built lazy — the
+        # lazy mirror convention)
         from pyspark.sql import functions as F
 
         from flink_1_12_0_src_spark.catalog import table
@@ -913,7 +944,7 @@ def _report_providers() -> dict:
             .agg(F.count(F.lit(1)).cast("decimal(15,0)").alias("n"))
         )
         return soft_dedup_cms_weights(
-            gcount, snap, "doc_id", CMS_SLICES, CMS_HEX, materialize=False
+            gcount, snap, "doc_id", CMS_SLICES, CMS_HEX
         ).orderBy("doc_id")
 
     def _mm_audit_from_state(spark, sf_dir):

@@ -376,6 +376,64 @@ def test_census_and_metrics_empty_graph_zeros(spark):
     assert tuple(m) == (0, 0, 0, 0, 0, 0.0)
 
 
+def test_cached_releases_on_exit_and_on_error(spark, sql_cache_size):
+    from flink_1_12_0_src_spark.pipeline.stageclock import cached
+
+    def is_persisted(df) -> bool:
+        level = df.storageLevel
+        return level.useMemory or level.useDisk
+
+    before = sql_cache_size()
+    df = spark.range(20).withColumn("sq", F.col("id") * F.col("id"))
+    with cached(df):
+        assert is_persisted(df)
+        assert df.count() == 20
+    assert not is_persisted(df)
+    with pytest.raises(RuntimeError, match="boom"):
+        with cached(df):
+            assert is_persisted(df)
+            raise RuntimeError("boom")
+    assert not is_persisted(df)
+    assert sql_cache_size() == before
+
+
+@pytest.mark.parametrize("op", ["jaccard_similarity", "pagerank"])
+def test_graph_operator_releases_its_caches(
+    spark, sf_dir, op, sql_cache_size, persistent_rdds
+):
+    """An eager graph operator keeps no SQL cache entry: only the checkpoint
+    it returns stays pinned."""
+    from flink_1_12_0_src_spark.operators import graph
+    from flink_1_12_0_src_spark.queries.graphq import _edges
+
+    edges = _edges(spark, sf_dir)
+    cache0, rdds0 = sql_cache_size(), persistent_rdds()
+    out = getattr(graph, op)(edges)
+    assert sql_cache_size() == cache0
+    assert len(persistent_rdds() - rdds0) == 1
+    assert out.count() > 0
+
+
+def test_connected_components_releases_edge_cache_when_iteration_raises(
+    spark, sql_cache_size
+):
+    """An iteration that fails at execution time must not leave the edge
+    cache pinned: the edge frame's ``dst`` raises when it is computed."""
+    from flink_1_12_0_src_spark.operators.graph import connected_components
+
+    edges = spark.range(8).select(
+        F.col("id").alias("src"),
+        F.when(F.col("id") >= 0, F.raise_error(F.lit("edge read failed")))
+        .otherwise(F.col("id"))
+        .cast("bigint")
+        .alias("dst"),
+    )
+    before = sql_cache_size()
+    with pytest.raises(Exception, match="edge read failed"):
+        connected_components(edges)
+    assert sql_cache_size() == before
+
+
 def test_maxwell_update_before_merges_partial_old(spark):
     """Maxwell's old field is PARTIAL (only changed fields non-null): the
     -U before image must be old merged over data field-by-field

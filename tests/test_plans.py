@@ -15,6 +15,7 @@ What must hold at 100 TB:
 
 from __future__ import annotations
 
+from flink_1_12_0_src_spark.pipeline.stageclock import lazy_plans
 from flink_1_12_0_src_spark.queries import load_all
 
 REG = load_all()
@@ -133,14 +134,13 @@ def _lazy_plan(spark, df) -> str:
 
 
 def test_jaccard_similarity_equi_joins_only(spark, sf_dir):
-    # materialize=False keeps the full lineage inspectable (the default path
+    # lazy_plans() keeps the full lineage inspectable (the default path
     # eagerly checkpoints so its persists can be released per-call)
     from flink_1_12_0_src_spark.operators.graph import jaccard_similarity
     from flink_1_12_0_src_spark.queries.graphq import _edges
 
-    plan = _lazy_plan(
-        spark, jaccard_similarity(_edges(spark, sf_dir), materialize=False)
-    )
+    with lazy_plans():
+        plan = _lazy_plan(spark, jaccard_similarity(_edges(spark, sf_dir)))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # intersection counted by one groupBy over the two-path join
@@ -154,9 +154,8 @@ def test_lsh_cap_single_band_shuffle(spark, sf_dir):
     from flink_1_12_0_src_spark.pipeline.dedup import minhash_lsh_pairs
 
     docs = table(spark, sf_dir, "documents")
-    plan = _lazy_plan(
-        spark, minhash_lsh_pairs(docs, "doc_id", "text", materialize=False)
-    )
+    with lazy_plans():
+        plan = _lazy_plan(spark, minhash_lsh_pairs(docs, "doc_id", "text"))
     assert "Window" in plan  # the census is a window count…
     # …and the candidate generation stays a plain equi self-join
     assert "CartesianProduct" not in plan
@@ -288,9 +287,8 @@ def test_paragraph_dedup_no_pair_explosion(spark, sf_dir):
     from flink_1_12_0_src_spark.pipeline.dedup import paragraph_dedup_report
     from tests.plan_fp import df_fingerprint
 
-    df = paragraph_dedup_report(
-        table(spark, sf_dir, "documents"), materialize=False
-    )
+    with lazy_plans():
+        df = paragraph_dedup_report(table(spark, sf_dir, "documents"))
     fp = df_fingerprint(spark, df)
     assert not any("CartesianProduct" in k or "NestedLoop" in k for k in fp["nodes"])
     assert fp["nodes"].get("Generate", 0) >= 2  # paragraph + band explosions

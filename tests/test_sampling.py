@@ -489,6 +489,41 @@ def test_doremi_round_job_budget(spark, docs):
     assert jobs(2) - jobs(1) <= 4
 
 
+def test_doremi_stage_clock_records_its_barriers(spark, docs):
+    """The eager trainer times its three barrier stages into the active
+    ``record_stages`` sink (the benchmark's ``pipeline.stage.*`` metrics)."""
+    from flink_1_12_0_src_spark.pipeline.sampling import doremi_weights
+    from flink_1_12_0_src_spark.pipeline.stageclock import record_stages
+
+    stages: dict[str, float] = {}
+    with record_stages(stages):
+        doremi_weights(docs, "doc_id", "text", "source", rounds=2).collect()
+    for name in ("scoring", "ref_loss", "gd_rounds"):
+        assert stages.get(name, 0.0) > 0, (name, stages)
+
+
+def test_doremi_lazy_plans_run_no_spark_work(spark, docs, sql_cache_size, persistent_rdds):
+    """Under ``lazy_plans()`` the trainer only builds a plan: no stage is
+    timed, no Spark job runs, and nothing is cached or checkpointed."""
+    from flink_1_12_0_src_spark.pipeline.sampling import doremi_weights
+    from flink_1_12_0_src_spark.pipeline.stageclock import lazy_plans, record_stages
+
+    sc = spark.sparkContext
+    group = "doremi_lazy_plans"
+    cache0, rdds0 = sql_cache_size(), persistent_rdds()
+    stages: dict[str, float] = {}
+    sc.setJobGroup(group, group)
+    try:
+        with record_stages(stages), lazy_plans():
+            doremi_weights(docs, "doc_id", "text", "source", rounds=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stages == {}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert sql_cache_size() == cache0
+    assert not persistent_rdds() - rdds0
+
+
 def test_doremi_sample_realizes_learned_mixture(spark, docs):
     """The sampler must realize the trainer's mixture: the bottleneck
     domain (largest weight/n_docs) keeps every doc, every other domain's

@@ -14,7 +14,6 @@
 
 from __future__ import annotations
 
-import tempfile
 import time
 
 import pytest
@@ -49,8 +48,8 @@ def _expected(spark, sf_dir):
     }
 
 
-def test_checkpoint_restart_exactly_once(spark, sf_dir):
-    ckpt = tempfile.mkdtemp(prefix="ckpt_recovery_")
+def test_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
+    ckpt = str(tmp_path / "ckpt_recovery")
     name = "recovery_out"
 
     # phase 1: start, let at least one micro-batch commit, then stop mid-way
@@ -78,7 +77,7 @@ def test_checkpoint_restart_exactly_once(spark, sf_dir):
     assert got == _expected(spark, sf_dir)  # no loss, no double-count
 
 
-def test_rocksdb_state_backend(spark, sf_dir):
+def test_rocksdb_state_backend(spark, sf_dir, tmp_path):
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -89,7 +88,7 @@ def test_rocksdb_state_backend(spark, sf_dir):
         q = (
             s.writeStream.format("memory").queryName("rocksdb_out")
             .outputMode("complete")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_rocks_"))
+            .option("checkpointLocation", str(tmp_path / "ckpt_rocks"))
             .trigger(availableNow=True).start()
         )
         q.awaitTermination(120)

@@ -3,14 +3,13 @@
 plans/<tag>/<query>_<suffix>.txt — the optimization-round evidence files
 (the judge cannot run Spark; these pin plan-shape claims).
 
-Queries that materialize internally (localCheckpoint) degenerate to a
-``Scan ExistingRDD`` in their registered form — the r14 evidence gap (the
-judge could not check checkpointing operators' plan claims against the
-dumps). For those, the LAZY provider from tests/plan_fp.py
-``golden_plan_providers()`` — the identical topology built with
-``materialize=False``, the same provider the plan goldens pin — is used
-instead, so the dump shows the real interior joins/aggregates. A
-``(lazy provider)`` header line marks such dumps.
+Queries that pass eager barriers (``pipeline/stageclock.py``) degenerate
+to a ``Scan ExistingRDD`` in their registered form, which hides the plan
+interior a checkpointing operator's claim is about. For those, the LAZY
+provider from tests/plan_fp.py ``golden_plan_providers()`` — the identical
+topology built under ``lazy_plans()``, the same provider the plan goldens
+pin — is used instead, so the dump shows the real interior
+joins/aggregates. A ``(lazy provider)`` header line marks such dumps.
 
 Usage: python tools/capture_plans.py <tag> <suffix> [query,query,...]
 e.g.   python tools/capture_plans.py r15 before
@@ -49,7 +48,7 @@ def main() -> None:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     for name in names:
         provider = lazy.get(name, reg[name].spark)
-        header = "" if provider is reg[name].spark else "(lazy provider — materialize=False twin of the registered query; see tests/plan_fp.py)\n"
+        header = "" if provider is reg[name].spark else "(lazy provider — the registered query's topology built under lazy_plans(); see tests/plan_fp.py)\n"
         try:
             df = provider(spark, sf_dir)
             txt = header + df._jdf.queryExecution().explainString(mode)

@@ -13,7 +13,9 @@ the graph and pipeline operators goes through this module:
   call that made it;
 - :func:`lazy_plans` turns both off for the plan-inspection callers (the
   plan goldens, plan dumps), which need the lazy interior plan instead of
-  a ``Scan ExistingRDD`` stub and must launch no Spark job;
+  a ``Scan ExistingRDD`` stub. It removes the barriers' jobs only: an
+  operator that collects a value or reads a partition count while it
+  builds its plan still launches those jobs;
 - :func:`record_stages` collects the per-stage wall times of the timed
   barriers; ``bench.py`` and perfbench turn it on around a timed run.
   Off by default: a plain run pays one ``is None`` check per barrier.

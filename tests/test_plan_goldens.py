@@ -18,7 +18,8 @@ from pathlib import Path
 
 import pytest
 
-from tests.plan_fp import df_fingerprint, golden_plan_providers
+from flink_1_12_0_src_spark.queries import REGISTRY
+from tests.plan_fp import REDUCED, df_fingerprint, golden_plan_providers
 
 GOLDENS = json.loads((Path(__file__).parent / "plan_goldens.json").read_text())
 PROVIDERS = golden_plan_providers()
@@ -29,6 +30,21 @@ def test_goldens_cover_every_fingerprintable_query():
     registry: registering any lazy batch query without regenerating the
     goldens fails here, not silently."""
     assert sorted(GOLDENS) == sorted(PROVIDERS)
+
+
+def test_goldens_build_the_registered_query():
+    """A golden pins the registered function itself (built under
+    ``lazy_plans()``), never a hand-written copy of it that can drift; the
+    only exceptions are the named ``REDUCED`` variants."""
+    copies = sorted(
+        n
+        for n, provider in PROVIDERS.items()
+        if n in REGISTRY
+        and n not in REDUCED
+        and getattr(provider, "__wrapped__", None) is not REGISTRY[n].spark
+    )
+    assert copies == []
+    assert set(REDUCED) <= set(PROVIDERS)
 
 
 @pytest.mark.parametrize("name", sorted(GOLDENS))

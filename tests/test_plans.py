@@ -17,15 +17,13 @@ from __future__ import annotations
 
 from flink_1_12_0_src_spark.pipeline.stageclock import lazy_plans
 from flink_1_12_0_src_spark.queries import load_all
+from tests.plan_fp import formatted_plan
 
 REG = load_all()
 
 
 def _plan(spark, sf_dir, name: str) -> str:
-    df = REG[name].spark(spark, sf_dir)
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    return formatted_plan(spark, REG[name].spark(spark, sf_dir))
 
 
 def test_q6_pushdown_and_pruning(spark, sf_dir):
@@ -127,12 +125,6 @@ def test_clustering_coeff_no_cartesian_two_phase(spark, sf_dir):
     assert plan.count("HashAggregate") >= 2
 
 
-def _lazy_plan(spark, df) -> str:
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-
-
 def test_jaccard_similarity_equi_joins_only(spark, sf_dir):
     # lazy_plans() keeps the full lineage inspectable (the default path
     # eagerly checkpoints so its persists can be released per-call)
@@ -140,7 +132,7 @@ def test_jaccard_similarity_equi_joins_only(spark, sf_dir):
     from flink_1_12_0_src_spark.queries.graphq import _edges
 
     with lazy_plans():
-        plan = _lazy_plan(spark, jaccard_similarity(_edges(spark, sf_dir)))
+        plan = formatted_plan(spark, jaccard_similarity(_edges(spark, sf_dir)))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # intersection counted by one groupBy over the two-path join
@@ -155,7 +147,7 @@ def test_lsh_cap_single_band_shuffle(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents")
     with lazy_plans():
-        plan = _lazy_plan(spark, minhash_lsh_pairs(docs, "doc_id", "text"))
+        plan = formatted_plan(spark, minhash_lsh_pairs(docs, "doc_id", "text"))
     assert "Window" in plan  # the census is a window count…
     # …and the candidate generation stays a plain equi self-join
     assert "CartesianProduct" not in plan
@@ -191,10 +183,7 @@ def test_ivf_fit_init_take_ordered_no_global_window(spark, sf_dir):
     from flink_1_12_0_src_spark.pipeline.similarity import ivf_fit
 
     emb = table(spark, sf_dir, "embeddings")
-    df = ivf_fit(emb, n_lists=8, iters=1)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    plan = formatted_plan(spark, ivf_fit(emb, n_lists=8, iters=1))
     assert "TakeOrderedAndProject" in plan
 
 

@@ -3,13 +3,13 @@
 plans/<tag>/<query>_<suffix>.txt — the optimization-round evidence files
 (the judge cannot run Spark; these pin plan-shape claims).
 
-Queries that pass eager barriers (``pipeline/stageclock.py``) degenerate
-to a ``Scan ExistingRDD`` in their registered form, which hides the plan
-interior a checkpointing operator's claim is about. For those, the LAZY
-provider from tests/plan_fp.py ``golden_plan_providers()`` — the identical
-topology built under ``lazy_plans()``, the same provider the plan goldens
-pin — is used instead, so the dump shows the real interior
-joins/aggregates. A ``(lazy provider)`` header line marks such dumps.
+A query with a plan golden is dumped from its golden provider in
+tests/plan_fp.py ``golden_plan_providers()``: the registered query built
+under ``lazy_plans()``, so eager barriers (``pipeline/stageclock.py``) do not
+hide the interior joins/aggregates behind a ``Scan ExistingRDD`` stub, or
+the named ``REDUCED`` variant where the golden pins one. A header line says
+which of the two a dump is. A query without a golden is dumped as
+registered, with no header.
 
 Usage: python tools/capture_plans.py <tag> <suffix> [query,query,...]
 e.g.   python tools/capture_plans.py r15 before
@@ -38,20 +38,23 @@ def main() -> None:
     out_dir = REPO / "plans" / tag
     out_dir.mkdir(parents=True, exist_ok=True)
     reg = load_all()
-    from tests.plan_fp import golden_plan_providers
+    from tests.plan_fp import REDUCED, formatted_plan, golden_plan_providers
 
-    lazy = golden_plan_providers()
+    goldens = golden_plan_providers()
     names = [n for n, q in sorted(reg.items()) if "bench" in q.tags]
     if only is not None:
         names = [n for n in names if n in only]
     spark = get_spark(app_name="capture-plans", cpus=cpus, shuffle_partitions=cpus)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     for name in names:
-        provider = lazy.get(name, reg[name].spark)
-        header = "" if provider is reg[name].spark else "(lazy provider — the registered query's topology built under lazy_plans(); see tests/plan_fp.py)\n"
+        provider = goldens.get(name, reg[name].spark)
+        if name in REDUCED:
+            header = "(REDUCED variant built under lazy_plans(); see tests/plan_fp.py)\n"
+        elif name in goldens:
+            header = "(registered query built under lazy_plans())\n"
+        else:
+            header = ""
         try:
-            df = provider(spark, sf_dir)
-            txt = header + df._jdf.queryExecution().explainString(mode)
+            txt = header + formatted_plan(spark, provider(spark, sf_dir))
         except Exception as ex:  # capture what we can; never abort the sweep
             txt = f"EXPLAIN FAILED: {ex}\n"
         path = out_dir / f"{name}_{suffix}.txt"

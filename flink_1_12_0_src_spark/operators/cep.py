@@ -33,11 +33,12 @@ Semantics implemented (the MatchRecognizeITCase subset):
   214 — every later matching event opens its own alternative match) and
   ``allow_combinations`` (Pattern.allowCombinations:471 — a loop binds every
   order-preserving combination of matching rows, not just the greedy run).
-  Patterns containing either run through an enumerate-all scan that reports
-  every alternative (after-match skip does not prune across alternatives,
-  matching Flink's any/combinations reading); deterministic steps inside such
-  a pattern still bind at their first viable position. Negation + any-
-  semantics in one pattern is out of scope (raises).
+  One backtracking scan serves both readings: a pattern containing either
+  reports every alternative (after-match skip does not prune across
+  alternatives, matching Flink's any/combinations reading), while its
+  deterministic steps still bind at their first viable position. Negation,
+  ``where_binding`` and ``where_running`` with any-semantics are out of
+  scope (raise). The streaming operator rejects any-semantics patterns.
 """
 
 from __future__ import annotations
@@ -51,7 +52,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-# Backtracking caps for the NFA scans. A relaxed/any-contiguity step
+# Backtracking caps for the NFA scan. A relaxed/any-contiguity step
 # considers at most RELAXED_CANDIDATE_CAP later matching positions per scan
 # start, and an allowCombinations loop enumerates subsets of at most
 # COMBINATION_ELEMS_CAP loop elements (2^cap combinations). Both bound the
@@ -82,8 +83,9 @@ def _cap_candidates(cands: list[int], cap: int, what: str) -> list[int]:
 class _Step:
     name: str
     predicate: Callable[[pd.DataFrame], pd.Series] | None = None
-    quantifier: str = "1"  # "1" | "+" | "*+" (relaxed loop) | "?" | "n:<k>" | "r:<lo>:<hi>"
-    contiguity: str = "strict"  # "strict" | "relaxed"
+    # "1" | "+" | "*+" (relaxed loop) | "+c" (allowCombinations) | "?" | "n:<k>" | "r:<lo>:<hi>"
+    quantifier: str = "1"
+    contiguity: str = "strict"  # "strict" | "relaxed" | "any" (followedByAny)
     negated: bool = False  # notNext / notFollowedBy (Pattern.java:169,198)
     until_predicate: Callable[[pd.DataFrame], pd.Series] | None = None  # Pattern.until
     reluctant: bool = False  # shortest-first loop binding (MATCH_RECOGNIZE +? / Flink non-greedy)
@@ -133,8 +135,8 @@ class Pattern:
         re-evaluated at each step entry (vectorized over rows, so one pandas
         op per backtrack branch) and ANDed with ``where``. Rows of variables
         not yet bound make the reference unavailable — the predicate decides
-        (typically False). Not supported inside followedByAny /
-        allowCombinations scans."""
+        (typically False). Not supported in a pattern with followedByAny /
+        allowCombinations (the scan raises)."""
         self.steps[-1].bind_predicate = predicate
         return self
 
@@ -149,8 +151,8 @@ class Pattern:
         (SQL:2016 running semantics). ``predicate(pdf, bindings, prefix,
         cand)`` is checked at every binding/extension point; because rows
         are only ever appended after passing it, every backtracked shorter
-        prefix remains valid. Not supported inside followedByAny /
-        allowCombinations scans."""
+        prefix remains valid. Not supported in a pattern with followedByAny /
+        allowCombinations (the scan raises)."""
         self.steps[-1].run_predicate = predicate
         return self
 
@@ -232,6 +234,12 @@ class Pattern:
         self.within_seconds = seconds
         return self
 
+    @property
+    def any_semantics(self) -> bool:
+        """True if a step branches non-deterministically (followed_by_any or
+        allow_combinations), so the scan reports every alternative."""
+        return any(s.contiguity == "any" or s.quantifier == "+c" for s in self.steps)
+
 
 # measure aggregations over the rows bound to one variable
 _AGGS = {
@@ -265,6 +273,17 @@ def _sorted_group(pdf: pd.DataFrame, order_by: list[str]) -> pd.DataFrame:
     return pdf.take(order).reset_index(drop=True)
 
 
+def _run_bounds(quantifier: str) -> tuple[int, int]:
+    """(shortest, longest) consecutive run a quantifier binds: "1" and "?"
+    one row, "+" one or more, "n:<k>" exactly k, "r:<lo>:<hi>" lo..hi."""
+    if quantifier in ("1", "?"):
+        return 1, 1
+    if quantifier == "+":
+        return 1, 1 << 30
+    lo, _, hi = quantifier[2:].partition(":")
+    return int(lo), int(hi or lo)
+
+
 def _scan_matches(
     pdf: pd.DataFrame,
     pattern: Pattern,
@@ -279,7 +298,26 @@ def _scan_matches(
     ``match_recognize`` and the streaming operator
     (streaming/cep.py — StreamExecMatch analog), which re-scans a
     watermark-finalized prefix per micro-batch.
+
+    ``rec`` backtracks as a generator: each step yields its alternatives in
+    preference order (earliest position, then the greedy-longest run, or
+    the shortest for a reluctant quantifier; an optional step's take before
+    its skip). A deterministic step stops at its first viable alternative;
+    a ``followed_by_any`` step or an ``allow_combinations`` loop yields every
+    one (NFA.java's non-deterministic TAKE/PROCEED branching). Without such
+    a step the scan takes the first alternative per start and applies the
+    after-match skip. With one it reports every alternative of every start,
+    de-duplicated and sorted by (start, end, bindings); the skip strategy
+    does not prune across alternatives.
     """
+    steps = pattern.steps
+    if pattern.any_semantics:
+        if any(s.negated for s in steps):
+            raise ValueError("negative steps with any-semantics are out of scope")
+        if any(s.bind_predicate is not None for s in steps):
+            raise ValueError("cross-variable DEFINE with any-semantics is out of scope")
+        if any(s.run_predicate is not None for s in steps):
+            raise ValueError("running-aggregate DEFINE with any-semantics is out of scope")
     pdf = _sorted_group(pdf, order_by)
     n = len(pdf)
     masks = [
@@ -288,186 +326,156 @@ def _scan_matches(
             if s.predicate is not None
             else np.ones(n, dtype=bool)
         )
-        for s in pattern.steps
+        for s in steps
     ]
     umasks = [
         (s.until_predicate(pdf).to_numpy() if s.until_predicate is not None else None)
-        for s in pattern.steps
+        for s in steps
     ]
     ts = pdf[time_col].astype("int64").to_numpy() if time_col else None  # ns ints: exact
     within_ns = None if pattern.within_seconds is None else round(pattern.within_seconds * 1e9)
 
-    def try_at(start: int):
-        """Return (bindings, end_idx) for a match whose first row is `start`."""
+    def within_ok(first_pos: int | None, p: int) -> bool:
+        if within_ns is None or first_pos is None or ts is None:
+            return True
+        return (ts[p] - ts[first_pos]) <= within_ns
 
-        def rec(
-            si: int,
-            pos: int,
-            bindings: dict[str, list[int]],
-            first_pos: int | None,
-            neg_limit: int | None = None,
+    def run_ok(step: _Step, bindings: dict, prefix: list[int], cand: int) -> bool:
+        return step.run_predicate is None or step.run_predicate(pdf, bindings, prefix, cand)
+
+    def runs(si: int, mask, bindings: dict, p: int, fp: int):
+        """Yield the row lists step ``si`` can bind starting at row ``p``,
+        in preference order."""
+        step, u_mask = steps[si], umasks[si]
+        if step.quantifier in ("*+", "+c"):
+            # every matching row up to the stop condition / within bound,
+            # skipping non-matching ones
+            stop = n
+            if u_mask is not None:
+                stop = next((e for e in range(p + 1, n) if u_mask[e]), n)
+            elems: list[int] = []
+            for e in range(p, stop):
+                if mask[e] and within_ok(fp, e) and run_ok(step, bindings, elems, e):
+                    elems.append(e)
+            if step.quantifier == "*+":
+                # relaxed loop (Pattern-API oneOrMore default): greedy with
+                # tail back-off
+                for k in range(len(elems), 0, -1):
+                    yield elems[:k]
+                return
+            # allowCombinations: every order-preserving combination that
+            # keeps the loop's first element
+            rest = _cap_candidates(elems, COMBINATION_ELEMS_CAP, "allowCombinations")[1:]
+            for bits in range(1 << len(rest)):
+                yield [p] + [e for j, e in enumerate(rest) if bits >> j & 1]
+            return
+        # consecutive run of lo..hi rows: longest first, shortest first when
+        # reluctant (+?, {n,m}?)
+        lo, hi = _run_bounds(step.quantifier)
+        e = p
+        while (
+            e + 1 < n
+            and e + 1 - p < hi
+            and mask[e + 1]
+            and not (u_mask is not None and u_mask[e + 1])
+            and within_ok(fp, e + 1)
+            and run_ok(step, bindings, list(range(p, e + 1)), e + 1)
         ):
-            if si == len(pattern.steps):
-                return bindings, pos - 1
-            step, mask = pattern.steps[si], masks[si]
-            if step.bind_predicate is not None:
-                # cross-variable DEFINE: narrow the vectorized mask by the
-                # partial-match predicate (re-evaluated per backtrack branch)
-                mask = mask & step.bind_predicate(pdf, bindings).to_numpy()
-            if step.negated:
-                if si == len(pattern.steps) - 1:
-                    # trailing notFollowedBy: only valid with within() (as in
-                    # Flink); no matching event may appear inside the window
-                    if pattern.within_seconds is None or ts is None:
-                        raise ValueError("trailing not_followed_by requires within()")
-                    bound = ts[first_pos] + within_ns
-                    for q in range(pos, n):
-                        if ts[q] > bound:
-                            break
-                        if mask[q]:
-                            return None
-                    return bindings, pos - 1
-                if step.contiguity == "strict":  # notNext: check the one row
-                    if pos < n and mask[pos]:
-                        return None
-                    return rec(si + 1, pos, bindings, first_pos)
-                # notFollowedBy: the next positive step must match at or before
-                # the first negative hit (no neg row strictly between)
-                first_neg = next((q for q in range(pos, n) if mask[q]), n)
-                return rec(si + 1, pos, bindings, first_pos, neg_limit=first_neg)
-            # candidate start positions for this step
-            if step.contiguity == "strict" or first_pos is None:
-                candidates = [pos] if pos < n else []
+            e += 1
+        ends = range(p + lo - 1, e + 1) if step.reluctant else range(e, p + lo - 2, -1)
+        for end in ends:
+            yield list(range(p, end + 1))
+
+    def rec(
+        si: int,
+        pos: int,
+        bindings: dict[str, list[int]],
+        first_pos: int | None,
+        neg_limit: int | None = None,
+    ):
+        """Yield (bindings, end_idx) for each completion of steps[si:] from
+        row ``pos``."""
+        if si == len(steps):
+            yield bindings, pos - 1
+            return
+        step, mask = steps[si], masks[si]
+        if step.bind_predicate is not None:
+            # cross-variable DEFINE: narrow the vectorized mask by the
+            # partial-match predicate (re-evaluated per backtrack branch)
+            mask = mask & step.bind_predicate(pdf, bindings).to_numpy()
+        if step.negated:
+            if si == len(steps) - 1:
+                # trailing notFollowedBy: only valid with within() (as in
+                # Flink); no matching event may appear inside the window
+                if within_ns is None or ts is None:
+                    raise ValueError("trailing not_followed_by requires within()")
+                bound = ts[first_pos] + within_ns
+                for q in range(pos, n):
+                    if ts[q] > bound:
+                        break
+                    if mask[q]:
+                        return
+                yield bindings, pos - 1
+            elif step.contiguity == "strict":  # notNext: check the one row
+                if not (pos < n and mask[pos]):
+                    yield from rec(si + 1, pos, bindings, first_pos)
             else:
-                candidates = _cap_candidates(
-                    [p for p in range(pos, n) if mask[p]],
-                    RELAXED_CANDIDATE_CAP,
-                    "relaxed-step",
-                )
-            if neg_limit is not None:
-                candidates = [p for p in candidates if p <= neg_limit]
-            def _run_ok(prefix: list[int], cand: int) -> bool:
-                return step.run_predicate is None or step.run_predicate(
-                    pdf, bindings, prefix, cand
-                )
-
-            if step.quantifier == "?":
-                if step.reluctant:
-                    # lazy ??: prefer skipping the optional step
-                    r = rec(si + 1, pos, bindings, first_pos, neg_limit=neg_limit)
-                    if r:
-                        return r
-                for p in candidates:
-                    if p < n and mask[p] and _within_ok(first_pos, p) and _run_ok([], p):
-                        r = rec(si + 1, p + 1, {**bindings, step.name: [p]}, first_pos if first_pos is not None else p)
-                        if r:
-                            return r
-                if step.reluctant:
-                    return None
-                # skip optional step: a pending notFollowedBy bound transfers
-                # to the NEXT positive step (the constraint holds until the
-                # next actually-matched event), so neg_limit must survive
-                return rec(si + 1, pos, bindings, first_pos, neg_limit=neg_limit)
-            for p in candidates:
-                if p >= n or not mask[p] or not _run_ok([], p):
-                    if step.contiguity == "strict":
-                        return None
-                    continue
-                fp = first_pos if first_pos is not None else p
-                if not _within_ok(fp, p):
+                # notFollowedBy: the next positive step must match at or
+                # before the first negative hit (no neg row strictly between)
+                first_neg = next((q for q in range(pos, n) if mask[q]), n)
+                yield from rec(si + 1, pos, bindings, first_pos, first_neg)
+            return
+        optional = step.quantifier == "?"
+        # skipping an optional step: a pending notFollowedBy bound transfers
+        # to the NEXT positive step (the constraint holds until the next
+        # actually-matched event), so neg_limit must survive
+        if optional and step.reluctant:  # lazy ??: prefer skipping
+            yield from rec(si + 1, pos, bindings, first_pos, neg_limit)
+        if step.contiguity == "strict" or first_pos is None:
+            candidates = [pos] if pos < n and mask[pos] else []
+        else:
+            candidates = _cap_candidates(
+                [p for p in range(pos, n) if mask[p]],
+                RELAXED_CANDIDATE_CAP,
+                "relaxed-step",
+            )
+        if neg_limit is not None:
+            candidates = [p for p in candidates if p <= neg_limit]
+        # a deterministic step stops at its first viable (position, run);
+        # allowCombinations branches over runs, followedByAny over both
+        branch_pos = step.contiguity == "any"
+        branch_run = branch_pos or step.quantifier == "+c"
+        took = False
+        for p in candidates:
+            if not run_ok(step, bindings, [], p):
+                continue
+            fp = first_pos if first_pos is not None else p
+            if not within_ok(fp, p):
+                break
+            for elems in runs(si, mask, bindings, p, fp):
+                for hit in rec(si + 1, elems[-1] + 1, {**bindings, step.name: elems}, fp):
+                    took = True
+                    yield hit
+                if took and not branch_run:
                     break
-                if step.quantifier == "1":
-                    r = rec(si + 1, p + 1, {**bindings, step.name: [p]}, fp)
-                    if r:
-                        return r
-                elif step.quantifier.startswith("n:"):
-                    k = int(step.quantifier[2:])
-                    if (
-                        p + k <= n
-                        and all(mask[p : p + k])
-                        and _within_ok(fp, p + k - 1)
-                        and all(
-                            _run_ok(list(range(p, p + j)), p + j) for j in range(1, k)
-                        )
-                    ):
-                        r = rec(si + 1, p + k, {**bindings, step.name: list(range(p, p + k))}, fp)
-                        if r:
-                            return r
-                elif step.quantifier == "*+":
-                    # relaxed-contiguity loop (Pattern-API oneOrMore default):
-                    # absorb every matching row, skipping non-matching ones,
-                    # until the stop condition / within bound; greedy with
-                    # tail back-off on suffix failure
-                    u_mask = umasks[si]
-                    stop = n
-                    if u_mask is not None:
-                        stop = next(
-                            (s_ for s_ in range(p + 1, n) if u_mask[s_]), n
-                        )
-                    elems: list[int] = []
-                    for q in range(p, stop):
-                        if mask[q] and _within_ok(fp, q) and _run_ok(elems, q):
-                            elems.append(q)
-                    for k in range(len(elems), 0, -1):
-                        r = rec(
-                            si + 1,
-                            elems[k - 1] + 1,
-                            {**bindings, step.name: elems[:k]},
-                            fp,
-                        )
-                        if r:
-                            return r
-                elif step.quantifier.startswith("r:"):
-                    lo_q, hi_q = (int(x) for x in step.quantifier[2:].split(":"))
-                    u_mask = umasks[si]
-                    q = p
-                    while (
-                        q + 1 < n
-                        and q + 1 - p < hi_q
-                        and mask[q + 1]
-                        and not (u_mask is not None and u_mask[q + 1])
-                        and _within_ok(fp, q + 1)
-                        and _run_ok(list(range(p, q + 1)), q + 1)
-                    ):
-                        q += 1
-                    # greedy: longest run first; reluctant ({n,m}?): shortest
-                    ends = range(p + lo_q - 1, q + 1) if step.reluctant else range(q, p + lo_q - 2, -1)
-                    for e_ in ends:
-                        r = rec(si + 1, e_ + 1, {**bindings, step.name: list(range(p, e_ + 1))}, fp)
-                        if r:
-                            return r
-                elif step.quantifier == "+":
-                    u_mask = umasks[si]
-                    q = p
-                    while (
-                        q + 1 < n
-                        and mask[q + 1]
-                        and not (u_mask is not None and u_mask[q + 1])
-                        and _within_ok(fp, q + 1)
-                        and _run_ok(list(range(p, q + 1)), q + 1)
-                    ):
-                        q += 1
-                    # greedy: longest run first; reluctant (+?): shortest
-                    ends = range(p, q + 1) if step.reluctant else range(q, p - 1, -1)
-                    for e_ in ends:
-                        r = rec(si + 1, e_ + 1, {**bindings, step.name: list(range(p, e_ + 1))}, fp)
-                        if r:
-                            return r
-                if step.contiguity == "strict":
-                    return None
-            return None
+            if took and not branch_pos:
+                break
+        if optional and not step.reluctant:
+            yield from rec(si + 1, pos, bindings, first_pos, neg_limit)
 
-        def _within_ok(first_pos: int | None, p: int) -> bool:
-            if pattern.within_seconds is None or first_pos is None or ts is None:
-                return True
-            return (ts[p] - ts[first_pos]) <= within_ns
-
-        return rec(0, start, {}, None)
+    if pattern.any_semantics:
+        found: dict[tuple, tuple[dict[str, list[int]], int, int]] = {}
+        for i in range(n):
+            if masks[0][i]:
+                for bindings, end in rec(0, i, {}, None):
+                    key = tuple(sorted((v, tuple(idx)) for v, idx in bindings.items()))
+                    found.setdefault(key, (bindings, i, end))
+        return pdf, [found[k] for k in sorted(found, key=lambda k: (*found[k][1:], k))]
 
     matches: list[tuple[dict[str, list[int]], int, int]] = []
     i = 0
     while i < n:
-        hit = try_at(i) if masks[0][i] else None
+        hit = next(rec(0, i, {}, None), None) if masks[0][i] else None
         if hit:
             bindings, end = hit
             matches.append((bindings, i, end))
@@ -502,141 +510,6 @@ def _scan_matches(
                 raise ValueError(f"unknown after-match strategy: {after_match}")
         else:
             i += 1
-    return pdf, matches
-
-
-def _has_any_semantics(pattern: Pattern) -> bool:
-    return any(s.contiguity == "any" or s.quantifier == "+c" for s in pattern.steps)
-
-
-def _scan_matches_all(
-    pdf: pd.DataFrame,
-    pattern: Pattern,
-    order_by: list[str],
-    time_col: str | None,
-    relaxed_cap: int | None = None,
-    combo_cap: int | None = None,
-) -> tuple[pd.DataFrame, list[tuple[dict[str, list[int]], int, int]]]:
-    """Enumerate-ALL scan for patterns with followedByAny / allowCombinations
-    (NFA.java's non-deterministic TAKE/PROCEED branching). Every alternative
-    binding is reported; deterministic steps still bind at their first viable
-    position (Flink's relaxed-vs-any distinction). Supported quantifier
-    subset: 1, ?, times(n), oneOrMore(consecutive), timesOrMore, +c."""
-    if any(s.negated for s in pattern.steps):
-        raise ValueError("negative steps with any-semantics are out of scope")
-    if any(s.bind_predicate is not None for s in pattern.steps):
-        raise ValueError("cross-variable DEFINE with any-semantics is out of scope")
-    if any(s.run_predicate is not None for s in pattern.steps):
-        raise ValueError("running-aggregate DEFINE with any-semantics is out of scope")
-    relaxed_cap = RELAXED_CANDIDATE_CAP if relaxed_cap is None else relaxed_cap
-    combo_cap = COMBINATION_ELEMS_CAP if combo_cap is None else combo_cap
-    pdf = _sorted_group(pdf, order_by)
-    n = len(pdf)
-    masks = [
-        (s.predicate(pdf).to_numpy() if s.predicate is not None else [True] * n)
-        for s in pattern.steps
-    ]
-    ts = pdf[time_col].astype("int64").to_numpy() if time_col else None  # ns ints: exact
-    within_ns = None if pattern.within_seconds is None else round(pattern.within_seconds * 1e9)
-
-    def within_ok(first_pos: int | None, p: int) -> bool:
-        if pattern.within_seconds is None or first_pos is None or ts is None:
-            return True
-        return (ts[p] - ts[first_pos]) <= within_ns
-
-    def rec(si: int, pos: int, first_pos: int | None) -> list[tuple[dict, int]]:
-        if si == len(pattern.steps):
-            return [({}, pos - 1)]
-        step, mask = pattern.steps[si], masks[si]
-        q = step.quantifier
-        if q == "?":  # optional: alternatives = take-one ∪ skip
-            outs = []
-            take = [p for p in ([pos] if step.contiguity == "strict" else range(pos, n)) if p < n and mask[p]]
-            if step.contiguity == "any":
-                take = _cap_candidates(take, relaxed_cap, "any-step optional")
-            for p in take[: None if step.contiguity == "any" else 1]:
-                fp = first_pos if first_pos is not None else p
-                if not within_ok(fp, p):
-                    break
-                outs.extend(
-                    ({step.name: [p], **b}, e) for b, e in rec(si + 1, p + 1, fp)
-                )
-            outs.extend(rec(si + 1, pos, first_pos))
-            return outs
-        if step.contiguity == "strict":
-            candidates = [pos] if pos < n and mask[pos] else []
-        else:
-            candidates = _cap_candidates(
-                [p for p in range(pos, n) if mask[p]],
-                relaxed_cap,
-                "any-step",
-            )
-        branching_pos = step.contiguity == "any"
-        outs: list[tuple[dict, int]] = []
-        for p in candidates:
-            fp = first_pos if first_pos is not None else p
-            if not within_ok(fp, p):
-                break
-            if q == "1":
-                elem_sets = [[p]]
-            elif q.startswith("n:"):
-                k = int(q[2:])
-                ok = p + k <= n and all(masks[si][p : p + k]) and within_ok(fp, p + k - 1)
-                elem_sets = [list(range(p, p + k))] if ok else []
-            elif q in ("+",) or q.startswith("r:"):
-                lo_q, hi_q = (1, 1 << 30) if q == "+" else (int(q[2:].split(":")[0]), int(q[2:].split(":")[1]))
-                end_q = p
-                while (
-                    end_q + 1 < n
-                    and end_q + 1 - p < hi_q
-                    and mask[end_q + 1]
-                    and within_ok(fp, end_q + 1)
-                ):
-                    end_q += 1
-                # greedy-first run lengths (all of them — downstream any-steps
-                # may only succeed from shorter runs)
-                elem_sets = [
-                    list(range(p, e + 1)) for e in range(end_q, p - 1, -1) if e - p + 1 >= lo_q
-                ]
-            elif q == "+c":
-                elems = _cap_candidates(
-                    [e for e in range(p, n) if mask[e] and within_ok(fp, e)],
-                    combo_cap,
-                    "allowCombinations",
-                )
-                rest = [e for e in elems if e != p]
-                elem_sets = []
-                for bits in range(1 << len(rest)):
-                    combo = [p] + [e for j, e in enumerate(rest) if bits >> j & 1]
-                    elem_sets.append(sorted(combo))
-            else:  # pragma: no cover — builder can't produce others here
-                raise ValueError(f"unsupported quantifier with any-semantics: {q}")
-            took = False
-            for es in elem_sets:
-                subs = rec(si + 1, es[-1] + 1, fp)
-                outs.extend(({step.name: es, **b}, e) for b, e in subs)
-                took = took or bool(subs)
-                if took and q != "+c" and not branching_pos:
-                    # deterministic loop: greedy-longest successful run only
-                    break
-            if took and not branching_pos:
-                break  # deterministic step: first viable position only
-        return outs
-
-    seen: set[tuple] = set()
-    matches: list[tuple[dict[str, list[int]], int, int]] = []
-    for i in range(n):
-        if not masks[0][i]:
-            continue
-        for bindings, end in rec(0, i, None):
-            key = tuple(sorted((v, tuple(idx)) for v, idx in bindings.items()))
-            if key in seen:
-                continue
-            seen.add(key)
-            matches.append((bindings, i, end))
-    matches.sort(
-        key=lambda m: (m[1], m[2], tuple(sorted((v, tuple(i)) for v, i in m[0].items())))
-    )
     return pdf, matches
 
 
@@ -690,15 +563,8 @@ def _scan_group(
     measures: dict[str, tuple[str, str, str]],
     partition_by: list[str],
     after_match: str = "past_last",
-    relaxed_cap: int | None = None,
-    combo_cap: int | None = None,
 ) -> pd.DataFrame:
-    if _has_any_semantics(pattern):
-        pdf, matches = _scan_matches_all(
-            pdf, pattern, order_by, time_col, relaxed_cap, combo_cap
-        )
-    else:
-        pdf, matches = _scan_matches(pdf, pattern, order_by, time_col, after_match)
+    pdf, matches = _scan_matches(pdf, pattern, order_by, time_col, after_match)
     out_rows = []
     for seq, (bindings, _start, _end) in enumerate(matches):
         row: dict = {c: pdf[c].iloc[0] for c in partition_by}
@@ -718,8 +584,6 @@ def match_recognize(
     output_schema: str,
     time_col: str | None = None,
     after_match: str = "past_last",
-    relaxed_cap: int | None = None,
-    combo_cap: int | None = None,
 ) -> DataFrame:
     """MATCH_RECOGNIZE over a batch DataFrame.
 
@@ -728,20 +592,18 @@ def match_recognize(
     after_match: "past_last" (SKIP PAST LAST ROW, the default), "next_row"
     (SKIP TO NEXT ROW), or "to_first:<VAR>" / "to_last:<VAR>" (SKIP TO
     FIRST/LAST <var>, resuming AT that row) — Flink
-    AfterMatchSkipStrategy.java:38-60.
-    relaxed_cap / combo_cap: per-call overrides of the enumerate-all scan's
-    branching caps (RELAXED_CANDIDATE_CAP / COMBINATION_ELEMS_CAP) — raise
-    them when dense alternatives legitimately exceed the defaults (a
-    truncation emits a RuntimeWarning); only consulted for patterns with
-    any-semantics (followedByAny / allowCombinations).
+    AfterMatchSkipStrategy.java:38-60. A pattern with any-semantics
+    (followedByAny / allowCombinations) reports every alternative match and
+    ignores the skip strategy; its branching is bounded by
+    RELAXED_CANDIDATE_CAP / COMBINATION_ELEMS_CAP (a truncation emits a
+    RuntimeWarning).
     """
     if pattern.steps and pattern.steps[0].negated:
         raise ValueError("pattern cannot start with a negative step")
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         return _scan_group(
-            pdf, pattern, order_by, time_col, measures, partition_by, after_match,
-            relaxed_cap, combo_cap,
+            pdf, pattern, order_by, time_col, measures, partition_by, after_match
         )
 
     # Explicit hash repartition on the key BEFORE the groupBy: the NFA stage

@@ -480,11 +480,12 @@ FROM pairs ORDER BY user_id, match_seq
     "(view, later purchase) combination per user, overlapping matches "
     "included — the non-deterministic TAKE/PROCEED branch of NFA.java the "
     "deterministic followedBy prunes. Oracle: the closed-form pair join. "
-    "Engine path: operators/cep.py _scan_matches_all — the enumerate-all "
-    "scan bounds worst-case branching at RELAXED_CANDIDATE_CAP (64) "
-    "alternatives per scan start (overridable per call) and emits a "
-    "RuntimeWarning if a candidate list is actually truncated; the oracle "
-    "is uncapped, so any divergence on denser data is loud, not silent.",
+    "Engine path: operators/cep.py _scan_matches — the one NFA scan "
+    "reports every alternative for an any-semantics pattern, bounds "
+    "worst-case branching at RELAXED_CANDIDATE_CAP (64) alternatives per "
+    "scan start and emits a RuntimeWarning if a candidate list is actually "
+    "truncated; the oracle is uncapped, so any divergence on denser data "
+    "is loud, not silent.",
 )
 def cep_followed_by_any(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prune to the NFA's columns before the Python boundary

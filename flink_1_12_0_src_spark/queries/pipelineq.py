@@ -5491,6 +5491,30 @@ FROM cm
 """.replace("{body}", "%s") % _quality_fit_cte_body()
 
 
+def confusion_from_cells(cells: DataFrame) -> DataFrame:
+    """The quality filter's confusion report from its (predicted, label, c)
+    count cells: one row of n_docs, tp, fp, fn, tn, accuracy, precision_,
+    recall_. Shared by the batch eval and its streaming twin, whose cells
+    are a streaming aggregate's final snapshot."""
+    def cell(predicted, label):
+        return F.sum(F.when(predicted & label, F.col("c")).otherwise(0))
+
+    pred, lab = F.col("predicted"), F.col("label")
+    tp, fp = cell(pred, lab), cell(pred, ~lab)
+    fn, tn = cell(~pred, lab), cell(~pred, ~lab)
+    n = F.sum("c")
+    return cells.groupBy().agg(
+        n.cast("bigint").alias("n_docs"),
+        tp.cast("bigint").alias("tp"),
+        fp.cast("bigint").alias("fp"),
+        fn.cast("bigint").alias("fn"),
+        tn.cast("bigint").alias("tn"),
+        F.round((tp + tn) / n.cast("double"), 6).alias("accuracy"),
+        F.round(tp / F.nullif(tp + fp, F.lit(0)).cast("double"), 6).alias("precision_"),
+        F.round(tp / F.nullif(tp + fn, F.lit(0)).cast("double"), 6).alias("recall_"),
+    )
+
+
 @register(
     "pipeline_quality_eval",
     oracle=QUALITY_EVAL_ORACLE,
@@ -5520,21 +5544,8 @@ def pipeline_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = logreg_score(labeled, w, "doc_id", "text", QF_NB).join(
         labeled.select("doc_id", "label"), "doc_id"
     )
-    tp = F.sum((F.col("predicted") & F.col("label")).cast("int"))
-    fp = F.sum((F.col("predicted") & ~F.col("label")).cast("int"))
-    fn = F.sum((~F.col("predicted") & F.col("label")).cast("int"))
-    tn = F.sum((~F.col("predicted") & ~F.col("label")).cast("int"))
-    n = F.count(F.lit(1))
-    return scored.groupBy().agg(
-        n.cast("bigint").alias("n_docs"),
-        tp.cast("bigint").alias("tp"),
-        fp.cast("bigint").alias("fp"),
-        fn.cast("bigint").alias("fn"),
-        tn.cast("bigint").alias("tn"),
-        F.round((tp + tn) / n.cast("double"), 6).alias("accuracy"),
-        F.round(tp / F.nullif(tp + fp, F.lit(0)).cast("double"), 6).alias("precision_"),
-        F.round(tp / F.nullif(tp + fn, F.lit(0)).cast("double"), 6).alias("recall_"),
-    )
+    cells = scored.groupBy("predicted", "label").agg(F.count(F.lit(1)).alias("c"))
+    return confusion_from_cells(cells)
 
 
 def _bpe_encode_oracle() -> str:

@@ -2838,6 +2838,7 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         QF_LR,
         QF_NB,
         QF_ROUNDS,
+        confusion_from_cells,
     )
     from flink_1_12_0_src_spark.streaming.source import documents_stream
 
@@ -2855,22 +2856,7 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         s_labeled, w, "doc_id", "text", QF_NB, keep=["label"]
     )
     cells = scored.groupBy("predicted", "label").agg(F.count(F.lit(1)).alias("c"))
-    snap = run_to_batch(cells, "complete")
-    tp = F.sum(F.when(F.col("predicted") & F.col("label"), F.col("c")).otherwise(0))
-    fp = F.sum(F.when(F.col("predicted") & ~F.col("label"), F.col("c")).otherwise(0))
-    fn = F.sum(F.when(~F.col("predicted") & F.col("label"), F.col("c")).otherwise(0))
-    tn = F.sum(F.when(~F.col("predicted") & ~F.col("label"), F.col("c")).otherwise(0))
-    n = F.sum("c")
-    return snap.groupBy().agg(
-        n.cast("bigint").alias("n_docs"),
-        tp.cast("bigint").alias("tp"),
-        fp.cast("bigint").alias("fp"),
-        fn.cast("bigint").alias("fn"),
-        tn.cast("bigint").alias("tn"),
-        F.round((tp + tn) / n.cast("double"), 6).alias("accuracy"),
-        F.round(tp / F.nullif(tp + fp, F.lit(0)).cast("double"), 6).alias("precision_"),
-        F.round(tp / F.nullif(tp + fn, F.lit(0)).cast("double"), 6).alias("recall_"),
-    )
+    return confusion_from_cells(run_to_batch(cells, "complete"))
 
 
 @register(

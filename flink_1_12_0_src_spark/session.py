@@ -24,6 +24,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """The driver heap for this host: 40% of physical memory in whole GiB,
+    at least 1g and at most 48g (6g on a 15 GiB host). A local-mode JVM
+    grows toward its -Xmx, so a heap near the host's size gets the process
+    OOM-killed in a long session."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, int(phys * 0.4) >> 30))}g"
+
+
 def get_spark(
     app_name: str = "flink_1_12_0_src_spark",
     cpus: int | None = None,
@@ -45,7 +54,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.sql.cbo.joinReorder.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # events.parquet stores TIMESTAMP(NANOS); Spark reads it as raw INT64 and
         # catalog.table() converts to micros (DuckDB truncates NS → µs identically).

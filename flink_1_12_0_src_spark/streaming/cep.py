@@ -82,10 +82,17 @@ def streaming_match_recognize(
     buffer_cols: col → 'long' | 'string' | 'ts' — the columns kept in keyed
     state (must cover order_by, time_col, predicate and measure inputs).
     measure_types: out_col → 'long' | 'string' — output measure types.
-    The input must carry ``withWatermark(time_col, delay)``.
+    The input must carry ``withWatermark(time_col, delay)``. Patterns with
+    any-semantics (``followed_by_any`` / ``allow_combinations``) raise: the
+    emitted prefix and the state trim assume one match per start row.
     """
     if pattern.within_seconds is None:
         raise ValueError("streaming match_recognize requires pattern.within()")
+    if pattern.any_semantics:
+        raise ValueError(
+            "streaming match_recognize does not support followed_by_any / "
+            "allow_combinations"
+        )
     if pattern.steps[0].quantifier == "?":
         raise ValueError("streaming pattern cannot start with an optional step")
     within_ns = int(pattern.within_seconds * 1_000_000_000)

@@ -191,7 +191,14 @@ def _quality_fit_one_round(spark, sf_dir):
 
 @_lazy
 def _quality_eval_standin(spark, sf_dir):
-    return _standin_score(spark, _labeled_docs(spark, sf_dir)).orderBy("doc_id")
+    from pyspark.sql import functions as F
+
+    from flink_1_12_0_src_spark.queries.pipelineq import confusion_from_cells
+
+    cells = _standin_scored(spark, sf_dir).groupBy("predicted", "label").agg(
+        F.count(F.lit(1)).alias("c")
+    )
+    return confusion_from_cells(cells)
 
 
 @_lazy
@@ -266,8 +273,9 @@ REDUCED = {
     # one round: the full plan is the 3^iters lineage blowup (510 scans)
     "embedding_pca_power": _pca_power_one_round,
     # stand-in weight relation: the registered form keeps the trainer's
-    # Scan ExistingRDD stubs even under lazy_plans() (the eval golden pins
-    # the scoring plan without its confusion-count tail)
+    # Scan ExistingRDD stubs even under lazy_plans(); each runs its
+    # registered tail (confusion_from_cells, roc_from_scored,
+    # calibration_from_scored) over the stand-in scores
     "pipeline_quality_eval": _quality_eval_standin,
     "pipeline_quality_roc": _quality_roc_standin,
     "pipeline_quality_calibration": _quality_calibration_standin,

@@ -222,7 +222,7 @@ def test_match_recognize_parser_last_is_null():
     assert [(s, e) for _b, s, e in matches] == [(0, 1)]  # second A has non-null
 
 
-def test_cep_relaxed_cap_warns_on_truncation():
+def test_cep_relaxed_step_cap_warns_on_truncation():
     import warnings
 
     import pandas as pd
@@ -247,7 +247,7 @@ def test_cep_bind_predicate_rejected_with_any_semantics():
     import pandas as pd
     import pytest as _pytest
 
-    from flink_1_12_0_src_spark.operators.cep import Pattern, _scan_matches_all
+    from flink_1_12_0_src_spark.operators.cep import Pattern, _scan_matches
 
     pattern = (
         Pattern.begin("A").where(lambda p: p.t == "a")
@@ -255,7 +255,7 @@ def test_cep_bind_predicate_rejected_with_any_semantics():
     )
     pdf = pd.DataFrame({"pos": range(2), "t": ["a", "b"]})
     with _pytest.raises(ValueError, match="any-semantics"):
-        _scan_matches_all(pdf, pattern, order_by=["pos"], time_col=None)
+        _scan_matches(pdf, pattern, order_by=["pos"], time_col=None)
 
 
 def test_gate_window_composition():

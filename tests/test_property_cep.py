@@ -103,14 +103,12 @@ def test_followed_by_any_enumerates_all_alternatives(seq: str):
     """followedByAny (Pattern.followedByAny:214): A followedByAny B over a
     symbol sequence must produce exactly every (a-position, later b-position)
     pair — the closed-form alternative set, independently enumerable."""
-    from flink_1_12_0_src_spark.operators.cep import _scan_matches_all
-
     pattern = (
         Pattern.begin("x").where(lambda p: p.t == "a")
         .followed_by_any("y").where(lambda p: p.t == "b")
     )
     pdf = pd.DataFrame({"pos": range(len(seq)), "t": list(seq)})
-    _, matches = _scan_matches_all(pdf, pattern, order_by=["pos"], time_col=None)
+    _, matches = _scan_matches(pdf, pattern, order_by=["pos"], time_col=None)
     got = sorted((b["x"][0], b["y"][0]) for b, _s, _e in matches)
     expected = sorted(
         (i, j)
@@ -130,14 +128,12 @@ def test_allow_combinations_enumerates_subsets(seq: str):
     later a-rows that includes p."""
     from itertools import combinations
 
-    from flink_1_12_0_src_spark.operators.cep import _scan_matches_all
-
     pattern = (
         Pattern.begin("x").where(lambda p: p.t == "a")
         .one_or_more().allow_combinations()
     )
     pdf = pd.DataFrame({"pos": range(len(seq)), "t": list(seq)})
-    _, matches = _scan_matches_all(pdf, pattern, order_by=["pos"], time_col=None)
+    _, matches = _scan_matches(pdf, pattern, order_by=["pos"], time_col=None)
     got = sorted(tuple(b["x"]) for b, _s, _e in matches)
     a_pos = [i for i, c in enumerate(seq) if c == "a"]
     expected = sorted(
@@ -145,6 +141,30 @@ def test_allow_combinations_enumerates_subsets(seq: str):
         for idx, p in enumerate(a_pos)
         for r in range(len(a_pos) - idx)
         for combo in combinations(a_pos[idx + 1 :], r)
+    )
+    assert got == expected, f"seq={seq!r}"
+
+
+@settings(max_examples=200, deadline=None)
+@given(seq=st.text(alphabet="abc", min_size=0, max_size=16))
+def test_followed_by_any_then_next_enumerates_triples(seq: str):
+    """A mixed pattern, A followedByAny B next C: the any-step branches over
+    every later b while the strict step after it binds the one row that
+    follows — closed form: every (a, b, c) with b > a and c at b + 1."""
+    pattern = (
+        Pattern.begin("x").where(lambda p: p.t == "a")
+        .followed_by_any("y").where(lambda p: p.t == "b")
+        .next("z").where(lambda p: p.t == "c")
+    )
+    pdf = pd.DataFrame({"pos": range(len(seq)), "t": list(seq)})
+    _, matches = _scan_matches(pdf, pattern, order_by=["pos"], time_col=None)
+    got = sorted((b["x"][0], b["y"][0], b["z"][0]) for b, _s, _e in matches)
+    expected = sorted(
+        (i, j, j + 1)
+        for i, ci in enumerate(seq)
+        if ci == "a"
+        for j, cj in enumerate(seq[:-1])
+        if cj == "b" and j > i and seq[j + 1] == "c"
     )
     assert got == expected, f"seq={seq!r}"
 
@@ -402,27 +422,22 @@ def test_running_aggregate_define_matches_reference(vals: list[int]):
     assert got == _reference_agg_scan(vals, bound, max_run)
 
 
-def test_any_scan_cap_override_reaches_scan(spark):
-    """The per-call cap override must actually change enumerate-all results
-    (a cap of 1 truncates the alternatives the default cap keeps)."""
-    import warnings
+def test_any_scan_cap_override_reaches_scan(monkeypatch):
+    """The module cap is the scan's only branching bound: lowering
+    RELAXED_CANDIDATE_CAP to 1 truncates the followedByAny alternatives the
+    default cap keeps, and the truncation warns."""
+    import pytest
 
-    from flink_1_12_0_src_spark.operators.cep import Pattern, match_recognize
+    from flink_1_12_0_src_spark.operators import cep
 
-    rows = [(1, i, "a" if i == 0 else "b") for i in range(6)]
-    df = spark.createDataFrame(rows, "k bigint, pos bigint, t string")
+    pdf = pd.DataFrame({"pos": range(6), "t": ["a"] + ["b"] * 5})
     pat = (
         Pattern.begin("A").where(lambda p: p.t == "a")
         .followed_by_any("B").where(lambda p: p.t == "b")
     )
-    kwargs = dict(
-        partition_by=["k"], order_by=["pos"], pattern=pat,
-        measures={"b_pos": ("B", "first", "pos")},
-        output_schema="k bigint, match_seq long, b_pos bigint",
-    )
-    full = match_recognize(df, **kwargs).count()
-    assert full == 5  # every b is an alternative
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", RuntimeWarning)
-        capped = match_recognize(df, relaxed_cap=1, **kwargs).count()
-    assert capped == 1
+    _, full = _scan_matches(pdf, pat, order_by=["pos"], time_col=None)
+    assert len(full) == 5  # every b is an alternative
+    monkeypatch.setattr(cep, "RELAXED_CANDIDATE_CAP", 1)
+    with pytest.warns(RuntimeWarning, match="truncated"):
+        _, capped = _scan_matches(pdf, pat, order_by=["pos"], time_col=None)
+    assert len(capped) == 1

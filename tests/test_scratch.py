@@ -1,6 +1,7 @@
 """Streaming scratch-dir lifecycle: tmpfs free-space bound and
 end-of-process cleanup (streaming/run.py scratch_dir), and the pruning of
-stale staged-cache roots (streaming/source.py).
+stale staged-cache roots (streaming/source.py), plus the host-sized
+driver heap (session.py).
 
 Each test removes only the dirs it allocated: the global cleanup would also
 delete dirs that DataFrames built earlier in the session still read lazily.
@@ -13,6 +14,7 @@ import os
 import shutil
 import tempfile
 
+from flink_1_12_0_src_spark import session
 from flink_1_12_0_src_spark.streaming import run as srun, source
 
 
@@ -69,6 +71,26 @@ def test_min_free_bound_falls_back_on_malformed_env(monkeypatch):
     assert srun._min_free_bytes() == 1048576
     monkeypatch.delenv("SPARK_GRAFT_SCRATCH_MIN_FREE")
     assert srun._min_free_bytes() == 4 * 1024**3
+
+
+def test_driver_heap_follows_physical_memory(monkeypatch):
+    """The default heap is 40% of physical memory in whole GiB, clamped to
+    1g..48g, so a 15 GiB host gets 6g and big hosts keep 48g."""
+    page = 4096
+
+    def heap_for(gib: float) -> str:
+        pages = int(gib * 2**30) // page
+        monkeypatch.setattr(
+            session.os, "sysconf",
+            lambda name: {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": pages}[name],
+        )
+        return session._default_driver_memory()
+
+    assert heap_for(15.7) == "6g"
+    assert heap_for(32) == "12g"
+    assert heap_for(2) == "1g"  # 0.8 GiB rounds down to 0, floor is 1g
+    assert heap_for(120) == "48g"
+    assert heap_for(1024) == "48g"
 
 
 def test_upsert_query_table_is_cleaned_scratch(spark, sf_dir):

@@ -115,6 +115,32 @@ def test_streaming_cep_defers_unfinalized(spark, tmp_path):
     assert rows == [(1, 0, 10, 11)]
 
 
+@pytest.mark.parametrize("branching", ["followed_by_any", "allow_combinations"])
+def test_streaming_cep_rejects_any_semantics(spark, tmp_path, branching):
+    """The operator emits a finalized prefix and trims state assuming one
+    match per start row, so a pattern that reports every alternative must
+    be refused up front rather than run with the wrong semantics."""
+    s = _mk_events(spark, tmp_path, [[(1, 0, 10, "view")]]).withWatermark(
+        "ts", "10 minutes"
+    )
+    pat = Pattern.begin("v").where(lambda p: p.event_type == "view")
+    if branching == "followed_by_any":
+        pat = pat.followed_by_any("c").where(lambda p: p.event_type == "click")
+    else:
+        pat = pat.one_or_more().allow_combinations()
+    with pytest.raises(ValueError, match="followed_by_any / allow_combinations"):
+        streaming_match_recognize(
+            s,
+            key="user_id",
+            order_by=["ts", "event_id"],
+            pattern=pat.within(3600.0),
+            measures={"view_id": ("v", "last", "event_id")},
+            measure_types={"view_id": "long"},
+            time_col="ts",
+            buffer_cols={"ts": "ts", "event_id": "long", "event_type": "string"},
+        )
+
+
 def test_cep_state_survives_drain_then_refill(spark, tmp_path):
     """Same drain-then-refill hazard as _wm_buffered (typed state restore):
     a key whose CEP buffer fully drains (all rows consumed by matches) and

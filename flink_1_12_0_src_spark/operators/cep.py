@@ -65,6 +65,10 @@ from pyspark.sql import DataFrame
 RELAXED_CANDIDATE_CAP = 64
 COMBINATION_ELEMS_CAP = 12
 
+# Longest run an unbounded loop quantifier (``one_or_more``, ``times_or_more``)
+# may bind: larger than any per-key group.
+_UNBOUNDED = 1 << 30
+
 
 def _cap_candidates(cands: list[int], cap: int, what: str) -> list[int]:
     if len(cands) > cap:
@@ -203,8 +207,13 @@ class Pattern:
     def until(self, predicate: Callable[[pd.DataFrame], pd.Series]) -> "Pattern":
         """Stop condition for a loop step (Pattern.until:451): the loop stops
         absorbing rows at the first row matching ``predicate`` (that row is
-        not part of the loop binding)."""
-        self.steps[-1].until_predicate = predicate
+        not part of the loop binding). Like Flink, raises ValueError unless
+        the current step loops (``one_or_more``, ``allow_combinations``,
+        ``times_or_more``); ``times(n, m)`` is bounded, so it does not."""
+        step = self.steps[-1]
+        if step.quantifier not in ("*+", "+c") and _run_bounds(step.quantifier)[1] < _UNBOUNDED:
+            raise ValueError(f"until() applies only to a looping step, not {step.name!r}")
+        step.until_predicate = predicate
         return self
 
     def times(self, n: int, to: int | None = None) -> "Pattern":
@@ -215,7 +224,7 @@ class Pattern:
 
     def times_or_more(self, n: int) -> "Pattern":
         """At least n consecutive, greedy (Pattern.timesOrMore:392)."""
-        self.steps[-1].quantifier = f"r:{n}:{1 << 30}"
+        self.steps[-1].quantifier = f"r:{n}:{_UNBOUNDED}"
         return self
 
     def optional(self) -> "Pattern":
@@ -279,7 +288,7 @@ def _run_bounds(quantifier: str) -> tuple[int, int]:
     if quantifier in ("1", "?"):
         return 1, 1
     if quantifier == "+":
-        return 1, 1 << 30
+        return 1, _UNBOUNDED
     lo, _, hi = quantifier[2:].partition(":")
     return int(lo), int(hi or lo)
 

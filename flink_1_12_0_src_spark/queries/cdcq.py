@@ -220,9 +220,10 @@ ORDER BY user_id, epoch, kind
     doc="Retraction-stream OUTPUT (Table.toRetractStream; RowKind.java:35-58 "
     "+I/-U/+U as emitted by StreamExecGroupAggregate/GroupAggFunction.java"
     ":141-209): an unbounded per-user COUNT over the calendar-week replay, "
-    "every refinement materialized as retract-old/emit-new changelog rows by "
-    "per-(key, stage) state folds inside foreachBatch (streaming/upsert.py "
-    "run_changelog_count); epoch is the replay's data-borne week stage, so "
+    "every refinement materialized as retract-old/emit-new changelog rows "
+    "from per-(key, stage) counts held by Spark's complete-mode streaming "
+    "aggregate (streaming/upsert.py run_changelog_count); epoch is the "
+    "replay's data-borne week stage, so "
     "the trace is invariant to micro-batch delivery order. Oracle: weekly "
     "cumulative counts exploded into the same +I/-U/+U rows.",
 )
@@ -307,10 +308,10 @@ ORDER BY o_orderstatus
     doc="RowKind DELETE round trip, consume side (GroupAggFunction.java:"
     "141-209 retract() path): a full +I/-U/+U/-D changelog over orders "
     "(insert all; retract-then-update prices for keys %5=0; delete keys "
-    "%7=0) feeds a downstream SUM/COUNT per o_orderstatus. Each micro-batch "
-    "reduces to signed per-group deltas map-side and merges into per-group "
-    "accumulator state (streaming/upsert.py run_changelog_sum_agg) — "
-    "retractions subtract, deletes decrement, history is never rescanned. "
+    "%7=0) feeds a downstream SUM/COUNT per o_orderstatus. Spark's "
+    "complete-mode streaming aggregate holds the signed per-group sums "
+    "(streaming/upsert.py run_changelog_sum_agg) — retractions subtract, "
+    "deletes decrement, history is never rescanned. "
     "Final state ≡ one-shot aggregate over the post-changelog image.",
 )
 def cdc_consume_changelog_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1092,8 +1092,8 @@ SELECT window_day, cnt FROM c1 ORDER BY window_day, cnt
     "event_id % 4 (streaming.source.events_stream_mod) so every 1-day window "
     "is touched by every batch and the k-th refinement equals the count over "
     "residues ≤ k — the trace is closed-form in SQL. The trace is "
-    "reconstructed from per-(window, stage) delta counts folded in "
-    "foreachBatch and cumulated in data-borne stage order, so it is "
+    "reconstructed from the per-(window, stage) counts of a complete-mode "
+    "streaming aggregate, cumulated in data-borne stage order, so it is "
     "invariant to micro-batch delivery order (the round-3 driver red was an "
     "order scramble); tests pin its equivalence to Spark's raw update-mode "
     "memory-sink trace under in-order delivery. The window key is the UTC "

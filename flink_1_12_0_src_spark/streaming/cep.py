@@ -45,7 +45,6 @@ from pyspark.sql.types import (
     ArrayType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
@@ -56,14 +55,7 @@ from flink_1_12_0_src_spark.operators.cep import (
     _sorted_group,
     _scan_matches,
 )
-
-_COL_TYPES = {"long": LongType(), "string": StringType(), "ts": LongType()}
-# pandas dtypes for the state round trip: a drained key stores EMPTY lists,
-# and an untyped pd.DataFrame({c: []}) would default to float64 — whose
-# concat with live int64 data upcasts the nanosecond timestamps to float,
-# which the LongType state array then nulls on write (same hazard fixed in
-# streaming/stateful.py _wm_buffered)
-_PD_COL_DTYPES = {"long": "int64", "string": "object", "ts": "int64"}
+from flink_1_12_0_src_spark.streaming.stateful import _ENC_TYPES, _PD_DTYPES
 
 
 def streaming_match_recognize(
@@ -106,11 +98,11 @@ def streaming_match_recognize(
             StructField(key, key_field.dataType),
             StructField("match_seq", IntegerType()),
         ]
-        + [StructField(c, _COL_TYPES[measure_types[c]]) for c in measures]
+        + [StructField(c, _ENC_TYPES[measure_types[c]]) for c in measures]
     )
     state_schema = StructType(
         [StructField("seq", LongType())]
-        + [StructField(c, ArrayType(_COL_TYPES[t])) for c, t in buffer_cols.items()]
+        + [StructField(c, ArrayType(_ENC_TYPES[t])) for c, t in buffer_cols.items()]
     )
 
     def _encode(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -132,7 +124,7 @@ def streaming_match_recognize(
         if stored:
             restored = pd.DataFrame(
                 {
-                    c: pd.Series(list(v), dtype=_PD_COL_DTYPES[t])
+                    c: pd.Series(list(v), dtype=_PD_DTYPES[t])
                     for (c, t), v in zip(buffer_cols.items(), stored[1:])
                 }
             )
@@ -146,7 +138,7 @@ def streaming_match_recognize(
             pd.concat(parts, ignore_index=True)
             if parts
             else pd.DataFrame(
-                {c: pd.Series(dtype=_PD_COL_DTYPES[t]) for c, t in buffer_cols.items()}
+                {c: pd.Series(dtype=_PD_DTYPES[t]) for c, t in buffer_cols.items()}
             )
         )
         buf = _sorted_group(buf, order_by) if len(buf) else buf

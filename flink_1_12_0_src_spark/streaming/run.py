@@ -19,6 +19,14 @@ from pyspark.sql.streaming import DataStreamWriter
 # Bound on one replay's wall time (seconds), shared by every runner.
 _TIMEOUT_S = 300
 
+# The replays' data-borne epoch column: a slice's chronological index
+# (streaming/source.py), which the emission traces order refinements by.
+_STAGE_COL = "stage"
+
+# Event-time column and tumbling-window width of the early-fire trace.
+_TIME_COL = "ts"
+_DAY_US = 86_400_000_000
+
 # RAM-backed scratch root for the EPHEMERAL per-run streaming artifacts
 # (checkpoint/commit logs, feedback + side-output directories): every
 # replay-to-batch harness run completes inside one call and the dirs are
@@ -324,55 +332,37 @@ def run_stream_iterate(seed_df: DataFrame, split_fn) -> DataFrame:
     return spark.read.parquet(out_dir)
 
 
-def run_early_fire_trace(
-    stream_df: DataFrame,
-    time_col: str = "ts",
-    window_us: int = 86_400_000_000,
-    stage_col: str = "stage",
-) -> DataFrame:
+def run_early_fire_trace(stream_df: DataFrame) -> DataFrame:
     """Early-fire EMISSION TRACE of an update-mode tumbling-window count
     (Flink WindowEmitStrategy early-fire — WindowEmitStrategy.scala:32,
     154-204): every micro-batch that touches a window re-emits the window's
     refined count, and the returned DataFrame is the full refinement trace
     (window_day, cnt) — one row per (window, refinement).
 
-    The window key is ``unix_micros(time_col) DIV window_us`` — pure integer
-    epoch arithmetic, so the bucket boundaries cannot depend on the session
-    time zone or any calendar semantics (``F.window('1 day')`` buckets by
-    session-TZ midnight, which a non-UTC driver session shifts while keeping
-    row counts identical — the r03/r05 driver-red signature).
+    The window key is ``unix_micros(ts) DIV 86400e6`` (the UTC epoch day) —
+    pure integer epoch arithmetic, so the bucket boundaries cannot depend on
+    the session time zone or any calendar semantics (``F.window('1 day')``
+    buckets by session-TZ midnight, which a non-UTC driver session shifts
+    while keeping row counts identical — the r03/r05 driver-red signature).
 
-    Delivery-order invariance: per-(window, stage) delta counts are folded
-    in ``foreachBatch`` (the streaming state), and the trace is cumulated in
-    DATA-borne ``stage_col`` order at end-of-stream — the refinements Flink
-    would emit under in-order delivery, regardless of how the file source
-    interleaves slices. ``tests/test_emission_order.py`` pins equivalence to
-    Spark's raw update-mode memory-sink trace under in-order delivery.
+    Delivery-order invariance: Spark's complete-mode streaming aggregate
+    holds the per-(window, ``stage``) counts in its state store, and the
+    trace is cumulated over them in DATA-borne ``stage`` order at
+    end-of-stream — the refinements Flink would emit under in-order
+    delivery, regardless of how the file source interleaves slices.
+    ``tests/test_emission_order.py`` pins equivalence to Spark's raw
+    update-mode memory-sink trace under in-order delivery.
     """
     from pyspark.sql.window import Window as W
 
-    spark: SparkSession = stream_df.sparkSession
-    root = scratch_dir(prefix="earlyfire_")
-
-    def fb(bdf: DataFrame, _eid: int) -> None:
-        (
-            bdf.groupBy(
-                F.expr(f"unix_micros({time_col}) DIV {window_us}").alias("window_day"),
-                stage_col,
-            )
-            .agg(F.count("*").alias("d"))
-            .write.mode("append")
-            .parquet(root)
-        )
-
-    _drive(stream_df.writeStream.foreachBatch(fb))
-    deltas = (
-        spark.read.parquet(root)
-        .groupBy("window_day", stage_col)
-        .agg(F.sum("d").alias("d"))
+    counts = run_to_batch(
+        stream_df.groupBy(
+            F.expr(f"unix_micros({_TIME_COL}) DIV {_DAY_US}").alias("window_day"),
+            _STAGE_COL,
+        ).count()
     )
-    return deltas.withColumn(
-        "cnt", F.sum("d").over(W.partitionBy("window_day").orderBy(stage_col))
+    return counts.withColumn(
+        "cnt", F.sum("count").over(W.partitionBy("window_day").orderBy(_STAGE_COL))
     ).select("window_day", "cnt")
 
 

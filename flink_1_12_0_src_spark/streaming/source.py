@@ -15,8 +15,9 @@ listing variance in a foreign environment can reorder micro-batches (the
 round-3 driver red on the emission-trace queries). The week and residue
 replays therefore also carry a literal ``stage`` column (the slice's
 chronological index) so order-sensitive operators can derive their epoch
-from the DATA instead of the trigger index; see ``run_changelog_count`` and
-the changelog joins.
+from the DATA instead of the trigger index; see ``run_changelog_count``
+(streaming/upsert.py), ``run_early_fire_trace`` and the changelog joins
+(streaming/run.py).
 
 Staging is crash-safe: the ``_STAGED`` marker is written only after the
 mtime ordering is applied, so an interrupted staging run is re-done from

@@ -1,8 +1,14 @@
-"""foreachBatch changelog MERGE — retraction *consumption* (SURVEY.md §2.4:
-Flink's StreamExecGroupAggregate consumes -U/+U/-D rows from CDC sources;
-Spark has no retraction-consuming operator, and the documented mapping is
-"materialize per micro-batch via foreachBatch + MERGE". This module is that
-mapping, concretely.)
+"""Changelog state on Spark — retraction *consumption* and *emission*
+(SURVEY.md §2.4: Flink's StreamExecGroupAggregate consumes and emits
+-U/+U/-D rows; Spark has no retraction-aware operator). PAPER.md §1.1 gives
+two mappings, and this module uses each where it fits:
+
+- ``run_changelog_count`` and ``run_changelog_sum_agg`` only sum counts (or
+  signed amounts) per key, so Spark's own complete-mode streaming aggregate
+  holds their state; the changelog is derived from its final snapshot.
+- ``UpsertSink`` / ``run_changelog_upsert`` keep the latest row per key by
+  version, which no built-in operator does, so they materialize each
+  micro-batch with ``foreachBatch`` + MERGE:
 
 Per micro-batch of changelog rows (+I / +U / -D with a version column):
   1. collapse the batch itself to one final row per key (last by version);
@@ -33,7 +39,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_1_12_0_src_spark.streaming.run import _drive, _touched_buckets, scratch_dir
+from flink_1_12_0_src_spark.streaming.run import (
+    _STAGE_COL,
+    _drive,
+    _touched_buckets,
+    run_to_batch,
+)
+
+# The changelog kind column (+I / -U / +U / -D) run_changelog_sum_agg reads.
+_ROWKIND_COL = "rowkind"
 
 
 class UpsertSink:
@@ -165,22 +179,17 @@ def run_changelog_upsert(
     return sink.snapshot(stream_df.sparkSession)
 
 
-def run_changelog_count(
-    stream_df,
-    key: str,
-    stage_col: str = "stage",
-    having_below: int | None = None,
-):
+def run_changelog_count(stream_df: DataFrame, key: str, having_below: int | None = None) -> DataFrame:
     """Retraction-stream OUTPUT — Flink Table.toRetractStream / the changelog
     a StreamExecGroupAggregate emits (RowKind.java:35-58, GroupAggFunction
     .java:141-209): an unbounded per-key COUNT whose every refinement is
     materialized as +I (first value) or -U/+U (retract old, emit new) rows.
 
     Spark exposes no retraction rows, so the changelog is reconstructed from
-    streaming state: each micro-batch folds its per-(key, stage) delta counts
-    into a maintained snapshot inside ``foreachBatch`` (bounded to one row
-    per key×stage — the accumulator state of the reference operator, split
-    by the replay's data-borne ``stage`` column), and at end-of-stream the
+    streaming state: a complete-mode ``groupBy(key, stage).count()`` keeps
+    the per-(key, stage) counts in Spark's state store (one row per
+    key×stage — the accumulator state of the reference operator, split by
+    the replay's data-borne ``stage`` column), and at end-of-stream the
     per-stage cumulative counts are exploded into the +I/-U/+U rows Flink
     would have emitted under in-order delivery. Labeling and ordering come
     from the DATA (``epoch`` = stage), never the trigger index, so the trace
@@ -200,36 +209,12 @@ def run_changelog_count(
     """
     from pyspark.sql.window import Window
 
-    spark = stream_df.sparkSession
-    root = scratch_dir(prefix="chlog_")
-    state = {"snap": None, "ver": 0}
-
-    def fb(bdf, _eid) -> None:
-        delta = bdf.groupBy(key, stage_col).agg(F.count("*").alias("d"))
-        if state["snap"] is not None:
-            prev = spark.read.parquet(state["snap"])
-            delta = (
-                prev.unionByName(delta)
-                .groupBy(key, stage_col)
-                .agg(F.sum("d").alias("d"))
-            )
-        nxt = os.path.join(root, f"snap_{state['ver']}")
-        delta.write.mode("overwrite").parquet(nxt)
-        state["snap"] = nxt
-        state["ver"] += 1
-
-    _drive(stream_df.writeStream.foreachBatch(fb))
-    if state["snap"] is None:
-        empty = spark.createDataFrame(
-            [], f"`{key}` string, epoch int, kind string, cnt bigint"
-        )
-        return empty
-    snap = spark.read.parquet(state["snap"])
-    w = Window.partitionBy(key).orderBy(stage_col)
+    counts = run_to_batch(stream_df.groupBy(key, _STAGE_COL).count())
+    w = Window.partitionBy(key).orderBy(_STAGE_COL)
     c = (
-        snap.withColumn("cnt", F.sum("d").over(w))
+        counts.withColumn("cnt", F.sum("count").over(w))
         .withColumn("prev", F.lag("cnt").over(w))
-        .withColumnRenamed(stage_col, "epoch")
+        .withColumnRenamed(_STAGE_COL, "epoch")
     )
     if having_below is not None:
         qual_old = (F.col("prev") > 0) & (F.col("prev") < having_below)
@@ -255,86 +240,36 @@ def run_changelog_count(
     return out
 
 
-def run_changelog_sum_agg(
-    stream_df: DataFrame,
-    group_col: str,
-    amount_col: str,
-    rowkind_col: str = "rowkind",
-) -> DataFrame:
+def run_changelog_sum_agg(stream_df: DataFrame, group_col: str, amount_col: str) -> DataFrame:
     """Retraction-stream CONSUMPTION into a downstream aggregate — the
     retract() path of Flink's GroupAggFunction (GroupAggFunction.java:141-209
     calls ``function.retract(input)`` for -U/-D rows; RowKind.java:35-58):
-    a full +I/-U/+U/-D changelog feeds SUM/COUNT accumulators per group,
-    where accumulate applies +amount/+1 and retract applies -amount/-1.
+    a full +I/-U/+U/-D changelog (kind in the ``rowkind`` column) feeds
+    SUM/COUNT accumulators per group, where accumulate applies +amount/+1
+    and retract applies -amount/-1.
 
-    Spark has no retraction-consuming operator, so each micro-batch is
-    reduced map-side to signed per-group deltas (one partial-aggregated
-    shuffle of at most |groups| rows) and merged into the maintained
-    accumulator state via a keyed full-outer join — never rescanning
-    history. Groups whose count reaches 0 are dropped, mirroring the
-    reference's state cleanup when ``recordCounter`` hits zero
-    (GroupAggFunction.java:178-196).
+    Spark has no retraction-consuming operator, but the signed accumulators
+    are plain sums: a complete-mode ``groupBy(group).agg(sum(sign),
+    sum(sign * amount))`` keeps them in Spark's state store, one row per
+    group, and each micro-batch only adds its partial aggregate — history is
+    never rescanned. Groups whose count is not positive are dropped at the
+    end, mirroring the reference's state cleanup when ``recordCounter`` hits
+    zero (GroupAggFunction.java:178-196). The cut runs once, on the final
+    sums, so a retraction delivered before its insert cannot drop a group
+    early and the result is delivery-order invariant.
 
     Amounts must be exact (DECIMAL) — incremental adds of decimals are
     order-independent, so the final state is bit-equal to a one-shot
-    aggregate. Scale: state = one row per group; the per-trigger merge is a
-    broadcast join of the (small) delta against it.
+    aggregate.
 
     Returns the final (group, cnt, total) snapshot with total as DOUBLE.
     """
-    spark = stream_df.sparkSession
-    sign = F.when(F.col(rowkind_col).isin("+I", "+U"), F.lit(1)).otherwise(F.lit(-1))
-    state = {"snap": None}
-
-    def fb(bdf: DataFrame, _eid: int) -> None:
-        delta = bdf.groupBy(group_col).agg(
-            F.sum(sign * F.col(amount_col)).alias("d_total"),
-            F.sum(sign).alias("d_cnt"),
+    sign = F.when(F.col(_ROWKIND_COL).isin("+I", "+U"), F.lit(1)).otherwise(F.lit(-1))
+    sums = run_to_batch(
+        stream_df.groupBy(group_col).agg(
+            F.sum(sign).alias("cnt"), F.sum(sign * F.col(amount_col)).alias("total")
         )
-        if state["snap"] is not None:
-            prev = spark.read.parquet(state["snap"])
-        else:
-            prev = delta.select(
-                F.col(group_col),
-                F.col("d_cnt").alias("cnt"),
-                F.col("d_total").alias("total"),
-            ).limit(0)
-        merged = (
-            prev.join(delta, group_col, "full_outer")
-            .select(
-                group_col,
-                (F.coalesce("cnt", F.lit(0)) + F.coalesce("d_cnt", F.lit(0))).alias("cnt"),
-                (
-                    F.coalesce(F.col("total"), F.lit(0).cast("decimal(18,2)"))
-                    + F.coalesce(F.col("d_total"), F.lit(0).cast("decimal(18,2)"))
-                )
-                .cast("decimal(18,2)")  # pin scale so the snapshot schema is stable across triggers
-                .alias("total"),
-            )
-            # state cleanup when the record counter cancels to zero
-            # (GroupAggFunction.java:178-196) — kept as != 0, not > 0, so a
-            # retraction delivered before its insert holds a negative
-            # counter instead of being dropped; the merged state is then a
-            # commutative sum and the FINAL snapshot is delivery-order
-            # invariant (the > 0 cut happens once, below)
-            .filter(F.col("cnt") != 0)
-        )
-        nxt = scratch_dir(prefix="aggstate_")
-        merged.write.mode("overwrite").parquet(nxt)
-        state["snap"] = nxt
-
-    _drive(stream_df.writeStream.foreachBatch(fb))
-    if state["snap"] is None:
-        raise RuntimeError(
-            "run_changelog_sum_agg: every micro-batch was empty — no "
-            "accumulator state exists to snapshot"
-        )
-    return (
-        spark.read.parquet(state["snap"])
-        .filter(F.col("cnt") > 0)
-        .select(
-            group_col,
-            F.col("cnt").cast("bigint").alias("cnt"),
-            F.col("total").cast("double").alias("total"),
-        )
+    )
+    return sums.filter(F.col("cnt") > 0).select(
+        group_col, "cnt", F.col("total").cast("double").alias("total")
     )

@@ -11,9 +11,11 @@ to the hardest operator family (§2.9).
 
 from __future__ import annotations
 
+import itertools
 import re
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from flink_1_12_0_src_spark.operators.cep import Pattern, _scan_matches
@@ -441,3 +443,104 @@ def test_any_scan_cap_override_reaches_scan(monkeypatch):
     with pytest.warns(RuntimeWarning, match="truncated"):
         _, capped = _scan_matches(pdf, pat, order_by=["pos"], time_col=None)
     assert len(capped) == 1
+
+
+@pytest.mark.parametrize(
+    "quantify, loops",
+    [
+        (lambda p: p, False),
+        (lambda p: p.optional(), False),
+        (lambda p: p.times(2), False),
+        (lambda p: p.times(1, 3), False),
+        (lambda p: p.one_or_more(), True),
+        (lambda p: p.one_or_more(consecutive=False), True),
+        (lambda p: p.one_or_more().allow_combinations(), True),
+        (lambda p: p.times_or_more(2), True),
+    ],
+    ids=[
+        "exactly_one", "optional", "times_n", "times_n_m",
+        "one_or_more", "relaxed_loop", "allow_combinations", "times_or_more",
+    ],
+)
+def test_until_requires_a_looping_step(quantify, loops):
+    """Pattern.until (Pattern.java:451) throws unless the current step loops;
+    Flink counts times(n, m) as bounded, not looping."""
+    pat = quantify(Pattern.begin("x").where(lambda p: p.t == "a"))
+    if loops:
+        assert pat.until(lambda p: p.t == "c").steps[-1].until_predicate is not None
+    else:
+        with pytest.raises(ValueError, match="looping"):
+            pat.until(lambda p: p.t == "c")
+
+
+# -- cep_funnel's strict V C P WITHIN 1h vs its lead()-window oracle ---------
+
+_FUNNEL_TYPES = ["view", "click", "purchase", "other"]
+# second gaps around the 1 h bound: a purchase 3600 s after its view matches
+# (the oracle's ``<=``), one at 3601 s does not
+_FUNNEL_GAPS = [0, 1, 1799, 1800, 3599, 3600, 3601]
+
+
+def _funnel_pattern():
+    return (
+        Pattern.begin("v").where(lambda p: p.event_type == "view")
+        .next("c").where(lambda p: p.event_type == "click")
+        .next("p").where(lambda p: p.event_type == "purchase")
+        .within(3600.0)
+    )
+
+
+def _funnel_frame(types, offsets_s, ids):
+    base = pd.Timestamp("2024-01-01")
+    return pd.DataFrame(
+        {
+            "event_id": ids,
+            "ts": [base + pd.Timedelta(seconds=s) for s in offsets_s],
+            "event_type": types,
+        }
+    )
+
+
+def _funnel_nfa(pdf):
+    ordered, matches = _scan_matches(pdf, _funnel_pattern(), ["ts", "event_id"], "ts")
+    ids = ordered["event_id"].tolist()
+    return [tuple(ids[b[v][0]] for v in ("v", "c", "p")) for b, _s, _e in matches]
+
+
+def _funnel_reference(pdf):
+    """The cep_funnel oracle in Python: over rows ordered by (ts, event_id),
+    every view whose lead 1 is a click and lead 2 a purchase at most 1 h
+    after the view."""
+    rows = pdf.sort_values(["ts", "event_id"]).to_dict("records")
+    return [
+        (v["event_id"], c["event_id"], p["event_id"])
+        for v, c, p in zip(rows, rows[1:], rows[2:])
+        if (v["event_type"], c["event_type"], p["event_type"]) == ("view", "click", "purchase")
+        and p["ts"] <= v["ts"] + pd.Timedelta(hours=1)
+    ]
+
+
+@pytest.mark.parametrize("purchase_after_s, n_matches", [(3600, 1), (3601, 0)])
+def test_funnel_within_bound_is_inclusive(purchase_after_s, n_matches):
+    pdf = _funnel_frame(["view", "click", "purchase"], [0, 1, purchase_after_s], [0, 1, 2])
+    assert len(_funnel_nfa(pdf)) == len(_funnel_reference(pdf)) == n_matches
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    data=st.data(),
+    events=st.lists(
+        st.tuples(st.sampled_from(_FUNNEL_TYPES), st.sampled_from(_FUNNEL_GAPS)),
+        max_size=24,
+    ),
+)
+def test_funnel_matches_lead_window_reference(data, events):
+    """The strict funnel through the NFA equals the lead()-window reference
+    the cep_funnel oracle computes (equivalent for this pattern, whose
+    matches cannot overlap), on random sequences with tied timestamps and
+    event ids out of arrival order."""
+    types = [t for t, _g in events]
+    offsets = list(itertools.accumulate(g for _t, g in events))
+    ids = data.draw(st.permutations(range(len(events))))
+    pdf = _funnel_frame(types, offsets, ids)
+    assert _funnel_nfa(pdf) == _funnel_reference(pdf), f"events={events!r} ids={ids!r}"

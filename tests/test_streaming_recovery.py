@@ -164,22 +164,58 @@ def test_replay_delivers_order_and_restages_unmarked_dir(spark, tmp_path):
     assert not os.path.exists(stray)
 
 
-@pytest.mark.parametrize("runner", ["run_to_batch", "run_changelog_count"])
+@pytest.mark.parametrize("runner", ["run_to_batch", "run_split_late"])
 def test_replay_overrun_raises_and_stops(spark, sf_dir, monkeypatch, runner):
     """Past the run bound, a runner raises TimeoutError (partial state would
     be a plausible wrong result) and leaves no streaming query active —
     for the memory sink and for foreachBatch state alike."""
     from flink_1_12_0_src_spark.streaming import run as srun
     from flink_1_12_0_src_spark.streaming.source import events_stream_weeks
-    from flink_1_12_0_src_spark.streaming.upsert import run_changelog_count
 
     monkeypatch.setattr(srun, "_TIMEOUT_S", 0.001)
     with pytest.raises(TimeoutError):
         if runner == "run_to_batch":
             srun.run_to_batch(_agg(events_stream(spark, sf_dir)))
         else:
-            run_changelog_count(events_stream_weeks(spark, sf_dir, with_stage=True), "user_id")
+            srun.run_split_late(events_stream_weeks(spark, sf_dir), "ts")
     assert spark.streams.active == []
+
+
+def test_changelog_runners_on_an_empty_replay(spark, tmp_path):
+    """An all-empty changelog replay gives 0 rows from the count and sum
+    runners, with the schema of a non-empty run: the key keeps its type and
+    no run raises. Two empty replays: slices without rows (each micro-batch
+    is empty) and a directory without files (no micro-batch runs)."""
+    from decimal import Decimal
+
+    from flink_1_12_0_src_spark.streaming.upsert import run_changelog_count, run_changelog_sum_agg
+
+    ddl = "k bigint, amount decimal(12,2), rowkind string, stage int"
+    full = _replay_rows(
+        spark,
+        tmp_path / "full",
+        [[(7, Decimal("2.50"), "+I", 0)], [(7, Decimal("2.50"), "-U", 1), (7, Decimal("3.00"), "+U", 1)]],
+        ddl,
+    )
+    (tmp_path / "no_files").mkdir()
+    empties = [
+        _replay_rows(spark, tmp_path / "empty_slices", [[], []], ddl),
+        spark.readStream.schema(full.schema).parquet(str(tmp_path / "no_files")),
+    ]
+
+    count_full = run_changelog_count(full, "k")
+    assert sorted(tuple(r) for r in count_full.collect()) == [
+        (7, 0, "+I", 1), (7, 1, "+U", 3), (7, 1, "-U", 1)
+    ]
+    sum_full = run_changelog_sum_agg(full, "k", "amount")
+    assert [tuple(r) for r in sum_full.collect()] == [(7, 1, 3.0)]
+    for empty in empties:
+        for got, like in (
+            (run_changelog_count(empty, "k"), count_full),
+            (run_changelog_sum_agg(empty, "k", "amount"), sum_full),
+        ):
+            assert got.count() == 0
+            assert got.schema == like.schema
 
 
 def test_incremental_join_bucket_pruning(spark, tmp_path):

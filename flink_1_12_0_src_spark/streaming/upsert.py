@@ -179,7 +179,9 @@ def run_changelog_upsert(
     return sink.snapshot(stream_df.sparkSession)
 
 
-def run_changelog_count(stream_df: DataFrame, key: str, having_below: int | None = None) -> DataFrame:
+def run_changelog_count(
+    stream_df: DataFrame, key: str, having_below: int | None = None
+) -> DataFrame:
     """Retraction-stream OUTPUT — Flink Table.toRetractStream / the changelog
     a StreamExecGroupAggregate emits (RowKind.java:35-58, GroupAggFunction
     .java:141-209): an unbounded per-key COUNT whose every refinement is

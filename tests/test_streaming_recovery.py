@@ -194,7 +194,10 @@ def test_changelog_runners_on_an_empty_replay(spark, tmp_path):
     full = _replay_rows(
         spark,
         tmp_path / "full",
-        [[(7, Decimal("2.50"), "+I", 0)], [(7, Decimal("2.50"), "-U", 1), (7, Decimal("3.00"), "+U", 1)]],
+        [
+            [(7, Decimal("2.50"), "+I", 0)],
+            [(7, Decimal("2.50"), "-U", 1), (7, Decimal("3.00"), "+U", 1)],
+        ],
         ddl,
     )
     (tmp_path / "no_files").mkdir()

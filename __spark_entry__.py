@@ -34,5 +34,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable oracle SQL per query; omitted for non-SQL-expressible ops."""
-    return {name: q.oracle for name, q in load_all().items() if q.oracle is not None}
+    """DuckDB-runnable oracle SQL per query."""
+    return {name: q.oracle for name, q in load_all().items()}

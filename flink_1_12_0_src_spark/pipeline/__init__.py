@@ -30,12 +30,7 @@ from flink_1_12_0_src_spark.pipeline.dedup import (
     simhash_signatures,
     winnow_fingerprint,
 )
-from flink_1_12_0_src_spark.pipeline.similarity import (
-    cosine_topk,
-    ivf_assign,
-    ivf_fit,
-    ivf_topk,
-)
+from flink_1_12_0_src_spark.pipeline.similarity import cosine_topk
 from flink_1_12_0_src_spark.pipeline.multimodal import attach_blob, extract_blob_features
 from flink_1_12_0_src_spark.pipeline.sampling import token_budget_select
 
@@ -48,9 +43,6 @@ __all__ = [
     "exact_dedup",
     "extract_blob_features",
     "gopher_rules",
-    "ivf_assign",
-    "ivf_fit",
-    "ivf_topk",
     "language_id",
     "minhash_lsh_pairs",
     "minhash_signatures",

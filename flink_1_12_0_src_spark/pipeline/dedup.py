@@ -700,7 +700,8 @@ def embedding_neardup_pairs(
     """Embedding-cosine near-duplicate pairs within a blocking key.
 
     The block bounds the pair space (here a label/cluster id; in production the
-    block is an IVF list id from ``similarity.ivf_assign``, making this the
+    block is an IVF list id, the nearest ``similarity.kmeans_fit_exact``
+    centroid as ``similarity.ivf_topk_exact`` assigns it, making this the
     verify stage after coarse quantization — same topology as LSH→Jaccard).
     Cosines are rounded before the threshold test so both engines make
     identical keep/drop decisions.
@@ -1741,7 +1742,7 @@ def embedding_neardup_pairs_np(
     )
     e = _cap_hot_buckets(e, ["blk"], max_block)
 
-    def pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pairs(key, pdf):
         ids = pdf["vid"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]

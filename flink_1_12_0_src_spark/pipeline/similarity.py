@@ -3,12 +3,21 @@
 - ``cosine_topk``: brute-force baseline — broadcast the query set, scan the
   corpus once, per-query top-k via window. Exact; at 100 TB the corpus never
   shuffles (queries broadcast), so cost is one scan × |Q| dot products.
-- ``ivf_fit`` / ``ivf_topk``: the scale path — Lloyd's k-means (few rounds,
-  centroids broadcast each round; only aggregates shuffle), then search probes
-  the ``nprobe`` nearest inverted lists, cutting dot products by
-  ~nlist/nprobe. Approximate; recall tested against the brute-force baseline.
+- ``kmeans_fit_exact`` / ``ivf_topk_exact``: IVF — Lloyd's k-means (few
+  rounds, centroids broadcast each round; only aggregates shuffle), then
+  search probes the ``nprobe`` nearest inverted lists, cutting dot products
+  by ~nlist/nprobe.
+- ``pq_fit_exact`` / ``pq_topk_exact``: product quantization — per-subspace
+  codebooks, ADC shortlist over one-byte codes, exact cosine re-rank.
+- ``lsh_topk``: random-hyperplane LSH — band-code buckets, exact re-rank.
 
-Dot products run as F.aggregate/zip_with folds — JVM codegen, no Python.
+Each ANN method has one implementation, checked against a DuckDB oracle
+that runs the same algorithm in SQL (recall against the brute-force
+baseline is a separate driver row). IVF and PQ compare only rounded or
+DECIMAL-accumulated values, so they rank identically in both engines; the
+LSH sign bits compare a raw dot against 0. Dot products run as
+F.aggregate/zip_with folds (JVM codegen); only the LSH sign codes use a
+numpy matmul. No driver-side collects.
 """
 
 from __future__ import annotations
@@ -261,43 +270,6 @@ def centroid_separation(
     return j.select("label_a", "label_b", cos.alias("cosine"))
 
 
-def ivf_fit(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_lists: int = 8,
-    iters: int = 3,
-) -> DataFrame:
-    """Deterministic Lloyd's k-means: init = the n_lists lowest-id vectors,
-    then `iters` assign/recompute rounds. Returns (cluster_id, centroid).
-
-    Each round: centroids broadcast → assignment is a map-side argmin (no
-    shuffle of the corpus) → new means via posexplode + two-level agg.
-    """
-    vecs = corpus.select(F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v"))
-    # init = n_lists lowest-id vectors. orderBy+limit plans as
-    # TakeOrderedAndProject (map-side partial top-k, single tiny merge) —
-    # the global-window row_number alternative would sort the whole corpus
-    # into one partition. The row_number below runs over n_lists rows only.
-    centroids = (
-        vecs.orderBy("vid")
-        .limit(n_lists)
-        .withColumn("rn", F.row_number().over(W.orderBy("vid")))
-        .select((F.col("rn") - 1).alias("cluster_id"), F.col("v").alias("centroid"))
-    )
-    for _ in range(iters):
-        assigned = _assign(vecs, centroids)
-        centroids = (
-            assigned.select("cluster_id", F.posexplode("v").alias("pos", "x"))
-            .groupBy("cluster_id", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("cluster_id")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cluster_id", F.transform("pm", lambda s: s["m"]).alias("centroid"))
-        )
-    return centroids
-
-
 def kmeans_fit_exact(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -307,8 +279,8 @@ def kmeans_fit_exact(
     round_digits: int = 6,
 ) -> DataFrame:
     """Engine-exact Lloyd's k-means TRAINING, ``iters`` rounds unrolled into
-    one lazy plan — the oracle-checkable variant of :func:`ivf_fit` (which
-    optimizes for speed with plain float means): init = the vectors with id
+    one lazy plan, and the training step of IVF search
+    (:func:`ivf_topk_exact`): init = the vectors with id
     < ``k`` (the fixed-seed convention of ``embedding_kmeans_assign``), each
     round assigns every vector to the argmax of ``round_digits``-rounded
     cosine (centroid-id tiebreak) and recomputes means with the package's
@@ -402,122 +374,6 @@ def kmeans_fit_exact(
         F.col("pos").cast("int").alias("dim"),
         F.col("m").alias("centroid"),
         F.col("n").alias("n_vectors"),
-    )
-
-
-def _assign(vecs: DataFrame, centroids: DataFrame, n_best: int = 1) -> DataFrame:
-    """Nearest-centroid assignment (or n_best nearest for probing)."""
-    j = vecs.crossJoin(F.broadcast(centroids))
-    d = _dot(F.col("v"), F.col("centroid")) / (_norm(F.col("v")) * _norm(F.col("centroid")))
-    w = W.partitionBy("vid").orderBy(F.desc("sim"), F.asc("cluster_id"))
-    out = (
-        j.select("vid", "v", "cluster_id", d.alias("sim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= n_best)
-        .drop("rn", "sim")
-    )
-    return out
-
-
-def ivf_assign(
-    corpus: DataFrame, centroids: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Assign every corpus vector to its inverted list."""
-    vecs = corpus.select(F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v"))
-    return _assign(vecs, centroids)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Approximate cosine top-k: probe the nprobe nearest lists per query."""
-    lists = ivf_assign(corpus, centroids, id_col, vec_col).select(
-        F.col("vid").alias("neighbor_id"), F.col("v").alias("cv"), "cluster_id"
-    )
-    qv = queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv"))
-    q_probes = _assign(
-        qv.select(F.col("query_id").alias("vid"), F.col("qv").alias("v")), centroids, n_best=nprobe
-    ).select(F.col("vid").alias("query_id"), F.col("v").alias("qv"), "cluster_id")
-
-    j = lists.join(q_probes, "cluster_id").filter(F.col("neighbor_id") != F.col("query_id"))
-    cos = F.round(
-        _dot(F.col("cv"), F.col("qv")) / (_norm(F.col("cv")) * _norm(F.col("qv"))), 6
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        j.select("query_id", "neighbor_id", cos.alias("cosine"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
-def cosine_topk_np(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Brute-force cosine top-k on the Arrow/numpy fast path: the (small)
-    query set ships to every task inside the ``mapInPandas`` closure and each
-    corpus batch computes ALL query similarities as ONE float64 matmul, then
-    emits only its per-batch top-k per query (global top-k ⊆ union of
-    per-batch top-k), so the shuffle carries ≤ batches·|Q|·k rows no matter
-    the corpus size. Ranking uses the same rounded-cosine + id tiebreak as
-    ``cosine_topk`` — the two paths are result-identical and share oracles.
-
-    Use this when |Q| is driver-collectable (top-k serving, dedup probes);
-    ``cosine_topk`` stays the pure-expression path for huge query sides.
-    """
-    import numpy as np
-
-    qrows = queries.select(id_col, vec_col).collect()  # |Q| is small by contract
-    q_ids = np.array([r[0] for r in qrows], dtype="int64")
-    qm = np.array([list(r[1]) for r in qrows], dtype="float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy("int64")
-            m = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-            m /= np.linalg.norm(m, axis=1, keepdims=True)
-            cos = np.round(m @ qm.T, round_digits)  # (n, |Q|)
-            for j in range(len(q_ids)):
-                c = cos[:, j].copy()
-                c[ids == q_ids[j]] = -np.inf  # exclude self
-                order = np.lexsort((ids, -c))[: min(k, len(ids))]
-                order = order[np.isfinite(c[order])]
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.full(len(order), q_ids[j], dtype="int64"),
-                        "neighbor_id": ids[order],
-                        "cosine": c[order],
-                    }
-                )
-
-    from flink_1_12_0_src_spark.pipeline.dedup import _spread
-
-    part = _spread(corpus.select(id_col, vec_col)).mapInPandas(
-        gen, "query_id long, neighbor_id long, cosine double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        part.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
     )
 
 
@@ -624,190 +480,6 @@ def lsh_topk(
     )
 
 
-def pq_fit(
-    train: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 4,
-    ksub: int = 16,
-    iters: int = 2,
-    max_train: int = 16384,
-) -> DataFrame:
-    """Product-quantization codebooks (Jégou et al. 2011, "Product
-    quantization for nearest neighbor search"): split the (L2-normalized)
-    vector into ``m`` contiguous subspaces and train one ``ksub``-centroid
-    codebook per subspace with a deterministic Lloyd iteration (init = the
-    lowest-id training vectors' sub-vectors, argmin ties to the lowest
-    code — the same convention as :func:`ivf_fit`).
-
-    Codebook training is the OFFLINE step of PQ: quality saturates at
-    ~100k training vectors, so the standard recipe — and this
-    implementation — trains on a bounded uniform sample regardless of
-    corpus size (``max_train``, salted-hash smallest-k: rerun-stable, one
-    TakeOrderedAndProject). The m·ksub·iters Lloyd rounds then run as one
-    numpy kernel on the collected sample instead of m·iters distributed
-    assign/recompute rounds (measured 10× faster at bench scale with
-    identical topology); the returned (sub, code, centroid) DataFrame is
-    m × ksub rows, broadcastable by construction.
-    """
-    import numpy as np
-
-    spark = train.sparkSession
-    nv = train.select(F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v"))
-    sample = (
-        nv.orderBy(F.md5(F.concat(F.lit("pq|"), F.col("vid").cast("string"))), "vid")
-        .limit(max_train)
-        .orderBy("vid")
-        .collect()
-    )
-    if len(sample) < ksub:
-        raise ValueError(
-            f"pq_fit needs at least ksub={ksub} training vectors, got {len(sample)}"
-        )
-    V = np.stack([np.asarray(r["v"], dtype=np.float64) for r in sample])
-    V = V / np.linalg.norm(V, axis=1, keepdims=True)
-    dim = V.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub_d = dim // m
-    rows = []
-    for s in range(m):
-        S = V[:, s * sub_d : (s + 1) * sub_d]
-        cents = S[:ksub].copy()  # init: lowest-id sub-vectors (sample is id-sorted)
-        for _ in range(iters):
-            d = ((S[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d, axis=1)  # ties → lowest code
-            for c in range(ksub):
-                mask = assign == c
-                if mask.any():
-                    cents[c] = S[mask].mean(axis=0)
-        rows.extend(
-            (s, c, [float(x) for x in cents[c]]) for c in range(ksub)
-        )
-    return spark.createDataFrame(rows, "sub int, code int, centroid array<double>")
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    codebooks: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    shortlist: int | None = None,
-) -> DataFrame:
-    """PQ asymmetric-distance top-k with exact re-rank (ADC, Jégou et al.
-    2011 §V): encode every corpus vector as m one-byte codes (nearest
-    sub-centroid per subspace, map-side — ONE corpus scan, no shuffle),
-    broadcast the query set and the m×ksub codebook, and scan the codes
-    computing each query's approximate distance as a lookup-table sum:
-    d²(q, x) ≈ Σ_s LUT_q[s, code_s(x)] where LUT_q[s, c] =
-    ‖q_s − centroid_{s,c}‖². Per-partition shortlist candidates per query,
-    one tiny global window cut to ``shortlist`` (default 8·k), then the
-    shortlist joins back to the corpus for an EXACT cosine re-rank — the
-    standard two-stage ANN: the compressed scan bounds the exact work at
-    |Q|·shortlist vectors, and m bytes/vector (not 4·dim) is what makes the
-    scan feasible at 100 TB.
-
-    Vectors are L2-normalized for the ADC stage, so approximate L2 ranking
-    is cosine ranking (‖a−b‖² = 2−2cos on the unit sphere). Ties break by
-    neighbor id; codebook argmins break by code id — fully deterministic
-    given the codebook. Verified by recall against :func:`cosine_topk`
-    (approximation ⇒ no exact SQL oracle, same class as IVF/LSH)."""
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    cb_rows = codebooks.orderBy("sub", "code").collect()  # m×ksub, tiny by contract
-    m = 1 + max(r["sub"] for r in cb_rows)
-    ksub = 1 + max(r["code"] for r in cb_rows)
-    C = np.zeros((m, ksub, len(cb_rows[0]["centroid"])))
-    for r in cb_rows:
-        C[r["sub"], r["code"]] = r["centroid"]
-    q_rows = queries.select(
-        F.col(id_col).alias("qid"), _as_double(F.col(vec_col)).alias("v")
-    ).collect()  # |Q| small by contract (the broadcast query batch)
-    Q = np.stack([np.asarray(r["v"], dtype=np.float64) for r in q_rows])
-    Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    qids = np.array([r["qid"] for r in q_rows])
-    sub_d = C.shape[2]
-    # LUT[qi, s, c] = ||Q[qi, s-th slice] - C[s, c]||^2
-    LUT = np.stack(
-        [
-            ((Q[:, s * sub_d : (s + 1) * sub_d][:, None, :] - C[s][None, :, :]) ** 2).sum(axis=2)
-            for s in range(m)
-        ],
-        axis=1,
-    )
-    b_lut = spark.sparkContext.broadcast(LUT)
-    b_cb = spark.sparkContext.broadcast(C)
-    b_qids = spark.sparkContext.broadcast(qids)
-
-    nv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("v")
-    )
-
-    def adc(it):
-        lut, cb, qs = b_lut.value, b_cb.value, b_qids.value
-        m_, ksub_, sd = cb.shape
-        for pdf in it:
-            ids = pdf["neighbor_id"].to_numpy()
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            V = V / np.linalg.norm(V, axis=1, keepdims=True)
-            # encode: per subspace argmin ||v_s - centroid||² (ties → lowest code)
-            codes = np.empty((len(ids), m_), dtype=np.int64)
-            for s in range(m_):
-                d = ((V[:, s * sd : (s + 1) * sd][:, None, :] - cb[s][None, :, :]) ** 2).sum(axis=2)
-                codes[:, s] = np.argmin(d, axis=1)
-            # ADC distance: sum LUT over subspaces → (|Q|, n)
-            D = np.zeros((lut.shape[0], len(ids)))
-            for s in range(m_):
-                D += lut[:, s, :][:, codes[:, s]]
-            D = np.round(D, 6)
-            out = []
-            for qi in range(lut.shape[0]):
-                order = np.lexsort((ids, D[qi]))[: sl + 1]
-                keep = order[ids[order] != qs[qi]][:sl]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qs[qi],
-                            "neighbor_id": ids[keep],
-                            "approx_cosine": 1.0 - D[qi][keep] / 2.0,
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    sl = shortlist if shortlist is not None else 8 * k
-    cand = nv.mapInPandas(adc, "query_id long, neighbor_id long, approx_cosine double")
-    w = W.partitionBy("query_id").orderBy(F.desc("approx_cosine"), F.asc("neighbor_id"))
-    short = (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= sl)
-        .drop("rn", "approx_cosine")
-    )
-    # exact re-rank of the shortlist: |Q|·shortlist rows join back to the
-    # corpus vectors (hash join on neighbor_id), query vectors broadcast
-    qdf = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    )
-    cvec = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    j = short.join(cvec, "neighbor_id").join(F.broadcast(qdf), "query_id")
-    cos = F.round(
-        _dot(F.col("cv"), F.col("qv")) / (_norm(F.col("cv")) * _norm(F.col("qv"))), 6
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        j.select("query_id", "neighbor_id", cos.alias("cosine"))
-        .withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
-
-
 def _d2_fold(a, b, round_digits: int = 9):
     """Engine-exact squared L2 distance between two equal-length arrays:
     per-component (x−y)² rounded then DECIMAL-accumulated (order- and
@@ -848,8 +520,7 @@ def ivf_topk_exact(
     :func:`kmeans_fit_exact` long-form output): every comparison uses
     ``round_digits``-rounded cosine with the lowest-id tiebreak, so list
     assignment, probe choice, and the final ranking are bit-identical
-    across engines — the oracle-checkable variant of :func:`ivf_topk`
-    (which optimizes for speed with a window over raw cosine).
+    across engines.
 
     Scale: centroids collapse to ONE broadcast row; corpus assignment and
     query probing are row-local folds (the corpus never shuffles on data
@@ -1079,8 +750,7 @@ def pq_fit_exact(
     round_digits: int = 6,
 ) -> DataFrame:
     """ENGINE-EXACT product-quantization codebook training (Jégou et al.
-    2011) — the oracle-checkable variant of :func:`pq_fit` (which collects
-    a bounded sample into one numpy kernel): ``m`` independent Lloyd
+    2011): ``m`` independent Lloyd
     problems over the contiguous subspaces, trained DISTRIBUTED with the
     kmeans_fit_exact recipe (init = lowest-id sub-vectors, argmin of the
     rounded-DECIMAL squared-L2 fold with lowest-code tiebreak, 6-dp DECIMAL

@@ -1,8 +1,8 @@
 """Query registry: one entry per operator/capability from SURVEY.md §2.
 
 Each :class:`Query` pairs a Spark implementation (DataFrame/SQL, takes
-``(spark, sf_dir)``) with an optional DuckDB oracle SQL string over the same
-parquet tables. The driver's correctness gate runs both at sf0.01 and compares
+``(spark, sf_dir)``) with a DuckDB oracle SQL string over the same parquet
+tables. The driver's correctness gate runs both at sf0.01 and compares
 row-count + schema + order-insensitive value hash, so:
 
 - every computed column is aliased identically on both sides;
@@ -29,7 +29,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     spark: QueryFn
-    oracle: str | None
+    oracle: str
     tags: tuple[str, ...] = field(default_factory=tuple)
     doc: str = ""
 
@@ -37,7 +37,7 @@ class Query:
 REGISTRY: dict[str, Query] = {}
 
 
-def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), doc: str = ""):
+def register(name: str, oracle: str, tags: tuple[str, ...] = (), doc: str = ""):
     """Decorator: add a query implementation to the registry."""
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -87,29 +87,23 @@ def gate_tiers(registry: dict[str, Query], root: Path = ARTIFACT_DIR) -> list[li
     run earlier in the 50-slot window, each in registration order unless
     noted:
 
-    0. oracle-able queries whose latest driver row is not hash-green — the
-       fix re-verifies first;
-    1. oracle-able queries with no driver row yet (a registration made
-       outside CURRENT_NEW by mistake still gets a slot);
-    2. CURRENT_NEW, in tuple order. An explicit listing outranks tier 4:
-       that is the only way a rows-only query spends a slot (a deliberate
-       one-time presentation);
+    0. queries whose latest driver row is not hash-green — the fix
+       re-verifies first;
+    1. queries with no driver row yet (a registration made outside
+       CURRENT_NEW by mistake still gets a slot);
+    2. CURRENT_NEW, in tuple order;
     3. driver-green queries, least recently verified first (last-green round
        ascending), so the slots left after the front tiers refresh the
        stalest evidence instead of re-checking the same early-registered
-       rows every round;
-    4. rows-only queries (``oracle is None``): they can only produce
-       `no_oracle` rows, so they never consume an evidence slot.
+       rows every round.
     """
     last_green, latest_green = driver_rows(root)
-    tiers: list[list[str]] = [[] for _ in range(5)]
-    for name, q in registry.items():
-        if q.oracle is not None and latest_green.get(name) is False:
+    tiers: list[list[str]] = [[] for _ in range(4)]
+    for name in registry:
+        if latest_green.get(name) is False:
             tier = 0
         elif name in CURRENT_NEW:
             tier = 2
-        elif q.oracle is None:
-            tier = 4
         elif name not in latest_green:
             tier = 1
         else:

@@ -829,48 +829,6 @@ def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "knn_ivf_topk",
-    oracle=None,  # approximate by design — recall vs brute force asserted in tests
-    tags=("pipeline", "similarity"),
-    doc="IVF approximate top-k: deterministic Lloyd k-means (8 lists, 3 rounds, "
-    "centroids broadcast) + nprobe=2 probing. Rows-only driver check; recall@5 "
-    "vs the brute-force baseline asserted in tests/test_pipeline.py.",
-)
-def knn_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_1_12_0_src_spark.pipeline import ivf_fit, ivf_topk
-
-    emb = table(spark, sf_dir, "embeddings")
-    cents = ivf_fit(emb, n_lists=8, iters=3)
-    q = emb.filter(F.col("vec_id") < ANN_QUERY_MAX)
-    return ivf_topk(emb, q, cents, k=ANN_K, nprobe=2).orderBy(
-        "query_id", F.desc("cosine"), "neighbor_id"
-    )
-
-
-@register(
-    "knn_pq_topk",
-    oracle=None,  # approximate by design — recall vs brute force asserted in tests
-    tags=("pipeline", "similarity"),
-    doc="Product-quantization ADC top-k (Jégou et al. 2011; pipeline/"
-    "similarity.py pq_fit/pq_topk): 16 subspaces × 32 codes trained with the "
-    "deterministic Lloyd kernel, corpus encoded map-side to 16 one-byte codes "
-    "(the 100 TB ANN memory story: m bytes/vector instead of 4·dim), queries "
-    "+ codebook LUTs broadcast, approximate distance = LUT sum, per-partition "
-    "shortlist then exact cosine re-rank of 8k candidates. Rows-only driver check; recall@5 "
-    "vs brute force asserted in tests/test_pipeline.py.",
-)
-def knn_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_1_12_0_src_spark.pipeline.similarity import pq_fit, pq_topk
-
-    emb = table(spark, sf_dir, "embeddings")
-    books = pq_fit(emb, m=16, ksub=32, iters=2)
-    q = emb.filter(F.col("vec_id") < ANN_QUERY_MAX)
-    return pq_topk(emb, q, books, k=ANN_K).orderBy(
-        "query_id", F.desc("cosine"), "neighbor_id"
-    )
-
-
 def _langid_cte(key: str) -> str:
     """Shared marker-lexicon language-ID CTE chain (toks/hits/lpred with the
     argmax CASE), keyed by ``key`` — doc_id for the per-document report,
@@ -1718,8 +1676,8 @@ FROM asg LEFT JOIN pru USING (vec_id) ORDER BY asg.vec_id
     tags=("pipeline", "dedup", "similarity", "clustering"),
     doc="SemDeDup semantic deduplication (Abbas et al. 2023; pipeline.dedup."
     "semantic_prune): assign every embedding to its nearest of 4 fixed "
-    "centroids (lowest-id vectors — the deterministic Lloyd kernel of "
-    "ivf_fit), then within each cluster prune any vector having a lower-id "
+    "centroids (lowest-id vectors — the seed convention of kmeans_fit_exact), "
+    "then within each cluster prune any vector having a lower-id "
     f"near-duplicate at rounded cosine ≥ {SEM_THRESHOLD}. Min-id survivor "
     "replaces the paper's centroid-distance pick for engine portability. "
     "Pair stage = the same hot-block-capped within-cluster matmul as "
@@ -1961,7 +1919,7 @@ ORDER BY e.vec_id
 """,
     tags=("pipeline", "similarity", "clustering"),
     doc="K-means assignment step (the per-round kernel of pipeline.similarity."
-    "ivf_fit's deterministic Lloyd iteration, here oracle-checked end-to-end): "
+    "kmeans_fit_exact's Lloyd iteration, here oracle-checked on its own): "
     "4 fixed centroids (lowest-id vectors) broadcast against the corpus, "
     "argmax of rounded cosine with centroid-id tiebreak — a map-side argmin, "
     "no corpus shuffle. Oracle: cross join + QUALIFY top-1.",
@@ -2517,26 +2475,6 @@ def dedup_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     probes = docs.filter(F.col("doc_id") % 2 == 1)
     return bloom_membership(corpus, probes, "doc_id", "text", 4, 2).orderBy("doc_id")
-
-
-@register(
-    "knn_lsh_topk",
-    oracle=None,  # approximate by design — recall vs brute force asserted in tests
-    tags=("pipeline", "similarity"),
-    doc="Random-hyperplane (sign) LSH approximate top-k — the hash-bucket ANN "
-    "alternative to IVF (Charikar 2002): 24 md5-derived hyperplanes in 8 "
-    "bands of 3 sign bits, candidates from the band-code equi-join with the "
-    "minhash-style hot-bucket cap, exact-cosine re-rank. Rows-only driver "
-    "check; recall@5 vs brute force asserted in tests/test_pipeline.py.",
-)
-def knn_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_1_12_0_src_spark.pipeline.similarity import lsh_topk
-
-    emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < ANN_QUERY_MAX)
-    return lsh_topk(emb, q, "vec_id", "embedding", dim=64, k=ANN_K).orderBy(
-        "query_id", F.desc("cosine"), "neighbor_id"
-    )
 
 
 @register(
@@ -5233,13 +5171,14 @@ def _refinedweb_fin(docs: DataFrame) -> DataFrame:
     return cleaned.filter(F.col("n_kept") >= RW_MIN_KEPT)
 
 
-# --- ANN recall driver rows -------------------------------------------------
-# The knn_*_topk queries are rows-only by design (approximate neighbor
-# lists); these companions make the ANN family hash-verifiable: recall@k of
-# the (deterministic, md5-seeded) ANN result against the exact brute-force
-# top-k, one row per query vector. The oracle reimplements the SAME
-# algorithm in SQL — every comparison on rounded / DECIMAL-accumulated
-# values so the two engines rank identically.
+# --- ANN top-k and recall driver rows ---------------------------------------
+# Each ANN method (sign-LSH, IVF, PQ) registers two driver rows: its top-k
+# neighbor list (knn_*_topk) and its recall@k against the exact brute-force
+# top-k, one row per query vector (knn_*_recall). Both rows run the same
+# search function, and both oracles read the same `approx` CTE chain, which
+# reimplements the (deterministic, md5-seeded or lowest-id-seeded) search in
+# SQL with every comparison on rounded / DECIMAL-accumulated values so the
+# two engines rank identically.
 IVFX_NPROBE = 2
 PQX_M, PQX_KSUB, PQX_ITERS, PQX_SHORTLIST = 8, 8, 1, 64
 EMB_DIM = 64
@@ -5264,6 +5203,23 @@ def _recall_vs_brute(brute: DataFrame, approx: DataFrame) -> DataFrame:
     )
 
 
+def _ann_topk(spark: SparkSession, sf_dir: str, search) -> DataFrame:
+    """knn_*_topk rows: ``search(corpus, queries)`` for the ANN_QUERY_MAX
+    query vectors, sorted by query, cosine DESC, neighbor."""
+    emb = table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < ANN_QUERY_MAX)
+    return search(emb, q).orderBy("query_id", F.desc("cosine"), "neighbor_id")
+
+
+def _ann_recall(spark: SparkSession, sf_dir: str, search) -> DataFrame:
+    """knn_*_recall rows: recall@ANN_K of the same search against
+    :func:`cosine_topk`."""
+    emb = table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < ANN_QUERY_MAX)
+    brute = cosine_topk(emb, q, "vec_id", "embedding", ANN_K)
+    return _recall_vs_brute(brute, search(emb, q)).orderBy("query_id")
+
+
 _EQ_CTES = f"""e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
 q AS (SELECT * FROM e WHERE vec_id < {ANN_QUERY_MAX})"""
 
@@ -5279,9 +5235,30 @@ FROM brute b LEFT JOIN approx a USING (query_id, neighbor_id)
 GROUP BY b.query_id ORDER BY b.query_id"""
 
 
-def _lsh_recall_oracle() -> str:
+def _topk_oracle(approx_ctes: str) -> str:
+    """knn_*_topk oracle: the method's `approx` (query_id, neighbor_id) rows
+    with their rounded cosine, read from the e / q CTEs ``approx_ctes``
+    defines."""
     return f"""
-WITH {_EQ_CTES},
+WITH {approx_ctes}
+SELECT a.query_id, a.neighbor_id, round(list_cosine_similarity(qq.v, ne.v), 6) AS cosine
+FROM approx a JOIN e ne ON ne.vec_id = a.neighbor_id
+              JOIN q qq ON qq.vec_id = a.query_id
+ORDER BY query_id, cosine DESC, neighbor_id
+"""
+
+
+def _recall_oracle(approx_ctes: str) -> str:
+    """knn_*_recall oracle: `approx` against the brute-force top-k."""
+    return f"""
+WITH {approx_ctes},
+{_BRUTE_CTE}
+{_RECALL_TAIL}
+"""
+
+
+def _lsh_approx_ctes() -> str:
+    return f"""{_EQ_CTES},
 pl AS (SELECT p, d,
               (('0x' || substr(md5('7|' || CAST(p AS VARCHAR) || '|' || CAST(d AS VARCHAR)), 1, 8))::BIGINT
                / 2147483648.0 - 1.0) AS c
@@ -5303,38 +5280,47 @@ approx AS (SELECT c.query_id, c.neighbor_id
            FROM cand c JOIN e ne ON ne.vec_id = c.neighbor_id
                        JOIN q qq ON qq.vec_id = c.query_id
            QUALIFY row_number() OVER (PARTITION BY c.query_id
-                     ORDER BY round(list_cosine_similarity(qq.v, ne.v), 6) DESC, c.neighbor_id) <= {ANN_K}),
-{_BRUTE_CTE}
-{_RECALL_TAIL}
-"""
+                     ORDER BY round(list_cosine_similarity(qq.v, ne.v), 6) DESC, c.neighbor_id) <= {ANN_K})"""
+
+
+def _lsh_search(emb: DataFrame, q: DataFrame) -> DataFrame:
+    from flink_1_12_0_src_spark.pipeline.similarity import lsh_topk
+
+    return lsh_topk(emb, q, "vec_id", "embedding", dim=EMB_DIM, k=ANN_K)
+
+
+@register(
+    "knn_lsh_topk",
+    oracle=_topk_oracle(_lsh_approx_ctes()),
+    tags=("pipeline", "similarity"),
+    doc="Random-hyperplane (sign) LSH approximate top-k — the hash-bucket ANN "
+    "alternative to IVF (Charikar 2002): 24 md5-derived hyperplanes in 8 "
+    "bands of 3 sign bits, candidates from the band-code equi-join with the "
+    "minhash-style hot-bucket cap, exact-cosine re-rank. The oracle is "
+    "knn_lsh_recall's approx CTE chain plus the rounded cosine.",
+)
+def knn_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _ann_topk(spark, sf_dir, _lsh_search)
 
 
 @register(
     "knn_lsh_recall",
-    oracle=_lsh_recall_oracle(),
+    oracle=_recall_oracle(_lsh_approx_ctes()),
     tags=("pipeline", "similarity"),
-    doc="Recall@5 of knn_lsh_topk against the exact brute-force top-5 — the "
-    "driver row that makes the sign-LSH ANN path hash-verifiable (the "
-    "neighbor-list query stays rows-only): per query vector, |approx ∩ "
-    "exact| / 5. The oracle re-derives the SAME md5-seeded hyperplanes "
+    doc="Recall@5 of knn_lsh_topk against the exact brute-force top-5: per "
+    "query vector, |approx ∩ exact| / 5. The oracle re-derives the SAME "
+    "md5-seeded hyperplanes "
     "(pipeline/similarity.py lsh_hyperplanes), sign band codes, hot-bucket "
     "cap and rounded-cosine re-rank in SQL. Sign bits compare a raw float "
     "dot against 0 in both engines — summation-order divergence flips a "
     "sign only within ~1e-15 of zero, vanishing for random 64-dim data.",
 )
 def knn_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_1_12_0_src_spark.pipeline.similarity import lsh_topk
-
-    emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < ANN_QUERY_MAX)
-    approx = lsh_topk(emb, q, "vec_id", "embedding", dim=EMB_DIM, k=ANN_K)
-    brute = cosine_topk(emb, q, "vec_id", "embedding", ANN_K)
-    return _recall_vs_brute(brute, approx).orderBy("query_id")
+    return _ann_recall(spark, sf_dir, _lsh_search)
 
 
-def _ivf_recall_oracle() -> str:
-    return f"""
-WITH {_kmeans_cte_body()},
+def _ivf_approx_ctes() -> str:
+    return f"""{_kmeans_cte_body()},
 q AS (SELECT * FROM e WHERE vec_id < {ANN_QUERY_MAX}),
 lists AS (SELECT e.vec_id AS neighbor_id, e.v AS nv, c.cid AS cluster
           FROM e CROSS JOIN c{KM_ITERS} c
@@ -5348,18 +5334,40 @@ approx AS (SELECT p.query_id, l.neighbor_id
            FROM probes p JOIN lists l USING (cluster)
            WHERE l.neighbor_id <> p.query_id
            QUALIFY row_number() OVER (PARTITION BY p.query_id
-                     ORDER BY round(list_cosine_similarity(p.qv, l.nv), 6) DESC, l.neighbor_id) <= {ANN_K}),
-{_BRUTE_CTE}
-{_RECALL_TAIL}
-"""
+                     ORDER BY round(list_cosine_similarity(p.qv, l.nv), 6) DESC, l.neighbor_id) <= {ANN_K})"""
+
+
+def _ivf_search(emb: DataFrame, q: DataFrame) -> DataFrame:
+    from flink_1_12_0_src_spark.pipeline.similarity import (
+        ivf_topk_exact,
+        kmeans_fit_exact,
+    )
+
+    cents = kmeans_fit_exact(emb, "vec_id", "embedding", KM_K, KM_ITERS)
+    return ivf_topk_exact(emb, q, cents, "vec_id", "embedding", ANN_K, IVFX_NPROBE)
+
+
+@register(
+    "knn_ivf_topk",
+    oracle=_topk_oracle(_ivf_approx_ctes()),
+    tags=("pipeline", "similarity"),
+    doc=f"IVF approximate top-{ANN_K}: centroids from embedding_kmeans_fit "
+    f"(k={KM_K}, {KM_ITERS} exact Lloyd rounds), corpus assigned by "
+    f"rounded-cosine argmax fold, nprobe={IVFX_NPROBE} probing, "
+    "rounded-cosine re-rank (pipeline/similarity.py kmeans_fit_exact / "
+    "ivf_topk_exact). The oracle is knn_ivf_recall's approx CTE chain plus "
+    "the rounded cosine.",
+)
+def knn_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _ann_topk(spark, sf_dir, _ivf_search)
 
 
 @register(
     "knn_ivf_recall",
-    oracle=_ivf_recall_oracle(),
+    oracle=_recall_oracle(_ivf_approx_ctes()),
     tags=("pipeline", "similarity", "clustering"),
     doc=f"Recall@5 of an ENGINE-EXACT IVF search against brute force — the "
-    "hash-verifiable companion of knn_ivf_topk: centroids from "
+    "recall companion of knn_ivf_topk: centroids from "
     f"embedding_kmeans_fit (k={KM_K}, {KM_ITERS} exact Lloyd rounds), "
     f"corpus assigned by rounded-cosine argmax fold, nprobe={IVFX_NPROBE} "
     "probing, rounded-cosine re-rank (pipeline/similarity.py "
@@ -5371,22 +5379,10 @@ approx AS (SELECT p.query_id, l.neighbor_id
     "join only.",
 )
 def knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_1_12_0_src_spark.pipeline.similarity import (
-        ivf_topk_exact,
-        kmeans_fit_exact,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < ANN_QUERY_MAX)
-    cents = kmeans_fit_exact(emb, "vec_id", "embedding", KM_K, KM_ITERS)
-    approx = ivf_topk_exact(
-        emb, q, cents, "vec_id", "embedding", ANN_K, IVFX_NPROBE
-    )
-    brute = cosine_topk(emb, q, "vec_id", "embedding", ANN_K)
-    return _recall_vs_brute(brute, approx).orderBy("query_id")
+    return _ann_recall(spark, sf_dir, _ivf_search)
 
 
-def _pq_recall_oracle() -> str:
+def _pq_approx_ctes() -> str:
     sd = EMB_DIM // PQX_M
 
     def d2(a: str, b: str) -> str:
@@ -5396,8 +5392,7 @@ def _pq_recall_oracle() -> str:
             f"'sum') AS DOUBLE)"
         )
 
-    return f"""
-WITH {_EQ_CTES},
+    return f"""{_EQ_CTES},
 ss AS (SELECT vec_id, sub, v[sub * {sd} + 1 : sub * {sd} + {sd}] AS sv
        FROM e, (SELECT unnest(generate_series(0, {PQX_M - 1})) AS sub)),
 cb0 AS (SELECT sub, CAST(vec_id AS INT) AS code, sv AS cv
@@ -5431,18 +5426,41 @@ approx AS (SELECT s.query_id, s.neighbor_id
            FROM short s JOIN e ne ON ne.vec_id = s.neighbor_id
                         JOIN q qq ON qq.vec_id = s.query_id
            QUALIFY row_number() OVER (PARTITION BY s.query_id
-                     ORDER BY round(list_cosine_similarity(qq.v, ne.v), 6) DESC, s.neighbor_id) <= {ANN_K}),
-{_BRUTE_CTE}
-{_RECALL_TAIL}
-"""
+                     ORDER BY round(list_cosine_similarity(qq.v, ne.v), 6) DESC, s.neighbor_id) <= {ANN_K})"""
+
+
+def _pq_search(emb: DataFrame, q: DataFrame) -> DataFrame:
+    from flink_1_12_0_src_spark.pipeline.similarity import pq_fit_exact, pq_topk_exact
+
+    books = pq_fit_exact(emb, "vec_id", "embedding", EMB_DIM, PQX_M, PQX_KSUB, PQX_ITERS)
+    return pq_topk_exact(
+        emb, q, books, "vec_id", "embedding", EMB_DIM, PQX_M, ANN_K, PQX_SHORTLIST
+    )
+
+
+@register(
+    "knn_pq_topk",
+    oracle=_topk_oracle(_pq_approx_ctes()),
+    tags=("pipeline", "similarity"),
+    doc=f"Product-quantization ADC top-{ANN_K} (Jégou et al. 2011; pipeline/"
+    "similarity.py pq_fit_exact / pq_topk_exact): "
+    f"{PQX_M} subspaces × {PQX_KSUB} codes trained with the kmeans_fit_exact "
+    "recipe, corpus encoded map-side to one-byte codes (the 100 TB ANN "
+    "memory story: m bytes/vector instead of 4·dim), per-query LUTs "
+    f"broadcast, approximate distance = DECIMAL LUT sum, {PQX_SHORTLIST}-"
+    "candidate shortlist, exact cosine re-rank. The oracle is "
+    "knn_pq_recall's approx CTE chain plus the rounded cosine.",
+)
+def knn_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _ann_topk(spark, sf_dir, _pq_search)
 
 
 @register(
     "knn_pq_recall",
-    oracle=_pq_recall_oracle(),
+    oracle=_recall_oracle(_pq_approx_ctes()),
     tags=("pipeline", "similarity"),
     doc=f"Recall@5 of an ENGINE-EXACT PQ ADC search against brute force — "
-    "the hash-verifiable companion of knn_pq_topk: codebooks trained "
+    "the recall companion of knn_pq_topk: codebooks trained "
     f"DISTRIBUTED with the kmeans_fit_exact recipe ({PQX_M} subspaces × "
     f"{PQX_KSUB} codes, {PQX_ITERS} Lloyd round, rounded-DECIMAL squared-L2 "
     "argmin), corpus encoded map-side, broadcast per-query LUTs, "
@@ -5455,16 +5473,7 @@ approx AS (SELECT s.query_id, s.neighbor_id
     "hits — the documented PQ scan shape (m bytes per vector).",
 )
 def knn_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_1_12_0_src_spark.pipeline.similarity import pq_fit_exact, pq_topk_exact
-
-    emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < ANN_QUERY_MAX)
-    books = pq_fit_exact(emb, "vec_id", "embedding", EMB_DIM, PQX_M, PQX_KSUB, PQX_ITERS)
-    approx = pq_topk_exact(
-        emb, q, books, "vec_id", "embedding", EMB_DIM, PQX_M, ANN_K, PQX_SHORTLIST
-    )
-    brute = cosine_topk(emb, q, "vec_id", "embedding", ANN_K)
-    return _recall_vs_brute(brute, approx).orderBy("query_id")
+    return _ann_recall(spark, sf_dir, _pq_search)
 
 
 # ONE constant shared by the batch filter eval (pipeline_quality_eval) and

@@ -330,15 +330,10 @@ def golden_plan_providers() -> dict:
     # breadth is the point): every registered query whose plan is lazy and
     # non-degenerate gets a golden, so a NEW query automatically demands
     # one (the coverage test fails until the goldens are regenerated).
-    # The rows-only ANN topk trio is excluded (numpy-kernel paths whose
-    # recall is pinned in tests/test_pipeline.py); their hash-verifiable
-    # knn_*_recall companions ARE golden-pinned like any batch query.
-    rows_only_ann = {"knn_lsh_topk", "knn_ivf_topk", "knn_pq_topk"}
     providers = {
         n: REDUCED[n] if n in REDUCED else _lazy(q.spark)
         for n, q in sorted(reg.items())
         if not n.startswith("stream_")
-        and n not in rows_only_ann
         and n not in slow_construction
         and n not in degenerate
     }

@@ -262,11 +262,12 @@ def test_gate_window_composition():
     """The driver verifies only the first 50 load_all() entries per round.
     Standing policy: ex-reds lead (empty on zero-red rounds), then the
     current round's new queries — no prior-green query occupies a slot while
-    anything unevidenced waits — and the rows-only ANN trio (which can only
-    ever produce `no_oracle` rows) sits dead last, outside any window. The
-    tiers are derived from the CORRECTNESS_r*.json artifacts, so a round
-    rollover never requires editing this test."""
-    from flink_1_12_0_src_spark.queries import gate_tiers, load_all
+    anything unevidenced waits. Every query carries an oracle, so the three
+    ANN top-k queries, whose latest driver rows are `no_oracle`, lead the
+    window as ex-reds with no CURRENT_NEW listing. The tiers are derived
+    from the CORRECTNESS_r*.json artifacts, so a round rollover never
+    requires editing this test."""
+    from flink_1_12_0_src_spark.queries import driver_rows, gate_tiers, load_all
 
     registry = load_all()
     names = list(registry)
@@ -280,18 +281,11 @@ def test_gate_window_composition():
     # the remaining slots re-verify greens and nothing defers this round
     assert len(front) <= 50
     assert set(names[len(front):50]) <= set(tiers[3])
-    # dead-last rows-only tier — minus any member given a deliberate
-    # one-time presentation slot via an explicit CURRENT_NEW listing. At most
-    # one member may hold a front slot at a time (presentations are
-    # one-time, deliberate, and individually documented), and the guard on
-    # the slice keeps names[-0:] (the whole list) out of the assertion if
-    # ever all three were presented at once.
-    rows_only = [n for n, q in registry.items() if q.oracle is None]
-    assert len(rows_only) == 3
-    assert len([n for n in rows_only if n in front]) <= 1
-    tail = [n for n in rows_only if n not in front]
-    if tail:
-        assert names[-len(tail):] == tail
+    assert all(q.oracle for q in registry.values())
+    ann = [n for n in names if n.startswith("knn_") and n.endswith("_topk")]
+    assert len(ann) == 3
+    _, latest_green = driver_rows()
+    assert {n for n in ann if not latest_green.get(n)} <= set(tiers[0])
 
 
 def test_statement_set_multi_sink(spark, tmp_path):

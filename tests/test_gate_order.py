@@ -42,11 +42,10 @@ def test_later_artifact_reorders_without_code_edit(tmp_path, monkeypatch):
     re-sorts the green tier and moves a now-red query to the front — the
     whole fold is the artifact. Rounds sort by number, not file name."""
 
-    def q(name, oracle="SELECT 1"):
-        return Query(name=name, spark=lambda spark, sf: None, oracle=oracle)
+    def q(name):
+        return Query(name=name, spark=lambda spark, sf: None, oracle="SELECT 1")
 
     registry = {n: q(n) for n in ("a", "b", "c", "d", "e", "f")}
-    registry["ann"] = q("ann", oracle=None)
     monkeypatch.setattr(queries, "CURRENT_NEW", ("f",))
 
     def write(rnd, rows):
@@ -54,16 +53,16 @@ def test_later_artifact_reorders_without_code_edit(tmp_path, monkeypatch):
             json.dumps({n: {"hash_match": ok, "err": None} for n, ok in rows.items()})
         )
 
-    write(9, {"a": True, "b": True, "c": True, "d": True, "ann": False})
+    write(9, {"a": True, "b": True, "c": True, "d": True})
     write(10, {"c": True, "d": True})
-    assert gate_tiers(registry, tmp_path) == [[], ["e"], ["f"], ["a", "b", "c", "d"], ["ann"]]
+    assert gate_tiers(registry, tmp_path) == [[], ["e"], ["f"], ["a", "b", "c", "d"]]
 
     write(11, {"a": True, "b": False})
     assert driver_rows(tmp_path) == (
         {"a": 11, "b": 9, "c": 10, "d": 10},
-        {"a": True, "b": False, "c": True, "d": True, "ann": False},
+        {"a": True, "b": False, "c": True, "d": True},
     )
-    assert gate_tiers(registry, tmp_path) == [["b"], ["e"], ["f"], ["c", "d", "a"], ["ann"]]
+    assert gate_tiers(registry, tmp_path) == [["b"], ["e"], ["f"], ["c", "d", "a"]]
 
 
 def test_last_green_covers_green_union():
@@ -78,16 +77,12 @@ def test_last_green_covers_green_union():
 
 
 def test_tier3_is_staleness_sorted():
-    """In load_all() order, the re-verification tier (driver-green, oracle-able,
-    not re-presented in CURRENT_NEW) is one contiguous run sorted by
-    last-green round ascending — the LRU rotation itself."""
-    registry = load_all()
-    names = list(registry)
+    """In load_all() order, the re-verification tier (driver-green, not
+    re-presented in CURRENT_NEW) is one contiguous run sorted by last-green
+    round ascending — the LRU rotation itself."""
+    names = list(load_all())
     last_green, latest_green = driver_rows()
-    tier3 = [
-        n for n in names
-        if latest_green.get(n) and registry[n].oracle is not None and n not in CURRENT_NEW
-    ]
+    tier3 = [n for n in names if latest_green.get(n) and n not in CURRENT_NEW]
     start = names.index(tier3[0])
     assert names[start:start + len(tier3)] == tier3
     rounds = [last_green[n] for n in tier3]

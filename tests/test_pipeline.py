@@ -1,4 +1,4 @@
-"""Pipeline-operator quality tests: IVF recall vs brute force, SimHash hamming
+"""Pipeline-operator quality tests: ANN recall vs brute force, SimHash hamming
 on known near-dups, multimodal stub gating."""
 
 from __future__ import annotations
@@ -8,27 +8,26 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_1_12_0_src_spark.catalog import table
-from flink_1_12_0_src_spark.pipeline import (
-    cosine_topk,
-    ivf_fit,
-    ivf_topk,
-    minhash_lsh_pairs,
-    simhash_signatures,
-)
+from flink_1_12_0_src_spark.pipeline import minhash_lsh_pairs, simhash_signatures
 from flink_1_12_0_src_spark.pipeline.multimodal import decode_image
+from flink_1_12_0_src_spark.queries import load_all
+
+# Mean recall@5 floor of each registered knn_*_recall query. IVF probes 2 of
+# 4 lists; sign-LSH collides a moderately close neighbor in some of its 8
+# bands of 3 bits; PQ re-ranks a 64-candidate ADC shortlist exactly.
+RECALL_FLOORS = {"knn_ivf_recall": 0.6, "knn_lsh_recall": 0.7, "knn_pq_recall": 0.7}
 
 
-def test_ivf_recall_vs_brute_force(spark, sf_dir):
-    emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 20)
-    brute = cosine_topk(emb, q, k=5)
-    cents = ivf_fit(emb, n_lists=8, iters=3)
-    approx = ivf_topk(emb, q, cents, k=5, nprobe=2)
-    b = {(r["query_id"], r["neighbor_id"]) for r in brute.collect()}
-    a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-    recall = len(a & b) / len(b)
-    # labeled clusters are well separated; nprobe=2 of 8 lists should recover most
-    assert recall >= 0.6, f"IVF recall@5 too low: {recall:.2f}"
+@pytest.mark.parametrize("name", sorted(RECALL_FLOORS))
+def test_ann_recall_vs_brute_force(spark, sf_dir, name):
+    reg = load_all()
+    assert sorted(RECALL_FLOORS) == sorted(
+        n for n in reg if n.startswith("knn_") and n.endswith("_recall")
+    )
+    rows = reg[name].spark(spark, sf_dir).collect()
+    assert len(rows) == 20  # one row per query vector
+    recall = sum(r["recall"] for r in rows) / len(rows)
+    assert recall >= RECALL_FLOORS[name], f"{name}: mean recall@5 {recall:.2f}"
 
 
 def test_simhash_close_for_minhash_neardups(spark, sf_dir):
@@ -406,22 +405,6 @@ def test_header_parse_bounded_prefix_on_multi_kb_blobs(spark):
         assert gotm[i]["timescale"] == [600, 1000, 24000, 90000][i % 4]
 
 
-def test_cosine_topk_np_equals_expression_path(spark, sf_dir):
-    """The numpy/mapInPandas brute-force path (large-corpus variant) must be
-    result-identical to the pure-expression path — same rounding, same
-    tiebreak, per-batch partial top-k provably lossless."""
-    from pyspark.sql import functions as F
-
-    from flink_1_12_0_src_spark.catalog import table
-    from flink_1_12_0_src_spark.pipeline.similarity import cosine_topk, cosine_topk_np
-
-    emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 20)
-    a = sorted(tuple(r) for r in cosine_topk(emb, q, k=5).collect())
-    b = sorted(tuple(r) for r in cosine_topk_np(emb, q, k=5).collect())
-    assert a == b
-
-
 def test_exploded_shingles_rejects_colliding_carry_names(spark):
     """Carry columns may not reuse the internal aliases (_w, _g), the output
     alias (sh), or each other's names."""
@@ -576,20 +559,6 @@ def test_repetition_signals_flags_stuffed_doc(spark):
     assert not rows[2]["repetitive"]
 
 
-def test_lsh_recall_vs_brute_force(spark, sf_dir):
-    from flink_1_12_0_src_spark.pipeline.similarity import lsh_topk
-
-    emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 20)
-    brute = cosine_topk(emb, q, k=5)
-    approx = lsh_topk(emb, q, k=5)
-    b = {(r["query_id"], r["neighbor_id"]) for r in brute.collect()}
-    a = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-    recall = len(a & b) / len(b)
-    # 8 bands × 3 bits: a moderately-close neighbor collides in some band w.h.p.
-    assert recall >= 0.7, f"sign-LSH recall@5 too low: {recall:.2f}"
-
-
 def test_duplicated_spans_flags_planted_substring(spark):
     from flink_1_12_0_src_spark.pipeline.dedup import duplicated_spans
 
@@ -706,39 +675,37 @@ def test_token_entropy_orders_repetitive_below_diverse(spark):
     assert out[1] < out[2] < out[3]
 
 
-def test_pq_recall_vs_brute_force(spark, sf_dir):
-    from flink_1_12_0_src_spark.pipeline.similarity import pq_fit, pq_topk
-
-    emb = table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 20)
-    brute = cosine_topk(emb, q, k=5)
-    books = pq_fit(emb, m=16, ksub=32, iters=2)
-    approx = pq_topk(emb, q, books, k=5)
-    assert approx.columns == ["query_id", "neighbor_id", "cosine"]
-    b = {(r["query_id"], r["neighbor_id"]) for r in brute.collect()}
-    rows = approx.collect()
-    a = {(r["query_id"], r["neighbor_id"]) for r in rows}
-    # exactly k rows per query, no self matches
-    per_q = {}
-    for r in rows:
-        per_q[r["query_id"]] = per_q.get(r["query_id"], 0) + 1
-        assert r["neighbor_id"] != r["query_id"]
-    assert set(per_q.values()) == {5}
-    recall = len(a & b) / len(b)
-    # ADC shortlist (8k) + exact re-rank recovers most true neighbors even
-    # with coarse 16x32 codebooks on the synthetic 64-dim clusters
-    assert recall >= 0.7, f"PQ recall@5 too low: {recall:.2f}"
-
-
 def test_pq_deterministic_across_runs(spark, sf_dir):
-    from flink_1_12_0_src_spark.pipeline.similarity import pq_fit, pq_topk
+    from flink_1_12_0_src_spark.pipeline.similarity import pq_fit_exact, pq_topk_exact
 
     emb = table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    books = pq_fit(emb, m=16, ksub=32, iters=2)
-    r1 = sorted(map(tuple, pq_topk(emb, q, books, k=5).collect()))
-    r2 = sorted(map(tuple, pq_topk(emb.repartition(7), q, books, k=5).collect()))
+    r1 = sorted(map(tuple, pq_topk_exact(emb, q, pq_fit_exact(emb), k=5).collect()))
+    spread = emb.repartition(7)
+    r2 = sorted(
+        map(tuple, pq_topk_exact(spread, q, pq_fit_exact(spread), k=5).collect())
+    )
+    assert len(r1) == 25
     assert r1 == r2
+
+
+def test_neardup_pairs_np_has_no_eval_type_warning(spark):
+    """The grouped-map function of embedding_neardup_pairs_np carries no
+    partial type hints, so applyInPandas does not warn that PySpark
+    cannot infer its eval type."""
+    import warnings
+
+    from flink_1_12_0_src_spark.pipeline.dedup import embedding_neardup_pairs_np
+
+    vecs = spark.createDataFrame(
+        [(1, 0, [1.0, 0.0]), (2, 0, [1.0, 0.1]), (3, 1, [0.0, 1.0])],
+        "vec_id bigint, blk int, embedding array<double>",
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        pairs = embedding_neardup_pairs_np(vecs, "vec_id", "embedding", "blk", 0.9)
+    assert [(r["id_a"], r["id_b"]) for r in pairs.collect()] == [(1, 2)]
+    assert not [w for w in caught if "eval type" in str(w.message)]
 
 
 def test_semantic_prune_invariants(spark, sf_dir):
@@ -801,19 +768,6 @@ def test_dsir_weights_prefer_target_like_docs(spark):
     out = {r["doc_id"]: r for r in dsir_weights(raw, tgt, "doc_id", "text").collect()}
     assert out[1]["log_weight"] > out[2]["log_weight"]
     assert out[1]["selected"] and not out[2]["selected"]
-
-
-def test_pq_fit_rejects_tiny_training_set(spark):
-    import pytest as _pytest
-
-    from flink_1_12_0_src_spark.pipeline.similarity import pq_fit
-
-    tiny = spark.createDataFrame(
-        [(i, [float(i), 0.0, 1.0, 2.0]) for i in range(3)],
-        "vec_id bigint, embedding array<double>",
-    )
-    with _pytest.raises(ValueError, match="training vectors"):
-        pq_fit(tiny, m=2, ksub=16)
 
 
 def test_bipartite_projection_hub_guard(spark):

@@ -176,17 +176,6 @@ def test_uniform_sample_take_ordered_no_full_sort(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_ivf_fit_init_take_ordered_no_global_window(spark, sf_dir):
-    # the lowest-id centroid init must plan as TakeOrderedAndProject
-    # (map-side partial top-k) — not a corpus-wide single-partition window
-    from flink_1_12_0_src_spark.catalog import table
-    from flink_1_12_0_src_spark.pipeline.similarity import ivf_fit
-
-    emb = table(spark, sf_dir, "embeddings")
-    plan = formatted_plan(spark, ivf_fit(emb, n_lists=8, iters=1))
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_training_mix_pack_window_is_sharded(spark, sf_dir):
     # the flagship's pack stage must partition its window by (source,
     # shard_id), never by source alone — a dominant source at 100 TB would

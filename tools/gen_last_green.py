@@ -32,15 +32,13 @@ emptying queries.CURRENT_NEW; tests/test_gate_order.py fails on any green
 query whose oracle text changed since without a CURRENT_NEW listing.
 """
 
-ORACLE_SHA: dict[str, str | None] = {
+ORACLE_SHA: dict[str, str] = {
 '''
 
 
-def oracle_sha(text: str | None) -> str | None:
-    """Whitespace-normalized md5 of an oracle SQL string (None for rows-only
-    queries) — formatting-only edits don't count as a semantics change."""
-    if text is None:
-        return None
+def oracle_sha(text: str) -> str:
+    """Whitespace-normalized md5 of an oracle SQL string — formatting-only
+    edits don't count as a semantics change."""
     return hashlib.md5(" ".join(text.split()).encode()).hexdigest()
 
 
@@ -53,9 +51,7 @@ def main() -> None:
     names = sorted(n for n in last_green if n in registry)
     lines = [HEADER]
     for name in names:
-        val = oracle_sha(registry[name].oracle)
-        rendered = f'"{val}"' if val is not None else "None"
-        lines.append(f'    "{name}": {rendered},\n')
+        lines.append(f'    "{name}": "{oracle_sha(registry[name].oracle)}",\n')
     lines.append("}\n")
     with open(OUT, "w") as f:
         f.writelines(lines)

@@ -36,7 +36,7 @@ def main() -> None:
             nrows = -1
         t1 = time.perf_counter()
         t_oracle = 0.0
-        if q.oracle is not None and err is None:
+        if err is None:
             to0 = time.perf_counter()
             try:
                 con.execute(q.oracle).fetchall()

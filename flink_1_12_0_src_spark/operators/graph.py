@@ -657,9 +657,9 @@ def bipartite_projection(
             .drop("_bd")
         )
     a = e.select(F.col("t").alias("src"), "b")
-    c = e.select(F.col("t").alias("dst"), "b")
+    c = e.select(F.col("t").alias("dst"), F.col("b").alias("cb"))
     return (
-        a.join(c, (a.b == c.b) & (F.col("src") < F.col("dst")))
+        a.join(c, (F.col("b") == F.col("cb")) & (F.col("src") < F.col("dst")))
         .groupBy("src", "dst")
         .agg(F.count("*").alias("n_links"))
     )

@@ -15,6 +15,11 @@ Scale notes (100 TB target):
   Spark's default 10 MB.
 - Arrow enabled: every pandas-UDF custom operator ships columnar batches, not rows.
 - Session timezone pinned UTC so event-time semantics are stable across engines.
+- ``spark.python.daemon.module`` starts the Python workers from ``_pydaemon``:
+  PySpark's own daemon, except that on CPython < 3.12 a worker task's
+  ``importlib.invalidate_caches()`` no longer re-reads the directory of an
+  unchanged ``pyspark.zip`` once per zipimporter (16-18 reads per task; the
+  eager re-read is gh-103200, made lazy in 3.12). On 3.12+ it changes nothing.
 """
 
 from __future__ import annotations
@@ -59,6 +64,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "flink_1_12_0_src_spark._pydaemon")
         # events.parquet stores TIMESTAMP(NANOS); Spark reads it as raw INT64 and
         # catalog.table() converts to micros (DuckDB truncates NS → µs identically).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

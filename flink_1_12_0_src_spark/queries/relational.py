@@ -838,26 +838,20 @@ ORDER BY o_orderpriority
     "100 TB into a scan-local operation. Plan asserted in tests/test_plans.py.",
 )
 def join_bucketed_coloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    from urllib.parse import urlparse
+    from flink_1_12_0_src_spark.streaming.run import scratch_dir
 
-    # session-scoped names: the warehouse dir is shared across Spark sessions
-    # (the per-session metastore is not), so concurrent sessions must never
-    # re-stage each other's locations out from under a cached file listing
-    sid = spark.sparkContext.applicationId.replace("-", "_").replace(".", "_")
-    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_") + "_" + sid
+    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
     li_t, o_t = f"li_bucketed_{tag}", f"orders_bucketed_{tag}"
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     for name, src, key in ((li_t, "lineitem", "l_orderkey"), (o_t, "orders", "o_orderkey")):
         if spark.catalog.tableExists(name):
             continue
-        # bucketing metadata lives in the (per-session) metastore; a stale
-        # location from a previous session must be cleared before re-staging
-        shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
+        # the bucketing metadata lives in the catalog and the files in a
+        # scratch dir removed at exit: nothing is left in the warehouse dir
         (
             table(spark, sf_dir, src)
             .write.bucketBy(8, key)
             .sortBy(key)
+            .option("path", scratch_dir(prefix="bucketed_"))
             .mode("overwrite")
             .saveAsTable(name)
         )

@@ -950,29 +950,26 @@ JOIN (SELECT * FROM events WHERE event_type = 'click') c USING (user_id)
 ORDER BY user_id, p_id, c_id
 """,
     tags=("streaming", "join", "stateful", "custom_op"),
-    doc="UNBOUNDED stream-stream inner join with NO time bound — the SURVEY "
-    "§2.3 GAP (StreamExecJoin/StreamingJoinOperator keeps both sides in "
-    "state forever; Spark's built-in requires a watermark range and rejects "
-    "this query). Ours: incremental view maintenance per micro-batch "
-    "(ΔL⋈R ∪ L⋈ΔR ∪ ΔL⋈ΔR — streaming/run.py run_incremental_join), "
-    "append-only and batch-boundary invariant. Oracle: the batch join.",
+    doc="UNBOUNDED stream-stream inner join with NO time bound — SURVEY §2.3 "
+    "(StreamExecJoin/StreamingJoinOperator keeps both sides in state "
+    "forever). Spark's symmetric-hash stream-stream join runs it with no "
+    "watermark: both sides stay in its state store and each pair is "
+    "emitted once in append mode, batch-boundary invariant. Oracle: the "
+    "batch join.",
 )
 def stream_unbounded_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_1_12_0_src_spark.streaming.run import run_incremental_join
+    from flink_1_12_0_src_spark.streaming.run import run_to_batch
 
-    s = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type").isin("purchase", "click"))
-        .select("user_id", "ts", "event_id", "event_type")
-    )
-    out = run_incremental_join(
-        s,
-        side_col="event_type",
-        left_tag="purchase",
-        join_keys=["user_id"],
-        left_cols={"event_id": "p_id", "ts": "p_ts"},
-        right_cols={"event_id": "c_id", "ts": "c_ts"},
-    )
+    s = events_stream(spark, sf_dir).filter(F.col("event_type").isin("purchase", "click"))
+
+    def side(event_type: str, prefix: str) -> DataFrame:
+        return s.filter(F.col("event_type") == event_type).select(
+            "user_id",
+            F.col("event_id").alias(f"{prefix}_id"),
+            F.col("ts").alias(f"{prefix}_ts"),
+        )
+
+    out = run_to_batch(side("purchase", "p").join(side("click", "c"), "user_id"), "append")
     return out.select("user_id", "p_id", "p_ts", "c_id", "c_ts").orderBy(
         "user_id", "p_id", "c_id"
     )
@@ -1007,8 +1004,8 @@ ORDER BY user_id, l_id
     doc="Streaming SEMI join (IN / EXISTS) — the last §2.3 cell "
     "(StreamingSemiAntiJoinOperator.java:40-107: a left row emits exactly "
     "once, when its match count goes 0→1). Purchases of users with a "
-    "high-value error: incremental ΔL⋈R ∪ L⋈ΔR ∪ ΔL⋈ΔR over bucketed "
-    "keyed state, reduced to each left row's FIRST matching right stage "
+    "high-value error: one complete-mode streaming aggregate holds each "
+    "left row's stage and each key's FIRST matching right stage "
     "(streaming/run.py run_incremental_semi_anti_join); emitted epoch = "
     "greatest(left stage, first match stage), data-borne and delivery-order "
     "invariant. Oracle: EXISTS-join with the same first-match arithmetic.",
@@ -1049,8 +1046,10 @@ ORDER BY user_id, l_id, kind
     "arrives). Purchases of users with NO high-value error yet: +I at the "
     "purchase's arrival stage iff no matching error preceded it, -D at the "
     "first matching error's stage — the full changelog trace, data-borne "
-    "epochs, delivery-order invariant (tests scramble delivery). Oracle: "
-    "NOT-EXISTS pad leg + first-match retraction leg in closed form.",
+    "epochs, delivery-order invariant (tests scramble delivery). State: the "
+    "semi join's complete-mode aggregate (run_incremental_semi_anti_join, "
+    "how='anti'). Oracle: NOT-EXISTS pad leg + first-match retraction leg "
+    "in closed form.",
 )
 def stream_anti_join_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_1_12_0_src_spark.streaming.run import run_incremental_semi_anti_join
@@ -1591,8 +1590,9 @@ ORDER BY user_id, epoch, kind, l_id, r_id
     "once at the later side's epoch. Replay staged by event_id % 4 "
     "(events_stream_mod) makes the whole changelog closed-form, and every "
     "epoch label is the data-borne stage — delivery-order invariant. State: "
-    "both sides hash-bucketed parquet, delta-touched buckets only for the "
-    "incremental joined leg; pad emission finalized at stream close "
+    "Spark's stream-stream join holds both sides and emits the joined leg; "
+    "the same query carries each side's (key, id, stage) rows, from which "
+    "the pads are finalized at stream close "
     "(streaming/run.py run_incremental_outer_join_changelog, how=left). Closes "
     "the §2.3 'retraction-emitting variants' gap.",
 )
@@ -1647,7 +1647,7 @@ ORDER BY user_id, epoch, kind, l_id, r_id
     "(StreamingJoinOperator.java:38, both outer paths live at once): both "
     "sides pad immediately when unmatched, each side's first later match "
     "retracts the opposite pad with -D, joined pairs flow +I exactly once "
-    "at the later epoch. Same bucketed two-pad-set state "
+    "at the later epoch. Same one-query state, both sides padded "
     "(run_incremental_outer_join_changelog, how='full').",
 )
 def stream_full_outer_join_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1692,8 +1692,9 @@ ORDER BY user_id, epoch, kind, l_id, r_id
     doc="Retraction-emitting unbounded RIGHT OUTER stream-stream join "
     "(StreamingJoinOperator.java:38, right-preserved path): errors pad "
     "immediately when no purchase matched yet; the first later purchase "
-    "retracts the pad. Completes the inner/left/right/full mode set of "
-    "run_incremental_outer_join_changelog.",
+    "retracts the pad. Completes the left/right/full mode set of "
+    "run_incremental_outer_join_changelog, one query over Spark's "
+    "stream-stream join state (inner: stream_unbounded_join).",
 )
 def stream_right_outer_join_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_1_12_0_src_spark.streaming.run import run_incremental_outer_join_changelog

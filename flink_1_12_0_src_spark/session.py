@@ -20,6 +20,8 @@ Scale notes (100 TB target):
   ``importlib.invalidate_caches()`` no longer re-reads the directory of an
   unchanged ``pyspark.zip`` once per zipimporter (16-18 reads per task; the
   eager re-read is gh-103200, made lazy in 3.12). On 3.12+ it changes nothing.
+  ``spark.executorEnv.PYTHONPATH`` puts this package's parent directory on
+  the workers' path, so they find that module whatever the process's cwd.
 """
 
 from __future__ import annotations
@@ -27,6 +29,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The directory holding this package: the Python workers import _pydaemon
+# from it.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_memory() -> str:
@@ -65,6 +71,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "flink_1_12_0_src_spark._pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # events.parquet stores TIMESTAMP(NANOS); Spark reads it as raw INT64 and
         # catalog.table() converts to micros (DuckDB truncates NS → µs identically).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

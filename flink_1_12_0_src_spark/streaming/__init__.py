@@ -13,9 +13,11 @@ micro-batching. This package provides:
   no checkpoint needed). Every runner here and in ``upsert`` shares one
   run policy: Trigger.AvailableNow under a fresh scratch checkpoint, a
   bounded wait, the query always stopped, and TimeoutError on overrun
-  (partial state never returns as a result). The incremental joins and
-  ``upsert`` keep keyed state in one bucketed side-store layout
-  (``_b=<k>`` parquet dirs, read only for the buckets a delta touches);
+  (partial state never returns as a result). The stream joins keep their
+  state in Spark's state store: the inner and outer joins in its
+  stream-stream join, semi/anti in one complete-mode aggregate. Only
+  ``upsert``'s MERGE sink keeps keyed state in bucketed parquet dirs
+  (``_b=<k>``, read only for the buckets a delta touches);
 - ``stateful``: the custom stateful operators Spark lacks as primitives —
   streaming Top-N, keep-last dedup, streaming OVER — via update-mode
   aggregation or applyInPandasWithState (Flink KeyedProcessFunction analog).

@@ -2,12 +2,17 @@
 DataFrame — the PySpark analog of the reference's harness tests that feed
 records + watermarks and assert the emitted output
 (flink-table/.../runtime/harness/GroupAggregateHarnessTest.scala).
+
+Stateful runners let Spark's state store hold their state: the stream joins
+run as one query each (Spark's stream-stream join, or one complete-mode
+aggregate for semi/anti) and derive their +I/-D changelog from its output at
+stream close. ``run_split_late`` and ``run_stream_iterate`` keep
+``foreachBatch``: they write side outputs and feedback files.
 """
 
 from __future__ import annotations
 
 import atexit
-import glob
 import os
 import shutil
 import tempfile
@@ -115,97 +120,6 @@ def _drive(writer: DataStreamWriter) -> None:
             q.stop()
     if not done:
         raise TimeoutError(f"streaming replay exceeded {_TIMEOUT_S}s")
-
-
-# Bucketed side store: keyed state as parquet under ``root/_b=<k>``, with
-# ``_b = pmod(hash(keys), n_buckets)`` — the file-level analog of Flink's
-# keyed state. Per micro-batch, history is read only for the buckets the
-# delta touches.
-
-
-def _touched_buckets(delta: DataFrame) -> list[int]:
-    """Bucket ids a micro-batch delta touches — a bounded (<= n_buckets)
-    driver-side id list used to prune which accumulated bucket FILES are
-    re-read; never row data."""
-    return [r["_b"] for r in delta.select("_b").distinct().collect()]
-
-
-def _files_by_bucket(root: str) -> dict[int, list[str]]:
-    """Snapshot of a side store's data files, per bucket id."""
-    out: dict[int, list[str]] = {}
-    for f in glob.glob(os.path.join(root, "_b=*", "*.parquet")):
-        b = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
-        out.setdefault(b, []).append(f)
-    return out
-
-
-def _read_store(spark: SparkSession, root: str) -> DataFrame | None:
-    """Everything a store under ``root`` holds (bucketed or flat), without
-    the path-encoded ``_b``; None while it holds no data file."""
-    if next(glob.iglob(os.path.join(root, "**", "*.parquet"), recursive=True), None) is None:
-        return None
-    return spark.read.parquet(root).drop("_b")
-
-
-def _delta_join_batch(
-    side_col: str,
-    left_tag: str,
-    join_keys: list[str],
-    left: list[Column],
-    right: list[Column],
-    n_buckets: int,
-    l_dir: str,
-    r_dir: str,
-    out_dir: str,
-    stats: dict,
-    project=lambda joined: joined,
-):
-    """foreachBatch body of the incremental stream-stream joins. The batch
-    is ONE tagged union stream (rows with ``side_col == left_tag`` are the
-    left input); its deltas ΔL, ΔR (``join_keys`` plus the ``left`` /
-    ``right`` projections) are appended to the bucketed side stores
-    ``l_dir`` / ``r_dir``, and ``project(ΔL⋈R ∪ L⋈ΔR ∪ ΔL⋈ΔR)`` is appended
-    to ``out_dir`` — each joined pair exactly once for append-only inputs.
-    L and R are the stores as they were BEFORE this batch, read only for
-    the buckets the opposite delta touches. ``stats`` accumulates
-    {"files_read", "files_total"} so tests can assert the pruning."""
-    stats.setdefault("files_read", 0)
-    stats.setdefault("files_total", 0)
-
-    def bucketed(df: DataFrame, cols: list[Column]) -> DataFrame:
-        return df.select(*join_keys, *cols).withColumn(
-            "_b", F.pmod(F.hash(*join_keys), F.lit(n_buckets))
-        )
-
-    def history(files: dict[int, list[str]], touched: list[int], like: DataFrame) -> DataFrame | None:
-        sel = [f for b in touched for f in files.get(b, [])]
-        stats["files_read"] += len(sel)
-        # data files carry only (keys, cols); _b is path-encoded
-        return like.sparkSession.read.schema(like.schema).parquet(*sel) if sel else None
-
-    def fb(bdf: DataFrame, _eid: int) -> None:
-        bdf = bdf.persist()
-        dl = bucketed(bdf.filter(F.col(side_col) == left_tag), left).persist()
-        dr = bucketed(bdf.filter(F.col(side_col) != left_tag), right).persist()
-        # snapshot the accumulated sides BEFORE appending this batch's deltas
-        l_files, r_files = _files_by_bucket(l_dir), _files_by_bucket(r_dir)
-        stats["files_total"] += sum(map(len, l_files.values())) + sum(map(len, r_files.values()))
-        dl.write.partitionBy("_b").mode("append").parquet(l_dir)
-        dr.write.partitionBy("_b").mode("append").parquet(r_dir)
-        dlp, drp = dl.drop("_b"), dr.drop("_b")
-        l_prev = history(l_files, _touched_buckets(dr), dlp)
-        r_prev = history(r_files, _touched_buckets(dl), drp)
-        joined = dlp.join(drp, join_keys)
-        if r_prev is not None:
-            joined = joined.unionByName(dlp.join(r_prev, join_keys))
-        if l_prev is not None:
-            joined = joined.unionByName(l_prev.join(drp, join_keys))
-        project(joined).write.mode("append").parquet(out_dir)
-        dl.unpersist()
-        dr.unpersist()
-        bdf.unpersist()
-
-    return fb
 
 
 def run_to_batch(stream_df: DataFrame, output_mode: str = "complete") -> DataFrame:
@@ -366,54 +280,6 @@ def run_early_fire_trace(stream_df: DataFrame) -> DataFrame:
     ).select("window_day", "cnt")
 
 
-def run_incremental_join(
-    stream_df: DataFrame,
-    side_col: str,
-    left_tag: str,
-    join_keys: list[str],
-    left_cols: dict[str, str],
-    right_cols: dict[str, str],
-    n_buckets: int = 16,
-    io_stats: dict | None = None,
-) -> DataFrame:
-    """Unbounded NON-time-bounded stream-stream INNER join — the SURVEY §2.3
-    GAP row (StreamExecJoin / StreamingJoinOperator.java:38 keeps both inputs
-    in keyed state forever; Spark's built-in stream-stream join demands a
-    watermark time bound and refuses this query).
-
-    Classic incremental view maintenance over micro-batches: with accumulated
-    sides L, R and batch deltas ΔL, ΔR,
-
-        ΔJ = ΔL ⋈ R  ∪  L ⋈ ΔR  ∪  ΔL ⋈ ΔR
-
-    emits every joined pair exactly once for append-only inputs (Flink's
-    append-only +I case). Both sides arrive as ONE tagged union stream (the
-    connect-streams encoding used by streaming_temporal_join).
-
-    State layout (the 100 TB shape): each accumulated side is parquet
-    **hash-bucketed by join key** (``_b = pmod(hash(keys), n_buckets)`` via
-    ``partitionBy``), the file-level analog of StreamingJoinOperator's keyed
-    state. Per micro-batch, the history side is read ONLY for the buckets the
-    opposite delta actually touches — O(|Δ|/n_buckets-selectivity) I/O per
-    trigger instead of O(history). A batch whose delta hits 3 of 16 buckets
-    scans 3/16ths of the accumulated state; the previous implementation
-    re-read ALL history every trigger (O(n²) over the stream's life).
-    Bucket ids come from the delta's own hash column — tiny distinct set,
-    never row data — so the driver still touches no rows.
-
-    ``io_stats``, when provided, accumulates {"files_read", "files_total"}
-    so tests can assert the pruning actually happened.
-    """
-    out_dir = scratch_dir(prefix="ij_out_")
-    fb = _delta_join_batch(
-        side_col, left_tag, join_keys,
-        [F.col(c).alias(a) for c, a in left_cols.items()],
-        [F.col(c).alias(a) for c, a in right_cols.items()],
-        n_buckets, scratch_dir(prefix="ij_left_"), scratch_dir(prefix="ij_right_"), out_dir,
-        io_stats if io_stats is not None else {},
-    )
-    _drive(stream_df.writeStream.foreachBatch(fb))
-    return stream_df.sparkSession.read.parquet(out_dir)
 
 
 def run_incremental_outer_join_changelog(
@@ -424,8 +290,6 @@ def run_incremental_outer_join_changelog(
     left_id: str,
     right_id: str,
     how: str = "left",
-    stage_col: str = "stage",
-    n_buckets: int = 16,
 ) -> DataFrame:
     """Unbounded OUTER stream-stream join with RETRACTION emission — the
     changelog face of StreamExecJoin (StreamingJoinOperator.java:38 outer
@@ -434,91 +298,84 @@ def run_incremental_outer_join_changelog(
     the joined rows flow as inserts; RowKind.java:35-58). ``how`` ∈
     {"left", "right", "full"} selects which side(s) are preserved.
 
-    Every emitted epoch is DATA-borne: the input must carry ``stage_col``,
-    the replay's chronological slice index (see streaming/source.py). The
-    changelog is therefore invariant to micro-batch delivery order — the
-    trace Flink would emit under in-order delivery, regardless of how the
-    file source actually interleaves slices (round 3's driver red came from
-    exactly such a scramble when epochs were trigger indices).
+    Both sides arrive as ONE tagged union stream (rows with ``side_col ==
+    left_tag`` are the left input). Every emitted epoch is DATA-borne: the
+    input must carry ``stage`` (``_STAGE_COL``), the replay's chronological
+    slice index (see streaming/source.py). The changelog is therefore
+    invariant to micro-batch delivery order — the trace Flink would emit
+    under in-order delivery, regardless of how the file source actually
+    interleaves slices (round 3's driver red came from exactly such a
+    scramble when epochs were trigger indices).
 
-    Two emission legs:
+    One append-mode query; Spark's symmetric-hash stream-stream join holds
+    both sides in its state store (no watermark, so nothing is evicted —
+    StreamingJoinOperator's keyed state). Its output is the union of two
+    legs, told apart by ``_leg``:
 
-    +I joined — INCREMENTAL, per micro-batch, with accumulated sides L, R
-      and deltas ΔL, ΔR:  ΔL⋈R ∪ L⋈ΔR ∪ ΔL⋈ΔR — each pair exactly once,
+    +I joined (``J``) — the native inner join, each pair exactly once,
       labeled ``epoch = greatest(stage_l, stage_r)`` (the later side's
-      arrival slice). State: both sides parquet hash-bucketed by join key
-      (the run_incremental_join layout); each trigger reads only
-      delta-touched buckets — O(|Δ|)-proportional I/O, never O(history).
+      arrival slice).
 
-    +I / -D padded — FINALIZED at end-of-stream from the accumulated
-      bucketed sides (the watermark-close analog of Flink's pad state): a
-      preserved row (key, id, e) pads iff the opposite side's earliest stage
-      for the key (``first_opp = min(stage)``) is NULL or > e — i.e. under
-      in-order delivery no match existed when the row arrived — and a
-      padded row with a later match is retracted by one -D at epoch
-      ``first_opp``. One groupBy-min plus one join per preserved side.
+    side rows (``L`` / ``R``) — each input row's (keys, id, stage). From
+      them the padded +I / -D rows are FINALIZED at end-of-stream (the
+      watermark-close analog of Flink's pad state): a preserved row
+      (key, id, e) pads iff the opposite side's earliest stage for the key
+      (``first_opp = min(stage)``) is NULL or > e — i.e. under in-order
+      delivery no match existed when the row arrived — and a padded row
+      with a later match is retracted by one -D at epoch ``first_opp``.
+      One groupBy-min plus one join per preserved side.
 
-    Emits (join_keys…, epoch, kind, left_id, right_id) — the opposite id is
+    Emits (join_keys…, epoch, kind, l_id, r_id) — the opposite id is
     NULL on padded rows. Append-only inputs ⇒ kinds are +I/-D only (no
     -U/+U), matching Flink's changelog inference for this plan.
     """
-    if how not in ("left", "right", "full"):
+    preserved = {"left": "L", "right": "R", "full": "LR"}.get(how)
+    if preserved is None:
         raise ValueError(f"how must be left/right/full: {how}")
-    spark: SparkSession = stream_df.sparkSession
-    l_dir = scratch_dir(prefix="oj_left_")
-    r_dir = scratch_dir(prefix="oj_right_")
-    out_dir = scratch_dir(prefix="oj_out_")
+    stage = F.col(_STAGE_COL).cast("int").alias("epoch")
+    no_id = F.lit(None).cast("long")
+    # each side's rows as (keys, _leg, epoch, l_id, r_id), the opposite id NULL
+    left = stream_df.filter(F.col(side_col) == left_tag).select(
+        *join_keys, F.lit("L").alias("_leg"), stage,
+        F.col(left_id).cast("long").alias("l_id"), no_id.alias("r_id"),
+    )
+    right = stream_df.filter(F.col(side_col) != left_tag).select(
+        *join_keys, F.lit("R").alias("_leg"), stage,
+        no_id.alias("l_id"), F.col(right_id).cast("long").alias("r_id"),
+    )
+    joined = left.select(*join_keys, F.col("epoch").alias("_e_l"), "l_id").join(
+        right.select(*join_keys, F.col("epoch").alias("_e_r"), "r_id"), join_keys
+    )
+    out = run_to_batch(
+        joined.select(
+            *join_keys, F.lit("J").alias("_leg"),
+            F.greatest("_e_l", "_e_r").alias("epoch"), "l_id", "r_id",
+        )
+        .unionByName(left)
+        .unionByName(right),
+        "append",
+    )
 
-    def stamped(id_col: str, alias: str, e_alias: str) -> list[Column]:
-        return [F.col(id_col).alias(alias), F.col(stage_col).cast("int").alias(e_alias)]
+    def leg(tag: str) -> DataFrame:
+        return out.filter(F.col("_leg") == tag).drop("_leg")
 
-    # joined inserts: each pair exactly once, at the later DATA epoch
-    def inserts(joined: DataFrame) -> DataFrame:
-        return joined.select(
-            *join_keys,
-            F.greatest("_e_l", "_e_r").alias("epoch"),
-            F.lit("+I").alias("kind"),
-            F.col("l_id").cast("long").alias("l_id"),
-            F.col("r_id").cast("long").alias("r_id"),
+    # pad legs, finalized from the side rows
+    def pads(tag: str, opp: str) -> DataFrame:
+        first = leg(opp).groupBy(*join_keys).agg(F.min("epoch").alias("_first"))
+        pad = leg(tag).join(first, join_keys, "left").filter(
+            F.col("_first").isNull() | (F.col("_first") > F.col("epoch"))
+        )
+        dels = pad.filter(F.col("_first").isNotNull()).withColumn("epoch", F.col("_first"))
+        return (
+            pad.withColumn("kind", F.lit("+I"))
+            .unionByName(dels.withColumn("kind", F.lit("-D")))
+            .drop("_first")
         )
 
-    fb = _delta_join_batch(
-        side_col, left_tag, join_keys,
-        stamped(left_id, "l_id", "_e_l"), stamped(right_id, "r_id", "_e_r"),
-        n_buckets, l_dir, r_dir, out_dir, {}, project=inserts,
-    )
-    _drive(stream_df.writeStream.foreachBatch(fb))
-
-    # pad legs, finalized from the accumulated bucketed sides
-    def pad_legs(pres: DataFrame, opp: DataFrame | None, id_col: str, e_col: str, opp_e: str):
-        other = "r_id" if id_col == "l_id" else "l_id"
-
-        def emit(df: DataFrame, kind: str, epoch_col) -> DataFrame:
-            cols = {
-                id_col: F.col(id_col).cast("long").alias(id_col),
-                other: F.lit(None).cast("long").alias(other),
-            }
-            return df.select(
-                *join_keys, epoch_col.cast("int").alias("epoch"),
-                F.lit(kind).alias("kind"), cols["l_id"], cols["r_id"],
-            )
-
-        if opp is None:
-            return emit(pres, "+I", F.col(e_col))
-        first = opp.groupBy(*join_keys).agg(F.min(opp_e).alias("_first"))
-        lp = pres.join(first, join_keys, "left")
-        pad = lp.filter(F.col("_first").isNull() | (F.col("_first") > F.col(e_col)))
-        ins = emit(pad, "+I", F.col(e_col))
-        dels = emit(pad.filter(F.col("_first").isNotNull()), "-D", F.col("_first"))
-        return ins.unionByName(dels)
-
-    out = spark.read.parquet(out_dir)
-    l_all, r_all = _read_store(spark, l_dir), _read_store(spark, r_dir)
-    if how in ("left", "full") and l_all is not None:
-        out = out.unionByName(pad_legs(l_all, r_all, "l_id", "_e_l", "_e_r"))
-    if how in ("right", "full") and r_all is not None:
-        out = out.unionByName(pad_legs(r_all, l_all, "r_id", "_e_r", "_e_l"))
-    return out
+    result = leg("J").withColumn("kind", F.lit("+I"))
+    for tag in preserved:
+        result = result.unionByName(pads(tag, "R" if tag == "L" else "L"))
+    return result.select(*join_keys, "epoch", "kind", "l_id", "r_id")
 
 
 def run_incremental_semi_anti_join(
@@ -528,7 +385,6 @@ def run_incremental_semi_anti_join(
     join_keys: list[str],
     left_id: str,
     how: str = "semi",
-    stage_col: str = "stage",
 ) -> DataFrame:
     """Unbounded streaming SEMI / ANTI join with changelog emission — the
     streaming face of IN / EXISTS / NOT EXISTS (reference:
@@ -538,28 +394,24 @@ def run_incremental_semi_anti_join(
     RETRACTS it when the first match arrives).
 
     Both sides arrive as ONE tagged union stream (the connect-streams
-    encoding shared with run_incremental_join). State maintenance is
-    O(|Δ|) per trigger with NO history reads: left rows append to keyed
-    state as-is, and the right side is reduced MAP-SIDE to one
-    (key, min stage) row per batch before appending — the append-only
-    specialization of StreamingSemiAntiJoinOperator's per-left match-count
-    state (inputs never retract, so the count's only load-bearing content
-    is whether/when it first became positive, i.e. the key's minimum right
-    stage; per-batch mins are associative, so appending them and reducing
-    once at close yields the global min regardless of delivery order). At
-    100 TB the right-side state is O(distinct keys) rows, not O(right
-    rows); the log-structured append does add one file-set per trigger, so
-    a long-running deployment would fold in periodic min-merge compaction
-    (the run_changelog_upsert bucket-rewrite pattern) — a bounded replay
-    doesn't need it.
+    encoding shared with run_incremental_outer_join_changelog). One
+    complete-mode streaming aggregate,
+    ``groupBy(keys, is_left, when(is_left, id)).agg(min(stage))``, lets
+    Spark's state store hold the join state: one row per left row with its
+    arrival stage, plus one row per right key with its first-match stage.
+    That is the append-only specialization of StreamingSemiAntiJoinOperator's
+    per-left match-count state (inputs never retract, so the count's only
+    load-bearing content is whether/when it first became positive, i.e. the
+    key's minimum right stage); the right side's state is O(distinct keys)
+    rows, not O(right rows), and ``min`` makes it independent of delivery
+    order.
 
-    The changelog trace is FINALIZED at end-of-stream from the accumulated
-    state — the watermark-close discipline of
-    run_incremental_outer_join_changelog's pad legs — so every emitted
-    epoch is a pure function of the DATA-borne ``stage_col``, invariant to
-    micro-batch delivery order and granularity. With ``e_l`` = left row's
-    arrival stage and ``first`` = its key's minimum matching right stage
-    (NULL if never matched):
+    The changelog trace is FINALIZED at end-of-stream from that state — the
+    watermark-close discipline of run_incremental_outer_join_changelog's
+    pad legs — so every emitted epoch is a pure function of the DATA-borne
+    ``stage`` (``_STAGE_COL``), invariant to micro-batch delivery order and
+    granularity. With ``e_l`` = left row's arrival stage and ``first`` = its
+    key's minimum matching right stage (NULL if never matched):
 
     - semi: one ``+I`` per matched left row at ``greatest(e_l, first)`` —
       the slice where, under in-order delivery, its match count went 0→1.
@@ -571,79 +423,25 @@ def run_incremental_semi_anti_join(
     Emits (*join_keys, epoch INT, kind STRING, l_id LONG). Append-only
     inputs ⇒ kinds are +I/-D only, matching Flink's changelog inference.
     """
-    from pyspark.sql import types as T
-
     if how not in ("semi", "anti"):
         raise ValueError(f"how must be semi/anti: {how}")
-    spark: SparkSession = stream_df.sparkSession
-    l_dir = scratch_dir(prefix="saj_left_")
-    r_dir = scratch_dir(prefix="saj_right_")
-
-    def fb(bdf: DataFrame, _eid: int) -> None:
-        bdf = bdf.persist()
-        (
-            bdf.filter(F.col(side_col) == left_tag)
-            .select(
-                *join_keys,
-                F.col(left_id).alias("l_id"),
-                F.col(stage_col).cast("int").alias("_e_l"),
-            )
-            .write.mode("append")
-            .parquet(l_dir)
-        )
-        (
-            bdf.filter(F.col(side_col) != left_tag)
-            .groupBy(*join_keys)
-            .agg(F.min(F.col(stage_col).cast("int")).alias("_e_r_min"))
-            .write.mode("append")
-            .parquet(r_dir)
-        )
-        bdf.unpersist()
-
-    _drive(stream_df.writeStream.foreachBatch(fb))
-
-    key_fields = [f for f in stream_df.schema.fields if f.name in join_keys]
-    out_schema = T.StructType(
-        key_fields
-        + [
-            T.StructField("epoch", T.IntegerType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("l_id", T.LongType()),
-        ]
+    is_left = F.col(side_col) == left_tag
+    state = run_to_batch(
+        stream_df.groupBy(
+            *join_keys,
+            is_left.alias("_is_left"),
+            F.when(is_left, F.col(left_id)).cast("long").alias("l_id"),
+        ).agg(F.min(F.col(_STAGE_COL).cast("int")).alias("_e"))
     )
+    l_all = state.filter("_is_left").select(*join_keys, "l_id", F.col("_e").alias("_e_l"))
+    first = state.filter(~F.col("_is_left")).select(*join_keys, F.col("_e").alias("_first"))
 
-    l_all, r_all = _read_store(spark, l_dir), _read_store(spark, r_dir)
-    first = (
-        r_all.groupBy(*join_keys).agg(F.min("_e_r_min").alias("_first"))
-        if r_all is not None
-        else None
-    )
+    def emit(df: DataFrame, kind: str, epoch_col: Column) -> DataFrame:
+        return df.select(*join_keys, epoch_col.alias("epoch"), F.lit(kind).alias("kind"), "l_id")
+
     if how == "semi":
-        if l_all is None or first is None:
-            return spark.createDataFrame([], out_schema)
-        return l_all.join(first, join_keys).select(
-            *join_keys,
-            F.greatest("_e_l", "_first").cast("int").alias("epoch"),
-            F.lit("+I").alias("kind"),
-            F.col("l_id").cast("long").alias("l_id"),
-        )
-    if l_all is None:
-        return spark.createDataFrame([], out_schema)
-    lm = (
-        l_all.join(first, join_keys, "left")
-        if first is not None
-        else l_all.withColumn("_first", F.lit(None).cast("int"))
-    )
-
-    def emit(df: DataFrame, kind: str, epoch_col) -> DataFrame:
-        return df.select(
-            *join_keys,
-            epoch_col.cast("int").alias("epoch"),
-            F.lit(kind).alias("kind"),
-            F.col("l_id").cast("long").alias("l_id"),
-        )
-
-    unmatched_on_arrival = lm.filter(
+        return emit(l_all.join(first, join_keys), "+I", F.greatest("_e_l", "_first"))
+    unmatched_on_arrival = l_all.join(first, join_keys, "left").filter(
         F.col("_first").isNull() | (F.col("_first") > F.col("_e_l"))
     )
     ins = emit(unmatched_on_arrival, "+I", F.col("_e_l"))

@@ -26,9 +26,9 @@ Per micro-batch of changelog rows (+I / +U / -D with a version column):
      this becomes a real MERGE INTO).
 
 Scale: the maintained table is hash-bucketed by key (``_b = pmod(hash(keys),
-n_buckets)`` — the same layout run_incremental_join uses for its join state).
-A trigger whose delta hits 3 of 16 buckets reads and rewrites 3/16ths of the
-table; write amplification per trigger is O(touched buckets), not O(table).
+n_buckets)``, the file-level analog of Flink's keyed state). A trigger whose
+delta hits 3 of 16 buckets reads and rewrites 3/16ths of the table; write
+amplification per trigger is O(touched buckets), not O(table).
 The merge joins the batch (small) against only those buckets on the key.
 """
 
@@ -39,15 +39,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from flink_1_12_0_src_spark.streaming.run import (
-    _STAGE_COL,
-    _drive,
-    _touched_buckets,
-    run_to_batch,
-)
+from flink_1_12_0_src_spark.streaming.run import _STAGE_COL, _drive, run_to_batch
 
 # The changelog kind column (+I / -U / +U / -D) run_changelog_sum_agg reads.
 _ROWKIND_COL = "rowkind"
+
+
+def _touched_buckets(delta: DataFrame) -> list[int]:
+    """Bucket ids a micro-batch delta touches — a bounded (<= n_buckets)
+    driver-side id list used to prune which bucket FILES are re-read;
+    never row data."""
+    return [r["_b"] for r in delta.select("_b").distinct().collect()]
 
 
 class UpsertSink:

@@ -4,13 +4,18 @@ archive changed on disk."""
 
 from __future__ import annotations
 
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pytest
 
 from flink_1_12_0_src_spark import _pydaemon
+
+REPO = Path(__file__).resolve().parent.parent
 
 _EAGER_ZIP_INVALIDATE = pytest.mark.skipif(
     sys.version_info >= (3, 12),
@@ -103,3 +108,25 @@ def test_worker_task_does_not_reread_zip_directories(spark):
     if row.minor >= 12 or row.zipimporters == 0:
         pytest.skip(f"worker on 3.{row.minor} holds {row.zipimporters} zipimporters")
     assert row.reads == 0, f"{row.reads} zip directory reads over {row.zipimporters} zipimporters"
+
+
+def test_workers_import_the_daemon_from_any_cwd(tmp_path):
+    """A process that puts the repo on the driver's ``sys.path`` only, run
+    outside the repo root, still starts its Python workers from
+    ``_pydaemon``: a worker task runs instead of failing to find the
+    daemon module."""
+    script = (
+        f"import sys; sys.path.insert(0, {str(REPO)!r})\n"
+        "from flink_1_12_0_src_spark.session import get_spark\n"
+        "spark = get_spark(cpus=1, shuffle_partitions=1)\n"
+        "print(spark.range(4).mapInPandas(lambda it: it, 'id long').count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, cwd=tmp_path, env=env, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip().splitlines()[-1] == "4"

@@ -106,6 +106,28 @@ def test_upsert_query_table_is_cleaned_scratch(spark, sf_dir):
     assert any(os.path.basename(d).startswith("upsert_tbl_") for d in tracked)
 
 
+def test_bucketed_join_leaves_no_warehouse_entry(spark, sf_dir):
+    """join_bucketed_coloc writes its two bucketed tables into scratch dirs
+    that are removed at exit: nothing new appears under the session's
+    warehouse dir."""
+    from urllib.parse import urlparse
+
+    from flink_1_12_0_src_spark.queries import load_all
+
+    for t in spark.catalog.listTables():
+        if "_bucketed_" in t.name and not t.isTemporary:
+            spark.sql(f"DROP TABLE {t.name}")  # so the query writes them anew
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+
+    def entries() -> set[str]:
+        return set(os.listdir(warehouse)) if os.path.isdir(warehouse) else set()
+
+    before = entries()
+    load_all()["join_bucketed_coloc"].spark(spark, sf_dir).collect()
+    assert entries() <= before
+    assert sum(os.path.basename(d).startswith("bucketed_") for d in srun._ALLOCATED) >= 2
+
+
 def test_stale_cache_roots_are_pruned(tmp_path, monkeypatch):
     """Older versioned roots and the dead CDC replay dirs go; the current and
     newer roots, and the rest of the files cache, stay."""

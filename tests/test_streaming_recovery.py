@@ -221,30 +221,77 @@ def test_changelog_runners_on_an_empty_replay(spark, tmp_path):
             assert got.schema == like.schema
 
 
-def test_incremental_join_bucket_pruning(spark, tmp_path):
-    """run_incremental_join keeps its accumulated state hash-bucketed by join
-    key and, per micro-batch, reads ONLY the buckets the opposite delta
-    touches (StreamingJoinOperator keyed-state point-lookup analog). A
-    single-key delta must therefore scan a strict subset of the history
-    files, and the emitted pairs must still equal the batch join."""
-    from flink_1_12_0_src_spark.streaming.run import run_incremental_join
+def test_join_runners_on_an_empty_replay(spark, tmp_path):
+    """An empty replay through the join runners gives 0 rows with the schema
+    of a non-empty run, for the native inner join, every outer changelog
+    mode and semi/anti. Two empty replays: slices without rows and a
+    directory without files."""
+    from flink_1_12_0_src_spark.streaming.run import (
+        run_incremental_outer_join_changelog,
+        run_incremental_semi_anti_join,
+        run_to_batch,
+    )
+
+    ddl = "k int, eid bigint, side string, stage int"
+    full = _replay_rows(
+        spark, tmp_path / "full", [[(1, 10, "L", 0)], [(1, 20, "R", 1), (2, 30, "R", 1)]], ddl
+    )
+    (tmp_path / "no_files").mkdir()
+    empties = [
+        _replay_rows(spark, tmp_path / "empty_slices", [[], []], ddl),
+        spark.readStream.schema(full.schema).parquet(str(tmp_path / "no_files")),
+    ]
+
+    def inner(s):
+        return run_to_batch(
+            s.filter("side = 'L'").select("k", F.col("eid").alias("l_id")).join(
+                s.filter("side = 'R'").select("k", F.col("eid").alias("r_id")), "k"
+            ),
+            "append",
+        )
+
+    runners = [inner]
+    runners += [
+        lambda s, how=how: run_incremental_outer_join_changelog(
+            s, side_col="side", left_tag="L", join_keys=["k"], left_id="eid",
+            right_id="eid", how=how,
+        )
+        for how in ("left", "right", "full")
+    ]
+    runners += [
+        lambda s, how=how: run_incremental_semi_anti_join(
+            s, side_col="side", left_tag="L", join_keys=["k"], left_id="eid", how=how
+        )
+        for how in ("semi", "anti")
+    ]
+    for run in runners:
+        like = run(full)
+        assert like.count() > 0
+        for empty in empties:
+            got = run(empty)
+            assert got.count() == 0
+            assert got.schema == like.schema
+
+
+def test_native_stream_join_over_single_key_batches(spark, tmp_path):
+    """Spark's stream-stream inner join with no watermark (the
+    stream_unbounded_join shape) holds both sides in its state store across
+    micro-batches: later batches that each add one key's row on one side
+    join against the earlier batches' rows, and the emitted pairs equal the
+    batch join."""
+    from flink_1_12_0_src_spark.streaming.run import run_to_batch
 
     batches = [
         [(k, "L", float(k)) for k in range(8)] + [(k, "R", k * 10.0) for k in range(8)],
-        [(1, "L", 100.0)],  # touches exactly one bucket
-        [(2, "R", 200.0)],  # touches exactly one bucket
+        [(1, "L", 100.0)],  # joins batch 0's right row for key 1
+        [(2, "R", 200.0)],  # joins batch 0's left row for key 2
     ]
     stream = _replay_rows(spark, tmp_path / "src", batches, "k int, side string, val double")
-    stats: dict = {}
-    out = run_incremental_join(
-        stream,
-        side_col="side",
-        left_tag="L",
-        join_keys=["k"],
-        left_cols={"val": "lval"},
-        right_cols={"val": "rval"},
-        n_buckets=8,
-        io_stats=stats,
+    out = run_to_batch(
+        stream.filter("side = 'L'").select("k", F.col("val").alias("lval")).join(
+            stream.filter("side = 'R'").select("k", F.col("val").alias("rval")), "k"
+        ),
+        "append",
     )
     all_rows = [r for rows in batches for r in rows]
     df = spark.createDataFrame(all_rows, "k int, side string, val double")
@@ -253,9 +300,6 @@ def test_incremental_join_bucket_pruning(spark, tmp_path):
     expected = sorted(tuple(r) for r in left.join(right, "k").collect())
     got = sorted(tuple(r) for r in out.select("k", "lval", "rval").collect())
     assert got == expected
-    # pruning: the single-key deltas must NOT have re-read the whole history
-    assert stats["files_total"] > 0
-    assert stats["files_read"] < stats["files_total"], stats
 
 
 def test_upsert_sink_bucket_pruning(spark, tmp_path):
@@ -470,11 +514,11 @@ def test_wm_buffer_survives_drain_then_refill(spark, tmp_path):
 
 
 def test_semi_anti_join_state_shape(spark, tmp_path):
-    """The semi/anti join's per-trigger work is pure O(delta) state
-    maintenance — left rows append as-is and the right side reduces
-    MAP-SIDE to one (key, min stage) row per batch, with no history reads
-    during the stream — and the close-time emission must equal the
-    closed-form first-match semantics."""
+    """The semi/anti join's state is one complete-mode streaming aggregate:
+    one (key, left id, stage) row per left row plus one (key, first-match
+    stage) row per right key, held in Spark's state store across the
+    batches — and the close-time emission must equal the closed-form
+    first-match semantics."""
     from flink_1_12_0_src_spark.streaming.run import run_incremental_semi_anti_join
 
     batches = [
